@@ -1,0 +1,37 @@
+package lakebench
+
+/** Minimal JSON writer for the run result (the harness needs no parser). */
+object Json {
+  def str(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case '\n' => b.append("\\n")
+      case '\r' => b.append("\\r")
+      case '\t' => b.append("\\t")
+      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').toString
+  }
+
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => apply(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case n: java.math.BigDecimal => n.toPlainString
+    case n: BigDecimal => n.bigDecimal.toPlainString
+    case n: Number => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => str(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case a: Array[_] => apply(a.toSeq)
+    case s: Iterable[_] => s.map(apply).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+}
