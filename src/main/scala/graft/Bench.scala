@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: print ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
   * over SPARK_GRAFT_SF_DIR at local[cpus].
@@ -24,21 +22,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadBefore = loadavg()
     val tStartMs = System.currentTimeMillis()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.ext.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.geospatial.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // graft read-path A/B: SPARK_GRAFT_READPATH=v1 benches the v1
-      // fallback against the default DSv2 route
-      .config("spark.graft.readPath",
-        sys.env.getOrElse("SPARK_GRAFT_READPATH", "v2"))
-      .getOrCreate()
+    val spark = LocalSession(32)
+    // graft read-path A/B: SPARK_GRAFT_READPATH=v1 benches the v1
+    // fallback against the default DSv2 route
+    spark.conf.set("spark.graft.readPath",
+      sys.env.getOrElse("SPARK_GRAFT_READPATH", "v2"))
     spark.sparkContext.setLogLevel("WARN")
 
     // Absorb one-time session/executor startup so the first timed query

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-only plan dumper (not part of the library surface): writes
@@ -20,14 +19,7 @@ object PlanDump {
     val outDir = args(0)
     val tag = args(1)
     val names = args.drop(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.ext.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.geospatial.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

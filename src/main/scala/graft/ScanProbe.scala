@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 /** Dev audit tool (not part of the library surface, like Scratch):
   * prints per-catalog-query physical-plan health counters — parquet
@@ -13,13 +12,7 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object ScanProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.ext.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.geospatial.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val rows = SparkEntry.allDefs.map { q =>
       try {

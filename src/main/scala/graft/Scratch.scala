@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only profiling harness (not part of the library surface):
   * times each named catalog query over SPARK_GRAFT_SF_DIR with the
   * same session config as [[Bench]], clearing the cache between
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
   * full quiet [[Bench]] runs are comparable numbers. */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.ext.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.geospatial.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(32)
     spark.sparkContext.setLogLevel("WARN")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -165,9 +165,10 @@ case class GraftDmlRewrite(session: SparkSession) extends Rule[LogicalPlan] {
 
     // MERGE INTO. Two lowerings:
     //  - the canonical unconditional star upsert (UPDATE SET * /
-    //    INSERT *, no extra clauses) keeps the [[VersionedTable
-    //    .mergeKeyed]] fast path — stats-pruned, schema evolution
-    //    capable;
+    //    INSERT *, no extra clauses) lowers to [[VersionedTable
+    //    .mergeKeyed]] — the star form of mergeConditional, checked
+    //    against the table schema — or, WITH SCHEMA EVOLUTION, to
+    //    [[VersionedTable.mergeKeyedEvolve]];
     //  - every other clause combination (conditional matched actions,
     //    partial SET lists, WHEN MATCHED THEN DELETE, conditional
     //    inserts, WHEN NOT MATCHED BY SOURCE) lowers to

@@ -1874,7 +1874,7 @@ object Lakehouse {
     // touched files with pre-update-row SET semantics, and MERGE runs
     // the full Delta clause algebra (conditional UPDATE, DELETE,
     // guarded INSERT) through the SAME one-full-outer-join cascade
-    // graft's own MERGE uses (VersionedTable.mergeCascadeRows — one
+    // graft's own MERGE uses (MergeKernel.mergeCascadeRows — one
     // implementation, two formats), committed copy-on-write with
     // key-envelope file targeting. The oracle restates both
     // statements over raw orders as CASE/filter algebra. GraftDmlSpec
@@ -2107,7 +2107,7 @@ object Lakehouse {
     // MANIFEST BOUNDS alone (the carried_ok column pins that the
     // top-range file survived by reference — zero data I/O for it),
     // and the conditional MERGE (same clause cascade as graft/Delta:
-    // VersionedTable.mergeCascadeRows — ONE implementation, THREE
+    // MergeKernel.mergeCascadeRows — ONE implementation, THREE
     // formats) sees equality-deleted keys as NOT MATCHED, so they
     // re-enter as inserts. Carried files keep their original data
     // sequence numbers through the rewrite (IcebergMergeSpec pins

@@ -1987,6 +1987,15 @@ object DeltaLog {
     next
   }
 
+  /** The adds of `snap` behind `uris`, the scan URIs a row's
+    * `_metadata.file_path` reports ([[DeltaLogRead.FpCol]]). */
+  private def addsAt(idx: DeltaLogFileIndex, snap: DeltaSnapshot,
+      uris: Seq[String]): Seq[DeltaAdd] = {
+    val byUri = snap.adds.map(a => idx.scanUriOf(a) -> a).toMap
+    uris.map(u => byUri.getOrElse(u, throw new IllegalStateException(
+      s"delta-log: scan URI $u not in snapshot v${snap.version}")))
+  }
+
   /** Row-level `DELETE FROM` for delta-log tables — COPY-ON-WRITE:
     * files holding matching rows are rewritten without them and the
     * commit carries `remove` + `add` actions, so EVERY Delta reader
@@ -2024,10 +2033,7 @@ object DeltaLog {
       .collect().map(_.getString(0)).sorted // bounded by file count
     if (touchedUris.isEmpty) return snap.version
     val idx = new DeltaLogFileIndex(spark, root, snap, pinned = true)
-    val uriToAdd = snap.adds.map(a => idx.scanUriOf(a) -> a).toMap
-    val touchedAdds = touchedUris.map(u => uriToAdd.getOrElse(u,
-      throw new IllegalStateException(
-        s"delta-log: scan URI $u not in snapshot v${snap.version}")))
+    val touchedAdds = addsAt(idx, snap, touchedUris.toSeq)
     // survivors keep their partition columns: stageAndLand routes
     // them back into `col=value/` dirs and re-records partitionValues
     val touchedRows = vis
@@ -2922,10 +2928,7 @@ object DeltaLog {
       .collect().map(_.getString(0)).sorted
     if (touchedUris.isEmpty) return snap.version
     val idx = new DeltaLogFileIndex(spark, root, snap, pinned = true)
-    val uriToAdd = snap.adds.map(a => idx.scanUriOf(a) -> a).toMap
-    val touchedAdds = touchedUris.map(u => uriToAdd.getOrElse(u,
-      throw new IllegalStateException(
-        s"delta-log: scan URI $u not in snapshot v${snap.version}")))
+    val touchedAdds = addsAt(idx, snap, touchedUris.toSeq)
     val touchedRows = vis
       .filter(col(DeltaLogRead.FpCol).isin(touchedUris.toSeq: _*))
     val setByCol = set.map { case (n, e) =>
@@ -3035,8 +3038,9 @@ object DeltaLog {
     * `WHEN NOT MATCHED INSERT`, `WHEN NOT MATCHED BY SOURCE` — the
     * same one-full-outer-join cascade as graft's own
     * [[VersionedTable.mergeConditional]], committed copy-on-write:
-    * only files whose rows can match the source's key envelope are
-    * read and rewritten (every file when a by-source clause ranges
+    * only files whose key stats overlap the source's key envelope
+    * ([[MergeKernel.targetFiles]], the same rule as graft and Iceberg)
+    * are read and rewritten (every file when a by-source clause ranges
     * over the whole target), survivors + merge output restage through
     * the partition layout, untouched files carry over. Source keys
     * must be unique (Delta raises the same). COLUMN-MAPPED tables
@@ -3052,7 +3056,7 @@ object DeltaLog {
       notMatched: Seq[VersionedTable.MergeClause] = Nil,
       bySource: Seq[VersionedTable.MergeClause] = Nil,
       withSchemaEvolution: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col, lit, min => fmin, max => fmax}
+    import org.apache.spark.sql.functions.{col, lit}
     val snap0 = snapshot(spark, root)
     // insert-only merges stay legal on append-only tables (they
     // remove nothing); any matched/by-source clause can rewrite rows
@@ -3089,15 +3093,7 @@ object DeltaLog {
             col(s"`$l`").cast(pf.dataType).as(pf.name, pf.metadata)
         }: _*)
       }
-    matched.foreach(c => require(
-      !c.isInstanceOf[VersionedTable.MergeInsert],
-      "WHEN MATCHED cannot INSERT"))
-    notMatched.foreach(c => require(
-      c.isInstanceOf[VersionedTable.MergeInsert],
-      "WHEN NOT MATCHED can only INSERT"))
-    bySource.foreach(c => require(
-      !c.isInstanceOf[VersionedTable.MergeInsert],
-      "WHEN NOT MATCHED BY SOURCE cannot INSERT"))
+    MergeKernel.checkClauses(matched, notMatched, bySource)
     require(snap0.schema.fieldNames.contains(tKey),
       s"no target column '$tKey'")
     require(source.columns.contains(sKey), s"no source column '$sKey'")
@@ -3171,45 +3167,18 @@ object DeltaLog {
       else Some(metaDataLine(schemaM.json, snap0.partitionColumns,
         snap0.configuration, Option(snap0.tableId).filter(_.nonEmpty)))
     val genFieldsM = generatedFields(snap0.schema)
-    // ONE source pass for all the pre-flight scalars (count,
-    // key-uniqueness, key envelope) — these were four sequential jobs
-    // over the same frame; per-job latency dominates small MERGE
-    // sources and the fused aggregate is exactly equivalent
-    // (countDistinct/count/min/max all ignore nulls).
-    val pre = source.agg(
-      org.apache.spark.sql.functions.count(lit(1)),
-      org.apache.spark.sql.functions.countDistinct(col(sKey)),
-      org.apache.spark.sql.functions.count(col(sKey)),
-      fmin(col(sKey)), fmax(col(sKey))).head()
-    val nSrc = pre.getLong(0)
-    if (nSrc == 0 && bySource.isEmpty) return snap.version
-    require(pre.getLong(1) == pre.getLong(2),
-      "delta-log MERGE: source keys must be unique (two source rows " +
-        "matching one target row have no deterministic outcome)")
-    val vis = DeltaLogRead.withPositions(spark, snap)
-    // file targeting: a by-source clause ranges over EVERY target
-    // row; otherwise the key-envelope filter pushes into the scan's
-    // per-file stats, so only overlapping files are even read
-    val touchedUris: Seq[String] =
-      if (bySource.nonEmpty)
-        vis.select(DeltaLogRead.FpCol).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      else {
-        if (pre.isNullAt(3)) return snap.version // all-NULL keys: no-op
-        val ptKey = mapping.getOrElse(tKey, tKey)
-        vis.filter(col(s"`$ptKey`") >= lit(pre.get(3)) &&
-            col(s"`$ptKey`") <= lit(pre.get(4)))
-          .select(DeltaLogRead.FpCol).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      }
+    // file targeting from the adds' stats alone — no data read; the
+    // target frame then reads only the touched files
     val idx = new DeltaLogFileIndex(spark, root, snap, pinned = true)
-    val uriToAdd = snap.adds.map(a => idx.scanUriOf(a) -> a).toMap
-    val touchedAdds = touchedUris.map(u => uriToAdd.getOrElse(u,
-      throw new IllegalStateException(
-        s"delta-log: scan URI $u not in snapshot v${snap.version}")))
+    val ptKey = mapping.getOrElse(tKey, tKey)
+    val touchedAdds = MergeKernel.targetFiles(source, sKey,
+        "delta-log MERGE", bySource.nonEmpty, snap.adds)(a =>
+        idx.statsOf(snap, a).get(ptKey)) match {
+      case None => return snap.version
+      case Some(adds) => adds
+    }
     val touchedFrame =
-      if (touchedUris.isEmpty) vis.filter(lit(false))
-      else vis.filter(col(DeltaLogRead.FpCol).isin(touchedUris: _*))
+      DeltaLogRead.withPositions(spark, snap.copy(adds = touchedAdds))
     val tgtRows0 = toLogical(
       touchedFrame.drop(DeltaLogRead.FpCol, DeltaLogRead.PosCol))
     // evolution: existing rows null-fill the added columns
@@ -3237,7 +3206,7 @@ object DeltaLog {
                 .cast(nullableOf(lf.dataType)).as(lf.name)
             } ++ Seq(col(DeltaLogRead.FpCol),
               col(DeltaLogRead.PosCol)): _*)
-        val tagged = VersionedTable.mergeCascadeTagged(tgtWithPos,
+        val tagged = MergeKernel.mergeCascadeTagged(tgtWithPos,
           source, snap0.schema, tKey, sKey, matched, notMatched,
           bySource, passThrough =
             Seq(DeltaLogRead.FpCol, DeltaLogRead.PosCol))
@@ -3264,7 +3233,7 @@ object DeltaLog {
           }
         } finally tagged.unpersist()
       }
-      val out = VersionedTable.mergeCascadeRows(tgtRows, source,
+      val out = MergeKernel.mergeCascadeRows(tgtRows, source,
         schemaM, tKey, sKey, matched, notMatched, bySource)
       enforceRowContracts(out, schemaM, snap.configuration, "MERGE")
       if (genFieldsM.nonEmpty)
@@ -3280,7 +3249,7 @@ object DeltaLog {
     // persisted because it feeds four scans (out + three change
     // kinds); unpersist after the commit materializes everything.
     val dataCols = schemaM.fieldNames.toSeq
-    val tagged = VersionedTable.mergeCascadeTagged(tgtRows, source,
+    val tagged = MergeKernel.mergeCascadeTagged(tgtRows, source,
       schemaM, tKey, sKey, matched, notMatched, bySource).persist()
     try {
       if (tagged.filter(col("__ct").isNotNull).isEmpty)

@@ -332,7 +332,8 @@ class DeltaLogFileIndex(spark: SparkSession, val root: String,
     case _ => None // collated/dates/decimals/etc: conservative keep
   }
 
-  private def statsOf(snap: DeltaLog.DeltaSnapshot, a: DeltaLog.DeltaAdd)
+  private[sources] def statsOf(snap: DeltaLog.DeltaSnapshot,
+      a: DeltaLog.DeltaAdd)
       : Map[String, VersionedTable.ColStats] =
     statsCache.getOrElseUpdate(a.path, {
       a.statsJson.map[Map[String, VersionedTable.ColStats]] { js =>

@@ -3,18 +3,14 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{
-  And, AttributeReference, EqualNullSafe, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual,
-  Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{
   FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{
   BaseRelation, CreatableRelationProvider, DataSourceRegister,
   InsertableRelation, RelationProvider, StreamSinkProvider}
-import org.apache.spark.sql.types.{Decimal, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 /** Spark-native datasource for the graft versioned-table format:
   *
@@ -34,12 +30,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * stock Spark — vectorized parquet reader, whole-stage codegen,
   * column pruning, parquet row-group pushdown — while
   * [[GraftFileIndex.listFiles]] prunes FILES from the snapshot's
-  * manifest stats before any I/O is planned:
+  * manifest stats before any I/O is planned, through the file-skipping
+  * walk every Catalyst-driven index shares ([[StatsPruning]]):
   *
-  *  - range predicates against per-file min/max (`mayMatch`),
+  *  - range predicates against per-file min/max (strict comparisons
+  *    prune their boundary file too),
   *  - `IS [NOT] NULL` against per-file null counts,
-  *  - equality through the per-file bloom index (when built) and
-  *    each file's hidden-partitioning `part=` tag,
+  *  - equality through min/max, then the graft-only probes: the
+  *    per-file bloom index (when built) and each file's
+  *    hidden-partitioning `part=` tag,
   *
   * exactly the metadata layers the bespoke `readSkipping*` /
   * `readPointLookup` APIs use — but now driven by Catalyst from a
@@ -275,7 +274,8 @@ class GraftRelation(index: GraftFileIndex, schema: StructType,
   * listing — at 100 TB / millions of files, object-store LIST is the
   * scan planner's bottleneck; Delta and Iceberg exist to avoid it).
   * `listFiles` evaluates the pushed data filters against per-file
-  * min/max + null counts + bloom sidecars + hidden-partition tags and
+  * min/max + null counts ([[StatsPruning.mayMatchExpr]]) + bloom
+  * sidecars + hidden-partition tags and
   * returns only the files a match could live in. Conservative by
   * construction: any expression shape it doesn't recognize keeps the
   * file, and Spark re-applies all filters row-wise downstream.
@@ -391,49 +391,36 @@ class GraftFileIndex(spark: SparkSession, root: String, version: Long,
           "graft.ext.GraftExtensions (the MOR scan rewrite) and re-plan " +
           "the query, or read via VersionedTable.read / compact() first")
     val keep = statuses.filter { case (rel, _) =>
-      dataFilters.forall(e => mayMatchFile(snap, rel, e))
+      val stats = snap.stats.getOrElse(rel, Map.empty)
+      dataFilters.forall(e => StatsPruning.mayMatchExpr(stats, e,
+        (col, v) => bloomOk(snap, rel, col, v) && partOk(snap, rel, col, v)))
     }
     lastListing = Some((keep.size, statuses.size))
     Seq(PartitionDirectory(InternalRow.empty, keep.map(_._2).toArray))
   }
 
-  /** Catalyst literal → the external value the stats comparators
-    * expect (strings arrive as UTF8String, decimals as Decimal). */
-  private def ext(l: Literal): Any = l.value match {
-    case u: UTF8String => u.toString
-    case d: Decimal => d.toBigDecimal
-    case o => o
+  /** Equality probes past min/max, mirroring `pruneFilesEquality` +
+    * `pruneFilesPartition`: the file's bloom sidecar (definite-absence
+    * answers), then its hidden-partition tag (a transform mismatch
+    * proves absence). */
+  private def bloomOk(snap: VersionedTable.TableState, rel: String,
+      col: String, v: Any): Boolean = snap.blooms.get((rel, col)) match {
+    case None => true
+    case Some(sc) => bloomCache.getOrElseUpdate(sc,
+        org.apache.spark.util.sketch.BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(
+            VersionedTable.readDataBytes(root, sc))))
+      .mightContainString(VersionedTable.bloomProbe(v))
   }
 
-  private def statsOf(snap: VersionedTable.TableState, rel: String,
-      col: String) =
-    snap.stats.getOrElse(rel, Map.empty).get(col)
-
-  /** Equality probe against every metadata layer: min/max range, then
-    * the file's bloom sidecar (definite-absence answers), then its
-    * hidden-partition tag (transform mismatch proves absence). The
-    * composition mirrors `pruneFilesEquality` + `pruneFilesPartition`. */
-  private def eqMayMatch(snap: VersionedTable.TableState, rel: String,
-      col: String, v: Any): Boolean = {
-    val rangeOk =
-      VersionedTable.mayMatch(statsOf(snap, rel, col), Some(v), Some(v))
-    def bloomOk = snap.blooms.get((rel, col)) match {
-      case None => true
-      case Some(sc) => bloomCache.getOrElseUpdate(sc,
-          org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(
-              VersionedTable.readDataBytes(root, sc))))
-        .mightContainString(VersionedTable.bloomProbe(v))
+  private def partOk(snap: VersionedTable.TableState, rel: String,
+      col: String, v: Any): Boolean = snap.parts.get(rel) match {
+    case Some((spec, pv)) => PartitionTransform.parseOpt(spec) match {
+      case Some(t) if t.srcCol == col =>
+        dataTypeOf(snap, col).flatMap(t.probe(v, _)).forall(_ == pv)
+      case _ => true
     }
-    def partOk = snap.parts.get(rel) match {
-      case Some((spec, pv)) => PartitionTransform.parseOpt(spec) match {
-        case Some(t) if t.srcCol == col =>
-          dataTypeOf(snap, col).flatMap(t.probe(v, _)).forall(_ == pv)
-        case _ => true
-      }
-      case None => true
-    }
-    rangeOk && bloomOk && partOk
+    case None => true
   }
 
   // Concurrency: this index is shared by a cached catalog relation, so
@@ -446,57 +433,6 @@ class GraftFileIndex(spark: SparkSession, root: String, version: Long,
   private def dataTypeOf(snap: VersionedTable.TableState, col: String) =
     VersionedTable.physicalSchemaOf(snap)
       .flatMap(_.fields.find(_.name == col)).map(_.dataType)
-
-  /** Can any row of file `rel` satisfy `e`? Strict comparisons prune
-    * their boundary file too ([[VersionedTable.mayMatchStrict]] —
-    * `ts > day_end` on day-clustered data otherwise always opens one
-    * extra file); unrecognized shapes keep the file. */
-  private def mayMatchFile(snap: VersionedTable.TableState, rel: String,
-      e: Expression): Boolean = e match {
-    case And(a, b) => mayMatchFile(snap, rel, a) && mayMatchFile(snap, rel, b)
-    case Or(a, b) => mayMatchFile(snap, rel, a) || mayMatchFile(snap, rel, b)
-    case EqualTo(a: AttributeReference, l: Literal) =>
-      eqMayMatch(snap, rel, a.name, ext(l))
-    case EqualTo(l: Literal, a: AttributeReference) =>
-      eqMayMatch(snap, rel, a.name, ext(l))
-    case EqualNullSafe(a: AttributeReference, l: Literal)
-        if l.value != null => eqMayMatch(snap, rel, a.name, ext(l))
-    case GreaterThan(a: AttributeReference, l: Literal) =>
-      VersionedTable.mayMatchStrict(statsOf(snap, rel, a.name),
-        Some(ext(l)), lowerStrict = true, None, upperStrict = false)
-    case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-      VersionedTable.mayMatch(statsOf(snap, rel, a.name), Some(ext(l)), None)
-    case LessThan(a: AttributeReference, l: Literal) =>
-      VersionedTable.mayMatchStrict(statsOf(snap, rel, a.name),
-        None, lowerStrict = false, Some(ext(l)), upperStrict = true)
-    case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-      VersionedTable.mayMatch(statsOf(snap, rel, a.name), None, Some(ext(l)))
-    case GreaterThan(l: Literal, a: AttributeReference) => // v > col
-      VersionedTable.mayMatchStrict(statsOf(snap, rel, a.name),
-        None, lowerStrict = false, Some(ext(l)), upperStrict = true)
-    case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-      VersionedTable.mayMatch(statsOf(snap, rel, a.name), None, Some(ext(l)))
-    case LessThan(l: Literal, a: AttributeReference) => // v < col
-      VersionedTable.mayMatchStrict(statsOf(snap, rel, a.name),
-        Some(ext(l)), lowerStrict = true, None, upperStrict = false)
-    case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-      VersionedTable.mayMatch(statsOf(snap, rel, a.name), Some(ext(l)), None)
-    case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      vs.exists(l => eqMayMatch(snap, rel, a.name,
-        ext(l.asInstanceOf[Literal])))
-    case InSet(a: AttributeReference, vs) =>
-      vs.exists(v => eqMayMatch(snap, rel, a.name, v match {
-        case u: UTF8String => u.toString
-        case o => o
-      }))
-    case IsNull(a: AttributeReference) =>
-      VersionedTable.mayMatchNullness(
-        statsOf(snap, rel, a.name), wantNull = true)
-    case IsNotNull(a: AttributeReference) =>
-      VersionedTable.mayMatchNullness(
-        statsOf(snap, rel, a.name), wantNull = false)
-    case _ => true
-  }
 }
 
 object GraftFileIndex {

@@ -4921,47 +4921,23 @@ object IcebergMeta {
       matched: Seq[VersionedTable.MergeClause] = Nil,
       notMatched: Seq[VersionedTable.MergeClause] = Nil,
       bySource: Seq[VersionedTable.MergeClause] = Nil): Long = {
-    import org.apache.spark.sql.functions.{col, min => fmin, max => fmax}
+    import org.apache.spark.sql.functions.col
     val snap = snapshot(root)
-    matched.foreach(c => require(
-      !c.isInstanceOf[VersionedTable.MergeInsert],
-      "WHEN MATCHED cannot INSERT"))
-    notMatched.foreach(c => require(
-      c.isInstanceOf[VersionedTable.MergeInsert],
-      "WHEN NOT MATCHED can only INSERT"))
-    bySource.foreach(c => require(
-      !c.isInstanceOf[VersionedTable.MergeInsert],
-      "WHEN NOT MATCHED BY SOURCE cannot INSERT"))
+    MergeKernel.checkClauses(matched, notMatched, bySource)
     require(snap.schema.fieldNames.contains(tKey),
       s"no target column '$tKey'")
     require(source.columns.contains(sKey), s"no source column '$sKey'")
-    // ONE source pass for count, key-uniqueness, and the key envelope
-    // (was four sequential jobs — per-job latency dominates small
-    // MERGE sources; countDistinct/count/min/max all ignore nulls).
-    val pre = source.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.countDistinct(col(sKey)),
-      org.apache.spark.sql.functions.count(col(sKey)),
-      fmin(col(sKey)), fmax(col(sKey))).head()
-    val nSrc = pre.getLong(0)
-    if (nSrc == 0 && bySource.isEmpty) return snap.snapshotId
-    require(pre.getLong(1) == pre.getLong(2),
-      "iceberg-meta MERGE: source keys must be unique (two source " +
-        "rows matching one target row have no deterministic outcome)")
     // file targeting from manifest bounds alone — no data read
-    val touched: Seq[IceFile] =
-      if (bySource.nonEmpty) snap.files
-      else {
-        if (pre.isNullAt(3)) return snap.snapshotId // all-NULL keys: no-op
-        snap.files.filter(f => VersionedTable.mayMatch(
-          f.stats.get(tKey), Some(pre.get(3)), Some(pre.get(4))))
-      }
+    val touched = MergeKernel.targetFiles(source, sKey, "iceberg-meta MERGE",
+        bySource.nonEmpty, snap.files)(_.stats.get(tKey)) match {
+      case None => return snap.snapshotId
+      case Some(files) => files
+    }
     val fv3 = formatVersion(root) == 3
     if (!fv3) {
       val tgtRows = IcebergMetaRead.morRead(spark,
         snap.copy(files = touched))
-      val out = VersionedTable.mergeCascadeRows(tgtRows, source,
+      val out = MergeKernel.mergeCascadeRows(tgtRows, source,
         snap.schema, tKey, sKey, matched, notMatched, bySource)
       return replaceFiles(spark, root,
         touched.map(_.recordedPath).toSet, out)
@@ -4980,7 +4956,7 @@ object IcebergMeta {
       snap.copy(files = touched))
     val newSeq = latestSequence(root) + 1
     val nextRowId = currentMeta(root)._2.get("next-row-id").asLong()
-    val kept = VersionedTable.mergeCascadeTagged(tgtRows, source,
+    val kept = MergeKernel.mergeCascadeTagged(tgtRows, source,
         snap.schema, tKey, sKey, matched, notMatched, bySource,
         passThrough = lineageNames)
       .filter(col("__keep"))

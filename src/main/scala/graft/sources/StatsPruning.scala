@@ -8,64 +8,72 @@ import org.apache.spark.sql.types.Decimal
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst-expression file-skipping evaluator over per-column
-  * [[VersionedTable.ColStats]] — the shared core of the external-format
-  * FileIndexes ([[DeltaLogFileIndex]], [[IcebergMetaFileIndex]]).
+  * [[VersionedTable.ColStats]] — the one file-skipping walk of every
+  * Catalyst-driven FileIndex ([[GraftFileIndex]], [[DeltaLogFileIndex]],
+  * [[IcebergMetaFileIndex]]) and of the stats-targeted DML paths.
   * Strictly CONSERVATIVE: any shape it does not recognize keeps the
   * file, and Spark re-applies every predicate row-wise downstream, so
-  * pruning can change cost, never answers. (The graft-native
-  * [[GraftFileIndex]] keeps its own richer walk — blooms and hidden
-  * partition tags layer on top of the range checks here.) */
+  * pruning can change cost, never answers. Strict comparisons prune
+  * their boundary file too ([[VersionedTable.mayMatchStrict]]). */
 private[sources] object StatsPruning {
 
-  private def ext(l: Literal): Any = l.value match {
+  /** Catalyst literal value → the external value the stats comparators
+    * expect (strings arrive as UTF8String, decimals as Decimal). */
+  private def ext(v: Any): Any = v match {
     case u: UTF8String => u.toString
     case d: Decimal => d.toBigDecimal
     case o => o
   }
 
+  /** Can any row of a file with column stats `stats` satisfy `e`?
+    * `eqProbe(col, value)` is a further per-file equality check asked
+    * only after min/max admit the value — the graft index's bloom
+    * sidecar and hidden-partition tag, which prove absence that
+    * min/max cannot. */
   def mayMatchExpr(stats: Map[String, VersionedTable.ColStats],
-      e: Expression): Boolean = {
-    def cs(name: String) = stats.get(name)
+      e: Expression,
+      eqProbe: (String, Any) => Boolean = (_, _) => true): Boolean = {
+    def range(a: AttributeReference, lower: Option[Any],
+        lowerStrict: Boolean, upper: Option[Any], upperStrict: Boolean) =
+      VersionedTable.mayMatchStrict(stats.get(a.name), lower, lowerStrict,
+        upper, upperStrict)
+    def eq(a: AttributeReference, v: Any) = {
+      val x = ext(v)
+      range(a, Some(x), false, Some(x), false) && eqProbe(a.name, x)
+    }
+    def lo(a: AttributeReference, l: Literal, strict: Boolean) =
+      range(a, Some(ext(l.value)), strict, None, false)
+    def hi(a: AttributeReference, l: Literal, strict: Boolean) =
+      range(a, None, false, Some(ext(l.value)), strict)
     e match {
-      case And(x, y) => mayMatchExpr(stats, x) && mayMatchExpr(stats, y)
-      case Or(x, y) => mayMatchExpr(stats, x) || mayMatchExpr(stats, y)
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        VersionedTable.mayMatch(cs(a.name), Some(ext(l)), Some(ext(l)))
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        VersionedTable.mayMatch(cs(a.name), Some(ext(l)), Some(ext(l)))
+      case And(x, y) =>
+        mayMatchExpr(stats, x, eqProbe) && mayMatchExpr(stats, y, eqProbe)
+      case Or(x, y) =>
+        mayMatchExpr(stats, x, eqProbe) || mayMatchExpr(stats, y, eqProbe)
+      case EqualTo(a: AttributeReference, l: Literal) => eq(a, l.value)
+      case EqualTo(l: Literal, a: AttributeReference) => eq(a, l.value)
       case EqualNullSafe(a: AttributeReference, l: Literal)
-          if l.value != null =>
-        VersionedTable.mayMatch(cs(a.name), Some(ext(l)), Some(ext(l)))
-      case GreaterThan(a: AttributeReference, l: Literal) =>
-        VersionedTable.mayMatch(cs(a.name), Some(ext(l)), None)
+          if l.value != null => eq(a, l.value)
+      case GreaterThan(a: AttributeReference, l: Literal) => lo(a, l, true)
       case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-        VersionedTable.mayMatch(cs(a.name), Some(ext(l)), None)
-      case LessThan(a: AttributeReference, l: Literal) =>
-        VersionedTable.mayMatch(cs(a.name), None, Some(ext(l)))
+        lo(a, l, false)
+      case LessThan(a: AttributeReference, l: Literal) => hi(a, l, true)
       case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-        VersionedTable.mayMatch(cs(a.name), None, Some(ext(l)))
-      case GreaterThan(l: Literal, a: AttributeReference) =>
-        VersionedTable.mayMatch(cs(a.name), None, Some(ext(l)))
+        hi(a, l, false)
+      case GreaterThan(l: Literal, a: AttributeReference) => hi(a, l, true)
       case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-        VersionedTable.mayMatch(cs(a.name), None, Some(ext(l)))
-      case LessThan(l: Literal, a: AttributeReference) =>
-        VersionedTable.mayMatch(cs(a.name), Some(ext(l)), None)
+        hi(a, l, false)
+      case LessThan(l: Literal, a: AttributeReference) => lo(a, l, true)
       case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-        VersionedTable.mayMatch(cs(a.name), Some(ext(l)), None)
+        lo(a, l, false)
       case In(a: AttributeReference, vs)
           if vs.forall(_.isInstanceOf[Literal]) =>
-        vs.exists(l => VersionedTable.mayMatch(cs(a.name),
-          Some(ext(l.asInstanceOf[Literal])),
-          Some(ext(l.asInstanceOf[Literal]))))
-      case InSet(a: AttributeReference, vs) =>
-        vs.exists { v =>
-          val x = v match { case u: UTF8String => u.toString; case o => o }
-          VersionedTable.mayMatch(cs(a.name), Some(x), Some(x))
-        }
+        vs.exists(l => eq(a, l.asInstanceOf[Literal].value))
+      case InSet(a: AttributeReference, vs) => vs.exists(v => eq(a, v))
       case IsNull(a: AttributeReference) =>
-        VersionedTable.mayMatchNullness(cs(a.name), wantNull = true)
+        VersionedTable.mayMatchNullness(stats.get(a.name), wantNull = true)
       case IsNotNull(a: AttributeReference) =>
-        VersionedTable.mayMatchNullness(cs(a.name), wantNull = false)
+        VersionedTable.mayMatchNullness(stats.get(a.name), wantNull = false)
       case _ => true
     }
   }

@@ -1725,10 +1725,26 @@ object VersionedTable {
 
   /** Can any row of a file with stats `cs` satisfy
     * `col BETWEEN lower AND upper` (bounds inclusive, None =
-    * unbounded)? NULL column values never satisfy a range predicate,
-    * so an all-null file is skippable outright. No stats → must read. */
+    * unbounded)? The inclusive form of [[mayMatchStrict]]. */
   private[sources] def mayMatch(cs: Option[ColStats],
-      lower: Option[Any], upper: Option[Any]): Boolean = cs match {
+      lower: Option[Any], upper: Option[Any]): Boolean =
+    mayMatchStrict(cs, lower, lowerStrict = false, upper, upperStrict = false)
+
+  /** Can any row of a file with stats `cs` satisfy `col > lower` /
+    * `col >= lower` and `col < upper` / `col <= upper` (per-bound
+    * strictness, None = unbounded)? NULL column values never satisfy a
+    * range predicate, so an all-null file is skippable outright. No
+    * stats → must read. Strict bounds also prune the BOUNDARY file a
+    * strict comparison can never match — the aligned-range pattern
+    * (`ts > day_end` on day-clustered data, `key > range_max` after a
+    * range split) where inclusive pruning always leaves one boundary
+    * file open. Strictness assumes nothing the inclusive check does
+    * not: a recorded max is >= the actual max (true of parquet's
+    * INEXACT truncated string bounds), so `recorded_max == lower`
+    * still proves no row exceeds `lower` (and symmetrically for min). */
+  private[sources] def mayMatchStrict(cs: Option[ColStats],
+      lower: Option[Any], lowerStrict: Boolean,
+      upper: Option[Any], upperStrict: Boolean): Boolean = cs match {
     case None => true
     case Some(c) =>
       (c.min, c.max) match {
@@ -1738,31 +1754,6 @@ object VersionedTable {
           // a string bound against long stats, or a malformed stats
           // value) must degrade to "read the file", never throw —
           // absence of USABLE stats is the same as absence of stats.
-          scala.util.Try {
-            def key(v: Any) = statKey(c.typ, v.toString)
-            upper.forall(u => statKey(c.typ, mn) <= key(u)) &&
-              lower.forall(l => statKey(c.typ, mx) >= key(l))
-          }.getOrElse(true)
-        case _ => true
-      }
-  }
-
-  /** [[mayMatch]] with per-bound STRICTNESS: `col > lower` /
-    * `col < upper` also prune the BOUNDARY file a strict comparison
-    * can never match — the aligned-range pattern (`ts > day_end` on
-    * day-clustered data, `key > range_max` after a range split) where
-    * inclusive pruning always leaves one boundary file open. Safe
-    * against parquet's INEXACT truncated string bounds: a recorded
-    * max is >= the actual max, so `recorded_max == lower` still
-    * proves no row exceeds `lower` (and symmetrically for min). */
-  private[sources] def mayMatchStrict(cs: Option[ColStats],
-      lower: Option[Any], lowerStrict: Boolean,
-      upper: Option[Any], upperStrict: Boolean): Boolean = cs match {
-    case None => true
-    case Some(c) =>
-      (c.min, c.max) match {
-        case (None, None) => c.nulls < c.rows // all-null file: skip
-        case (Some(mn), Some(mx)) =>
           scala.util.Try {
             def key(v: Any) = statKey(c.typ, v.toString)
             upper.forall(u =>
@@ -3050,7 +3041,7 @@ object VersionedTable {
     * changes schema; tableSchema resolves from the NEWEST manifest
     * only, so omitting it would lose schema tracking) unless
     * `schemaOverride` widens it ([[mergeKeyedEvolve]]). Shared tail of
-    * [[deleteRanges]]/[[updateRanges]]/[[mergeKeyed]]. Publishes
+    * [[deleteRanges]]/[[updateRanges]]/[[mergeConditional]]. Publishes
     * through [[publishRebasing]]: compatible interleaved commits
     * (appends, disjoint rewrites) cost a manifest read, not a redo of
     * the rewrite. */
@@ -3138,9 +3129,11 @@ object VersionedTable {
     * NULL keys never match (SQL equality). `source` must be unique
     * per key — two source rows matching one target row have no
     * deterministic outcome, so it refuses (Delta raises the same).
+    * Tables that predate schema tracking merge against their first
+    * file's footer schema.
     *
     * Scale shape: when `bySource` is empty, target files are pruned by
-    * the source's key envelope exactly like [[mergeKeyed]] — a
+    * the source's key envelope ([[MergeKernel.targetFiles]]) — a
     * clustered CDC batch rewrites a handful of files. A `bySource`
     * clause reads every live row BY DEFINITION (its predicate ranges
     * over the whole target), so pruning is disabled only then. The
@@ -3151,200 +3144,68 @@ object VersionedTable {
       matched: Seq[MergeClause] = Nil,
       notMatched: Seq[MergeClause] = Nil,
       bySource: Seq[MergeClause] = Nil): Long = {
-    import org.apache.spark.sql.functions.{col, lit, when, min => fmin, max => fmax}
-    matched.foreach(c => require(!c.isInstanceOf[MergeInsert],
-      "WHEN MATCHED cannot INSERT"))
-    notMatched.foreach(c => require(c.isInstanceOf[MergeInsert],
-      "WHEN NOT MATCHED can only INSERT"))
-    bySource.foreach(c => require(!c.isInstanceOf[MergeInsert],
-      "WHEN NOT MATCHED BY SOURCE cannot INSERT"))
+    MergeKernel.checkClauses(matched, notMatched, bySource)
     val basis = latestVersion(root)
     require(basis >= 0, s"$root is not a versioned table (empty log)")
     val st = state(root, basis)
-    val tableSc = schemaOf(st).getOrElse(throw new IllegalStateException(
-      "mergeConditional needs schema tracking — commit a schema first"))
-    val tableCols = tableSc.fieldNames.toSeq
-    require(tableCols.contains(tKey), s"no target column '$tKey'")
+    val tableSc = schemaOrFooter(spark, root, st)
+    require(tableSc.fieldNames.contains(tKey), s"no target column '$tKey'")
     require(source.columns.contains(sKey), s"no source column '$sKey'")
-    // ONE source pass for count, key-uniqueness, and the key envelope
-    // (was four sequential jobs — per-job latency dominates small
-    // MERGE sources; countDistinct/count/min/max all ignore nulls).
-    val pre = source.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.countDistinct(col(sKey)),
-      org.apache.spark.sql.functions.count(col(sKey)),
-      fmin(col(sKey)), fmax(col(sKey))).head()
-    val nSrc = pre.getLong(0)
-    if (nSrc == 0 && bySource.isEmpty) return basis
-    require(pre.getLong(1) == pre.getLong(2),
-      "mergeConditional: source keys must be unique (two source rows " +
-        "matching one target row have no deterministic outcome)")
-    // file targeting: by-source clauses range over EVERY target row;
-    // otherwise only files overlapping the source key envelope matter
-    val touched =
-      if (bySource.nonEmpty) st.files
-      else {
-        if (pre.isNullAt(3)) return basis
-        val physKey = physicalName(st, tKey)
-        st.files.filter(f => mayMatch(
-          st.stats.getOrElse(f, Map.empty).get(physKey),
-          Some(pre.get(3)), Some(pre.get(4))))
-      }
-    val tgt = readResolved(spark, root, st, touched)
-    val out = mergeCascadeRows(tgt, source, tableSc, tKey, sKey,
-      matched, notMatched, bySource)
-    commitReplace(spark, root, basis, touched, out)
+    targetFiles(st, source, tKey, "mergeConditional", bySource.nonEmpty) match {
+      case None => basis
+      case Some(touched) =>
+        val out = MergeKernel.mergeCascadeRows(
+          readResolved(spark, root, st, touched), source, tableSc, tKey,
+          sKey, matched, notMatched, bySource)
+        commitReplace(spark, root, basis, touched, out)
+    }
   }
 
-  /** The clause-cascade full-outer join at the heart of
-    * [[mergeConditional]] — shared with the Delta interop MERGE
-    * ([[DeltaLog.mergeConditional]]): target rows (already restricted
-    * to the files in play) join source rows on the key, each row runs
-    * its position's clause list (first condition that holds wins),
-    * and the survivors project back to the table's columns. */
-  private[sources] def mergeCascadeRows(tgtRows: org.apache.spark.sql.DataFrame,
-      source: org.apache.spark.sql.DataFrame,
-      tableSc: org.apache.spark.sql.types.StructType,
-      tKey: String, sKey: String,
-      matched: Seq[MergeClause], notMatched: Seq[MergeClause],
-      bySource: Seq[MergeClause]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    mergeCascadeTagged(tgtRows, source, tableSc, tKey, sKey,
-      matched, notMatched, bySource)
-      .filter(col("__keep"))
-      .select(tableSc.fieldNames.toSeq.map(col): _*)
+  /** [[MergeKernel.targetFiles]] over snapshot `st`'s manifest stats. */
+  private def targetFiles(st: TableState, source: DataFrame, key: String,
+      what: String, everyFile: Boolean): Option[Seq[String]] = {
+    val physKey = physicalName(st, key) // stats are keyed physically
+    MergeKernel.targetFiles(source, key, what, everyFile, st.files)(f =>
+      st.stats.getOrElse(f, Map.empty).get(physKey))
   }
 
-  /** [[mergeCascadeRows]] with PROVENANCE: the frame BEFORE the keep
-    * filter, carrying the post-merge table columns plus `__keep`
-    * (does the row survive), `__ct` (which clause kind decided:
-    * 'update' / 'delete' / 'insert', NULL for carry-over and ignored
-    * source rows) and `__pre_<col>` pre-merge values (NULL on
-    * source-only rows). This is what a CHANGE DATA FEED needs from a
-    * merge: cdc `delete` rows are the `__ct='delete'` pre-images,
-    * `update_preimage`/`update_postimage` pairs come from
-    * `__ct='update'`, `insert`s from `__ct='insert'` — carry-over
-    * rows (NULL `__ct`) produce NO change rows, exactly Delta's merge
-    * CDF semantics. One full-outer join; the tags are the same
-    * codegen'd when-cascade as the values. */
-  private[sources] def mergeCascadeTagged(tgtRows: org.apache.spark.sql.DataFrame,
-      source: org.apache.spark.sql.DataFrame,
-      tableSc: org.apache.spark.sql.types.StructType,
-      tKey: String, sKey: String,
-      matched: Seq[MergeClause], notMatched: Seq[MergeClause],
-      bySource: Seq[MergeClause],
-      // extra TARGET-side columns carried verbatim through the
-      // cascade (null on insert rows) — the DV merge path threads the
-      // target rows' (file, position) addressing through here
-      passThrough: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    val tableCols = tableSc.fieldNames.toSeq
-    val tgt = tgtRows
-      .select(tableCols.map(c => col(c).as(s"__t_$c")) ++
-        passThrough.map(col): _*)
-      .withColumn("__t_present", lit(true))
-    val src = source
-      .select(source.columns.toSeq.map(c => col(c).as(s"__s_$c")): _*)
-      .withColumn("__s_present", lit(true))
-    val joined = tgt.join(src,
-      col(s"__t_$tKey") === col(s"__s_$sKey"), "full_outer")
-    // presence markers, not key nullability: NULL-keyed rows on either
-    // side must land in their side's UNMATCHED branch, and a null key
-    // cannot witness its own row's presence
-    val isMatched = col("__t_present").isNotNull && col("__s_present").isNotNull
-    val targetOnly = col("__t_present").isNotNull && col("__s_present").isNull
-    // Right-fold the clause list into (keep?, value(col), kind)
-    // cascades: the FIRST clause whose condition holds decides, later
-    // clauses and the default sit in the otherwise-chain.
-    type Cascade = (org.apache.spark.sql.Column,
-      String => org.apache.spark.sql.Column,
-      org.apache.spark.sql.Column)
-    def fold(clauses: Seq[MergeClause], default: Cascade): Cascade =
-      clauses.foldRight(default) { case (cl, (k0, v0, t0)) =>
-        cl match {
-          case MergeUpdate(c, set) =>
-            val cond = c.getOrElse(lit(true))
-            (when(cond, lit(true)).otherwise(k0),
-              n => when(cond, set.getOrElse(n, col(s"__t_$n")))
-                .otherwise(v0(n)),
-              when(cond, lit("update")).otherwise(t0))
-          case MergeDelete(c) =>
-            val cond = c.getOrElse(lit(true))
-            (when(cond, lit(false)).otherwise(k0), v0,
-              when(cond, lit("delete")).otherwise(t0))
-          case MergeInsert(c, values) =>
-            val cond = c.getOrElse(lit(true))
-            (when(cond, lit(true)).otherwise(k0),
-              n => when(cond,
-                  values.getOrElse(n, lit(null)))
-                .otherwise(v0(n)),
-              when(cond, lit("insert")).otherwise(t0))
-        }
-      }
-    val keepT: String => org.apache.spark.sql.Column = n => col(s"__t_$n")
-    val noCt = lit(null).cast("string")
-    val (mKeep, mVal, mCt) = fold(matched, (lit(true), keepT, noCt))
-    val (tKeep, tVal, tCt) = fold(bySource, (lit(true), keepT, noCt))
-    val (sKeep, sVal, sCt) =
-      fold(notMatched, (lit(false), _ => lit(null), noCt))
-    joined
-      .withColumn("__keep",
-        when(isMatched, mKeep).when(targetOnly, tKeep).otherwise(sKeep))
-      .withColumn("__ct",
-        when(isMatched, mCt).when(targetOnly, tCt).otherwise(sCt))
-      .select(tableCols.map { c =>
-        val f = tableSc.fields.find(_.name == c).get
-        when(isMatched, mVal(c)).when(targetOnly, tVal(c))
-          .otherwise(sVal(c)).cast(f.dataType).as(c)
-      } ++ tableCols.map { c =>
-        val f = tableSc.fields.find(_.name == c).get
-        col(s"__t_$c").cast(f.dataType).as(s"__pre_$c")
-      } ++ Seq(col("__keep"), col("__ct")) ++ passThrough.map(col): _*)
+  /** The logical schema of snapshot `st`: the tracked one, or the first
+    * file's footer schema on a table that predates schema tracking. */
+  private def schemaOrFooter(spark: SparkSession, root: String,
+      st: TableState): org.apache.spark.sql.types.StructType =
+    schemaOf(st).getOrElse(
+      readFilesWithSchema(spark, root, None, st.files.take(1)).schema)
+
+  /** `UPDATE SET *` / `INSERT *` over `cols`: (matched, notMatched). */
+  private def starClauses(cols: Seq[String])
+      : (Seq[MergeClause], Seq[MergeClause]) = {
+    val star = cols.map(c => c -> MergeRef.source(c)).toMap
+    (Seq(MergeUpdate(None, star)), Seq(MergeInsert(None, star)))
   }
 
   /** MERGE INTO, stats-pruned copy-on-write (the Delta `MERGE` shape,
     * upsert form): `source` carries the table's schema; rows whose
-    * `key` matches an existing row REPLACE it, the rest INSERT. Only
-    * files whose `key` min/max overlaps the source's [min, max] key
-    * envelope are read and rewritten — everything else carries over by
-    * reference in one `replace` commit. The pruning is sound because a
-    * file disjoint from the source's key envelope can neither contain
-    * a matched key nor shadow an insert; it is EFFECTIVE when the
-    * source's keys are clustered (a CDC batch usually is — recent
-    * keys). Inserts land in the rewritten output even when no file
-    * matches. Contract: `source` unique per `key` (pre-dedup a CDC
-    * batch to its latest record). Empty source = metadata-only no-op.
-    * For tombstones use [[deleteRanges]] or the full [[merge]]. */
+    * `key` matches an existing row REPLACE it, the rest INSERT — the
+    * star form of [[mergeConditional]]. Only files whose `key` min/max
+    * overlaps the source's [min, max] key envelope are read and
+    * rewritten — everything else carries over by reference in one
+    * `replace` commit. The pruning is EFFECTIVE when the source's keys
+    * are clustered (a CDC batch usually is — recent keys). Inserts
+    * land in the rewritten output even when no file matches. A source
+    * with a duplicated key refuses (pre-dedup a CDC batch to its
+    * latest record). Empty source = metadata-only no-op. For
+    * tombstones use [[deleteRanges]] or the full [[merge]]. */
   def mergeKeyed(spark: SparkSession, root: String, source: DataFrame,
       key: String): Long = {
-    import org.apache.spark.sql.functions.{col, lit, min => fmin, max => fmax}
     val basis = latestVersion(root)
     require(basis >= 0, s"$root is not a versioned table (empty log)")
-    val st = state(root, basis)
-    val tableCols = schemaOf(st).map(_.fieldNames.toSeq).getOrElse(
-      readFilesWithSchema(spark, root, None, st.files.take(1))
-        .columns.toSeq) // logical names
+    val tableCols =
+      schemaOrFooter(spark, root, state(root, basis)).fieldNames.toSeq
     require(source.columns.toSet == tableCols.toSet,
       s"source schema must match table: ${tableCols.mkString(",")} " +
         s"(got ${source.columns.mkString(",")})")
-    val bounds = source.agg(
-      fmin(col(key)).as("lo"), fmax(col(key)).as("hi")).head()
-    if (bounds.isNullAt(0)) return basis // empty source
-    val (lo, hi) = (bounds.get(0), bounds.get(1))
-    val physKey = physicalName(st, key)
-    val touched = st.files.filter { f =>
-      mayMatch(st.stats.getOrElse(f, Map.empty).get(physKey),
-        Some(lo), Some(hi))
-    }
-    // tombstone-resolved base: the merge must not resurrect rows a
-    // merge-on-read delete removed (its replace commit clears the
-    // touched files' tombstone links)
-    val base = readResolved(spark, root, st, touched)
-    val merged = graft.ops.MergeOps.merge(
-        base, source.withColumn("__mrg_tomb", lit(false)), key, "__mrg_tomb")
-      .select(tableCols.map(col): _*) // MergeOps fronts the key column
-    commitReplace(spark, root, basis, touched, merged)
+    val (matched, notMatched) = starClauses(tableCols)
+    mergeConditional(spark, root, source, key, key, matched, notMatched)
   }
 
   /** [[mergeKeyed]] with AUTOMATIC SCHEMA EVOLUTION (Delta's
@@ -3362,7 +3223,7 @@ object VersionedTable {
     * and would resurrect under the reused name). */
   def mergeKeyedEvolve(spark: SparkSession, root: String,
       source: DataFrame, key: String): Long = {
-    import org.apache.spark.sql.functions.{col, lit, min => fmin, max => fmax}
+    import org.apache.spark.sql.functions.lit
     val basis = latestVersion(root)
     require(basis >= 0, s"$root is not a versioned table (empty log)")
     val st = state(root, basis)
@@ -3379,26 +3240,20 @@ object VersionedTable {
     added.foreach(c => require(!st.dropped.contains(c),
       s"mergeKeyedEvolve: added column $c collides with a dropped " +
         "physical column still present in live files"))
-    val bounds = source.agg(
-      fmin(col(key)).as("lo"), fmax(col(key)).as("hi")).head()
-    if (bounds.isNullAt(0)) return basis // empty source: no evolution
-    val (lo, hi) = (bounds.get(0), bounds.get(1))
-    val physKey = physicalName(st, key)
-    val touched = st.files.filter { f =>
-      mayMatch(st.stats.getOrElse(f, Map.empty).get(physKey),
-        Some(lo), Some(hi))
-    }
-    val base = readResolved(spark, root, st, touched)
-    val widened = added.foldLeft(base)((df, c) =>
-      df.withColumn(c, lit(null).cast(source.schema(c).dataType)))
-    val merged = graft.ops.MergeOps.merge(
-        widened, source.withColumn("__mrg_tomb", lit(false)),
-        key, "__mrg_tomb")
-      .select((tableCols ++ added).map(col): _*)
     val evolved = org.apache.spark.sql.types.StructType(
       tableSc.fields ++ added.map(c =>
         source.schema(source.schema.fieldIndex(c)).copy(nullable = true)))
-    commitReplace(spark, root, basis, touched, merged, Some(evolved))
+    targetFiles(st, source, key, "mergeKeyedEvolve", everyFile = false) match {
+      case None => basis // empty source: no evolution
+      case Some(touched) =>
+        val widened = added.foldLeft(readResolved(spark, root, st, touched))(
+          (df, c) =>
+            df.withColumn(c, lit(null).cast(source.schema(c).dataType)))
+        val (matched, notMatched) = starClauses(evolved.fieldNames.toSeq)
+        val merged = MergeKernel.mergeCascadeRows(widened, source, evolved,
+          key, key, matched, notMatched, Nil)
+        commitReplace(spark, root, basis, touched, merged, Some(evolved))
+    }
   }
 
   /** Read a set of snapshot-`v` files with the schema resolved from

@@ -148,7 +148,7 @@ class GraftDmlSpec extends SparkSpecBase {
   }
 
   test("SQL MERGE INTO (star form) upserts through mergeKeyed") {
-    mkTable("dml_mrg")
+    val root = mkTable("dml_mrg")
     try {
       Seq((12L, 7777L), (1000L, 1L)).toDF("k", "v")
         .createOrReplaceTempView("dml_mrg_src")
@@ -160,6 +160,25 @@ class GraftDmlSpec extends SparkSpecBase {
         .as[Long].head() === 7777L)
       assert(spark.sql("SELECT count(*) AS c FROM dml_mrg")
         .as[Long].head() === 65L)
+      // a duplicated source key has no deterministic outcome: both the
+      // SQL form and the API refuse, and nothing commits
+      Seq((12L, 1L), (12L, 2L)).toDF("k", "v")
+        .createOrReplaceTempView("dml_mrg_dup")
+      val before = spark.sql("SELECT count(*) AS c FROM dml_mrg")
+        .as[Long].head()
+      intercept[IllegalArgumentException] {
+        spark.sql(
+          """MERGE INTO dml_mrg t USING dml_mrg_dup s ON t.k = s.k
+            |WHEN MATCHED THEN UPDATE SET *
+            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      }
+      intercept[IllegalArgumentException] {
+        VersionedTable.mergeKeyed(spark, root, spark.table("dml_mrg_dup"), "k")
+      }
+      assert(spark.sql("SELECT count(*) AS c FROM dml_mrg WHERE k = 12")
+        .as[Long].head() === 1L)
+      assert(spark.sql("SELECT count(*) AS c FROM dml_mrg")
+        .as[Long].head() === before)
     } finally drop("dml_mrg")
   }
 

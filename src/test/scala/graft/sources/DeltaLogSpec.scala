@@ -46,6 +46,16 @@ class DeltaLogSpec extends SparkSpecBase {
     assert(q.agg(sum("v")).as[Long].head() === (20 to 25).map(_ * 2).sum)
     val (kept, total) = indexOf(q).lastListing.get
     assert(total === 4 && kept === 1, s"expected 1/4 files, got $kept/$total")
+    // strict bounds prune the boundary file: k in [0,999] and [1000,1999]
+    val root2 = tmp()
+    DeltaLog.commit(spark.range(0, 2000, 1, 2).toDF("k"), root2)
+    def listed(c: org.apache.spark.sql.Column) = {
+      val d = spark.read.format("delta-log").load(root2).filter(c)
+      assert(d.count() === 1000)
+      indexOf(d).lastListing.get
+    }
+    assert(listed(col("k") > 999) === ((1, 2)))
+    assert(listed(col("k") < 1000) === ((1, 2)))
   }
 
   test("partitioned table: partition values from the log, exact pruning") {

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * time travel across the overwrite. */
 class IcebergMergeSpec extends SparkSpecBase {
   import spark.implicits._
-  import VersionedTable.{MergeDelete, MergeInsert, MergeRef, MergeUpdate}
+  import VersionedTable.{MergeClause, MergeDelete, MergeInsert, MergeRef,
+    MergeUpdate}
   private def X(c: org.apache.spark.sql.Column) =
     org.apache.spark.sql.GraftColumnBridge.expression(c)
 
@@ -121,17 +122,54 @@ class IcebergMergeSpec extends SparkSpecBase {
   }
 
   test("MERGE refusals: matched INSERT, duplicate source keys") {
-    val root = tmp()
-    IcebergMeta.writeFixture(Seq((1L, "a")).toDF("k", "cat"), root)
-    intercept[IllegalArgumentException] {
-      IcebergMeta.mergeConditional(spark, root,
-        Seq((1L, "x")).toDF("k", "cat"), "k", "k",
-        matched = Seq(MergeInsert(None, Map.empty)))
-    }
-    intercept[IllegalArgumentException] {
-      IcebergMeta.mergeConditional(spark, root,
-        Seq((1L, "x"), (1L, "y")).toDF("k", "cat"), "k", "k",
-        matched = Seq(MergeUpdate(None, Map("cat" -> MergeRef.source("cat")))))
+    // every format's mergeConditional shares one clause check and one
+    // source pre-flight (MergeKernel): the same inputs behave the same
+    val seed = Seq((Some(1L), "a")).toDF("k", "cat")
+    val (g, d, i) = (tmp(), tmp(), tmp())
+    VersionedTable.commit(seed, g)
+    DeltaLog.commit(seed, d)
+    IcebergMeta.writeFixture(seed, i)
+    type Merge = (org.apache.spark.sql.DataFrame, Seq[MergeClause],
+      Seq[MergeClause]) => Long
+    val formats: Seq[(String, String, () => Long, Merge)] = Seq(
+      ("graft", g, () => VersionedTable.latestVersion(g),
+        (src, m, n) => VersionedTable.mergeConditional(spark, g, src,
+          "k", "k", m, n)),
+      ("delta-log", d, () => DeltaLog.latestVersion(d),
+        (src, m, n) => DeltaLog.mergeConditional(spark, d, src,
+          "k", "k", m, n)),
+      ("iceberg-meta", i, () => IcebergMeta.snapshot(i).snapshotId,
+        (src, m, n) => IcebergMeta.mergeConditional(spark, i, src,
+          "k", "k", m, n)))
+    val upd = Seq(MergeUpdate(None, Map("cat" -> MergeRef.source("cat"))))
+    val ins = Seq(MergeInsert(None,
+      Map("k" -> MergeRef.source("k"), "cat" -> MergeRef.source("cat"))))
+    def src(rs: (Option[Long], String)*) = rs.toDF("k", "cat")
+    formats.foreach { case (fmt, root, head, merge) =>
+      def rows() = spark.read.format(fmt).load(root).select("k", "cat")
+        .as[(Option[Long], String)].collect().toSet
+      val v0 = head()
+      // misplaced clause kinds
+      intercept[IllegalArgumentException] {
+        merge(src((Some(1L), "x")), ins, Nil)
+      }
+      intercept[IllegalArgumentException] {
+        merge(src((Some(1L), "x")), Nil, Seq(MergeDelete(None)))
+      }
+      // a duplicated source key has no deterministic outcome
+      intercept[IllegalArgumentException] {
+        merge(src((Some(1L), "x"), (Some(1L), "y")), upd, Nil)
+      }
+      // empty and all-NULL-key sources return the current version and
+      // commit nothing
+      assert(merge(src(), upd, ins) === v0, fmt)
+      assert(merge(src((None, "n"), (None, "m")), upd, ins) === v0, fmt)
+      assert(head() === v0, fmt)
+      assert(rows() === Set((Some(1L), "a")), fmt)
+      // beside a keyed row, a NULL source key matches nothing and
+      // lands as an unmatched insert
+      merge(src((Some(1L), "u"), (None, "n")), upd, ins)
+      assert(rows() === Set((Some(1L), "u"), (None, "n")), fmt)
     }
   }
 

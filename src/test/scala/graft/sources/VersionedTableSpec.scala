@@ -632,6 +632,20 @@ class VersionedTableSpec extends SparkSpecBase {
       VersionedTable.mergeKeyed(spark, root,
         spark.range(1).select(col("id").as("k")), "k")
     }
+    // a table that predates schema tracking (schema line stripped)
+    // merges against its footer columns and stays untracked
+    val rootOld = newRoot()
+    VersionedTable.commit(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), rootOld)
+    val mf = Paths.get(rootOld, "_graft_log", "v00000.txt")
+    Files.writeString(mf, Files.readAllLines(mf).toArray.map(_.toString)
+      .filterNot(_.startsWith("schema=")).mkString("", "\n", "\n"))
+    assert(VersionedTable.tableSchema(rootOld, 0L).isEmpty)
+    VersionedTable.mergeKeyed(spark, rootOld,
+      Seq((2L, 21L), (3L, 30L)).toDF("k", "v"), "k")
+    assert(VersionedTable.tableSchema(rootOld, 1L).isEmpty)
+    assert(VersionedTable.read(spark, rootOld).select("k", "v")
+      .as[(Long, Long)].collect().sorted.toSeq ===
+      Seq((1L, 10L), (2L, 21L), (3L, 30L)))
   }
 
   test("streamingSink: replayed micro-batch commits exactly once") {
