@@ -18,8 +18,10 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * [[DataSourceV2Relation]] over [[Graft2Table]], aliased back to the
   * ORIGINAL output exprIds so the parent plan re-anchors for free
   * (the same trick the column-mapping rule uses). What the v2 scan
-  * serves identically: manifest stats/bloom file pruning (per
-  * (file, column) — [[graft.sources.Graft2Scan]]), column pruning to
+  * serves identically: file pruning through graft's one skipping rule
+  * (stats, bloom sidecars, partition tags —
+  * [[graft.sources.VersionedTable.filesMayMatch]], the v1 index's
+  * rule too), column pruning to
   * the parquet projection, manifest `sizeInBytes` for broadcast
   * planning, columnar batches + whole-stage codegen.
   *

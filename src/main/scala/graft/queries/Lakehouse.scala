@@ -26,7 +26,7 @@ object Lakehouse {
     // o_orderkey (8 files with disjoint key ranges — the Z-order/
     // cluster-by layout a lakehouse table maintains), then answer a
     // selective key-range aggregate through the manifest's per-file
-    // min/max stats. readSkipping opens ONLY the files whose range
+    // min/max stats. readPruned opens ONLY the files whose range
     // can match ([1, 1024] touches 1-2 of the 8 at every sf) — at
     // 100 TB this is the difference between a full-table scan and a
     // handful of file opens, decided from metadata alone before any
@@ -41,8 +41,8 @@ object Lakehouse {
         val root = Files.createTempDirectory("graft_skip_").toString
         VersionedTable.commit(
           orders(s, d).repartitionByRange(8, col("o_orderkey")), root)
-        VersionedTable.readSkipping(s, root, "o_orderkey",
-            lower = Some(1L), upper = Some(1024L))
+        VersionedTable.readPruned(s, root,
+            col("o_orderkey").between(1L, 1024L))
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_orderkey")).as("sum_key"),
@@ -60,8 +60,8 @@ object Lakehouse {
     // rewritten clustered on the Morton interleave of (l_partkey,
     // l_suppkey) — after which each file's min/max is a tight
     // bounding box in BOTH dimensions and a conjunctive range read
-    // prunes multiplicatively (readSkippingRanges intersects the
-    // per-column keep sets). This is the layout-maintenance +
+    // prunes multiplicatively (readPruned's rule keeps a file only
+    // when both ranges can match it). This is the layout-maintenance +
     // metadata-pruning pair that keeps a 100 TB table's selective
     // scans at a handful of file opens; a single-column sort gives
     // one prunable dimension only (VersionedTableSpec measures the
@@ -76,9 +76,9 @@ object Lakehouse {
             col("l_suppkey"), col("l_quantity")), root)
         VersionedTable.compactClustered(s, root, "l_partkey", "l_suppkey",
           bitsPer = 21, numFiles = 8)
-        VersionedTable.readSkippingRanges(s, root, Seq(
-            ("l_partkey", Some(1L), Some(200L)),
-            ("l_suppkey", Some(1L), Some(40L))))
+        VersionedTable.readPruned(s, root,
+            col("l_partkey").between(1L, 200L) &&
+              col("l_suppkey").between(1L, 40L))
           .groupBy(col("l_suppkey"))
           .agg(count(lit(1)).as("n_items"),
             sum(col("l_quantity").cast("long")).as("sum_qty"),
@@ -435,7 +435,7 @@ object Lakehouse {
         VersionedTable.commit(
           orders(s, d).repartition(8, col("o_custkey")), root) // v0
         VersionedTable.buildBloomIndex(s, root, "o_custkey") // v1
-        VersionedTable.readPointLookup(s, root, "o_custkey", 97L)
+        VersionedTable.readPruned(s, root, col("o_custkey") === 97L)
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_orderkey")).as("sum_key"))
@@ -690,7 +690,7 @@ object Lakehouse {
         VersionedTable.commit(orders(s, d), root, "overwrite",
           partitionBy =
             Some(graft.sources.PartitionTransform.Bucket(8, "o_custkey")))
-        VersionedTable.readPartitionPruned(s, root, "o_custkey", 97L)
+        VersionedTable.readPruned(s, root, col("o_custkey") === 97L)
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_orderkey")).as("sum_key"))
@@ -726,7 +726,7 @@ object Lakehouse {
           root, "append",
           partitionBy =
             Some(graft.sources.PartitionTransform.Bucket(8, "o_custkey")))
-        VersionedTable.readPartitionPruned(s, root, "o_custkey", 97L)
+        VersionedTable.readPruned(s, root, col("o_custkey") === 97L)
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_orderkey")).as("sum_key"),
@@ -822,12 +822,12 @@ object Lakehouse {
         VersionedTable.commit(
           orders(s, d).repartition(8, col("o_orderkey")), root) // v0
         val before =
-          VersionedTable.pruneFilesPartition(root, 0L, "o_custkey", 97L)
+          VersionedTable.pruneFiles(root, 0L, col("o_custkey") === 97L)
         VersionedTable.compactPartitioned(s, root,
           graft.sources.PartitionTransform.Bucket(8, "o_custkey")) // v1
         val after =
-          VersionedTable.pruneFilesPartition(root, 1L, "o_custkey", 97L)
-        VersionedTable.readPartitionPruned(s, root, "o_custkey", 97L)
+          VersionedTable.pruneFiles(root, 1L, col("o_custkey") === 97L)
+        VersionedTable.readPruned(s, root, col("o_custkey") === 97L)
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_orderkey")).as("sum_key"))
           .select(
@@ -850,7 +850,7 @@ object Lakehouse {
     // `spark.read.format("graft")`, where a custom FileIndex prunes
     // files from manifest min/max stats INSIDE Catalyst — the WHERE
     // below opens 1-2 of the 8 range-clustered files with no bespoke
-    // readSkipping call in sight, and everything downstream is stock
+    // readPruned call in sight, and everything downstream is stock
     // vectorized parquet + whole-stage codegen. The q120 semantics
     // through the engine-native path; GraftDataSourceSpec asserts the
     // file-count side. At 100 TB this is the surface users actually

@@ -1,28 +1,26 @@
 package graft.sources
 
 import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.catalog.{
   SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{
   Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan,
-  ScanBuilder, Statistics, SupportsPushDownFilters,
-  SupportsPushDownRequiredColumns, SupportsReportStatistics}
+  ScanBuilder, Statistics, SupportsPushDownRequiredColumns,
+  SupportsReportStatistics}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.write.{
   BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo,
   PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder,
   WriterCommitMessage}
-import org.apache.spark.sql.sources.{
-  DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In,
-  IsNotNull, IsNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DSv2 `TableProvider` read path for graft tables — since round 9
   * the DEFAULT serving path for plain reads ([[graft.ext
@@ -36,10 +34,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Everything runs on the PUBLIC connector API
   * (org.apache.spark.sql.connector.*):
-  *  - pushed data filters prune FILES from the manifest's min/max
-  *    stats, null counts, bloom sidecars (keyed per (file, column)),
-  *    and hidden partition tags BEFORE planning, with the same ratios
-  *    as the v1 [[GraftFileIndex]] (observable via
+  *  - pushed Catalyst filters (`SupportsPushDownCatalystFilters`, the
+  *    mixin Spark's own `FileScanBuilder` uses) prune FILES through
+  *    graft's one skipping rule ([[VersionedTable.filesMayMatch]]:
+  *    min/max stats, null counts, bloom sidecars, hidden partition
+  *    tags) BEFORE planning — the same decision as the v1
+  *    [[GraftFileIndex]] (observable via
   *    [[Graft2DataSource.lastPlanned]]); every filter is returned as
   *    residual, so Spark re-applies them row-wise and pruning can
   *    never change an answer;
@@ -281,36 +281,41 @@ class Graft2WriterFactory(
 }
 
 class Graft2ScanBuilder(root: String, version: Long, full: StructType)
-    extends ScanBuilder with SupportsPushDownFilters
+    extends ScanBuilder with SupportsPushDownCatalystFilters
     with SupportsPushDownRequiredColumns {
 
   private var required: StructType = full
-  private var filters: Array[Filter] = Array.empty
+  private var filters: Seq[Expression] = Nil
 
-  override def pushFilters(fs: Array[Filter]): Array[Filter] = {
+  override def pushFilters(fs: Seq[Expression]): Seq[Expression] = {
     filters = fs
     fs // ALL residual: the source prunes files, Spark re-checks rows
   }
-  override def pushedFilters(): Array[Filter] = filters
+  // nothing is pushed as a guarantee: every filter stays residual
+  override def pushedFilters: Array[Predicate] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan =
-    new Graft2Scan(root, version, full, required, filters)
+  override def build(): Scan = new Graft2Scan(root, version, full, required,
+    filters, filters.flatMap(GraftColumnBridge.sourceFilter))
 }
 
+/** `predicates` prune files through graft's one skipping rule;
+  * `rowGroupFilters` are their `sources.Filter` translations, handed to
+  * the parquet reader for row-group pushdown only. */
 class Graft2Scan(root: String, version: Long, full: StructType,
-    required: StructType, filters: Array[Filter])
+    required: StructType, predicates: Seq[Expression],
+    rowGroupFilters: Seq[Filter])
     extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"graft2 $root v$version cols=[${required.fieldNames.mkString(",")}] " +
-      s"pushed=[${filters.mkString(",")}]"
+      s"pushed=[${rowGroupFilters.mkString(",")}]"
 
   override def estimateStatistics(): Statistics = new Statistics {
-    private val sizes = Graft2Scan.planState(root, version)._2
+    private val sizes = Graft2Scan.planState(root, version)._2.map(_._3).sum
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(sizes)
     override def numRows(): java.util.OptionalLong =
@@ -318,40 +323,25 @@ class Graft2Scan(root: String, version: Long, full: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val (files, _, schema) = Graft2Scan.planState(root, version)
-    val typeOf = (c: String) => schema.flatMap(
-      _.fields.find(_.name == c)).map(_.dataType)
-    val keep = files.filter { file =>
-      // blooms loaded lazily once per (file, column), through the data
-      // seam — and probed ONLY for the column they index (a probe of
-      // column B against column A's bloom would wrongly prune files)
-      val loaded =
-        scala.collection.mutable.Map[String,
-          org.apache.spark.util.sketch.BloomFilter]()
-      def bloomFor(col: String) = file.blooms.get(col).map(rel =>
-        loaded.getOrElseUpdate(col,
-          org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(
-              VersionedTable.readDataBytes(root, rel)))))
-      filters.forall(f =>
-        Graft2Scan.mayMatch(file, bloomFor, typeOf, f))
-    }
+    val (st, files) = Graft2Scan.planState(root, version)
+    val kept = VersionedTable.filesMayMatch(root, st, predicates).toSet
+    val keep = files.filter(f => kept.contains(f._1))
     Graft2DataSource.lastPlanned(root) = (keep.size, files.size)
     // split surviving files by maxPartitionBytes — the v1 path's task
     // granularity (parquet readers align splits to row groups), so a
     // few huge files still parallelize across the cluster
     val spark = SparkSession.active
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    keep.flatMap { file =>
-      val chunks = math.max(1L, (file.size + maxSplit - 1) / maxSplit)
+    keep.flatMap { case (_, abs, size) =>
+      val chunks = math.max(1L, (size + maxSplit - 1) / maxSplit)
       (0L until chunks).map { c =>
         val start = c * maxSplit
         Graft2Partition(
           org.apache.spark.sql.execution.datasources.PartitionedFile(
             InternalRow.empty,
-            org.apache.spark.paths.SparkPath.fromPathString(file.abs),
-            start, math.min(maxSplit, file.size - start),
-            Array.empty, 0L, file.size)): InputPartition
+            org.apache.spark.paths.SparkPath.fromPathString(abs),
+            start, math.min(maxSplit, size - start),
+            Array.empty, 0L, size)): InputPartition
       }
     }.toArray
   }
@@ -361,14 +351,14 @@ class Graft2Scan(root: String, version: Long, full: StructType,
     val ff = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetFileFormat
     // the SAME reader the v1 path plans: vectorized batches, codegen,
-    // parquet row-group/page pushdown from the pushed v1 filters
+    // parquet row-group/page pushdown from the translated filters
     val columnar = ff.supportBatch(spark, required)
     val readFunc = ff.buildReaderWithPartitionValues(
       sparkSession = spark,
       dataSchema = full,
       partitionSchema = new StructType(),
       requiredSchema = required,
-      filters = filters.toSeq,
+      filters = rowGroupFilters,
       options = Map(
         org.apache.spark.sql.execution.datasources.FileFormat
           .OPTION_RETURNING_BATCH -> columnar.toString),
@@ -378,20 +368,13 @@ class Graft2Scan(root: String, version: Long, full: StructType,
 }
 
 object Graft2Scan {
-  /** One plannable data file: manifest-recorded size/stats, bloom
-    * sidecars KEYED BY INDEXED COLUMN, and the file's hidden
-    * partition tag (transform spec, value) when partitioned. */
-  private[sources] final case class Graft2File(abs: String, size: Long,
-      stats: Map[String, VersionedTable.ColStats],
-      blooms: Map[String, String],
-      part: Option[(String, String)])
-
-  /** Driver-side snapshot resolution: (files, total bytes, schema).
-    * Refuses tombstoned or column-mapped snapshots (this path cannot
-    * honor them — [[graft.ext.Graft2Refresh]] routes those back to
-    * the v1 rewrites). */
+  /** Driver-side snapshot resolution: the state and its plannable data
+    * files as (manifest path, absolute path, size). Refuses tombstoned
+    * or column-mapped snapshots (this path cannot honor them —
+    * [[graft.ext.Graft2Refresh]] routes those back to the v1
+    * rewrites). */
   private[sources] def planState(root: String, v: Long)
-      : (Seq[Graft2File], Long, Option[StructType]) = {
+      : (VersionedTable.TableState, Seq[(String, String, Long)]) = {
     val st = VersionedTable.state(root, v)
     if (st.tombs.values.exists(_.nonEmpty))
       throw new UnsupportedOperationException(
@@ -401,79 +384,20 @@ object Graft2Scan {
       throw new UnsupportedOperationException(
         s"graft2: snapshot v$v of $root has renamed columns — read via " +
           "format(\"graft\")")
-    val files = st.files.map { f =>
-      val stats = st.stats.getOrElse(f, Map.empty)
-      val bloomRels = st.blooms.collect {
-        case ((ff, col), sc) if ff == f => col -> sc
-      }.toMap
-      val abs = VersionedTable.dataPath(root, f)
+    (st, st.files.map { f =>
       // manifest-recorded size; pre-fsize manifests stat once THROUGH
       // THE DATA SEAM (non-POSIX stores included). A stat failure
       // propagates loudly: a silent 0 here would plan a zero-length
       // split and the file would contribute zero rows on the default
       // read path — a wrong answer, not an error.
-      val size = st.sizes.getOrElse(f, VersionedTable.dataSize(root, f))
-      Graft2File(abs.toString, size, stats, bloomRels, st.parts.get(f))
-    }
-    val bytes = files.map(_.size).sum
-    (files, bytes, VersionedTable.physicalSchemaOf(st))
-  }
-
-  /** Can any row of `file` satisfy v1-filter `f`? `bloom(col)` yields
-    * the file's sidecar indexing exactly `col` (probing a bloom built
-    * over a DIFFERENT column would prune files that do contain
-    * matches); equality probes also consult the file's hidden
-    * partition TAG (a transform mismatch proves absence) — both
-    * mirror [[GraftFileIndex]]'s layers exactly. Unrecognized shapes
-    * keep the file (conservative). */
-  private[sources] def mayMatch(file: Graft2File,
-      bloom: String => Option[org.apache.spark.util.sketch.BloomFilter],
-      typeOf: String => Option[DataType],
-      f: Filter): Boolean = {
-    def cs(c: String) = file.stats.get(c)
-    def partOk(c: String, v: Any): Boolean = file.part match {
-      case Some((spec, pv)) => PartitionTransform.parseOpt(spec) match {
-        case Some(t) if t.srcCol == c =>
-          typeOf(c).flatMap(t.probe(v, _)).forall(_ == pv)
-        case _ => true
-      }
-      case None => true
-    }
-    f match {
-      case org.apache.spark.sql.sources.And(a, b) =>
-        mayMatch(file, bloom, typeOf, a) && mayMatch(file, bloom, typeOf, b)
-      case org.apache.spark.sql.sources.Or(a, b) =>
-        mayMatch(file, bloom, typeOf, a) || mayMatch(file, bloom, typeOf, b)
-      case EqualTo(c, v) =>
-        VersionedTable.mayMatch(cs(c), Some(v), Some(v)) &&
-          bloom(c).forall(_.mightContainString(VersionedTable.bloomProbe(v))) &&
-          partOk(c, v)
-      case In(c, vs) =>
-        vs.exists(v => VersionedTable.mayMatch(cs(c), Some(v), Some(v)))
-      case GreaterThan(c, v) => VersionedTable.mayMatchStrict(cs(c),
-        Some(v), lowerStrict = true, None, upperStrict = false)
-      case GreaterThanOrEqual(c, v) =>
-        VersionedTable.mayMatch(cs(c), Some(v), None)
-      case LessThan(c, v) => VersionedTable.mayMatchStrict(cs(c),
-        None, lowerStrict = false, Some(v), upperStrict = true)
-      case LessThanOrEqual(c, v) =>
-        VersionedTable.mayMatch(cs(c), None, Some(v))
-      case IsNull(c) =>
-        VersionedTable.mayMatchNullness(cs(c), wantNull = true)
-      case IsNotNull(c) =>
-        VersionedTable.mayMatchNullness(cs(c), wantNull = false)
-      case _ => true
-    }
+      (f, VersionedTable.dataPath(root, f).toString,
+        st.sizes.getOrElse(f, VersionedTable.dataSize(root, f)))
+    })
   }
 }
 
-/** One file = one partition (graft data files are written to target
-  * size; at 100 TB split planning would mirror the v1 path's
-  * maxPartitionBytes — out of spike scope). */
-/** One pruned data file, carried as the [[PartitionedFile]] the
-  * vectorized reader consumes (whole file — graft data files are
-  * written to target size, so row-group-level parallelism inside one
-  * file is not the bottleneck the way raw landed data would be). */
+/** One split of a pruned data file (`maxPartitionBytes` wide), carried
+  * as the [[PartitionedFile]] the vectorized reader consumes. */
 case class Graft2Partition(
     file: org.apache.spark.sql.execution.datasources.PartitionedFile)
     extends InputPartition

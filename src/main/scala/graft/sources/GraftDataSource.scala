@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.StructType
   * stock Spark — vectorized parquet reader, whole-stage codegen,
   * column pruning, parquet row-group pushdown — while
   * [[GraftFileIndex.listFiles]] prunes FILES from the snapshot's
-  * manifest stats before any I/O is planned, through the file-skipping
-  * walk every Catalyst-driven index shares ([[StatsPruning]]):
+  * manifest before any I/O is planned, through graft's one skipping
+  * rule ([[VersionedTable.filesMayMatch]]):
   *
   *  - range predicates against per-file min/max (strict comparisons
   *    prune their boundary file too),
@@ -40,8 +40,8 @@ import org.apache.spark.sql.types.StructType
   *    per-file bloom index (when built) and each file's
   *    hidden-partitioning `part=` tag,
   *
-  * exactly the metadata layers the bespoke `readSkipping*` /
-  * `readPointLookup` APIs use — but now driven by Catalyst from a
+  * the same rule the DSv2 scan, DML targeting and
+  * [[VersionedTable.readPruned]] use — here driven by Catalyst from a
   * plain SQL `WHERE`, so `SELECT * FROM t WHERE k = 5` on a
   * 100 TB table opens only the files that can hold `k = 5` with no
   * engine-specific reader API in the query. Spark re-applies every
@@ -273,16 +273,15 @@ class GraftRelation(index: GraftFileIndex, schema: StructType,
   * list, sizes, and stats all come from the log (no directory
   * listing — at 100 TB / millions of files, object-store LIST is the
   * scan planner's bottleneck; Delta and Iceberg exist to avoid it).
-  * `listFiles` evaluates the pushed data filters against per-file
-  * min/max + null counts ([[StatsPruning.mayMatchExpr]]) + bloom
-  * sidecars + hidden-partition tags and
-  * returns only the files a match could live in. Conservative by
-  * construction: any expression shape it doesn't recognize keeps the
-  * file, and Spark re-applies all filters row-wise downstream.
+  * `listFiles` keeps the files graft's one skipping rule
+  * ([[VersionedTable.filesMayMatch]]: min/max + null counts, then bloom
+  * sidecars and hidden-partition tags) admits under the pushed data
+  * filters. Conservative by construction: any expression shape it
+  * doesn't recognize keeps the file, and Spark re-applies all filters
+  * row-wise downstream.
   */
 class GraftFileIndex(spark: SparkSession, root: String, version: Long,
-    initialState: VersionedTable.TableState, pinnedSnapshot: Boolean,
-    allowTombstones: Boolean = false)
+    initialState: VersionedTable.TableState, pinnedSnapshot: Boolean)
     extends FileIndex {
 
   private def buildStatuses(s: VersionedTable.TableState)
@@ -347,10 +346,8 @@ class GraftFileIndex(spark: SparkSession, root: String, version: Long,
     }
   }
 
-  private def st: VersionedTable.TableState = current._2
-
   /** (files kept, files total) of the most recent `listFiles` — spec
-    * observability for pruning, same role as the `pruneFiles*` pairs. */
+    * observability for pruning, same role as [[VersionedTable.pruneFiles]]. */
   @volatile var lastListing: Option[(Int, Int)] = None
 
   /** For the DML rewrite rule ([[graft.ext.GraftDmlRewrite]]): the
@@ -378,61 +375,21 @@ class GraftFileIndex(spark: SparkSession, root: String, version: Long,
     // Physical-time tombstone gate: a raw file listing of a snapshot
     // with merge-on-read tombstones would RESURRECT deleted rows. The
     // analysis-time [[graft.ext.GraftMorScan]] rule rewrites such scans
-    // into (clean files) ∪ (anti-joined touched files) — its pieces set
-    // `allowTombstones` (clean subsets carry no tombstones; DML file
-    // targeting reads through [[VersionedTable.readResolved]]). Any
-    // OTHER route to this listing — extensions not installed, a plan
-    // analyzed before an external MOR edit landed — must fail loudly
-    // here rather than return wrong rows.
-    if (!allowTombstones && snap.tombs.values.exists(_.nonEmpty))
+    // into (clean files) ∪ (anti-joined touched files), whose clean
+    // index carries no tombstones. Any OTHER route to this listing —
+    // extensions not installed, a plan analyzed before an external MOR
+    // edit landed — must fail loudly here rather than return wrong rows.
+    if (snap.tombs.values.exists(_.nonEmpty))
       throw new UnsupportedOperationException(
         s"graft datasource: snapshot v$v of $root carries merge-on-read " +
           "tombstones this raw scan cannot apply — install " +
           "graft.ext.GraftExtensions (the MOR scan rewrite) and re-plan " +
           "the query, or read via VersionedTable.read / compact() first")
-    val keep = statuses.filter { case (rel, _) =>
-      val stats = snap.stats.getOrElse(rel, Map.empty)
-      dataFilters.forall(e => StatsPruning.mayMatchExpr(stats, e,
-        (col, v) => bloomOk(snap, rel, col, v) && partOk(snap, rel, col, v)))
-    }
+    val kept = VersionedTable.filesMayMatch(root, snap, dataFilters).toSet
+    val keep = statuses.filter(s => kept.contains(s._1))
     lastListing = Some((keep.size, statuses.size))
     Seq(PartitionDirectory(InternalRow.empty, keep.map(_._2).toArray))
   }
-
-  /** Equality probes past min/max, mirroring `pruneFilesEquality` +
-    * `pruneFilesPartition`: the file's bloom sidecar (definite-absence
-    * answers), then its hidden-partition tag (a transform mismatch
-    * proves absence). */
-  private def bloomOk(snap: VersionedTable.TableState, rel: String,
-      col: String, v: Any): Boolean = snap.blooms.get((rel, col)) match {
-    case None => true
-    case Some(sc) => bloomCache.getOrElseUpdate(sc,
-        org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(
-            VersionedTable.readDataBytes(root, sc))))
-      .mightContainString(VersionedTable.bloomProbe(v))
-  }
-
-  private def partOk(snap: VersionedTable.TableState, rel: String,
-      col: String, v: Any): Boolean = snap.parts.get(rel) match {
-    case Some((spec, pv)) => PartitionTransform.parseOpt(spec) match {
-      case Some(t) if t.srcCol == col =>
-        dataTypeOf(snap, col).flatMap(t.probe(v, _)).forall(_ == pv)
-      case _ => true
-    }
-    case None => true
-  }
-
-  // Concurrency: this index is shared by a cached catalog relation, so
-  // two queries can plan (and probe blooms) at the same time — TrieMap
-  // makes getOrElseUpdate lock-free-safe (worst case a duplicate load,
-  // never a corrupt map).
-  private val bloomCache = scala.collection.concurrent.TrieMap[
-    String, org.apache.spark.util.sketch.BloomFilter]()
-
-  private def dataTypeOf(snap: VersionedTable.TableState, col: String) =
-    VersionedTable.physicalSchemaOf(snap)
-      .flatMap(_.fields.find(_.name == col)).map(_.dataType)
 }
 
 object GraftFileIndex {

@@ -10,7 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Catalyst-expression file-skipping evaluator over per-column
   * [[VersionedTable.ColStats]] — the one file-skipping walk of every
   * Catalyst-driven FileIndex ([[GraftFileIndex]], [[DeltaLogFileIndex]],
-  * [[IcebergMetaFileIndex]]) and of the stats-targeted DML paths.
+  * [[IcebergMetaFileIndex]]), of graft's one file-skipping rule
+  * ([[VersionedTable.filesMayMatch]]) and of the stats-targeted DML
+  * paths.
   * Strictly CONSERVATIVE: any shape it does not recognize keeps the
   * file, and Spark re-applies every predicate row-wise downstream, so
   * pruning can change cost, never answers. Strict comparisons prune
@@ -26,20 +28,21 @@ private[sources] object StatsPruning {
   }
 
   /** Can any row of a file with column stats `stats` satisfy `e`?
-    * `eqProbe(col, value)` is a further per-file equality check asked
-    * only after min/max admit the value — the graft index's bloom
+    * `eqProbe(col, literal)` is a further per-file equality check asked
+    * only after min/max admit a non-null literal — graft's bloom
     * sidecar and hidden-partition tag, which prove absence that
     * min/max cannot. */
   def mayMatchExpr(stats: Map[String, VersionedTable.ColStats],
       e: Expression,
-      eqProbe: (String, Any) => Boolean = (_, _) => true): Boolean = {
+      eqProbe: (String, Literal) => Boolean = (_, _) => true): Boolean = {
     def range(a: AttributeReference, lower: Option[Any],
         lowerStrict: Boolean, upper: Option[Any], upperStrict: Boolean) =
       VersionedTable.mayMatchStrict(stats.get(a.name), lower, lowerStrict,
         upper, upperStrict)
-    def eq(a: AttributeReference, v: Any) = {
-      val x = ext(v)
-      range(a, Some(x), false, Some(x), false) && eqProbe(a.name, x)
+    def eq(a: AttributeReference, l: Literal) = {
+      val x = ext(l.value)
+      range(a, Some(x), false, Some(x), false) &&
+        (l.value == null || eqProbe(a.name, l))
     }
     def lo(a: AttributeReference, l: Literal, strict: Boolean) =
       range(a, Some(ext(l.value)), strict, None, false)
@@ -50,10 +53,10 @@ private[sources] object StatsPruning {
         mayMatchExpr(stats, x, eqProbe) && mayMatchExpr(stats, y, eqProbe)
       case Or(x, y) =>
         mayMatchExpr(stats, x, eqProbe) || mayMatchExpr(stats, y, eqProbe)
-      case EqualTo(a: AttributeReference, l: Literal) => eq(a, l.value)
-      case EqualTo(l: Literal, a: AttributeReference) => eq(a, l.value)
+      case EqualTo(a: AttributeReference, l: Literal) => eq(a, l)
+      case EqualTo(l: Literal, a: AttributeReference) => eq(a, l)
       case EqualNullSafe(a: AttributeReference, l: Literal)
-          if l.value != null => eq(a, l.value)
+          if l.value != null => eq(a, l)
       case GreaterThan(a: AttributeReference, l: Literal) => lo(a, l, true)
       case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
         lo(a, l, false)
@@ -68,8 +71,9 @@ private[sources] object StatsPruning {
         lo(a, l, false)
       case In(a: AttributeReference, vs)
           if vs.forall(_.isInstanceOf[Literal]) =>
-        vs.exists(l => eq(a, l.asInstanceOf[Literal].value))
-      case InSet(a: AttributeReference, vs) => vs.exists(v => eq(a, v))
+        vs.exists(l => eq(a, l.asInstanceOf[Literal]))
+      case InSet(a: AttributeReference, vs) =>
+        vs.exists(v => eq(a, Literal(v, a.dataType)))
       case IsNull(a: AttributeReference) =>
         VersionedTable.mayMatchNullness(stats.get(a.name), wantNull = true)
       case IsNotNull(a: AttributeReference) =>

@@ -1767,61 +1767,118 @@ object VersionedTable {
       }
   }
 
-  /** The files of snapshot `v` that a `col BETWEEN lower AND upper`
-    * read must open, plus the total file count — the data-skipping
-    * planner, exposed separately so callers (and specs) can observe
-    * the pruning ratio. */
-  def pruneFiles(root: String, v: Long, colName: String,
-      lower: Option[Any], upper: Option[Any]): (Seq[String], Int) = {
+  /** Graft's ONE per-file skipping rule: the files of snapshot `st`
+    * that may hold a row satisfying every predicate in `predicates`.
+    * Every graft path decides through it — the v1 [[GraftFileIndex]],
+    * the DSv2 [[Graft2Scan]], DML targeting and [[pruneFiles]] /
+    * [[readPruned]]. Per file, [[StatsPruning.mayMatchExpr]] walks the
+    * predicate over min/max and null counts; its equality probe then
+    * asks the file's bloom sidecar and its hidden-partition tag.
+    *
+    * Columns are keyed by NAME, resolved logical → physical through
+    * [[physicalName]]; an unresolved predicate (a Column-built
+    * `col("k") >= 17`) is first given the shape of an analyzed one
+    * ([[resolveAgainst]]). A name with no stats, or a predicate that
+    * does not resolve, keeps every file.
+    *
+    * The bloom answers only when the probe string is the one the build
+    * side stored: [[buildBloomIndex]] indexes `CAST(col AS STRING)`, so
+    * the probe is Spark's own `CAST(literal AS STRING)`, and only when
+    * the literal's type equals the column's and that type's string form
+    * does not depend on the session time zone (not TIMESTAMP). The tag
+    * probe gets the literal's external value (a DATE as `java.sql.Date`
+    * / `LocalDate`). Any other case keeps the file — pruning changes
+    * cost, never answers. */
+  private[sources] def filesMayMatch(root: String, st: TableState,
+      predicates: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Seq[String] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{
+      AttributeReference, Cast, Literal}
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.util.sketch.BloomFilter
+    val physical = physicalSchemaOf(st)
+    def typeOf(phys: String) =
+      physical.flatMap(_.fields.find(_.name == phys)).map(_.dataType)
+    val bound = predicates.map(e => resolveAgainst(st,
+        org.apache.spark.sql.GraftColumnBridge.catalyst(e)).transform {
+      case a: AttributeReference => a.withName(physicalName(st, a.name))
+    })
+    val blooms = scala.collection.mutable.Map[String, BloomFilter]()
+    def eqProbe(f: String)(c: String, l: Literal): Boolean = {
+      val dt = typeOf(c)
+      val bloomOk = !dt.contains(l.dataType) ||
+        Cast.needsTimeZone(l.dataType, StringType) ||
+        st.blooms.get((f, c)).forall(sc => blooms.getOrElseUpdate(sc,
+            BloomFilter.readFrom(
+              new java.io.ByteArrayInputStream(readDataBytes(root, sc))))
+          .mightContainString(Cast(l, StringType).eval().toString))
+      bloomOk && st.parts.get(f).forall { case (spec, pv) =>
+        PartitionTransform.parseOpt(spec).forall(t => t.srcCol != c ||
+          dt.flatMap(t.probe(
+            CatalystTypeConverters.convertToScala(l.value, l.dataType), _))
+            .forall(_ == pv))
+      }
+    }
+    st.files.filter(f => bound.forall(e => StatsPruning.mayMatchExpr(
+      st.stats.getOrElse(f, Map.empty), e, eqProbe(f))))
+  }
+
+  /** `e` in the shape an optimized scan filter has: an unresolved
+    * predicate is resolved against snapshot `st`'s schema, then Spark's
+    * own `ConstantFolding` and `UnwrapCastInBinaryComparison` turn
+    * `col >= cast(17 as bigint)` or `cast(i as bigint) = 5L` into
+    * attribute-vs-literal comparisons. One that does not resolve
+    * becomes `true`, which keeps every file. */
+  private def resolveAgainst(st: TableState,
+      e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{
+      AttributeReference, Literal}
+    import org.apache.spark.sql.catalyst.optimizer.{
+      ConstantFolding, UnwrapCastInBinaryComparison}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    if (e.resolved) e
+    else scala.util.Try {
+      val rel = LocalRelation(schemaOf(st).toSeq.flatMap(_.fields.map(f =>
+        AttributeReference(f.name, f.dataType, f.nullable)())))
+      val analyzed =
+        SparkSession.active.sessionState.analyzer.execute(Filter(e, rel))
+      Seq(ConstantFolding, UnwrapCastInBinaryComparison, ConstantFolding)
+        .foldLeft(analyzed)((p, rule) => rule(p))
+        .asInstanceOf[Filter].condition
+    }.filter(_.resolved).getOrElse(Literal.TrueLiteral)
+  }
+
+  /** The files of snapshot `v` a read of `predicate` must open, plus the
+    * total file count — [[filesMayMatch]] exposed so callers and specs
+    * can observe the pruning ratio. */
+  def pruneFiles(root: String, v: Long,
+      predicate: org.apache.spark.sql.Column): (Seq[String], Int) = {
     val st = state(root, v)
-    val phys = physicalName(st, colName) // stats are keyed physically
-    (st.files.filter(f =>
-      mayMatch(st.stats.getOrElse(f, Map.empty).get(phys), lower, upper)),
+    (filesMayMatch(root, st,
+      Seq(org.apache.spark.sql.GraftColumnBridge.expression(predicate))),
       st.files.size)
   }
 
-  /** Data-skipping read over a CONJUNCTION of inclusive ranges
-    * (`(col, lower, upper)`, None = unbounded): a file survives only
-    * if EVERY range can match its stats — the multi-column form that
-    * makes a Z-ordered layout pay off (each dimension's min/max is a
-    * tight bounding box, so the intersection prunes multiplicatively).
-    * The residual predicates still apply to surviving rows, so the
-    * result equals `read(...).filter(r1 AND r2 AND ...)` exactly. */
-  def readSkippingRanges(spark: SparkSession, root: String,
-      ranges: Seq[(String, Option[Any], Option[Any])],
+  /** Data-skipping read: the snapshot (latest, or `version`) filtered by
+    * `predicate`, opening only the files [[filesMayMatch]] keeps — a
+    * selective range on a clustered table, a conjunction after Z-order
+    * clustering, `IS [NOT] NULL`, or a point lookup through the bloom
+    * index and partition tags all prune from metadata before any row is
+    * read. Tombstones resolve and the predicate still applies to the
+    * surviving rows, so the result equals
+    * `read(...).filter(predicate)` exactly. */
+  def readPruned(spark: SparkSession, root: String,
+      predicate: org.apache.spark.sql.Column,
       version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     val latest = latestVersion(root)
     require(latest >= 0, s"$root is not a versioned table (empty log)")
-    val v = version.getOrElse(latest)
-    val st = state(root, v)
-    val keep = st.files.filter { f =>
-      val fs = st.stats.getOrElse(f, Map.empty)
-      ranges.forall { case (c, lo, hi) =>
-        mayMatch(fs.get(physicalName(st, c)), lo, hi) }
-    }
-    val pred = ranges.flatMap { case (c, lo, hi) =>
-      lo.map(l => col(c) >= lit(l)) ++ hi.map(u => col(c) <= lit(u))
-    }.reduceOption(_ && _).getOrElse(lit(true))
-    // tombstone-resolved: pruning by stats stays sound under
-    // merge-on-read (deleting rows only shrinks a file's value set,
-    // so min/max remain conservative bounds)
-    readResolved(spark, root, st, keep).filter(pred)
+    val st = state(root, version.getOrElse(latest))
+    readResolved(spark, root, st, filesMayMatch(root, st,
+        Seq(org.apache.spark.sql.GraftColumnBridge.expression(predicate))))
+      .filter(predicate)
   }
-
-  /** Data-skipping read: `col BETWEEN lower AND upper` (inclusive;
-    * None = unbounded) evaluated against the manifest stats FIRST, so
-    * only files whose min/max range can hold a match are ever opened
-    * — at 100 TB a selective predicate over a range-clustered table
-    * turns a full-table scan into a handful of file opens, before
-    * Spark's own row-group pruning sees anything. The residual
-    * predicate is still applied to the surviving rows (stats prune
-    * files, not rows), so the result equals
-    * `read(...).filter(col between lower and upper)` exactly. */
-  def readSkipping(spark: SparkSession, root: String, colName: String,
-      lower: Option[Any], upper: Option[Any],
-      version: Option[Long] = None): DataFrame =
-    readSkippingRanges(spark, root, Seq((colName, lower, upper)), version)
 
   /** Can any row of a file with stats `cs` satisfy `col IS NULL`
     * (`wantNull`) / `col IS NOT NULL` (!`wantNull`)? The NULL COUNT in
@@ -1835,103 +1892,11 @@ object VersionedTable {
     case Some(c) => if (wantNull) c.nulls > 0 else c.nulls < c.rows
   }
 
-  /** The files of snapshot `v` an `IS [NOT] NULL` read must open, plus
-    * the total file count — exposed so callers and specs can observe
-    * the null-pruning ratio (the [[pruneFiles]] sibling). */
-  def pruneFilesNullness(root: String, v: Long, colName: String,
-      wantNull: Boolean): (Seq[String], Int) = {
-    val st = state(root, v)
-    val phys = physicalName(st, colName)
-    (st.files.filter(f => mayMatchNullness(
-      st.stats.getOrElse(f, Map.empty).get(phys), wantNull)),
-      st.files.size)
-  }
-
-  /** Data-skipping read for NULLNESS predicates: `col IS NULL`
-    * (`wantNull = true`) or `col IS NOT NULL` decided from the
-    * manifests' per-file null counts before any file opens. On a table
-    * whose layout separates backfilled-vs-missing values (common for
-    * late-arriving columns), the all-null and no-null files prune
-    * outright. The residual predicate still applies to surviving rows,
-    * so the result equals `read(...).filter(col IS [NOT] NULL)`
-    * exactly. */
-  def readSkippingNullness(spark: SparkSession, root: String,
-      colName: String, wantNull: Boolean,
-      version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val latest = latestVersion(root)
-    require(latest >= 0, s"$root is not a versioned table (empty log)")
-    val v = version.getOrElse(latest)
-    val st = state(root, v)
-    val phys = physicalName(st, colName)
-    val keep = st.files.filter(f => mayMatchNullness(
-      st.stats.getOrElse(f, Map.empty).get(phys), wantNull))
-    val pred = if (wantNull) col(colName).isNull else col(colName).isNotNull
-    readResolved(spark, root, st, keep).filter(pred)
-  }
-
-  // ---------------------------------------------------------------------
-  // Partition pruning — the consumption side of [[PartitionTransform]]
-  // hidden partitioning. The query names the SOURCE column; the reader
-  // converts the probe through each file's OWN recorded transform
-  // (specs may differ across files after partition evolution) and
-  // opens only files whose tag can match.
-  // ---------------------------------------------------------------------
-
-  /** The files an equality probe `colName = value` must open, plus the
-    * total file count: a file is pruned when its partition tag proves
-    * `transform(value)` differs from its recorded partition value, or
-    * when its min/max stats exclude the value — the two metadata
-    * layers compose (bucket tags catch what min/max can't on
-    * arrival-ordered high-cardinality keys; stats catch what bucket
-    * can't on range-clustered layouts). Files without a tag (plain
-    * commits, compaction rewrites) and tags this library version
-    * can't interpret degrade to "read" — never to a wrong answer. A
-    * null-partition tag (`__HIVE_DEFAULT_PARTITION__`) never equals a
-    * computed probe, so all-null-transform files prune for free. */
-  def pruneFilesPartition(root: String, v: Long, colName: String,
-      value: Any): (Seq[String], Int) = {
-    val st = state(root, v)
-    val phys = physicalName(st, colName)
-    val dt = physicalSchemaOf(st)
-      .flatMap(_.fields.find(_.name == phys)).map(_.dataType)
-    val keep = st.files.filter { f =>
-      val tagOk = st.parts.get(f) match {
-        case Some((spec, pv)) =>
-          PartitionTransform.parseOpt(spec) match {
-            case Some(t) if t.srcCol == phys =>
-              dt.flatMap(t.probe(value, _)).forall(_ == pv)
-            case _ => true
-          }
-        case None => true
-      }
-      tagOk && mayMatch(st.stats.getOrElse(f, Map.empty).get(phys),
-        Some(value), Some(value))
-    }
-    (keep, st.files.size)
-  }
-
-  /** Point-lookup read `colName = value` through partition pruning +
-    * min/max stats. The residual equality still applies to surviving
-    * rows, so the result equals `read(...).filter(col === value)`
-    * exactly — pruning is invisible in the answer, by construction. */
-  def readPartitionPruned(spark: SparkSession, root: String,
-      colName: String, value: Any,
-      version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val latest = latestVersion(root)
-    require(latest >= 0, s"$root is not a versioned table (empty log)")
-    val v = version.getOrElse(latest)
-    val st = state(root, v)
-    val (keep, _) = pruneFilesPartition(root, v, colName, value)
-    readResolved(spark, root, st, keep).filter(col(colName) === lit(value))
-  }
-
   /** OPTIMIZE ZORDER BY: rewrite the current snapshot clustered on the
     * Morton interleave of two quantized dimension columns, as one
     * overwrite commit of `numFiles` files covering disjoint z-ranges.
     * After this, the manifest's per-file min/max become tight bounding
-    * boxes in BOTH dimensions, so [[readSkippingRanges]] prunes on
+    * boxes in BOTH dimensions, so [[readPruned]] prunes on
     * either column or their conjunction — the layout maintenance job a
     * lakehouse runs to keep 100 TB data skipping effective. Inputs
     * must be nonnegative and fit `bitsPer` bits (quantize first);
@@ -1952,10 +1917,6 @@ object VersionedTable {
     commit(clustered, root, "overwrite")
   }
 
-  /** The file set of snapshot `v` (log replay: overwrite resets,
-    * append extends, replace swaps named files, delete-mor leaves the
-    * set untouched), paths relative to `root`. Resolved from the
-    * newest checkpoint plus the manifest suffix — see [[state]]. */
   // ---------------------------------------------------------------------
   // Bloom-filter file index — point-lookup data skipping for columns
   // min/max CANNOT prune (high-cardinality values scattered across
@@ -1972,13 +1933,6 @@ object VersionedTable {
   // entries; [[restore]] and checkpoints round-trip the map; [[vacuum]]
   // keeps sidecars referenced by retained snapshots.
   // ---------------------------------------------------------------------
-
-  /** Values are indexed and probed through their CANONICAL STRING form
-    * (Spark's `CAST(col AS STRING)` on the build side, `String.valueOf`
-    * on the probe side — identical for long/int/string, the point-
-    * lookup types). NULLs are never indexed: `col = x` can't match a
-    * NULL row, and nullness pruning has its own stats path. */
-  private[sources] def bloomProbe(v: Any): String = String.valueOf(v)
 
   /** Build a bloom-filter index over `colName` for every live file of
     * the current snapshot, in ONE distributed pass: per-partition
@@ -2061,47 +2015,10 @@ object VersionedTable {
     basis + 1
   }
 
-  /** The files of snapshot `v` a `col = value` read must open, plus the
-    * total file count: min/max stats prune first (also removes all-null
-    * files), then each surviving file's bloom — if indexed — gets the
-    * final word. Exposed so callers and specs can observe the pruning
-    * ratio (the [[pruneFiles]] sibling for point lookups). */
-  def pruneFilesEquality(root: String, v: Long, colName: String,
-      value: Any): (Seq[String], Int) = {
-    val st = state(root, v)
-    val phys = physicalName(st, colName) // stats + blooms keyed physically
-    val probe = bloomProbe(value)
-    val cache = scala.collection.mutable.Map[String,
-      org.apache.spark.util.sketch.BloomFilter]()
-    def bloomSays(f: String): Boolean = st.blooms.get((f, phys)) match {
-      case None => true // unindexed file: must read
-      case Some(sc) =>
-        val bf = cache.getOrElseUpdate(sc,
-          org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(readDataBytes(root, sc))))
-        bf.mightContainString(probe)
-    }
-    (st.files.filter(f =>
-      mayMatch(st.stats.getOrElse(f, Map.empty).get(phys),
-        Some(value), Some(value)) && bloomSays(f)), st.files.size)
-  }
-
-  /** Point-lookup read: `col = value` pruned through min/max stats AND
-    * the bloom index before any file opens. The residual predicate
-    * still applies (blooms prune files, not rows) and tombstones
-    * resolve, so the result equals `read(...).filter(col = value)`
-    * exactly. */
-  def readPointLookup(spark: SparkSession, root: String, colName: String,
-      value: Any, version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val latest = latestVersion(root)
-    require(latest >= 0, s"$root is not a versioned table (empty log)")
-    val v = version.getOrElse(latest)
-    val (keep, _) = pruneFilesEquality(root, v, colName, value)
-    readResolved(spark, root, state(root, v), keep)
-      .filter(col(colName) === lit(value))
-  }
-
+  /** The file set of snapshot `v` (log replay: overwrite resets,
+    * append extends, replace swaps named files, delete-mor leaves the
+    * set untouched), paths relative to `root`. Resolved from the
+    * newest checkpoint plus the manifest suffix — see [[state]]. */
   def snapshotFiles(root: String, v: Long): Seq[String] =
     state(root, v).files
 
@@ -2719,11 +2636,11 @@ object VersionedTable {
   /** DELETE FROM the table with an ARBITRARY Catalyst predicate — the
     * SQL-DML form ([[graft.ext.GraftDmlRewrite]] routes
     * `DELETE FROM t WHERE ...` here). Same copy-on-write shape as
-    * [[deleteRanges]], but file targeting reuses the datasource's
-    * expression evaluator ([[GraftFileIndex.listFiles]]): stats ranges,
-    * null counts, bloom sidecars, and hidden-partition tags all prune
-    * before any file opens, and any expression shape the evaluator
-    * doesn't recognize conservatively keeps the file — pruning can
+    * [[deleteRanges]], and file targeting is graft's one skipping rule
+    * ([[filesMayMatch]]): stats ranges, null counts, bloom sidecars and
+    * hidden-partition tags all prune before any file opens, for analyzed
+    * and Column-built conditions alike, and any expression shape the
+    * rule doesn't recognize conservatively keeps the file — pruning can
     * change COST, never the answer. NULL-condition rows survive (SQL
     * DELETE). Subquery conditions refuse loudly (materialize the keys
     * and use [[deleteKeysMOR]] / [[mergeKeyed]] instead). */
@@ -2734,7 +2651,7 @@ object VersionedTable {
     require(basis >= 0, s"$root is not a versioned table (empty log)")
     guardNoSubquery(cond, "DELETE")
     val st = state(root, basis)
-    val touched = filesMayMatching(spark, root, basis, st, cond)
+    val touched = filesMayMatch(root, st, Seq(cond))
     if (touched.isEmpty) return basis // no file can match: metadata no-op
     val rewritten = readResolved(spark, root, st, touched)
       .filter(not(coalesce(rebindColumn(cond), lit(false))))
@@ -2761,7 +2678,7 @@ object VersionedTable {
     require(basis >= 0, s"$root is not a versioned table (empty log)")
     val st = state(root, basis)
     val touched = cond match {
-      case Some(c) => filesMayMatching(spark, root, basis, st, c)
+      case Some(c) => filesMayMatch(root, st, Seq(c))
       case None => st.files
     }
     if (touched.isEmpty) return basis
@@ -2840,23 +2757,6 @@ object VersionedTable {
       s"$what with a subquery is not supported on graft tables — " +
         "materialize the keys and use deleteKeysMOR / mergeKeyed")
 
-  /** Files of snapshot `v` that MAY hold a row matching `cond`,
-    * decided from metadata alone by the datasource's own evaluator
-    * (one [[GraftFileIndex.listFiles]] call — stats + blooms +
-    * partition tags; zero data I/O). */
-  private def filesMayMatching(spark: SparkSession, root: String, v: Long,
-      st: TableState,
-      cond: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[String] = {
-    // allowTombstones: this listing only TARGETS candidate files; the
-    // actual rows go through [[readResolved]], which applies sidecars
-    val idx = new GraftFileIndex(spark, root, v, st, pinnedSnapshot = true,
-      allowTombstones = true)
-    val kept = idx.listFiles(Nil, Seq(cond))
-      .flatMap(_.files).map(_.getPath.toString).toSet
-    st.files.filter(f => kept.contains(
-      new org.apache.hadoop.fs.Path(dataPath(root, f).toUri).toString))
-  }
 
   /** A SQL-DML expression as a Column usable against a FRESH frame:
     * the analyzer bound its attributes to the original relation's
@@ -2872,8 +2772,8 @@ object VersionedTable {
     })
 
   /** Shared copy-on-write machinery of [[deleteRanges]] /
-    * [[updateRanges]]: stats-prune the files a conjunctive-range
-    * predicate may touch, run `rewrite(touchedRows, matchPred)` over
+    * [[updateRanges]]: target the files a conjunctive-range predicate
+    * may touch ([[filesMayMatch]]), run `rewrite(touchedRows, matchPred)` over
     * just those, land the result as one `replace` commit (remove
     * touched, add rewrites). Untouched files are never opened. A
     * predicate no file can match returns the basis version — a
@@ -2885,15 +2785,12 @@ object VersionedTable {
     val basis = latestVersion(root)
     require(basis >= 0, s"$root is not a versioned table (empty log)")
     val st = state(root, basis)
-    val touched = st.files.filter { f =>
-      val fs = st.stats.getOrElse(f, Map.empty)
-      ranges.forall { case (c, lo, hi) =>
-        mayMatch(fs.get(physicalName(st, c)), lo, hi) }
-    }
-    if (touched.isEmpty) return basis
     val matchPred = ranges.flatMap { case (c, lo, hi) =>
       lo.map(l => col(c) >= lit(l)) ++ hi.map(u => col(c) <= lit(u))
     }.reduce(_ && _)
+    val touched = filesMayMatch(root, st,
+      Seq(org.apache.spark.sql.GraftColumnBridge.expression(matchPred)))
+    if (touched.isEmpty) return basis
     // tombstone-RESOLVED read of the touched files: a rewrite must not
     // resurrect rows a merge-on-read delete already removed. The
     // `replace` commit then drops the touched files' tombstone links

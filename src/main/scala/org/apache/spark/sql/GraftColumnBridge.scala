@@ -15,6 +15,20 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `e` with every lazily wrapped Column node converted to its Catalyst
+    * form (`expression` defers that conversion to the session), so a
+    * Column-built predicate can be analyzed on its own. */
+  def catalyst(e: Expression): Expression = e.transformDown {
+    case classic.ColumnNodeExpression(node) =>
+      classic.ColumnNodeToExpressionConverter(node)
+  }
+
+  /** `e` as a `sources.Filter` for parquet row-group pushdown, when it
+    * translates (`DataSourceStrategy.translateFilter` is `protected[sql]`). */
+  def sourceFilter(e: Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = true)
+
   /** The session catalog as a v2 [[connector.catalog.CatalogPlugin]] —
     * what a swapped-in `DataSourceV2Relation` must carry so Spark's
     * own REFRESH TABLE can invalidate it (`CatalogManager

@@ -49,6 +49,14 @@ class GraftDmlSpec extends SparkSpecBase {
       assert(spark.sql(
         "SELECT count(*) AS c FROM dml_del WHERE k >= 8 AND k < 16")
         .as[Long].head() === 4L) // 12..15 survive
+      // a Column-built condition targets by name too: [17, 20) lives in
+      // the [16, 24) file alone, so exactly one file is replaced
+      VersionedTable.deleteWhere(spark, root,
+        org.apache.spark.sql.GraftColumnBridge.expression(
+          col("k") >= 17 && col("k") < 20))
+      val after2 = VersionedTable.snapshotFiles(root, 9L).toSet
+      assert((after intersect after2).size === 7)
+      assert(VersionedTable.read(spark, root).count() === 57L)
     } finally drop("dml_del")
   }
 

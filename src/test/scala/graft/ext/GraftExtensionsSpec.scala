@@ -200,15 +200,15 @@ class GraftExtensionsSpec extends SparkSpecBase {
     // PARTITION BY (case/space-insensitive spec): point lookup on k
     // prunes to one bucket
     spark.sql(s"GRAFT OPTIMIZE '$root' PARTITION BY BUCKET(8, k)")
-    val (keep, total) = VersionedTable.pruneFilesPartition(
-      root, VersionedTable.latestVersion(root), "k", 42L)
+    val (keep, total) = VersionedTable.pruneFiles(
+      root, VersionedTable.latestVersion(root), col("k") === 42L)
     assert(total == 8 && keep.size == 1, s"prune: ${keep.size}/$total")
-    assert(VersionedTable.readPartitionPruned(spark, root, "k", 42L)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 42L)
       .count() == 1)
     // ZORDER BY: conjunctive range pruning via 2-D clustering
     spark.sql(s"GRAFT OPTIMIZE '$root' ZORDER BY x, y FILES 4")
-    val zr = VersionedTable.readSkippingRanges(spark, root, Seq(
-      ("x", Some(0L), Some(5L)), ("y", Some(0L), Some(5L))))
+    val zr = VersionedTable.readPruned(spark, root,
+      col("x").between(0L, 5L) && col("y").between(0L, 5L))
     assert(zr.count() ==
       VersionedTable.read(spark, root)
         .filter(col("x") <= 5 && col("y") <= 5).count())

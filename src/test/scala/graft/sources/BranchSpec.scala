@@ -30,8 +30,8 @@ class BranchSpec extends SparkSpecBase {
       === Array(1L, 2L, 3L, 4L))
     assert(VersionedTable.branches(root).isEmpty) // publish consumed it
     // published files carry their stats: a range read can prune
-    val (kept, total) = VersionedTable.pruneFiles(root, 1L, "k",
-      Some(3L), Some(4L))
+    val (kept, total) = VersionedTable.pruneFiles(root, 1L,
+      col("k").between(3L, 4L))
     assert(kept.size < total)
   }
 

@@ -37,8 +37,8 @@ class ConvertSpec extends SparkSpecBase {
       spark.read.format("delta-log").load(deltaRoot).orderBy("k")
         .collect().toSeq)
     // imported stats drive file skipping
-    val (kept, total) = VersionedTable.pruneFiles(graftRoot, 0L, "k",
-      Some(20L), Some(25L))
+    val (kept, total) = VersionedTable.pruneFiles(graftRoot, 0L,
+      col("k").between(20L, 25L))
     assert(total === 4 && kept.size === 1, s"got ${kept.size}/$total")
     // ...and the datasource scan path prunes through them too
     val q = spark.read.format("graft").load(graftRoot)
@@ -89,8 +89,8 @@ class ConvertSpec extends SparkSpecBase {
     val graftRoot = tmp()
     VersionedTable.importIceberg(spark, iceRoot, graftRoot)
     assert(VersionedTable.read(spark, graftRoot).count() === 64)
-    val (kept, total) = VersionedTable.pruneFiles(graftRoot, 0L, "k",
-      Some(40L), Some(47L))
+    val (kept, total) = VersionedTable.pruneFiles(graftRoot, 0L,
+      col("k").between(40L, 47L))
     assert(total === 4 && kept.size === 1, s"got ${kept.size}/$total")
     // DML works on the imported table: a copy-on-write DELETE rewrites
     // only the touched ext file into a LOCAL file, others stay ext:

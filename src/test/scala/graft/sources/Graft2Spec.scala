@@ -48,6 +48,28 @@ class Graft2Spec extends SparkSpecBase {
       }.head
       assert(v1Idx.lastListing.get === Graft2DataSource.lastPlanned(root))
     }
+    // DATE ranges prune on both paths: files [Jan 1-10] and [Feb 1-10]
+    val dRoot = tmp()
+    Seq("2024-01", "2024-02").foreach { m =>
+      VersionedTable.commit(spark.range(1, 11).select(
+        to_date(format_string(s"$m-%02d", col("id"))).as("d")).coalesce(1),
+        dRoot)
+    }
+    val feb = spark.read.format("graft").load(dRoot)
+      .filter(col("d") >= java.sql.Date.valueOf("2024-02-01"))
+    assert(feb.count() === 10)
+    assert(Graft2DataSource.lastPlanned(dRoot) === ((1, 2)))
+    withReadPathV1 {
+      val v1 = spark.read.format("graft").load(dRoot)
+        .filter(col("d") >= java.sql.Date.valueOf("2024-02-01"))
+      assert(v1.count() === 10)
+      val v1Idx = v1.queryExecution.optimizedPlan.collect {
+        case org.apache.spark.sql.execution.datasources.LogicalRelation(
+            r: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
+            _, _, _, _) => r.location.asInstanceOf[GraftFileIndex]
+      }.head
+      assert(v1Idx.lastListing.get === Graft2DataSource.lastPlanned(dRoot))
+    }
   }
 
   test("column pruning reaches the scan; time travel pins a snapshot") {
@@ -70,6 +92,32 @@ class Graft2Spec extends SparkSpecBase {
     val q = spark.read.format("graft2").load(root).filter(col("k") === 501)
     assert(q.count() === 1)
     assert(Graft2DataSource.lastPlanned(root) === ((1, 2)))
+    // IN probes every value through the bloom: 501 and 3 share a file
+    val in = spark.read.format("graft2").load(root)
+      .filter(col("k").isin(501, 3))
+    assert(in.count() === 2)
+    assert(Graft2DataSource.lastPlanned(root) === ((1, 2)))
+    // DATE: time travel (a pinned v1 relation) and SQL DELETE probe the
+    // bloom with CAST(literal AS STRING), the string the build stored
+    val dRoot = GraftDataSourceSpec.bloomedDates(spark)
+    assert(spark.read.format("graft").option("versionAsOf", 2).load(dRoot)
+      .filter(col("d") === java.sql.Date.valueOf("2024-03-10"))
+      .count() === 1)
+    spark.sql("DROP TABLE IF EXISTS g2_bloom_dates")
+    spark.sql(s"CREATE TABLE g2_bloom_dates USING graft OPTIONS (path '$dRoot')")
+    try {
+      spark.sql("DELETE FROM g2_bloom_dates WHERE d = DATE'2024-03-10'")
+      assert(VersionedTable.latestVersion(dRoot) === 3L)
+      assert(spark.sql("SELECT count(*) FROM g2_bloom_dates")
+        .as[Long].head() === 5L)
+    } finally spark.sql("DROP TABLE IF EXISTS g2_bloom_dates")
+    // TIMESTAMP blooms are never probed (zone-dependent string form)
+    val tsRoot = GraftDataSourceSpec.bloomedTimestamps(spark)
+    Seq("graft", "graft2").foreach { fmt =>
+      assert(spark.read.format(fmt).load(tsRoot)
+        .filter(col("ts") === timestamp_seconds(lit(5000))).count() === 1,
+        s"format($fmt)")
+    }
   }
 
   test("manifest sizeInBytes drives broadcast planning through DSv2") {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
@@ -95,6 +96,26 @@ class GraftDataSourceSpec extends SparkSpecBase {
     val (kept, total) = indexOf(df).lastListing.get
     assert(total === 2 && kept === 1,
       s"bloom should prune the file not holding 501, got $kept/$total")
+    // DATE: the bloom holds CAST(d AS STRING), so the probe must be the
+    // same cast of the literal (not its internal day number)
+    val dRoot = GraftDataSourceSpec.bloomedDates(spark)
+    val travel = spark.read.format("graft").option("versionAsOf", 2)
+      .load(dRoot).filter(col("d") === java.sql.Date.valueOf("2024-03-10"))
+    assert(travel.count() === 1)
+    assert(indexOf(travel).lastListing.get === ((1, 2)))
+    spark.sql("DROP TABLE IF EXISTS g_bloom_dates")
+    spark.sql(s"CREATE TABLE g_bloom_dates USING graft OPTIONS (path '$dRoot')")
+    try {
+      spark.sql("DELETE FROM g_bloom_dates WHERE d = DATE'2024-03-10'")
+      assert(VersionedTable.latestVersion(dRoot) === 3L)
+      assert(VersionedTable.read(spark, dRoot).count() === 5L)
+    } finally spark.sql("DROP TABLE IF EXISTS g_bloom_dates")
+    // TIMESTAMP: its string form depends on the session zone, so the
+    // bloom is never consulted and min/max decide
+    val ts = spark.read.format("graft")
+      .load(GraftDataSourceSpec.bloomedTimestamps(spark))
+      .filter(col("ts") === timestamp_seconds(lit(5000)))
+    assert(ts.count() === 1)
   }
 
   test("hidden partition tags prune equality probes in SQL") {
@@ -267,5 +288,35 @@ class GraftDataSourceSpec extends SparkSpecBase {
     // compaction folds tombstones in; the gate lifts
     VersionedTable.compact(spark, morRoot, numFiles = 1)
     assert(spark.read.format("graft").load(morRoot).count() === 1)
+  }
+}
+
+/** Bloom-indexed fixtures shared with [[Graft2Spec]]. */
+object GraftDataSourceSpec {
+  /** Two files of interleaved dates (min/max prune nothing), bloom-indexed
+    * on `d` at v2. */
+  def bloomedDates(spark: SparkSession): String = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_ds_").toString
+    Seq(Seq("2024-03-01", "2024-03-10", "2024-03-20"),
+        Seq("2024-03-02", "2024-03-11", "2024-03-21")).foreach { ds =>
+      VersionedTable.commit(ds.toDF("s").select(to_date(col("s")).as("d"))
+        .coalesce(1), root)
+    }
+    VersionedTable.buildBloomIndex(spark, root, "d", fpp = 0.001)
+    root
+  }
+
+  /** The TIMESTAMP sibling of [[bloomedDates]]: seconds 1000/5000/9000
+    * and 2000/6000/10000, bloom-indexed on `ts`. */
+  def bloomedTimestamps(spark: SparkSession): String = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_ds_").toString
+    Seq(Seq(1000L, 5000L, 9000L), Seq(2000L, 6000L, 10000L)).foreach { ss =>
+      VersionedTable.commit(ss.toDF("s")
+        .select(timestamp_seconds(col("s")).as("ts")).coalesce(1), root)
+    }
+    VersionedTable.buildBloomIndex(spark, root, "ts", fpp = 0.001)
+    root
   }
 }

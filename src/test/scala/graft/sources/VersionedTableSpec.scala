@@ -134,8 +134,8 @@ class VersionedTableSpec extends SparkSpecBase {
     assert(VersionedTable.read(spark, dst).agg(sum(col("v"))).head.getLong(0)
       == VersionedTable.read(spark, src).agg(sum(col("v"))).head.getLong(0))
     // stats metadata cloned too: pruning works through ext refs
-    val (keep, total) = VersionedTable.pruneFiles(dst, 0L, "k",
-      Some(0L), Some(50L))
+    val (keep, total) = VersionedTable.pruneFiles(dst, 0L,
+      col("k").between(0L, 50L))
     assert(total == 4 && keep.size <= 1)
     // divergence: a delete on the clone rewrites only touched ext
     // files into LOCAL ones; the source is untouched
@@ -189,31 +189,31 @@ class VersionedTableSpec extends SparkSpecBase {
         when(col("id") >= 4000, col("id")).as("n"))
       .repartitionByRange(8, col("k"))
     VersionedTable.commit(df, root)
-    val (keep, total) = VersionedTable.pruneFiles(root, 0L, "k",
-      Some(100L), Some(300L))
+    val (keep, total) = VersionedTable.pruneFiles(root, 0L,
+      col("k").between(100L, 300L))
     assert(total == 8, s"expected 8 files, got $total")
     assert(keep.nonEmpty && keep.size <= 2,
       s"[100,300] should touch at most 2 of 8 range-clustered files, " +
         s"touched ${keep.size}")
     // the skipping read opens exactly the kept files and returns
     // exactly what a full-scan filter returns
-    val skipped = VersionedTable.readSkipping(spark, root, "k",
-      Some(100L), Some(300L))
+    val skipped = VersionedTable.readPruned(spark, root,
+      col("k").between(100L, 300L))
     assert(skipped.inputFiles.length == keep.size)
     val full = VersionedTable.read(spark, root)
       .filter(col("k").between(100, 300))
     assert(skipped.collect().map(_.getLong(0)).sorted.toSeq ==
       full.collect().map(_.getLong(0)).sorted.toSeq)
     // string stats prune too (UTF-8 byte order)
-    val (keepS, _) = VersionedTable.pruneFiles(root, 0L, "s",
-      Some("s00100"), Some("s00300"))
+    val (keepS, _) = VersionedTable.pruneFiles(root, 0L,
+      col("s").between("s00100", "s00300"))
     assert(keepS.size <= 2, s"string range touched ${keepS.size} files")
     // all-null files are skippable by any range on that column
-    val (keepN, _) = VersionedTable.pruneFiles(root, 0L, "n",
-      Some(0L), None)
+    val (keepN, _) = VersionedTable.pruneFiles(root, 0L,
+      col("n") >= 0L)
     assert(keepN.size <= 5,
       s"files where n is entirely NULL must be skipped, kept ${keepN.size}")
-    assert(VersionedTable.readSkipping(spark, root, "n", Some(0L), None)
+    assert(VersionedTable.readPruned(spark, root, col("n") >= 0L)
       .count() == 4000)
   }
 
@@ -262,8 +262,8 @@ class VersionedTableSpec extends SparkSpecBase {
     // array column: unsupported type, no stats recorded
     val df = Seq((1L, Seq(1, 2)), (2L, Seq(3))).toDF("k", "arr")
     VersionedTable.commit(df, root)
-    val (keep, total) = VersionedTable.pruneFiles(root, 0L, "arr",
-      Some(0L), Some(1L))
+    val (keep, total) = VersionedTable.pruneFiles(root, 0L,
+      col("arr").between(0L, 1L))
     assert(keep.size == total, "stat-less column must never prune")
     // a manifest written BEFORE stats existed (simulated by stripping
     // stats lines) reads fine and prunes nothing
@@ -273,8 +273,8 @@ class VersionedTableSpec extends SparkSpecBase {
     val stripped = Files.readAllLines(mf).toArray.map(_.toString)
       .filterNot(_.startsWith("stats=")).mkString("", "\n", "\n")
     Files.writeString(mf, stripped)
-    val (keepOld, totalOld) = VersionedTable.pruneFiles(rootOld, 0L, "k",
-      Some(100L), None)
+    val (keepOld, totalOld) = VersionedTable.pruneFiles(rootOld, 0L,
+      col("k") >= 100L)
     assert(keepOld.size == totalOld, "stats-free manifest must not prune")
     assert(VersionedTable.read(spark, rootOld).count() == 2)
   }
@@ -286,22 +286,22 @@ class VersionedTableSpec extends SparkSpecBase {
     VersionedTable.commit(
       spark.range(1000, 1100).select(col("id").as("k")), root) // v1 append
     // both versions' stats are live; [0,50] prunes v1's file
-    val (keep, total) = VersionedTable.pruneFiles(root, 1L, "k",
-      Some(0L), Some(50L))
+    val (keep, total) = VersionedTable.pruneFiles(root, 1L,
+      col("k").between(0L, 50L))
     assert(total >= 2 && keep.size < total,
       s"append snapshot should prune the disjoint file ($keep of $total)")
     // overwrite resets the stat set along with the file set
     VersionedTable.commit(
       spark.range(5000, 5100).select(col("id").as("k")), root, "overwrite")
-    val (keep2, total2) = VersionedTable.pruneFiles(root, 2L, "k",
-      Some(0L), Some(50L))
+    val (keep2, total2) = VersionedTable.pruneFiles(root, 2L,
+      col("k").between(0L, 50L))
     assert(keep2.isEmpty,
       s"post-overwrite snapshot holds only [5000,5100]; kept $keep2")
-    assert(VersionedTable.readSkipping(spark, root, "k",
-      Some(0L), Some(50L)).count() == 0)
+    assert(VersionedTable.readPruned(spark, root,
+      col("k").between(0L, 50L)).count() == 0)
     // time travel still prunes against the OLD snapshot's stats
-    assert(VersionedTable.readSkipping(spark, root, "k",
-      Some(0L), Some(50L), version = Some(1L)).count() == 51)
+    assert(VersionedTable.readPruned(spark, root,
+      col("k").between(0L, 50L), version = Some(1L)).count() == 51)
   }
 
   test("compactClustered: z-order makes BOTH dimensions prunable") {
@@ -317,14 +317,14 @@ class VersionedTableSpec extends SparkSpecBase {
     val total = VersionedTable.snapshotFiles(
       root, VersionedTable.latestVersion(root)).size
     assert(total == 16)
-    val (kx, _) = VersionedTable.pruneFiles(root, 1L, "x",
-      Some(0L), Some(7L))
-    val (ky, _) = VersionedTable.pruneFiles(root, 1L, "y",
-      Some(0L), Some(7L))
+    val (kx, _) = VersionedTable.pruneFiles(root, 1L,
+      col("x").between(0L, 7L))
+    val (ky, _) = VersionedTable.pruneFiles(root, 1L,
+      col("y").between(0L, 7L))
     assert(kx.size < total, s"x range kept all $total files")
     assert(ky.size < total, s"y range kept all $total files")
-    val both = VersionedTable.readSkippingRanges(spark, root, Seq(
-      ("x", Some(0L), Some(7L)), ("y", Some(0L), Some(7L))))
+    val both = VersionedTable.readPruned(spark, root,
+      col("x").between(0L, 7L) && col("y").between(0L, 7L))
     assert(both.inputFiles.length <= math.min(kx.size, ky.size),
       "conjunction must prune at least as hard as each dimension")
     assert(both.count() == 64) // 8×8 corner, layout-independent
@@ -387,8 +387,8 @@ class VersionedTableSpec extends SparkSpecBase {
     assert(byN(1L) === 1.5 && byN(3L) === 3.5 && byN(1L << 40) === 4.5)
     // stats-based skipping stays sound across the width change: a
     // probe above the old files' int range prunes them, finds the row
-    val (kept, total) = VersionedTable.pruneFiles(root, 1L, "n",
-      Some(1L << 39), None)
+    val (kept, total) = VersionedTable.pruneFiles(root, 1L,
+      col("n") >= (1L << 39))
     assert(total === 2 && kept.size === 1, s"got ${kept.size}/$total")
     // the widened schema is the new baseline: narrowing back refuses
     val narrow = intercept[IllegalArgumentException] {
@@ -470,8 +470,8 @@ class VersionedTableSpec extends SparkSpecBase {
     // time travel: the pre-delete snapshot is intact
     assert(VersionedTable.read(spark, root, Some(0L)).count() == 8000)
     // stats survive the replace: a later skipping read still prunes
-    val (keep2, total2) = VersionedTable.pruneFiles(root, 1L, "k",
-      Some(7000L), Some(7500L))
+    val (keep2, total2) = VersionedTable.pruneFiles(root, 1L,
+      col("k").between(7000L, 7500L))
     assert(keep2.size < total2)
     // a delete no file can match is metadata-only: same version back
     assert(VersionedTable.deleteRanges(spark, root,
@@ -734,8 +734,8 @@ class VersionedTableSpec extends SparkSpecBase {
     assert(VersionedTable.read(spark, root, Some(95L)).count() == 96)
     assert(VersionedTable.snapshotFiles(root, 99L).size == 100)
     // stats survive the checkpoint round-trip (pruning still works)
-    val (keep, total) = VersionedTable.pruneFiles(root, 99L, "id",
-      Some(5L), Some(5L))
+    val (keep, total) = VersionedTable.pruneFiles(root, 99L,
+      col("id").between(5L, 5L))
     assert(total == 100 && keep.size == 1,
       s"stats through checkpoint should prune to 1 file, kept ${keep.size}")
     // time travel below the truncation horizon fails loudly, never
@@ -921,8 +921,8 @@ class VersionedTableSpec extends SparkSpecBase {
       .filter(col("k").isin(5L, 4005L)).count() == 0)
     assert(VersionedTable.read(spark, root, Some(0L)).count() == 8000)
     // skipping reads resolve it too
-    assert(VersionedTable.readSkipping(spark, root, "k",
-      Some(0L), Some(10L)).count() == 10)
+    assert(VersionedTable.readPruned(spark, root,
+      col("k").between(0L, 10L)).count() == 10)
     // append-after-delete: a NEW row with a deleted key stays visible
     VersionedTable.commit(Seq((5L, 99L)).toDF("k", "v"), root) // v2
     assert(VersionedTable.read(spark, root)
@@ -973,9 +973,9 @@ class VersionedTableSpec extends SparkSpecBase {
       .repartitionByRange(8, col("k"))
     VersionedTable.commit(df, root)
     val (keepNotNull, total) =
-      VersionedTable.pruneFilesNullness(root, 0L, "n", wantNull = false)
+      VersionedTable.pruneFiles(root, 0L, col("n").isNotNull)
     val (keepNull, _) =
-      VersionedTable.pruneFilesNullness(root, 0L, "n", wantNull = true)
+      VersionedTable.pruneFiles(root, 0L, col("n").isNull)
     assert(total == 8)
     // range boundaries need not land exactly on 4000 — at most ONE
     // straddling file may legitimately survive both directions
@@ -986,16 +986,15 @@ class VersionedTableSpec extends SparkSpecBase {
     assert(keepNull.size + keepNotNull.size <= total + 1,
       "only a boundary-straddling file may be kept by both directions")
     // answers equal the full-scan filter exactly
-    val notNull = VersionedTable.readSkippingNullness(
-      spark, root, "n", wantNull = false)
+    val notNull = VersionedTable.readPruned(spark, root,
+      col("n").isNotNull)
     assert(notNull.inputFiles.length == keepNotNull.size)
     assert(notNull.count() == 4000)
-    assert(VersionedTable.readSkippingNullness(
-      spark, root, "n", wantNull = true).count() == 4000)
+    assert(VersionedTable.readPruned(spark, root,
+      col("n").isNull).count() == 4000)
     // stat-less column: never prunes, still answers
     val (keepK, totalK) =
-      VersionedTable.pruneFilesNullness(root, 0L, "nosuchcol",
-        wantNull = true)
+      VersionedTable.pruneFiles(root, 0L, col("nosuchcol").isNull)
     assert(keepK.size == totalK)
   }
 
@@ -1058,8 +1057,8 @@ class VersionedTableSpec extends SparkSpecBase {
       .select(col("id").as("k"), (col("id") % 7).as("v"))
       .repartition(8, col("k"))
     VersionedTable.commit(df, root) // v0
-    val (keepRange, total) = VersionedTable.pruneFiles(root, 0L, "k",
-      Some(4005L), Some(4005L))
+    val (keepRange, total) = VersionedTable.pruneFiles(root, 0L,
+      col("k").between(4005L, 4005L))
     assert(total == 8 && keepRange.size == 8,
       "hash layout should defeat min/max pruning (precondition)")
     val v1 = VersionedTable.buildBloomIndex(spark, root, "k")
@@ -1067,41 +1066,41 @@ class VersionedTableSpec extends SparkSpecBase {
     // the index is a data-free append: file set unchanged
     assert(VersionedTable.snapshotFiles(root, v1) ==
       VersionedTable.snapshotFiles(root, 0L))
-    val (keep, tot) = VersionedTable.pruneFilesEquality(root, v1, "k", 4005L)
+    val (keep, tot) = VersionedTable.pruneFiles(root, v1, col("k") === 4005L)
     assert(tot == 8 && keep.size <= 2,
       s"bloom should prune a point lookup to <=2 of 8 files, kept ${keep.size}")
-    assert(VersionedTable.readPointLookup(spark, root, "k", 4005L)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 4005L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((4005L, 4005L % 7)))
     // out-of-range probe: min/max stats finish it off entirely
-    assert(VersionedTable.pruneFilesEquality(root, v1, "k", 999999L)
+    assert(VersionedTable.pruneFiles(root, v1, col("k") === 999999L)
       ._1.isEmpty)
     // checkpoint round-trips the index map
     VersionedTable.checkpoint(root)
-    assert(VersionedTable.pruneFilesEquality(root, v1, "k", 4005L)
+    assert(VersionedTable.pruneFiles(root, v1, col("k") === 4005L)
       ._1.size <= 2)
     // an append WITHOUT an index is always read: new row surfaces
     VersionedTable.commit(Seq((4005L, 99L)).toDF("k", "v"), root) // v2
-    assert(VersionedTable.readPointLookup(spark, root, "k", 4005L)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 4005L)
       .count() == 2)
     // merge-on-read delete: bloom keeps the file, anti-join drops the row
     VersionedTable.deleteKeysMOR(spark, root, "k", Seq(4005L).toDF("k")) // v3
-    assert(VersionedTable.readPointLookup(spark, root, "k", 4005L).count() == 0)
-    assert(VersionedTable.readPointLookup(spark, root, "k", 4006L).count() == 1)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 4005L).count() == 0)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 4006L).count() == 1)
     // rewrite: dead files' bloom entries die with them; lookups degrade
     // to reads, never to wrong answers
     VersionedTable.compact(spark, root, numFiles = 2) // v4
     val latest = VersionedTable.latestVersion(root)
     val (keepAfter, totAfter) =
-      VersionedTable.pruneFilesEquality(root, latest, "k", 4006L)
+      VersionedTable.pruneFiles(root, latest, col("k") === 4006L)
     assert(keepAfter.size == totAfter,
       "rewritten files have no index and must all be read")
-    assert(VersionedTable.readPointLookup(spark, root, "k", 4006L).count() == 1)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 4006L).count() == 1)
     // reindex the compacted snapshot; vacuum keeps the live sidecars
     VersionedTable.buildBloomIndex(spark, root, "k") // v5
     VersionedTable.vacuum(root, retain = 5L, minAgeMs = 0L)
-    assert(VersionedTable.pruneFilesEquality(root, 5L, "k", 4006L)._1.size <= 1)
-    assert(VersionedTable.readPointLookup(spark, root, "k", 4006L).count() == 1)
+    assert(VersionedTable.pruneFiles(root, 5L, col("k") === 4006L)._1.size <= 1)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 4006L).count() == 1)
   }
 
   test("rename column: metadata-only, exact through every machinery") {
@@ -1127,12 +1126,12 @@ class VersionedTableSpec extends SparkSpecBase {
     assert(VersionedTable.read(spark, root, Some(1L))
       .columns.toSeq == Seq("k", "v"))
     // stats pruning answers under the new name (stats stay physical)
-    val (keep, total) = VersionedTable.pruneFiles(root, v2, "key",
-      Some(100L), Some(300L))
+    val (keep, total) = VersionedTable.pruneFiles(root, v2,
+      col("key").between(100L, 300L))
     assert(total == 8 && keep.size <= 2,
       s"range pruning must survive the rename, kept ${keep.size}")
-    assert(VersionedTable.readSkipping(spark, root, "key",
-      Some(100L), Some(300L)).count() == 201)
+    assert(VersionedTable.readPruned(spark, root,
+      col("key").between(100L, 300L)).count() == 201)
     // appends after the rename write the PHYSICAL name; reads logical
     VersionedTable.commit(Seq((4005L, 99L)).toDF("key", "v"), root) // v3
     assert(VersionedTable.read(spark, root)
@@ -1143,10 +1142,10 @@ class VersionedTableSpec extends SparkSpecBase {
     assert(VersionedTable.read(spark, root).count() == 8000 - 51)
     // bloom index + point lookup under the new name
     VersionedTable.buildBloomIndex(spark, root, "key") // v5
-    val (keepEq, totEq) = VersionedTable.pruneFilesEquality(
-      root, 5L, "key", 4005L)
+    val (keepEq, totEq) = VersionedTable.pruneFiles(root, 5L,
+      col("key") === 4005L)
     assert(keepEq.size < totEq)
-    assert(VersionedTable.readPointLookup(spark, root, "key", 4005L)
+    assert(VersionedTable.readPruned(spark, root, col("key") === 4005L)
       .count() == 1)
     // appending a column named like the OLD physical name is rejected
     val e = intercept[IllegalArgumentException] {
@@ -1361,8 +1360,8 @@ class VersionedTableSpec extends SparkSpecBase {
     assert(VersionedTable.snapshotTombstones(root, v3).nonEmpty,
       "restore dropped the target snapshot's tombstones")
     // stats restored too: range pruning works on the restored version
-    val (keep, total) = VersionedTable.pruneFiles(root, v3, "k",
-      Some(100L), Some(300L))
+    val (keep, total) = VersionedTable.pruneFiles(root, v3,
+      col("k").between(100L, 300L))
     assert(total == 8 && keep.size <= 2,
       s"restored stats should prune to <=2 of 8 files, kept ${keep.size}")
     // restored state round-trips through a checkpoint
@@ -1421,10 +1420,10 @@ class VersionedTableSpec extends SparkSpecBase {
       (col("id") * 7 % 1000).as("v"))
     VersionedTable.commit(df, root, "overwrite",
       partitionBy = Some(PartitionTransform.Bucket(8, "k")))
-    val (keep, total) = VersionedTable.pruneFilesPartition(root, 0L, "k", 42L)
+    val (keep, total) = VersionedTable.pruneFiles(root, 0L, col("k") === 42L)
     assert(total == 8, s"expected 8 bucket files, got $total")
     assert(keep.size == 1, s"expected 1 surviving bucket, got ${keep.size}")
-    val pruned = VersionedTable.readPartitionPruned(spark, root, "k", 42L)
+    val pruned = VersionedTable.readPruned(spark, root, col("k") === 42L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val full = VersionedTable.read(spark, root)
       .filter(col("k") === 42L)
@@ -1432,7 +1431,7 @@ class VersionedTableSpec extends SparkSpecBase {
     assert(pruned == full && pruned.size == 1)
     // a probe for an absent key still prunes to its one bucket and
     // returns empty — never a wrong answer
-    assert(VersionedTable.readPartitionPruned(spark, root, "k", 999999L)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 999999L)
       .count() == 0)
     // data files carry NO helper column — hidden means hidden
     assert(VersionedTable.read(spark, root).columns.toSeq == Seq("k", "v"))
@@ -1449,19 +1448,19 @@ class VersionedTableSpec extends SparkSpecBase {
     VersionedTable.commit(b, root, "append",
       partitionBy = Some(PartitionTransform.Bucket(8, "k")))   // v1: 8 files
     VersionedTable.commit(c.coalesce(1), root, "append")        // v2: untagged
-    val (keep, total) = VersionedTable.pruneFilesPartition(root, 2L, "k", 5L)
+    val (keep, total) = VersionedTable.pruneFiles(root, 2L, col("k") === 5L)
     assert(total == 13, s"expected 13 files, got $total")
     // probe 5: one bucket of 4, one bucket of 8 — but min/max stats
     // also exclude the v1 (k>=1000) and v2 (k>=2000) files entirely
     assert(keep.size == 1, s"expected 1 surviving file, got ${keep.size}: $keep")
     def probe(k: Long): Seq[Long] =
-      VersionedTable.readPartitionPruned(spark, root, "k", k)
+      VersionedTable.readPruned(spark, root, col("k") === k)
         .collect().map(_.getLong(0)).toSeq
     assert(probe(5L) == Seq(5L))
     assert(probe(1500L) == Seq(1500L)) // lives in a v1 bucket(8) file
     assert(probe(2050L) == Seq(2050L)) // lives in the untagged v2 file
     // the untagged v2 file survives any in-stats probe of its range
-    val (keep2, _) = VersionedTable.pruneFilesPartition(root, 2L, "k", 2050L)
+    val (keep2, _) = VersionedTable.pruneFiles(root, 2L, col("k") === 2050L)
     assert(keep2.size == 1)
   }
 
@@ -1478,31 +1477,31 @@ class VersionedTableSpec extends SparkSpecBase {
     assert(VersionedTable.checkpointVersions(root).nonEmpty)
     // resolution now runs checkpoint + suffix; bucket tags must survive
     val (keep, total) =
-      VersionedTable.pruneFilesPartition(root, 10L, "k", 7L)
+      VersionedTable.pruneFiles(root, 10L, col("k") === 7L)
     assert(total == 16 && keep.size == 1,
       s"expected 1/16 files after checkpointed resolve, got ${keep.size}/$total")
     // MOR delete keeps tags (rows only shrink — tag stays conservative)
     VersionedTable.deleteKeysMOR(spark, root, "k", Seq(7L).toDF("k"))
-    assert(VersionedTable.readPartitionPruned(spark, root, "k", 7L)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 7L)
       .count() == 0)
-    val (keepMor, _) = VersionedTable.pruneFilesPartition(
-      root, VersionedTable.latestVersion(root), "k", 8L)
+    val (keepMor, _) = VersionedTable.pruneFiles(
+      root, VersionedTable.latestVersion(root), col("k") === 8L)
     assert(keepMor.size == 1)
-    assert(VersionedTable.readPartitionPruned(spark, root, "k", 8L)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 8L)
       .count() == 1)
     // restore back to v10 (pre-delete): tags re-established
     val rv = VersionedTable.restore(root, 10L)
-    val (keepR, _) = VersionedTable.pruneFilesPartition(root, rv, "k", 7L)
+    val (keepR, _) = VersionedTable.pruneFiles(root, rv, col("k") === 7L)
     assert(keepR.size == 1)
-    assert(VersionedTable.readPartitionPruned(spark, root, "k", 7L)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 7L)
       .count() == 1)
     // shallow clone: tags travel with the external references
     val cloneRoot = newRoot() + "_clone"
     VersionedTable.cloneShallow(root, cloneRoot)
     val (keepC, totalC) =
-      VersionedTable.pruneFilesPartition(cloneRoot, 0L, "k", 7L)
+      VersionedTable.pruneFiles(cloneRoot, 0L, col("k") === 7L)
     assert(keepC.size == 1 && totalC == 16)
-    assert(VersionedTable.readPartitionPruned(spark, cloneRoot, "k", 7L)
+    assert(VersionedTable.readPruned(spark, cloneRoot, col("k") === 7L)
       .count() == 1)
   }
 
@@ -1526,7 +1525,7 @@ class VersionedTableSpec extends SparkSpecBase {
       s"vacuum left: $dataDirs")
     // after compaction the tags are gone (rewrite changes layout) —
     // pruning degrades to stats-only, still correct
-    assert(VersionedTable.readPartitionPruned(spark, root, "k", 42L)
+    assert(VersionedTable.readPruned(spark, root, col("k") === 42L)
       .count() == 1)
   }
 
@@ -1578,27 +1577,27 @@ class VersionedTableSpec extends SparkSpecBase {
       .select(to_date(col("d")).as("d"), col("s"), col("x"))
     VersionedTable.commit(df, root, "overwrite",
       partitionBy = Some(PartitionTransform.Day("d")))
-    val (kD, tD) = VersionedTable.pruneFilesPartition(
-      root, 0L, "d", java.sql.Date.valueOf("2024-03-02"))
+    val (kD, tD) = VersionedTable.pruneFiles(root, 0L,
+      col("d") === java.sql.Date.valueOf("2024-03-02"))
     assert(tD == 3 && kD.size == 1, s"day prune: ${kD.size}/$tD")
-    assert(VersionedTable.readPartitionPruned(
-      spark, root, "d", java.sql.Date.valueOf("2024-03-02"))
+    assert(VersionedTable.readPruned(spark, root,
+      col("d") === java.sql.Date.valueOf("2024-03-02"))
       .count() == 2)
     // trunc over strings: prefix-1 buckets (a, b, g)
     val root2 = newRoot()
     VersionedTable.commit(df, root2, "overwrite",
       partitionBy = Some(PartitionTransform.Trunc(1, "s")))
-    val (kS, tS) = VersionedTable.pruneFilesPartition(root2, 0L, "s", "beta")
+    val (kS, tS) = VersionedTable.pruneFiles(root2, 0L, col("s") === "beta")
     assert(tS == 3 && kS.size == 1, s"trunc-str prune: ${kS.size}/$tS")
-    assert(VersionedTable.readPartitionPruned(spark, root2, "s", "beta")
+    assert(VersionedTable.readPruned(spark, root2, col("s") === "beta")
       .count() == 1)
     // trunc over ints: floored binning handles negatives (-7 -> -10)
     val root3 = newRoot()
     VersionedTable.commit(df, root3, "overwrite",
       partitionBy = Some(PartitionTransform.Trunc(10, "x")))
-    val (kX, tX) = VersionedTable.pruneFilesPartition(root3, 0L, "x", -7L)
+    val (kX, tX) = VersionedTable.pruneFiles(root3, 0L, col("x") === -7L)
     assert(tX == 4 && kX.size == 1, s"trunc-int prune: ${kX.size}/$tX")
-    assert(VersionedTable.readPartitionPruned(spark, root3, "x", -7L)
+    assert(VersionedTable.readPruned(spark, root3, col("x") === -7L)
       .count() == 1)
     // day() refuses a non-DATE column instead of zone-dependent layout
     val e = intercept[Exception] {
