@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,12 +13,17 @@ import org.apache.spark.storage.StorageLevel
   *
   *   label(v) := min(label(v), min over neighbors u of label(u))
   *
-  * repeated until a fixpoint. Each round is one shuffle (join on the
-  * edge endpoint + groupBy); rounds needed = graph diameter, which for
-  * dedup graphs is tiny (near-dup clusters are cliques-ish: a few
-  * hops). The driver-side loop checks convergence via `sum(label)` —
-  * labels only ever decrease, so an unchanged sum IS the fixpoint (no
-  * row-wise compare join needed).
+  * repeated until a fixpoint. The edge list is read ONCE (both
+  * orientations come from one explode), deduplicated and persisted;
+  * the first round folds into initialisation (one aggregation over the
+  * edges gives least(v, min neighbor)). Each later round is a join on
+  * the edge endpoint + groupBy, materialized by an eager
+  * `localCheckpoint`; rounds needed = graph diameter, which for dedup
+  * graphs is tiny (near-dup clusters are cliques-ish: a few hops).
+  * Convergence rides on the round's own job: an `Observation` of
+  * `sum(label)` on the checkpointed frame — labels only ever decrease,
+  * so an unchanged sum IS the fixpoint (no row-wise compare join, and
+  * no separate probe job per round).
   *
   * Scale notes: at 100 TB the same loop runs with the edge list
   * persisted (it is re-scanned every round) and converges in
@@ -26,8 +31,8 @@ import org.apache.spark.storage.StorageLevel
   * large-star/small-star variant (Kiveris et al., "Connected
   * Components in MapReduce") bounds rounds at O(log n) — dedup graphs
   * never need it, so the simple propagation is the right default.
-  * Labels stay distributed end-to-end; nothing collects to the driver
-  * but the one-number convergence check.
+  * Labels stay distributed end-to-end; nothing reaches the driver but
+  * the observed one-row label sums.
   */
 object GraphOps {
 
@@ -35,8 +40,10 @@ object GraphOps {
     * (columns `srcCol`, `dstCol`, treated as undirected; isolated
     * vertices don't appear). Output: (`id`, `component`) where
     * `component` is the smallest vertex id reachable from `id`.
+    * `edges` is evaluated once, however many rounds run.
     *
-    * @param maxIter safety bound on propagation rounds; the loop exits
+    * @param maxIter safety bound on propagation rounds (the folded
+    *                initial round counts as round 1); the loop exits
     *                early at the fixpoint. An unconverged exit (graph
     *                diameter > maxIter) throws rather than returning
     *                silently-partial components.
@@ -45,9 +52,14 @@ object GraphOps {
       maxIter: Int = 25): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     // Undirected: keep both directions so one join per round sees every
-    // neighbor. Persisted — re-scanned every round.
-    val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
+    // neighbor. One read of `edges` yields both orientations (a union of
+    // two projections would evaluate the caller's lineage twice).
+    // Persisted — re-scanned every round.
+    val sym = edges
+      .select(explode(array(
+        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
+        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -57,32 +69,44 @@ object GraphOps {
       // by round 20 planning dwarfs execution. Checkpointing cuts the
       // lineage so every round plans against a materialized leaf. (On
       // a real cluster with executor loss concerns, `checkpoint` to a
-      // reliable store instead; same shape.)
-      var labels = sym.select(col("src").as("id")).distinct()
-        .withColumn("component", col("id"))
+      // reliable store instead; same shape.) Each checkpoint's job also
+      // delivers the round's observed label sum.
+      //
+      // Round 1, folded into initialisation: a vertex's first label is
+      // least(itself, its smallest neighbor), one aggregation over
+      // `sym` (every vertex is a `src` there, since `sym` is symmetric).
+      val init = new Observation()
+      var labels = sym.groupBy(col("src")).agg(min(col("dst")).as("nmin"))
+        .select(col("src").as("id"),
+          least(col("src"), col("nmin")).as("component"))
+        .observe(init, sum(col("component")).as("s"),
+          sum(col("id")).as("ids"))
         .localCheckpoint(true)
       // Empty graph: sum() over zero rows is NULL — return the empty
-      // label frame instead of NPE-ing on the convergence probe (valid
-      // input: a corpus with zero near-dup pairs has no edges).
-      val sum0 = labels.agg(sum("component")).head()
-      if (sum0.isNullAt(0)) return labels
+      // label frame (valid input: a corpus with zero near-dup pairs
+      // has no edges).
+      val sums0 = init.get
+      if (sums0("s") == null) return labels
       // Labels are monotonically non-increasing, so the label sum is a
       // strictly decreasing convergence measure until the fixpoint.
-      var prevSum = sum0.getLong(0)
-      var iter = 0
-      var converged = false
+      // Round 1 moved no label iff its sum still equals the id sum.
+      var prevSum = sums0("s").asInstanceOf[Long]
+      var converged = prevSum == sums0("ids").asInstanceOf[Long]
+      var iter = 1
       while (!converged && iter < maxIter) {
         val neighborMin = sym
           .join(labels, sym("dst") === labels("id"))
           .groupBy(col("src"))
           .agg(min(col("component")).as("nmin"))
+        val round = new Observation()
         val next = labels
           .join(neighborMin, labels("id") === neighborMin("src"), "left")
           .select(col("id"),
             least(col("component"), coalesce(col("nmin"), col("component")))
               .as("component"))
+          .observe(round, sum(col("component")).as("s"))
           .localCheckpoint(true)
-        val s = next.agg(sum("component")).head().getLong(0)
+        val s = round.get("s").asInstanceOf[Long]
         // No explicit unpersist: a localCheckpoint's storage is the
         // checkpointed RDD's cached blocks, which Dataset.unpersist
         // does NOT free (it only drops CacheManager plan entries); the

@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions._
   * empirically), so every entry returns a non-degenerate result.
   *
   * Scale design: no unblocked O(n²) comparison anywhere. MinHash and
-  * SimHash both generate candidates through a bucket self-join (shuffle
-  * on a short key; bucket sizes stay tiny because signatures of
+  * SimHash both generate candidates inside a bucket pass (shuffle on a
+  * short key; bucket sizes stay tiny because signatures of
   * non-duplicates are uniform), and only candidates pay the exact
-  * verification cost. That is the shape that survives 100 TB.
+  * verification cost — the MinHash pipeline pays it where each
+  * candidate forms, so only verified pairs leave the bucket pass.
+  * That is the shape that survives 100 TB.
   *
   * The hash arithmetic is the oracle-parity family from [[TextOps]] so
   * the DuckDB differential check verifies signatures bit-for-bit; the
@@ -72,47 +74,37 @@ object Dedup {
           .as("sh"),
         TextOps.shingleHashes3(TextOps.tokens(col("text"))).as("hs"))
 
-  /** The MinHash+LSH near-dup pipeline's verified output: pairs
-    * (a, b, jaccard) with a < b and exact shingle Jaccard >= 0.7,
-    * returned WITH the persisted shingled corpus backing them so the
-    * caller controls the cache lifetime (q62 releases it once its
-    * clustering loop has materialized; q28's result IS the pairs, so
-    * its copy lives until the harness's per-query clearCache).
-    * Shared by q28 (the pair list) and q62 (clustering over it).
-    *
-    * Persist the shingled corpus: it feeds three plan branches
-    * (signature build + both sides of the verify join), and without
-    * materialization each branch re-derives shingles from raw text —
-    * worse, the size(sh)>0 predicate pushes down and inlines the whole
-    * shingle expression into every scan's filter, whose generated code
-    * is too large for the JIT and runs interpreted (benched minutes
-    * instead of seconds). The multi-pass-over-derived-corpus cache is
-    * the standard LSH shape at 100 TB too (MEMORY_AND_DISK spills). */
   /** Set-expansion bucket cap: buckets up to this size pair up via
-    * per-bucket collect_set + array expansion (≤ cap² structs per row);
-    * BIGGER buckets — degenerate band signatures on boilerplate or
-    * near-identical corpora — would materialize an unbounded array and
-    * its n² expansion in ONE row, so they fall back to the streamed
-    * bucket self-join, which produces the same C(n, 2) pairs without
-    * per-row buffering. Oversized buckets are by nature RARE (each is
-    * a dup-cluster pathology), so their id list broadcasts. */
+    * per-bucket collect_list + array expansion (≤ cap² structs per
+    * row); BIGGER buckets — degenerate band signatures on boilerplate
+    * or near-identical corpora — would materialize an unbounded array
+    * and its n² expansion in ONE row, so they fall back to the
+    * streamed bucket self-join, which produces the same C(n, 2)
+    * candidates without per-row buffering. Oversized buckets are by
+    * nature RARE (each is a dup-cluster pathology), so their bucket
+    * keys broadcast. */
   private[queries] val MaxSetBucket = 512
 
-  /** The railed candidate-pair build shared by the LSH entries:
-    * exact distinct a<b pairs per bucket, set-expansion for buckets
-    * ≤ [[MaxSetBucket]], streamed self-join for the rest. Factored
-    * out so DedupRailSpec can drive it over a synthetic skewed-bucket
-    * corpus. */
+  /** The railed, verified pair build shared by the LSH entries: input
+    * rows (bucket, doc_id, sh) with `sh` the doc's SORTED shingle set;
+    * output the distinct (a, b, jaccard) rows with a < b sharing a
+    * bucket and exact shingle Jaccard >= 0.7. Each candidate is
+    * verified where it forms — set-expansion for buckets ≤
+    * [[MaxSetBucket]], streamed self-join for the rest — so only
+    * VERIFIED pairs ever leave the bucket pass (the shape of Spark
+    * ML's `MinHashLSH.approxSimilarityJoin`, which carries the rows
+    * through its bucket join). Factored out so DedupRailSpec can
+    * drive it over a synthetic skewed-bucket corpus. */
   private[queries] def bucketPairs(bucketed: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     // ONE bucket shuffle feeds everything (guide §2.4): the census,
     // the small-bucket collect, and the big-bucket self-join all need
     // bucket-clustered rows, so hash-repartition once, cache it, and
     // every consumer below aggregates/joins exchange-free (the cache
-    // reports its hash partitioning). Shuffle bytes are identical to
-    // the r14 groupBy's — LSH bands carry no map-side duplicates for
-    // a partial collect to combine. Cache released by the harness's
-    // per-query clearCache (Dedup's documented lifetime contract).
+    // reports its hash partitioning). LSH bands carry no map-side
+    // duplicates for a partial collect to combine. Cache released by
+    // the harness's per-query clearCache (Dedup's documented lifetime
+    // contract).
     val nP = math.max(
       bucketed.sparkSession.sparkContext.defaultParallelism, 1)
     val ex = bucketed.repartition(nP, col("bucket"))
@@ -128,63 +120,75 @@ object Dedup {
       .filter(col("n") > MaxSetBucket)
       .select(col("bucket"))
     val anyBig = big.limit(1).collect().nonEmpty
-    // Small buckets: collect each bucket's set, then a PIPELINED
-    // two-level explode — per-row state is the O(bucket) array, never
-    // the O(bucket²) struct array a transform×transform expansion
-    // would materialize before its own explode.
+    def verified(a: org.apache.spark.sql.Column,
+        b: org.apache.spark.sql.Column,
+        sha: org.apache.spark.sql.Column, shb: org.apache.spark.sql.Column) =
+      (df: org.apache.spark.sql.DataFrame) => df
+        .filter(a < b)
+        .select(a.as("a"), b.as("b"),
+          TextOps.jaccardSorted(sha, shb).as("jaccard"))
+        .filter(col("jaccard") >= 0.7)
+    // Small buckets: collect each bucket's (doc_id, sh) rows, then a
+    // PIPELINED two-level explode — per-row state is the O(bucket)
+    // array, never the O(bucket²) struct array a transform×transform
+    // expansion would materialize before its own explode.
     val smallIn =
       if (!anyBig) ex
       else ex.join(broadcast(big), Seq("bucket"), "left_anti")
     val smallPairs = smallIn
       .groupBy(col("bucket"))
-      .agg(collect_set(col("doc_id")).as("ds"))
-      .select(col("ds"), explode(col("ds")).as("a"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
+      .agg(collect_list(struct(col("doc_id"), col("sh"))).as("ds"))
+      .select(col("ds"), explode(col("ds")).as("x"))
+      .select(col("x"), explode(col("ds")).as("y"))
+      .transform(verified(col("x.doc_id"), col("y.doc_id"),
+        col("x.sh"), col("y.sh")))
     if (!anyBig) return smallPairs.distinct()
     // Oversized buckets: the streamed co-partitioned self-join — the
-    // same C(n, 2) pairs with spillable per-group buffers instead of
-    // one unbounded collect_set array.
+    // same C(n, 2) candidates with spillable per-group buffers instead
+    // of one unbounded collect_list array, verified in the join stage.
     val inBig = ex.join(broadcast(big), Seq("bucket"))
-    val bigPairs = inBig.select(col("bucket"), col("doc_id").as("a"))
-      .join(inBig.select(col("bucket"), col("doc_id").as("b")),
-        Seq("bucket"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
+    val bigPairs = inBig.select(col("bucket"), col("doc_id").as("da"),
+        col("sh").as("sha"))
+      .join(inBig.select(col("bucket"), col("doc_id").as("db"),
+        col("sh").as("shb")), Seq("bucket"))
+      .transform(verified(col("da"), col("db"), col("sha"), col("shb")))
     smallPairs.union(bigPairs).distinct()
   }
 
+  /** The MinHash+LSH near-dup pipeline's verified output: pairs
+    * (a, b, jaccard) with a < b and exact shingle Jaccard >= 0.7,
+    * returned WITH the persisted shingled corpus backing them so the
+    * caller controls the cache lifetime (q62 releases it once its
+    * clustering loop has materialized; q28's result IS the pairs, so
+    * its copy lives until the harness's per-query clearCache).
+    * Shared by q28 (the pair list), q62 (clustering over it) and q203
+    * (which verifies its open wedges against the same corpus).
+    *
+    * Persist the shingled corpus: without materialization every
+    * consumer re-derives shingles from raw text — worse, the
+    * size(sh)>0 predicate pushes down and inlines the whole shingle
+    * expression into every scan's filter, whose generated code is too
+    * large for the JIT and runs interpreted (benched minutes instead
+    * of seconds). The multi-pass-over-derived-corpus cache is the
+    * standard LSH shape at 100 TB too (MEMORY_AND_DISK spills). */
   private def lshVerifiedPairs(s: org.apache.spark.sql.SparkSession,
       d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // The cached corpus carries the exploded-band input too: the rail
-    // reads the (doc_id, bucket) rows three times (bucket census +
-    // both size classes), and caching the BANDS array alongside sh/hs
-    // means the 12-hash minhash signature computes once at
-    // materialization, not once per consumer.
+    // The cached corpus carries the BANDS array alongside sh/hs, so the
+    // 12-hash minhash signature computes once at materialization.
     val base = hashed(s, d)
       .withColumn("bands",
         TextOps.lshBands(TextOps.minhashSig(col("hs"), 12), 4, 3))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r14 rewrite (q114/q77/q118/q211 shape): per-bucket doc SET +
-    // narrow a<b expansion instead of the band self-join — one
-    // map-side-combined groupBy(bucket) where the join paid two
-    // bucket shuffles and a build/probe. Pair fanout per bucket is
-    // C(bucket size, 2) either way; the distinct dedups across bands
-    // exactly as before. r15 adds the MaxSetBucket rail (this round's
-    // ADVICE): skewed buckets stream through the join form instead of
-    // buffering n² in one row.
-    val cand = bucketPairs(
-      base.select(col("doc_id"), explode(col("bands")).as("bucket")))
-    // The candidate set is tiny relative to the corpus: broadcast it
-    // so the verify step streams `base` without shuffling it.
-    val pairs = broadcast(cand)
-      .join(base.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
-      .join(base.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
-      .select(col("a"), col("b"),
-        TextOps.jaccardSorted(col("sha"), col("shb")).as("jaccard"))
-      .filter(col("jaccard") >= 0.7)
+    // r14 rewrite (q114/q77/q118/q211 shape): per-bucket doc list +
+    // narrow a<b expansion instead of the band self-join. Pair fanout
+    // per bucket is C(bucket size, 2) either way; each candidate
+    // carries both shingle sets and verifies in the bucket pass, and
+    // the final distinct dedups VERIFIED pairs across bands. r15 adds
+    // the MaxSetBucket rail: skewed buckets stream through the join
+    // form instead of buffering n² in one row.
+    val pairs = bucketPairs(base.select(explode(col("bands")).as("bucket"),
+      col("doc_id"), col("sh")))
     (pairs, base)
   }
 
@@ -286,7 +290,8 @@ object Dedup {
 
     // Dedup clustering: the LSH-verified pair list closed into
     // components (graft.ops.GraphOps.connectedComponents — iterative
-    // min-label propagation, one shuffle per round, rounds = cluster
+    // min-label propagation over one read of the pair list, one
+    // checkpointed join + groupBy per round, rounds = cluster
     // diameter). This is the step that turns pairwise verdicts into
     // actionable dedup groups: keep min(doc_id) per cluster, drop the
     // rest. The oracle computes the same components with a DuckDB
@@ -298,10 +303,10 @@ object Dedup {
       (s, d) => {
         val (pairs, base) = lshVerifiedPairs(s, d)
         val cc = graft.ops.GraphOps.connectedComponents(pairs, "a", "b")
-        // The CC loop is eager (per-round localCheckpoints) and its
-        // result no longer references the pair lineage — release the
-        // shingled-corpus cache now instead of holding it for the
-        // whole session.
+        // The CC loop is eager (per-round localCheckpoints over its
+        // own persisted copy of the pairs) and its result no longer
+        // references the pair lineage — release the shingled-corpus
+        // cache now instead of holding it for the whole session.
         base.unpersist()
         val sizes = cc.groupBy(col("component"))
           .agg(count(lit(1)).as("cluster_size"))
@@ -1068,8 +1073,8 @@ object Dedup {
     // or the clustering policy needs tightening BEFORE a 100 TB dedup
     // run deletes the wrong documents. Shape: the pair list is tiny
     // (bounded by real near-dups), so wedge formation is a self-join
-    // of a broadcast-scale table; third-edge verification streams
-    // `base` exactly like the q28 verify step.
+    // of a broadcast-scale table; third-edge verification joins the
+    // open wedges to `base`, the corpus the pair build cached.
     QueryDef(
       "q203_transitivity_audit",
       (s, d) => {

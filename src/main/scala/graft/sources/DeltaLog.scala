@@ -2015,7 +2015,7 @@ object DeltaLog {
     * version (or the current one unchanged when nothing matches). */
   def deleteWhere(spark: SparkSession, root: String,
       cond0: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     val snap0 = snapshot(spark, root)
     gateWriterObligations(snap0, "DELETE", removesData = true)
     // COLUMN-MAPPED tables rewrite in PHYSICAL space: the predicate's
@@ -2035,9 +2035,10 @@ object DeltaLog {
     val idx = new DeltaLogFileIndex(spark, root, snap, pinned = true)
     val touchedAdds = addsAt(idx, snap, touchedUris.toSeq)
     // survivors keep their partition columns: stageAndLand routes
-    // them back into `col=value/` dirs and re-records partitionValues
-    val touchedRows = vis
-      .filter(col(DeltaLogRead.FpCol).isin(touchedUris.toSeq: _*))
+    // them back into `col=value/` dirs and re-records partitionValues.
+    // The rewrite, CDF and DV frames scan only the touched files.
+    val touchedRows =
+      DeltaLogRead.withPositions(spark, snap.copy(adds = touchedAdds))
     val keep = touchedRows
       .filter(not(coalesce(cond, lit(false))))
       .drop(DeltaLogRead.FpCol, DeltaLogRead.PosCol)
@@ -2069,7 +2070,7 @@ object DeltaLog {
         .contains("true") &&
       snap0.minWriterVersion >= 7 &&
       snap0.writerFeatures.contains("deletionVectors")) {
-      val matched = vis.filter(coalesce(cond, lit(false)))
+      val matched = touchedRows.filter(coalesce(cond, lit(false)))
         .select(DeltaLogRead.FpCol, DeltaLogRead.PosCol)
       dvRemoveRows(spark, root, snap, matched,
         touchedAdds.toSeq, idx, cdcAdds) match {
@@ -2929,8 +2930,9 @@ object DeltaLog {
     if (touchedUris.isEmpty) return snap.version
     val idx = new DeltaLogFileIndex(spark, root, snap, pinned = true)
     val touchedAdds = addsAt(idx, snap, touchedUris.toSeq)
-    val touchedRows = vis
-      .filter(col(DeltaLogRead.FpCol).isin(touchedUris.toSeq: _*))
+    // the rewrite, CDF and DV frames scan only the touched files
+    val touchedRows =
+      DeltaLogRead.withPositions(spark, snap.copy(adds = touchedAdds))
     val setByCol = set.map { case (n, e) =>
       mapping.getOrElse(n, n) -> e }.toMap // physical keys
     // generatedColumns obligation: a generated column NOT explicitly
@@ -3018,7 +3020,7 @@ object DeltaLog {
         .contains("true") &&
       snap0.minWriterVersion >= 7 &&
       snap0.writerFeatures.contains("deletionVectors")) {
-      val matched = vis.filter(hit)
+      val matched = touchedRows.filter(hit)
         .select(DeltaLogRead.FpCol, DeltaLogRead.PosCol)
       dvRemoveRows(spark, root, snap, matched, touchedAdds.toSeq, idx,
         cdcAdds, operation = "UPDATE",

@@ -65,6 +65,42 @@ class GraphOpsSpec extends SparkSpecBase with TableDrivenPropertyChecks {
     assert(run(Seq.empty[(Long, Long)]) === Map.empty)
   }
 
+  test("edge frame's lineage is evaluated once, whatever the rounds") {
+    val acc = spark.sparkContext.longAccumulator("cc-edge-rows")
+    val seen = org.apache.spark.sql.functions.udf { (x: Long) =>
+      acc.add(1); x
+    }.asNondeterministic()
+    // a 4-hop path and a triangle: several rounds re-scan the edges
+    val raw = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (7L, 8L), (8L, 9L), (9L, 7L))
+    val edges = raw.toDF("s", "d")
+      .select(seen($"s").as("s"), $"d")
+    val got = GraphOps.connectedComponents(edges, "s", "d")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === ufComponents(raw))
+    assert(acc.value === raw.size.toLong)
+  }
+
+  test("path of length L: one component labelled with its min id") {
+    val rnd = new scala.util.Random(11)
+    forAll(Table("L", 1, 2, 3, 5, 8)) { (len: Int) =>
+      // ids permuted, so the minimum can sit anywhere on the path
+      val ids = rnd.shuffle((0 to len).map(i => 100L + 7 * i))
+      val edges = ids.zip(ids.tail)
+      val got = run(edges, maxIter = len + 1)
+      assert(got.keySet === ids.toSet)
+      assert(got.values.toSet === Set(ids.min))
+    }
+    // minimum at one end: len rounds move labels, one more sees the
+    // fixpoint — the bound is exact
+    val end = (0L until 6L).map(i => (i, i + 1))
+    assert(run(end, maxIter = 7).values.toSet === Set(0L))
+    intercept[IllegalStateException] { run(end, maxIter = 6) }
+    // an edge-free frame that still has partitions stays empty too
+    assert(GraphOps.connectedComponents(
+      end.toDF("src", "dst").filter($"src" < 0), "src", "dst").isEmpty)
+  }
+
   /** Brute-force per-node triangle counts over an undirected simple
     * edge set, for differential comparison. */
   private def bruteTriangles(edges: Seq[(Long, Long)]): Map[Long, Long] = {

@@ -58,6 +58,44 @@ class DeltaLogSpec extends SparkSpecBase {
     assert(listed(col("k") < 1000) === ((1, 2)))
   }
 
+  test("DELETE and UPDATE rewrites read only the touched files") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val root = tmp()
+    // 8 files of 2,000 contiguous keys each
+    DeltaLog.commit(spark.range(0, 16000, 1, 8).toDF("k")
+      .withColumn("v", col("k") * 2), root)
+    assert(DeltaLog.snapshot(spark, root).adds.size === 8)
+    // input records summed over every task `op` runs
+    def recordsRead(op: => Long): Long = {
+      val n = new java.util.concurrent.atomic.AtomicLong
+      val l = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null)
+            n.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      }
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      try { op; org.apache.spark.ListenerDrain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(l)
+      n.get
+    }
+    // one file's keys each: the targeting scan and the rewrite read
+    // that file, never the whole table
+    val del = recordsRead(
+      DeltaLog.deleteWhere(spark, root, col("k") >= 100 && col("k") < 120))
+    assert(del > 0 && del < 16000, s"DELETE read $del records")
+    val parse = spark.sessionState.sqlParser.parseExpression _
+    val upd = recordsRead(DeltaLog.updateWhere(spark, root,
+      Seq("v" -> parse("-1")), Some(parse("k >= 6000 AND k < 6010"))))
+    assert(upd > 0 && upd < 15980, s"UPDATE read $upd records")
+    val out = spark.read.format("delta-log").load(root)
+    assert(out.count() === 15980)
+    assert(out.filter(col("k") >= 100 && col("k") < 120).count() === 0)
+    assert(out.filter(col("v") === -1).count() === 10)
+    assert(out.filter(col("v") =!= -1 && col("v") =!= col("k") * 2)
+      .count() === 0)
+  }
+
   test("partitioned table: partition values from the log, exact pruning") {
     val root = tmp()
     val df = spark.range(0, 40).toDF("k")
