@@ -658,17 +658,19 @@ object DeltaLog {
     walk("", schema).toMap
   }
 
-  /** Render footer stats as the spec's per-file `stats` JSON.
+  /** Render a file's footer row count and stats as the spec's
+    * per-file `stats` JSON (a file with no usable column stats still
+    * records `numRecords`, which every replayer needs: DV density
+    * bounds, row-id block sizing).
     * Temporal columns follow the spec's STRING stat forms: DATE
     * min/max serialize as `"yyyy-MM-dd"` (footer stats carry raw
     * epoch days); TIMESTAMP/TIMESTAMP_NTZ min/max are OMITTED
     * (emitting the raw micros a foreign reader would parse as a
     * timestamp string mis-prunes — absent stats just disable
     * skipping), with nullCount kept (type-agnostic). */
-  private def statsJsonOf(stats: Map[String, VersionedTable.ColStats],
-      types: Map[String, DataType]): Option[String] = {
-    if (stats.isEmpty) return None
-    val rows = stats.values.map(_.rows).max
+  private def statsJsonOf(rows: Long,
+      stats: Map[String, VersionedTable.ColStats],
+      types: Map[String, DataType]): String = {
     def jsonVal(c: String, typ: String, v: String): Option[String] =
       types.get(c) match {
         case Some(DateType) =>
@@ -694,9 +696,9 @@ object DeltaLog {
     // a written 0 would claim "no nulls" to every reader's pruner
     val nulls = cols.filter(_._2.nulls >= 0)
       .map { case (c, cs) => s"${jsonStr(c)}:${cs.nulls}" }
-    Some(s"""{"numRecords":$rows,"minValues":{${mins.mkString(",")}},""" +
+    s"""{"numRecords":$rows,"minValues":{${mins.mkString(",")}},""" +
       s""""maxValues":{${maxs.mkString(",")}},""" +
-      s""""nullCount":{${nulls.mkString(",")}}}""")
+      s""""nullCount":{${nulls.mkString(",")}}}"""
   }
 
   private def encodePath(p: String): String =
@@ -704,17 +706,6 @@ object DeltaLog {
       java.net.URLEncoder.encode(seg, "UTF-8").replace("+", "%20"))
       .mkString("/")
 
-  /** Stage `df` as parquet (Hive-style `col=value/` dirs when
-    * `partitionBy` is set — the partition columns land in the DIRS,
-    * not the files, per the spec's layout), then relocate every leaf
-    * under the table root with globally unique names, decoding each
-    * leaf's directory chain back into `partitionValues` (Spark's own
-    * path escaping, `__HIVE_DEFAULT_PARTITION__` → null). Shared by
-    * [[commit]] and the copy-on-write rewrite ([[replaceFiles]]). */
-  /** TOP-LEVEL collated string columns of `schema` — the stats
-    * harvest must see the TABLE's collated types (the staged frame
-    * carries plain strings), so [[statsJsonOf]] omits their
-    * binary-ordered min/max. */
   /** Dotted paths of every collated string column, NESTED members
     * included — the stats-serialization overrides keying into
     * [[dottedTypes]]'s namespace, so a plain-string staged frame
@@ -733,71 +724,31 @@ object DeltaLog {
     walk("", schema).toMap
   }
 
+  /** Stage `df` as parquet (Hive-style `col=value/` dirs when
+    * `partitionBy` is set — the partition columns land in the DIRS,
+    * not the files, per the spec's layout) and land it through
+    * [[StagedFiles.land]]: non-empty leaves keep their partition dirs
+    * under `dir` with globally unique names, and each add records
+    * the decoded `partitionValues` (`__HIVE_DEFAULT_PARTITION__` →
+    * null) and the footer's row count as `numRecords`. Shared by
+    * [[commit]], the copy-on-write rewrite ([[replaceFiles]]) and the
+    * CDF writers (`dir = "_change_data"`). */
   private def stageAndLand(spark: SparkSession, df: DataFrame,
-      root: String, partitionBy: Seq[String], nonce: String,
-      prefix: String = "",
+      root: String, partitionBy: Seq[String], dir: String = "",
       // table-side type overrides for the stats serialization (a
       // collated table's staged frames carry PLAIN strings)
-      typeOverrides: Map[String, DataType] = Map.empty): Seq[DeltaAdd] = {
-    // subdir: createTempDirectory pre-creates the parent, and Spark's
-    // errorifexists mode refuses an existing target path
-    val staging = Files.createTempDirectory("delta_stage_").resolve("out")
-    val writer = df.write.mode("errorifexists")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(staging.toString)
-    val stream = Files.walk(staging)
-    val leaves =
-      try stream.iterator().asScala.toSeq.filter(p =>
-        Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet") &&
-          !p.getFileName.toString.startsWith("."))
-      finally stream.close()
-    // ZERO-ROW leaves drop before landing: Spark's writer emits one
-    // empty part file per empty task, and committing them bloats the
-    // log with adds no reader can use (and no row-id block can size)
-    leaves.sortBy(_.toString)
-      .map(p => p -> parquetRowCount(spark, p))
-      .filter(_._2 > 0L)
-      .zipWithIndex.map { case ((p, rowCount), i) =>
-      val relDir = staging.relativize(p).getParent // partition dirs or null
-      val pvPairs = Option(relDir).toSeq.flatMap(_.iterator().asScala)
-        .map(_.toString).filter(_.contains("="))
-        .map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(v)
-        }
-      val nullCols = pvPairs.collect {
-        case (k, v) if v == "__HIVE_DEFAULT_PARTITION__" => k }.toSet
-      val pv = pvPairs.filterNot(kv => nullCols(kv._1)).toMap
-      val name = f"part-$i%05d-$nonce.parquet" // deterministic unique name
-      val rel = prefix +
-        Option(relDir).map(_.toString + "/").getOrElse("") + name
-      val dst = Paths.get(root, rel)
-      Files.createDirectories(dst.getParent)
-      Files.move(p, dst)
-      val st = VersionedTable.footerStats(spark, dst)
-      // a file whose columns all lack usable footer stats (e.g. pure
-      // binary payloads) still records numRecords — the stat every
-      // replayer needs (DV density bounds, row-id block sizing)
-      DeltaAdd(rel, pv, nullCols, Files.size(dst),
-        statsJsonOf(st, dottedTypes(df.schema) ++ typeOverrides)
-          .orElse(Some(
-            s"""{"numRecords":$rowCount,"minValues":{},""" +
-              """"maxValues":{},"nullCount":{}}""")))
+      typeOverrides: Map[String, DataType] = Map.empty): Seq[DeltaAdd] =
+    StagedFiles.land(spark, root, dir, "part",
+        keepPartitionDirs = true) { staging =>
+      val writer = df.write.mode("errorifexists")
+      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
+       else writer).parquet(staging.toString)
+    }.map { f =>
+      DeltaAdd(f.rel, f.partition.collect { case (k, Some(v)) => k -> v }.toMap,
+        f.partition.collect { case (k, None) => k }.toSet, f.bytes,
+        Some(statsJsonOf(f.rows, f.stats,
+          dottedTypes(df.schema) ++ typeOverrides)))
     }
-  }
-
-  /** Exact row count from a parquet footer (block record counts). */
-  private def parquetRowCount(spark: SparkSession, file: Path): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri),
-      spark.sparkContext.hadoopConfiguration))
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
 
   /** One spec-shaped `add` JSON line. */
   private def addLine(a: DeltaAdd, dataChange: Boolean = true): String = {
@@ -1929,8 +1880,7 @@ object DeltaLog {
     // data files: stage, then relocate under the table root with
     // globally unique names (the spec requires uniqueness, not layout;
     // Hive-style dirs keep the table browsable)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val adds = stageAndLand(spark, stagedDf, root, stagedPartitionBy, nonce,
+    val adds = stageAndLand(spark, stagedDf, root, stagedPartitionBy,
       typeOverrides = collatedTypesOf(recordSchema))
     val next = latest + 1
     val lines = scala.collection.mutable.ListBuffer.empty[String]
@@ -2055,8 +2005,7 @@ object DeltaLog {
           .drop(DeltaLogRead.FpCol, DeltaLogRead.PosCol)
           .withColumn("_change_type", lit("delete"))
         stageAndLand(spark, deleted, root, snap.partitionColumns,
-          java.util.UUID.randomUUID().toString.take(8),
-          prefix = "_change_data/")
+          dir = "_change_data")
       }
     // DELETION-VECTOR path: when the table opted in
     // (delta.enableDeletionVectors) and its protocol carries the
@@ -2208,7 +2157,6 @@ object DeltaLog {
     // one zero-row part, which must not land in the log)
     val extraAdds = extraRows.toSeq.filterNot(_.isEmpty).flatMap(df =>
       stageAndLand(spark, df, root, snap.partitionColumns,
-        java.util.UUID.randomUUID().toString.take(8),
         typeOverrides = collatedTypesOf(snap.schema)))
     if (rows.isEmpty && extraAdds.isEmpty)
       return Some(snap.version) // nothing fired: no empty commit
@@ -2301,8 +2249,7 @@ object DeltaLog {
         a.deletionVector.isDefined && !removedPaths.contains(a.path)),
       operation)
     val latest = latestVersion(root)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val adds = stageAndLand(spark, df, root, partitionBy, nonce,
+    val adds = stageAndLand(spark, df, root, partitionBy,
       typeOverrides = collatedTypesOf(base.schema))
     val next = latest + 1
     val lines = scala.collection.mutable.ListBuffer.empty[String]
@@ -2469,7 +2416,7 @@ object DeltaLog {
           snap.partitionColumns.map(col): _*) // one task (→ file) per partition
     }
     val adds = stageAndLand(spark, packed, root, snap.partitionColumns,
-      nonce, typeOverrides = collatedTypesOf(snap.schema))
+      typeOverrides = collatedTypesOf(snap.schema))
     val next = snap.version + 1
     val lines = scala.collection.mutable.ListBuffer.empty[String]
     lines += commitInfoLine(root, "OPTIMIZE", snap0.configuration,
@@ -3007,8 +2954,7 @@ object DeltaLog {
         val post = applied(matched)
           .withColumn("_change_type", lit("update_postimage"))
         stageAndLand(spark, pre.union(post), root, snap.partitionColumns,
-          java.util.UUID.randomUUID().toString.take(8),
-          prefix = "_change_data/")
+          dir = "_change_data")
       }
     // DELETION-VECTOR path (delta-spark's UPDATE-with-DVs shape):
     // when the table opted in and the update touches a SMALL fraction
@@ -3272,9 +3218,7 @@ object DeltaLog {
         .union(post(tagged.filter(col("__ct") === "insert"))
           .withColumn("_change_type", lit("insert")))
       val cdcAdds = stageAndLand(spark, toPhysical(changeRows), root,
-        snap.partitionColumns,
-        java.util.UUID.randomUUID().toString.take(8),
-        prefix = "_change_data/")
+        snap.partitionColumns, dir = "_change_data")
       replaceFiles(spark, root, snap, touchedAdds.map(_.path).toSeq,
         toPhysical(out), snap.partitionColumns, cdcAdds,
         operation = "MERGE", metaRestate = metaRestateM)

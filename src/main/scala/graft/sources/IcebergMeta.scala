@@ -1565,23 +1565,23 @@ object IcebergMeta {
     r
   }
 
-  /** One ADDED manifest entry for a parquet data file at absolute
-    * `abs`, recorded as table-relative `rel`, with footer stats
-    * re-encoded through the spec's single-value serialization under
-    * the TABLE's field ids. */
-  private def dataFileEntry(spark: SparkSession, abs: Path, rel: String,
+  /** One ADDED manifest entry for data file `file` (landed by
+    * [[StagedFiles.land]] or described in place), recorded under its
+    * `rel` path with `record_count` = the footer's row count and the
+    * footer stats re-encoded through the spec's single-value
+    * serialization under the TABLE's field ids. */
+  private def dataFileEntry(file: StagedFiles.DataFile,
       schema: StructType, idByName: Map[String, Int],
       content: Int = 0, equalityIds: Seq[Int] = Nil,
       entrySchema: Schema = manifestSchema,
       partitionTuple: Seq[(String, Any)] = Nil): GenericRecord = {
-    val stats = VersionedTable.footerStats(spark, abs)
     val rec = new GenericData.Record(entrySchema)
     rec.put("status", 1) // added
     rec.put("snapshot_id", null)
     val dfSchema = entrySchema.getField("data_file").schema()
     val dfr = new GenericData.Record(dfSchema)
     dfr.put("content", content)
-    dfr.put("file_path", rel)
+    dfr.put("file_path", file.rel)
     dfr.put("file_format", "PARQUET")
     if (partitionTuple.nonEmpty) {
       val pr = new GenericData.Record(
@@ -1589,15 +1589,14 @@ object IcebergMeta {
       partitionTuple.foreach { case (n, v) => pr.put(n, v) }
       dfr.put("partition", pr)
     }
-    dfr.put("record_count",
-      java.lang.Long.valueOf(stats.values.map(_.rows).maxOption.getOrElse(0L)))
-    dfr.put("file_size_in_bytes", java.lang.Long.valueOf(Files.size(abs)))
+    dfr.put("record_count", java.lang.Long.valueOf(file.rows))
+    dfr.put("file_size_in_bytes", java.lang.Long.valueOf(file.bytes))
     val lower = new java.util.HashMap[String, ByteBuffer]()
     val upper = new java.util.HashMap[String, ByteBuffer]()
     val nulls = new java.util.HashMap[String, java.lang.Long]()
     schema.fields.foreach { f =>
       idByName.get(f.name).map(_.toString).foreach { id =>
-        stats.get(f.name).foreach { cs =>
+        file.stats.get(f.name).foreach { cs =>
           // re-encode the footer stats through the SPEC's binary form
           def statVal(s: String): Any = f.dataType match {
             case IntegerType => s.toInt
@@ -1663,8 +1662,8 @@ object IcebergMeta {
     // spec's parquet encoding, and the only one Spark's parquet
     // writer can produce (its native geo types have no parquet writer
     // leg in 4.1). The read side lifts them back above the scan
-    // ([[IcebergMetaRead]]), so every rewrite path (append, COW
-    // delete/update, compaction) round-trips through this one seam.
+    // ([[IcebergMetaRead]]); every Iceberg write stages through this
+    // function and lands through [[StagedFiles.land]].
     val staged = df.schema.fields
       .filter(f => isGeoType(f.dataType)).foldLeft(df)((cur, f) =>
         cur.withColumn(f.name, org.apache.spark.sql.functions
@@ -1783,33 +1782,10 @@ object IcebergMeta {
     }
     val eSchema = manifestSchemaFor(specFields.map(f =>
       (f.name, f.fieldId, f.transform.resultType(typeOf(f.srcCol)))))
-    val dataDir = Paths.get(root, "data")
-    val entries: Seq[GenericRecord] =
-      if (partitionBy.isEmpty) {
-        stageParquet(df, dataDir.toString)
-        PosixDataStore.listDir(dataDir)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).sorted
-          .map(n => dataFileEntry(spark, dataDir.resolve(n), s"data/$n",
-            df.schema, fieldId))
-      } else {
-        val staging = Files.createTempDirectory("ice_fix_").resolve("out")
-        val nonce = java.util.UUID.randomUUID().toString.take(8)
-        Files.createDirectories(dataDir)
-        stagePartitioned(df, specFields.map(f => f.name ->
-            f.transform(org.apache.spark.sql.functions.col(
-              s"`${f.srcCol}`"), typeOf(f.srcCol))), staging)
-          .zipWithIndex.map {
-          case ((src, tuple), i) =>
-            val byName = tuple.toMap
-            val name = f"part-$i%05d-$nonce.parquet"
-            Files.move(src, dataDir.resolve(name))
-            dataFileEntry(spark, dataDir.resolve(name), s"data/$name",
-              df.schema, fieldId, entrySchema = eSchema,
-              partitionTuple = specFields.map(f => f.name -> partValue(
-                f.transform.resultType(typeOf(f.srcCol)),
-                byName(f.name))))
-        }
-      }
+    val entries = landData(df, root, specFields, typeOf, "part").map {
+      case (file, tuple) => dataFileEntry(file, df.schema, fieldId,
+        entrySchema = eSchema, partitionTuple = tuple)
+    }
     val snapId = math.abs(root.hashCode.toLong * 2654435761L) + 1
     val manifestRel = s"metadata/snap-$snapId-m0.avro"
     writeAvro(Paths.get(root, manifestRel), eSchema, entries)
@@ -1915,7 +1891,8 @@ object IcebergMeta {
     val entries = snap.adds.sortBy(_.path).map { a =>
       val p = Paths.get(a.path)
       val abs = (if (p.isAbsolute) p else srcRoot.resolve(p)).normalize
-      dataFileEntry(spark, abs, abs.toString, schema, fieldId)
+      dataFileEntry(StagedFiles.describe(spark, abs, abs.toString),
+        schema, fieldId)
     }
     publishSingleSnapshotTable(dst, schema, entries)
   }
@@ -2253,11 +2230,13 @@ object IcebergMeta {
       if (mapping.isEmpty) {
         val (_, _, topIds) = fixtureFieldsJson(schema)
         val entries = files.map { case (abs, rel) =>
-          dataFileEntry(spark, abs, rel, schema, topIds) }
+          dataFileEntry(StagedFiles.describe(spark, abs, rel),
+            schema, topIds) }
         Some(publishSingleSnapshotTable(root, schema, entries))
       } else {
         val entries = files.map { case (abs, rel) =>
-          dataFileEntry(spark, abs, rel, statsSchema, statsIds) }
+          dataFileEntry(StagedFiles.describe(spark, abs, rel),
+            statsSchema, statsIds) }
         Some(publishSingleSnapshotTable(root, schema, entries,
           fieldsOverride = Some(mappedFieldsJson(schema, mapping)),
           properties = Map(
@@ -2383,9 +2362,9 @@ object IcebergMeta {
         }
         if (added.nonEmpty) {
           val entries = added.map { case (abs, rel) =>
-            if (mapping.isEmpty)
-              dataFileEntry(spark, abs, rel, schema, idByName)
-            else dataFileEntry(spark, abs, rel, statsSchema, statsIds) }
+            val file = StagedFiles.describe(spark, abs, rel)
+            if (mapping.isEmpty) dataFileEntry(file, schema, idByName)
+            else dataFileEntry(file, statsSchema, statsIds) }
           val addedRows = entries.map(e => asLong(e.get("data_file")
             .asInstanceOf[GenericRecord].get("record_count"))).sum
           val rel = s"metadata/snap-$snapId-m$mi.avro"
@@ -2451,36 +2430,15 @@ object IcebergMeta {
     val specId = if (meta.hasNonNull("default-spec-id"))
       meta.get("default-spec-id").asInt() else 0
 
-    // data files: stage (per partition tuple when the spec has one),
-    // then land under data/ with unique names
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val staging = Files.createTempDirectory("ice_stage_").resolve("out")
+    // data files: staged per partition tuple when the spec has one,
+    // landed under data/ with unique names
     val ordered = df.select(schema.fieldNames.head, schema.fieldNames.tail: _*)
-    val typeOf = schema.fields.map(f => f.name -> f.dataType).toMap
     val eSchema = manifestSchemaFor(specFields.map(f =>
-      (f.name, f.fieldId, f.transform.resultType(typeOf(f.srcCol)))))
-    val staged: Seq[(Path, Seq[(String, Any)])] =
-      if (specFields.isEmpty) {
-        stageParquet(ordered, staging.toString)
-        PosixDataStore.listDir(staging)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).sorted
-          .map(n => (staging.resolve(n), Nil))
-      } else
-        stagePartitioned(ordered, specFields.map(f => f.name ->
-          f.transform(org.apache.spark.sql.functions.col(
-            s"`${f.srcCol}`"), typeOf(f.srcCol))), staging).map {
-          case (p, tuple) =>
-            val byName = tuple.toMap
-            (p, specFields.map(f => f.name -> partValue(
-              f.transform.resultType(typeOf(f.srcCol)), byName(f.name))))
-        }
-    val dataDir = Paths.get(root, "data")
-    Files.createDirectories(dataDir)
-    val entries = staged.zipWithIndex.map { case ((src, tuple), i) =>
-      val name = f"part-$i%05d-$nonce.parquet"
-      val dst = dataDir.resolve(name)
-      Files.move(src, dst)
-      dataFileEntry(spark, dst, s"data/$name", schema, idByName,
+      (f.name, f.fieldId, f.transform.resultType(tbl(f.srcCol)))))
+    // a zero-row append lands no file and still commits its snapshot
+    // (the streaming sink's epoch mark rides in the summary)
+    val entries = landData(ordered, root, specFields, tbl, "part").map {
+      case (file, tuple) => dataFileEntry(file, schema, idByName,
         entrySchema = eSchema, partitionTuple = tuple)
     }
     val addedRows = entries.map(e => asLong(e.get("data_file")
@@ -2786,40 +2744,35 @@ object IcebergMeta {
     nextId
   }
 
-  /** Stage `df` Hive-partitioned WITHOUT losing the identity source
-    * columns from the payload (the spec stores them in data files,
-    * and this reader scans data files as plain parquet): the
-    * partition columns are DUPLICATED under `__p_` names, the Hive
-    * layout consumes the copies, each staged file's tuple comes back
-    * from its directory path. Returns (file, tuple-as-strings) pairs
-    * — None is the null partition. */
-  private def stagePartitioned(df: org.apache.spark.sql.DataFrame,
-      derived: Seq[(String, org.apache.spark.sql.Column)], staging: Path)
-      : Seq[(Path, Seq[(String, Option[String])])] = {
+  /** Stage `df` ([[stageParquet]]) and land it under `data/`
+    * ([[StagedFiles.land]]) as `<prefix>-NNNNN-<nonce>.parquet`, one
+    * file per partition tuple of `specFields` (none: unpartitioned).
+    * The identity source columns stay IN the payload (the spec stores
+    * them in data files, and this reader scans data files as plain
+    * parquet): each tuple field is a `__p_` copy that the Hive layout
+    * consumes. Returns each landed file with its tuple typed for the
+    * Avro partition record. */
+  private def landData(df: org.apache.spark.sql.DataFrame, root: String,
+      specFields: Seq[SpecField], typeOf: Map[String, DataType],
+      prefix: String)
+      : Seq[(StagedFiles.DataFile, Seq[(String, Any)])] = {
     import org.apache.spark.sql.functions.col
-    val dup = derived.foldLeft(df) { case (d, (n, c)) =>
-      d.withColumn(s"__p_$n", c) }
-    // one task per tuple -> one data file per tuple (tuples sharing a
-    // hash slot still split: the Hive layout separates them below)
-    stageParquet(
-      dup.repartition(derived.map { case (n, _) => col(s"`__p_$n`") }: _*),
-      staging.toString, derived.map { case (n, _) => s"__p_$n" })
-    def walk(dir: Path, tuple: List[(String, Option[String])])
-        : Seq[(Path, Seq[(String, Option[String])])] =
-      PosixDataStore.listDir(dir).sorted.flatMap { n =>
-        val p = dir.resolve(n)
-        if (Files.isDirectory(p) && n.contains("=")) {
-          val Array(k, v) = n.split("=", 2)
-          val value = java.net.URLDecoder.decode(v, "UTF-8") match {
-            case "__HIVE_DEFAULT_PARTITION__" => None
-            case s => Some(s)
-          }
-          walk(p, tuple :+ (k.stripPrefix("__p_") -> value))
-        } else if (n.endsWith(".parquet") && !n.startsWith("."))
-          Seq((p, tuple.toSeq))
-        else Nil
-      }
-    walk(staging, Nil)
+    val derived = specFields.map(f => s"__p_${f.name}" ->
+      f.transform(col(s"`${f.srcCol}`"), typeOf(f.srcCol)))
+    StagedFiles.land(df.sparkSession, root, "data", prefix,
+        keepPartitionDirs = false) { staging =>
+      if (derived.isEmpty) stageParquet(df, staging.toString)
+      // one task per tuple -> one data file per tuple (tuples sharing
+      // a hash slot still split: the Hive layout separates them)
+      else stageParquet(
+        derived.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
+          .repartition(derived.map { case (n, _) => col(s"`$n`") }: _*),
+        staging.toString, derived.map(_._1))
+    }.map { file =>
+      val byName = file.partition.toMap
+      file -> specFields.map(f => f.name -> partValue(
+        f.transform.resultType(typeOf(f.srcCol)), byName(s"__p_${f.name}")))
+    }
   }
 
   /** A staged Hive tuple re-typed for the Avro partition record. */
@@ -3051,56 +3004,37 @@ object IcebergMeta {
       .join(broadcast(IcebergMetaRead.uriToRecorded(spark, snap.files)),
         Seq(IcebergMetaRead.FpCol))
       .select(col("file_path"), col(IcebergMetaRead.PosCol).as("pos"))
-    val staging = Files.createTempDirectory("ice_del_").resolve("out")
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = Paths.get(root, "data")
-    Files.createDirectories(dataDir)
     // (delete parquet, the (spec, r102 tuple) group its entry restates)
     val groups: Seq[(Int, Seq[(String, Any)])] =
       snap.files.map(f => (f.specId, f.partitionTuple)).distinct
-    val staged: Seq[(Path, (Int, Seq[(String, Any)]))] =
-      if (groups.size == 1 && groups.head._2.isEmpty) {
-        stageParquet(hits.sortWithinPartitions("file_path", "pos"),
-          staging.toString) // spec (file_path, pos) ordering
-        PosixDataStore.listDir(staging)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-          .sorted.map(n => (staging.resolve(n), groups.head))
-      } else {
-        // one delete file per TARGET (spec, tuple): route each hit to
-        // its target file's group (metadata-size broadcast map), one
-        // task per group, Hive dirs split groups sharing a task
-        val idxOf = groups.zipWithIndex.toMap
-        import spark.implicits._
-        val fpToIdx = spark.createDataset(snap.files.map(f =>
-          (f.recordedPath, idxOf((f.specId, f.partitionTuple)))))
-          .toDF("file_path", "__tuple")
-        stageParquet(hits.join(broadcast(fpToIdx), Seq("file_path"))
-          .repartition(col("__tuple"))
-          .sortWithinPartitions("__tuple", "file_path", "pos"),
-          staging.toString, Seq("__tuple"))
-        val dirs = PosixDataStore.listDir(staging)
-          .filter(_.startsWith("__tuple=")).sorted
-        dirs.flatMap { d =>
-          val idx = d.stripPrefix("__tuple=").toInt
-          PosixDataStore.listDir(staging.resolve(d))
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-            .sorted.map(n => (staging.resolve(d).resolve(n), groups(idx)))
-        }
-      }
+    val single = groups.size == 1 && groups.head._2.isEmpty
+    // empty split files drop in the landing; an all-empty delete is a
+    // no-op commit
     val entries: Seq[(Int, GenericRecord)] =
-      staged.zipWithIndex.flatMap { case ((p, (sid, tuple)), i) =>
-        // drop empty split files; an all-empty delete is a no-op commit
-        val rows = VersionedTable.footerStats(spark, p)
-          .values.map(_.rows).maxOption.getOrElse(0L)
-        if (rows == 0L) None
+      StagedFiles.land(spark, root, "data", "delete",
+          keepPartitionDirs = false) { staging =>
+        if (single)
+          stageParquet(hits.sortWithinPartitions("file_path", "pos"),
+            staging.toString) // spec (file_path, pos) ordering
         else {
-          val name = f"delete-$i%05d-$nonce.parquet"
-          val dst = dataDir.resolve(name)
-          Files.move(p, dst)
-          Some(sid -> dataFileEntry(spark, dst, s"data/$name",
-            deleteSchema, deleteFieldIds, content = 1,
-            entrySchema = eSchemaOf(sid), partitionTuple = tuple))
+          // one delete file per TARGET (spec, tuple): route each hit to
+          // its target file's group (metadata-size broadcast map), one
+          // task per group, Hive dirs split groups sharing a task
+          val idxOf = groups.zipWithIndex.toMap
+          import spark.implicits._
+          val fpToIdx = spark.createDataset(snap.files.map(f =>
+            (f.recordedPath, idxOf((f.specId, f.partitionTuple)))))
+            .toDF("file_path", "__tuple")
+          stageParquet(hits.join(broadcast(fpToIdx), Seq("file_path"))
+            .repartition(col("__tuple"))
+            .sortWithinPartitions("__tuple", "file_path", "pos"),
+            staging.toString, Seq("__tuple"))
         }
+      }.map { file =>
+        val (sid, tuple) =
+          if (single) groups.head else groups(file.partition.head._2.get.toInt)
+        sid -> dataFileEntry(file, deleteSchema, deleteFieldIds,
+          content = 1, entrySchema = eSchemaOf(sid), partitionTuple = tuple)
       }
     if (entries.isEmpty) return snap.snapshotId
     val seq = (if (meta.hasNonNull("last-sequence-number"))
@@ -3381,39 +3315,13 @@ object IcebergMeta {
         else if (specFields.isEmpty) visible0.coalesce(numFiles)
         else visible0
     }
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val staging = Files.createTempDirectory("ice_cpt_").resolve("out")
     val keepCols = schema.fieldNames.toSeq ++ (if (fv == 3)
       Seq("_row_id", "_last_updated_sequence_number") else Nil)
     val ordered = visible.select(keepCols.head, keepCols.tail: _*)
-    val stagedFiles: Seq[(Path, Seq[(String, Any)])] =
-      if (specFields.isEmpty) {
-        stageParquet(ordered, staging.toString)
-        PosixDataStore.listDir(staging)
-          .filter(p => p.endsWith(".parquet") && !p.startsWith(".")).sorted
-          .map(n => (staging.resolve(n), Nil))
-      } else
-        stagePartitioned(ordered, specFields.map(f => f.name ->
-          f.transform(org.apache.spark.sql.functions.col(
-            s"`${f.srcCol}`"), typeOf(f.srcCol))), staging).map {
-          case (pp, tuple) =>
-            val byName = tuple.toMap
-            (pp, specFields.map(f => f.name -> partValue(
-              f.transform.resultType(typeOf(f.srcCol)), byName(f.name))))
-        }
-    val dataDir = Paths.get(root, "data")
-    Files.createDirectories(dataDir)
-    val entries = stagedFiles.zipWithIndex.flatMap { case ((sp, tuple), i) =>
-      val rows = VersionedTable.footerStats(spark, sp)
-        .values.map(_.rows).maxOption.getOrElse(0L)
-      if (rows == 0L) None // empty split: don't list empty files
-      else {
-        val name = f"compact-$i%05d-$nonce.parquet"
-        val dst = dataDir.resolve(name)
-        Files.move(sp, dst)
-        Some(dataFileEntry(spark, dst, s"data/$name", schema, idByName,
-          entrySchema = eSchema, partitionTuple = tuple))
-      }
+    // empty splits land no file
+    val entries = landData(ordered, root, specFields, typeOf, "compact").map {
+      case (file, tuple) => dataFileEntry(file, schema, idByName,
+        entrySchema = eSchema, partitionTuple = tuple)
     }
     val addedRows = entries.map(e => asLong(e.get("data_file")
       .asInstanceOf[GenericRecord].get("record_count"))).sum
@@ -3908,47 +3816,23 @@ object IcebergMeta {
     if (n == 0) return snapshot(root).snapshotId
     require(pre.getLong(1) == n,
       "iceberg-meta upsert: source must be unique and non-null per key")
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = Paths.get(root, "data")
-    Files.createDirectories(dataDir)
     // new images as ordinary data files (per tuple when partitioned)
-    val staging = Files.createTempDirectory("ice_ups_").resolve("out")
     val orderedU = source.select(
       schema.fieldNames.head, schema.fieldNames.tail: _*)
-    val stagedU: Seq[(Path, Seq[(String, Any)])] =
-      if (specFields.isEmpty) {
-        stageParquet(orderedU, staging.toString)
-        PosixDataStore.listDir(staging)
-          .filter(p => p.endsWith(".parquet") && !p.startsWith(".")).sorted
-          .map(nm => (staging.resolve(nm), Nil))
-      } else
-        stagePartitioned(orderedU, specFields.map(f => f.name ->
-          f.transform(col(s"`${f.srcCol}`"), typeOfU(f.srcCol))),
-          staging).map {
-          case (pp, tuple) =>
-            val byName = tuple.toMap
-            (pp, specFields.map(f => f.name -> partValue(
-              f.transform.resultType(typeOfU(f.srcCol)), byName(f.name))))
-        }
-    val dataEntries = stagedU.zipWithIndex.map { case ((src, tuple), i) =>
-      val name = f"part-$i%05d-$nonce.parquet"
-      val dst = dataDir.resolve(name)
-      Files.move(src, dst)
-      dataFileEntry(spark, dst, s"data/$name", schema, idByName,
+    val dataEntries = landData(orderedU, root, specFields, typeOfU,
+      "part").map {
+      case (file, tuple) => dataFileEntry(file, schema, idByName,
         entrySchema = eSchemaU, partitionTuple = tuple)
     }
     val addedRows = dataEntries.map(e => asLong(e.get("data_file")
       .asInstanceOf[GenericRecord].get("record_count"))).sum
-    // the keys as ONE equality-delete file
-    val delStaging = Files.createTempDirectory("ice_upsd_").resolve("out")
-    stageParquet(source.select(col(key)).distinct().coalesce(1),
-      delStaging.toString)
-    val delPart = PosixDataStore.listDir(delStaging)
-      .filter(p => p.endsWith(".parquet") && !p.startsWith(".")).head
-    val delName = s"eq-delete-upsert-$nonce.parquet"
-    Files.move(delStaging.resolve(delPart), dataDir.resolve(delName))
-    val delEntry = dataFileEntry(spark, dataDir.resolve(delName),
-      s"data/$delName",
+    // the keys as ONE equality-delete file (the source is non-empty)
+    val delFile = StagedFiles.land(spark, root, "data", "eq-delete-upsert",
+        keepPartitionDirs = false) { staging =>
+      stageParquet(source.select(col(key)).distinct().coalesce(1),
+        staging.toString)
+    }.head
+    val delEntry = dataFileEntry(delFile,
       org.apache.spark.sql.types.StructType(
         schema.fields.filter(_.name == key)),
       idByName, content = 2, equalityIds = Seq(idByName(key)))
@@ -4022,28 +3906,15 @@ object IcebergMeta {
       "iceberg-meta: equality delete on a geometry/geography column " +
         "is not supported")
     val eqIds = eqCols.map(idByName)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val staging = Files.createTempDirectory("ice_eqdel_").resolve("out")
-    // one file: delete batches are value-lists, small by contract
-    stageParquet(values.distinct().coalesce(1), staging.toString)
-    val parts = PosixDataStore.listDir(staging)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).sorted
-    val dataDir = Paths.get(root, "data")
-    Files.createDirectories(dataDir)
-    val entries = parts.zipWithIndex.flatMap { case (n, i) =>
-      val rows = VersionedTable.footerStats(spark, staging.resolve(n))
-        .values.map(_.rows).maxOption.getOrElse(0L)
-      if (rows == 0L) None // empty values → no-op, no empty commit
-      else {
-        val name = f"eq-delete-$i%05d-$nonce.parquet"
-        val dst = dataDir.resolve(name)
-        Files.move(staging.resolve(n), dst)
-        Some(dataFileEntry(spark, dst, s"data/$name",
-          org.apache.spark.sql.types.StructType(
-            schema.fields.filter(f => eqCols.contains(f.name))),
-          idByName, content = 2, equalityIds = eqIds))
-      }
-    }
+    // one file: delete batches are value-lists, small by contract;
+    // empty values land none → no-op, no empty commit
+    val entries = StagedFiles.land(spark, root, "data", "eq-delete",
+        keepPartitionDirs = false) { staging =>
+      stageParquet(values.distinct().coalesce(1), staging.toString)
+    }.map(file => dataFileEntry(file,
+      org.apache.spark.sql.types.StructType(
+        schema.fields.filter(f => eqCols.contains(f.name))),
+      idByName, content = 2, equalityIds = eqIds))
     if (entries.isEmpty) return snapshot(root).snapshotId
     val seq = (if (meta.hasNonNull("last-sequence-number"))
       meta.get("last-sequence-number").asLong() else 0L) + 1
@@ -4504,40 +4375,14 @@ object IcebergMeta {
     val specId = if (meta.hasNonNull("default-spec-id"))
       meta.get("default-spec-id").asInt() else 0
 
-    // stage replacement rows, land as fresh data files
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val staging = Files.createTempDirectory("ice_cow_").resolve("out")
+    // stage replacement rows, land as fresh data files (empty split
+    // files are never listed)
     val keepCols = schema.fieldNames.toSeq ++
       (if (materialize) lineageCols else Nil)
     val ordered = replacement.select(keepCols.head, keepCols.tail: _*)
-    val stagedFiles: Seq[(Path, Seq[(String, Any)])] =
-      if (specFields.isEmpty) {
-        stageParquet(ordered, staging.toString)
-        PosixDataStore.listDir(staging)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).sorted
-          .map(n => (staging.resolve(n), Nil))
-      } else
-        stagePartitioned(ordered, specFields.map(f => f.name ->
-          f.transform(org.apache.spark.sql.functions.col(
-            s"`${f.srcCol}`"), typeOf(f.srcCol))), staging).map {
-          case (pp, tuple) =>
-            val byName = tuple.toMap
-            (pp, specFields.map(f => f.name -> partValue(
-              f.transform.resultType(typeOf(f.srcCol)), byName(f.name))))
-        }
-    val dataDir = Paths.get(root, "data")
-    Files.createDirectories(dataDir)
-    val added = stagedFiles.zipWithIndex.flatMap { case ((src, tuple), i) =>
-      val rows = VersionedTable.footerStats(spark, src)
-        .values.map(_.rows).maxOption.getOrElse(0L)
-      if (rows == 0L) None // empty split files: never list
-      else {
-        val name = f"cow-$i%05d-$nonce.parquet"
-        val dst = dataDir.resolve(name)
-        Files.move(src, dst)
-        Some(dataFileEntry(spark, dst, s"data/$name", schema, idByName,
-          entrySchema = eSchema, partitionTuple = tuple))
-      }
+    val added = landData(ordered, root, specFields, typeOf, "cow").map {
+      case (file, tuple) => dataFileEntry(file, schema, idByName,
+        entrySchema = eSchema, partitionTuple = tuple)
     }
     val addedRows = added.map(e => asLong(e.get("data_file")
       .asInstanceOf[GenericRecord].get("record_count"))).sum

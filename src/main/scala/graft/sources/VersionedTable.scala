@@ -1524,86 +1524,95 @@ object VersionedTable {
   /** Footer-harvested stats for one parquet file, keyed by column
     * name. Unsupported physical/logical types yield no entry. */
   private[sources] def footerStats(spark: SparkSession, file: Path)
-      : Map[String, ColStats] = {
+      : Map[String, ColStats] = statsOf(footerOf(spark, file))
+
+  /** One read of a parquet file's footer. */
+  private[sources] def footerOf(spark: SparkSession, file: Path)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri),
+      spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** [[footerStats]] of an already-read footer. A column's `rows` is
+    * its leaf VALUE count, which exceeds the file's row count for
+    * repeated (array/map) columns. */
+  private[sources] def statsOf(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : Map[String, ColStats] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri),
-      spark.sparkContext.hadoopConfiguration)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val footer = reader.getFooter
-      // (typ, mins, maxes, nulls, rows) accumulated across row groups
-      val acc = scala.collection.mutable.Map
-        .empty[String, (String, List[String], List[String], Long, Long)]
-      var unsupported = Set.empty[String]
-      for (block <- footer.getBlocks.asScala;
-           chunk <- block.getColumns.asScala) {
-        val name = chunk.getPath.toDotString
-        val prim = chunk.getPrimitiveType
-        val logical = prim.getLogicalTypeAnnotation
-        val isDecimal = logical != null &&
-          logical.isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]
-        val isString = logical != null &&
-          logical == LogicalTypeAnnotation.stringType()
-        val typ: Option[String] = prim.getPrimitiveTypeName match {
-          // decimal over int32/64 stores UNSCALED values — a raw
-          // numeric compare against a user bound would mis-prune
-          case INT32 | INT64 if !isDecimal => Some("long")
-          case FLOAT | DOUBLE              => Some("double")
-          case BINARY if isString          => Some("string")
-          case _                           => None
-        }
-        val st: org.apache.parquet.column.statistics.Statistics[_] =
-          chunk.getStatistics
-        typ match {
-          case None => unsupported += name
-          case Some(t) if st == null || st.isEmpty => unsupported += name
-          case Some(t) =>
-            // Binary stats stringify to a debug form via toString —
-            // decode the raw UTF-8 bytes instead
-            def asStr(v: Any): String = v match {
-              case b: org.apache.parquet.io.api.Binary =>
-                new String(b.getBytes, UTF_8)
-              case other => other.toString
-            }
-            val (minS, maxS) =
-              if (!st.hasNonNullValue) (None, None)
-              else {
-                val mn = asStr(st.genericGetMin)
-                val mx = asStr(st.genericGetMax)
-                // NaN poisons float min/max (PARQUET-1222): a chunk
-                // whose bounds touch NaN records no stats at all
-                if (t == "double" &&
-                    (mn.toDouble.isNaN || mx.toDouble.isNaN))
-                  (None, None) // handled below via `unsupported`
-                else (Some(mn), Some(mx))
-              }
-            if (t == "double" && st.hasNonNullValue && minS.isEmpty)
-              unsupported += name
-            else {
-              val prev = acc.getOrElse(name,
-                (t, Nil, Nil, 0L, 0L))
-              // parquet reports -1 when a chunk's null count is
-              // UNSET — once any chunk is unknown, the file's count
-              // is unknown (the <0 sentinel), never a partial sum
-              val nn =
-                if (st.getNumNulls < 0 || prev._4 < 0) -1L
-                else prev._4 + st.getNumNulls
-              acc(name) = (t, prev._2 ++ minS.toList,
-                prev._3 ++ maxS.toList,
-                nn, prev._5 + chunk.getValueCount)
-            }
-        }
+    // (typ, mins, maxes, nulls, rows) accumulated across row groups
+    val acc = scala.collection.mutable.Map
+      .empty[String, (String, List[String], List[String], Long, Long)]
+    var unsupported = Set.empty[String]
+    for (block <- footer.getBlocks.asScala;
+         chunk <- block.getColumns.asScala) {
+      val name = chunk.getPath.toDotString
+      val prim = chunk.getPrimitiveType
+      val logical = prim.getLogicalTypeAnnotation
+      val isDecimal = logical != null &&
+        logical.isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]
+      val isString = logical != null &&
+        logical == LogicalTypeAnnotation.stringType()
+      val typ: Option[String] = prim.getPrimitiveTypeName match {
+        // decimal over int32/64 stores UNSCALED values — a raw
+        // numeric compare against a user bound would mis-prune
+        case INT32 | INT64 if !isDecimal => Some("long")
+        case FLOAT | DOUBLE              => Some("double")
+        case BINARY if isString          => Some("string")
+        case _                           => None
       }
-      (acc.toMap -- unsupported).map { case (name, (t, mins, maxes, nulls, rows)) =>
-        val min = if (mins.isEmpty) None else Some(mins.minBy(statKey(t, _)))
-        val max = if (maxes.isEmpty) None else Some(maxes.maxBy(statKey(t, _)))
-        name -> ColStats(t, min, max, nulls, rows)
-      }.toMap
-    } finally reader.close()
+      val st: org.apache.parquet.column.statistics.Statistics[_] =
+        chunk.getStatistics
+      typ match {
+        case None => unsupported += name
+        case Some(t) if st == null || st.isEmpty => unsupported += name
+        case Some(t) =>
+          // Binary stats stringify to a debug form via toString —
+          // decode the raw UTF-8 bytes instead
+          def asStr(v: Any): String = v match {
+            case b: org.apache.parquet.io.api.Binary =>
+              new String(b.getBytes, UTF_8)
+            case other => other.toString
+          }
+          val (minS, maxS) =
+            if (!st.hasNonNullValue) (None, None)
+            else {
+              val mn = asStr(st.genericGetMin)
+              val mx = asStr(st.genericGetMax)
+              // NaN poisons float min/max (PARQUET-1222): a chunk
+              // whose bounds touch NaN records no stats at all
+              if (t == "double" &&
+                  (mn.toDouble.isNaN || mx.toDouble.isNaN))
+                (None, None) // handled below via `unsupported`
+              else (Some(mn), Some(mx))
+            }
+          if (t == "double" && st.hasNonNullValue && minS.isEmpty)
+            unsupported += name
+          else {
+            val prev = acc.getOrElse(name,
+              (t, Nil, Nil, 0L, 0L))
+            // parquet reports -1 when a chunk's null count is
+            // UNSET — once any chunk is unknown, the file's count
+            // is unknown (the <0 sentinel), never a partial sum
+            val nn =
+              if (st.getNumNulls < 0 || prev._4 < 0) -1L
+              else prev._4 + st.getNumNulls
+            acc(name) = (t, prev._2 ++ minS.toList,
+              prev._3 ++ maxS.toList,
+              nn, prev._5 + chunk.getValueCount)
+          }
+      }
+    }
+    (acc.toMap -- unsupported).map { case (name, (t, mins, maxes, nulls, rows)) =>
+      val min = if (mins.isEmpty) None else Some(mins.minBy(statKey(t, _)))
+      val max = if (maxes.isEmpty) None else Some(maxes.maxBy(statKey(t, _)))
+      name -> ColStats(t, min, max, nulls, rows)
+    }.toMap
   }
 
   /** Ordering key for stat values of a given typ — numeric for

@@ -1841,4 +1841,38 @@ class DeltaLogSpec extends SparkSpecBase {
     assert(DeltaLog.jsonVersions(root) === Seq(4L, 5L))
     assert(spark.read.format("delta-log").load(root).count() === 24)
   }
+
+  test("numRecords is the footer row count, not an array column's " +
+    "value count") {
+    val root = tmp()
+    DeltaLog.commit(Seq((1L, Seq(1, 2, 3)), (2L, Seq(4, 5, 6)))
+      .toDF("k", "xs").coalesce(1), root)
+    val stats = DeltaLog.snapshot(spark, root).adds.flatMap(_.statsJson)
+    assert(stats.size === 1)
+    // the xs leaf holds 6 values in 2 rows
+    assert(""""numRecords":(\d+)""".r.findFirstMatchIn(stats.head)
+      .map(_.group(1)) === Some("2"))
+  }
+
+  test("a Delta commit and an Iceberg append leave no staging " +
+    "directory behind") {
+    import scala.jdk.CollectionConverters._
+    def tmpDirs(): Set[String] = {
+      val s = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+      try s.iterator().asScala.filter(Files.isDirectory(_))
+        .map(_.getFileName.toString).toSet
+      finally s.close()
+    }
+    val delta = tmp()
+    val ice = tmp() + "/t"
+    IcebergMeta.writeFixture(Seq((0L, "a")).toDF("k", "s"), ice)
+    val before = tmpDirs()
+    // more tasks than rows: the writers also stage zero-row parts
+    DeltaLog.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "s")
+      .repartition(4), delta)
+    IcebergMeta.append(Seq((1L, "b")).toDF("k", "s").repartition(4), ice)
+    assert(tmpDirs() -- before === Set.empty[String])
+    assert(spark.read.format("delta-log").load(delta).count() === 2)
+    assert(spark.read.format("iceberg-meta").load(ice).count() === 2)
+  }
 }

@@ -210,4 +210,33 @@ class IcebergMergeSpec extends SparkSpecBase {
     assert(rows(root) === Seq((0L, "a"), (1L, "a"), (2L, "b"),
       (4L, "b"), (5L, "b")))
   }
+
+  test("record_count is the footer row count: DECIMAL/BOOLEAN files " +
+    "survive compaction and UPDATE") {
+    // neither column type records footer stats, so a count read off
+    // the column stats would be 0 for every file
+    def table(n: Int): String = {
+      val root = tmp()
+      IcebergMeta.writeFixture((1 to n).map(i => (i / 2.0 + 1, i % 2 == 0))
+        .toDF("d", "b").select(col("d").cast("decimal(10,2)").as("d"),
+          col("b")).repartition(2), root)
+      root
+    }
+    def read(root: String): Seq[(java.math.BigDecimal, Boolean)] =
+      spark.read.format("iceberg-meta").load(root)
+        .as[(java.math.BigDecimal, Boolean)].collect().toSeq
+        .sortBy(_._1)
+    val root = table(4)
+    val files = IcebergMeta.snapshot(root).files
+    assert(files.map(_.records) ===
+      files.map(f => spark.read.parquet(f.path).count()))
+    assert(files.map(_.records).sum === 4)
+    IcebergMeta.compact(spark, root)
+    assert(read(root).map(_._1.toString) === Seq("1.50", "2.00", "2.50", "3.00"))
+    val root3 = table(3)
+    IcebergMeta.updateWhere(spark, root3, Seq("b" -> X(lit(true))),
+      Some(X(col("d") === lit(new java.math.BigDecimal("1.50")))))
+    assert(read(root3).map(r => (r._1.toString, r._2)) ===
+      Seq(("1.50", true), ("2.00", true), ("2.50", false)))
+  }
 }

@@ -1104,4 +1104,21 @@ class IcebergMetaSpec extends SparkSpecBase {
     }
     assert(e2.getMessage.contains("bucket[4]"))
   }
+
+  test("identity partition values round-trip Spark's path escaping") {
+    val root = tmp() + "/t"
+    val values = Seq("a+b", "c d", "e%f")
+    def tuples(): Seq[Seq[(String, Any)]] =
+      IcebergMeta.snapshot(root).files.map(_.partitionTuple)
+    IcebergMeta.writeFixture(values.map(v => (0L, v)).toDF("k", "p"),
+      root, partitionBy = Seq("p"))
+    assert(tuples().toSet === values.map(v => Seq("p" -> v)).toSet)
+    IcebergMeta.append(values.map(v => (1L, v)).toDF("k", "p"), root)
+    assert(tuples().sortBy(_.toString) ===
+      values.flatMap(v => Seq(Seq("p" -> v), Seq("p" -> v))).sortBy(_.toString))
+    values.foreach { v =>
+      assert(spark.read.format("iceberg-meta").load(root)
+        .filter(col("p") === v).count() === 2, v)
+    }
+  }
 }
