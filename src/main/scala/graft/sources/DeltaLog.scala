@@ -46,10 +46,16 @@ import org.apache.spark.sql.types._
   *    extensions refuse.
   *  - non-parquet `format.provider` refuses.
   *
-  * Commits publish through the [[LogStore]] seam's `putIfAbsent` —
-  * exactly Delta's own requirement ("mutual exclusion" on the commit
+  * Every version publishes through ONE function, [[publish]]: the
+  * commit lands at the writer's base snapshot version + 1 through the
+  * `putIfAbsent` of the [[LogStore]] registered for the table root
+  * ([[VersionedTable.registerLogStore]]; [[PosixLogStore]] otherwise)
+  * — exactly Delta's own requirement ("mutual exclusion" on the commit
   * file; S3 conditional PUT / GCS generation-match in production,
-  * link(2) locally) — so concurrent writers race safely.
+  * link(2) locally) — so concurrent writers race safely: a writer
+  * that planned on a stale snapshot gets
+  * [[VersionedTable.ConcurrentCommitException]], never a commit over
+  * the newer version.
   *
   * Scale posture: replay is a DRIVER fold over file METADATA (the same
   * cost model as the graft manifest and Delta's own Snapshot), not a
@@ -167,7 +173,7 @@ object DeltaLog {
 
   private def logDir(root: String): Path = Paths.get(root, "_delta_log")
 
-  private def io(root: String): LogStore = PosixLogStore
+  private def io(root: String): LogStore = VersionedTable.logIO(root)
 
   private def commitPath(root: String, v: Long): Path =
     logDir(root).resolve(f"$v%020d.json")
@@ -637,7 +643,8 @@ object DeltaLog {
   // writer features needed for plain appends/overwrites of a
   // partitioned parquet table). Data files land first (invisible
   // until referenced), then the commit JSON publishes atomically via
-  // LogStore.putIfAbsent — the spec's mutual-exclusion requirement.
+  // [[publish]]'s LogStore.putIfAbsent — the spec's mutual-exclusion
+  // requirement.
   // ------------------------------------------------------------------
 
   private def jsonStr(s: String): String = mapper.writeValueAsString(s)
@@ -872,11 +879,11 @@ object DeltaLog {
     // row tracking: every path that lands new adds assigns fresh
     // id blocks past the high-water mark and restates the
     // delta.rowTracking domain in the same commit ([[assignRowIds]],
-    // called from commit/replaceFiles/DV-DML/OPTIMIZE/RESTORE);
+    // called from [[publish]] for every commit that lands adds);
     // checkpoints carry baseRowId/defaultRowCommitVersion
     "rowTracking",
-    // in-commit timestamps: every commit path leads with
-    // [[commitInfoLine]], which stamps a MONOTONIC inCommitTimestamp
+    // in-commit timestamps: every commit leads with [[publish]]'s
+    // commitInfo line, which stamps a MONOTONIC inCommitTimestamp
     // (> predecessor's) as the first action whenever the
     // delta.enableInCommitTimestamps property is on — exactly the
     // spec's writer obligation (recent delta-spark enables ICT on
@@ -1069,7 +1076,7 @@ object DeltaLog {
     * DV-carrying or variant-typed tables refuse loudly rather than
     * publish a tree other engines would misread. */
   private def syncUniform(spark: SparkSession, root: String,
-      evenIfDisabled: Boolean = false): Unit = {
+      evenIfDisabled: Boolean): Unit = {
     val snap = snapshot(spark, root)
     if (!evenIfDisabled && !uniformEnabled(snap.configuration)) return
     require(snap.partitionColumns.isEmpty,
@@ -1101,7 +1108,7 @@ object DeltaLog {
     * surface as a failure. Bounded: a livelock past the bound is a
     * real error worth seeing. */
   private def syncUniformConverging(spark: SparkSession,
-      root: String, evenIfDisabled: Boolean = false): Unit = {
+      root: String, evenIfDisabled: Boolean): Unit = {
     var attempts = 0
     var done = false
     while (!done) {
@@ -1155,22 +1162,63 @@ object DeltaLog {
     math.max(now, prev.map(_ + 1L).getOrElse(now))
   }
 
-  /** The leading `commitInfo` line of a commit. With in-commit
-    * timestamps ON in `configuration` (this commit's FINAL table
-    * configuration), stamps the monotonic `inCommitTimestamp` — the
-    * spec additionally requires commitInfo to be the FIRST action,
-    * which every writer path here satisfies by construction (this
-    * line is always `lines += ...`'d first). */
-  private def commitInfoLine(root: String, operation: String,
-      configuration: Map[String, String], prevVersion: Long): String =
-    if (!ictEnabled(configuration))
-      s"""{"commitInfo":{"timestamp":${System.currentTimeMillis},""" +
-        s""""operation":"$operation"}}"""
-    else {
-      val ict = nextIct(root, prevVersion)
-      s"""{"commitInfo":{"inCommitTimestamp":$ict,"timestamp":$ict,""" +
-        s""""operation":"$operation"}}"""
+  /** The ONE publish path of every `_delta_log` version. The commit
+    * lands at `base`'s version + 1 (version 0 for a new table, `base`
+    * None) through [[LogStore.putIfAbsent]], so a writer that planned
+    * on a stale snapshot loses the race with
+    * [[VersionedTable.ConcurrentCommitException]] instead of
+    * committing over the newer version (the protocol's mutual
+    * exclusion). Line order: `commitInfo` first (the ICT placement
+    * rule), the caller's `header` (protocol, metaData, domainMetadata,
+    * txn lines), `removes`, the moved row-tracking mark, `adds` (fresh
+    * row-id blocks when row tracking is active on `base`, or `rowIds`
+    * for a table this commit creates), `cdc`. `dataChange` flags the
+    * removes and adds alike (false for OPTIMIZE). `configuration` is
+    * the table's configuration after this commit: with in-commit
+    * timestamps on, the commitInfo carries a monotonic
+    * `inCommitTimestamp` (`ict` when the caller also records it as the
+    * enablement timestamp), and with UniForm on, the Iceberg mirror
+    * syncs after the commit (`mirrorEvenIfDisabled`: RESTORE's final
+    * sync of a mirror it disables). Returns the committed version. */
+  private def publish(spark: SparkSession, root: String,
+      base: Option[DeltaSnapshot], operation: String,
+      configuration: Map[String, String], header: Seq[String] = Nil,
+      removes: Seq[String] = Nil, adds: Seq[DeltaAdd] = Nil,
+      cdc: Seq[DeltaAdd] = Nil, dataChange: Boolean = true,
+      rowIds: Boolean = false, ict: Option[Long] = None,
+      mirrorEvenIfDisabled: Boolean = false): Long = {
+    val prev = base.fold(-1L)(_.version)
+    val next = prev + 1
+    val now = System.currentTimeMillis
+    val stamp = ict.orElse(
+      if (ictEnabled(configuration)) Some(nextIct(root, prev)) else None)
+    val info = stamp.fold(s"""{"commitInfo":{"timestamp":$now,""")(t =>
+      s"""{"commitInfo":{"inCommitTimestamp":$t,"timestamp":$t,""") +
+      s""""operation":"$operation"}}"""
+    val (addsRt, rtLines) = assignRowIds(rowIds || base.exists(b =>
+        rowTrackingActive(b.minWriterVersion, b.writerFeatures)),
+      base.fold(Map.empty[String, (String, Boolean)])(_.domains),
+      base.fold(Seq.empty[DeltaAdd])(_.adds), next, adds)
+    val lines = (info +: header) ++ removes.map(p =>
+      s"""{"remove":{"path":${jsonStr(encodePath(p))},""" +
+        s""""deletionTimestamp":$now,"dataChange":$dataChange}}""") ++
+      rtLines ++ addsRt.map(addLine(_, dataChange)) ++ cdc.map(cdcLine)
+    try io(root).putIfAbsent(commitPath(root, next),
+      lines.mkString("", "\n", "\n").getBytes(UTF_8))
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new VersionedTable.ConcurrentCommitException(next)
     }
+    if (mirrorEvenIfDisabled || uniformEnabled(configuration))
+      syncUniformConverging(spark, root, mirrorEvenIfDisabled)
+    next
+  }
+
+  /** One spec-shaped `domainMetadata` JSON line. */
+  private def domainLine(domain: String, configuration: String,
+      removed: Boolean = false): String =
+    s"""{"domainMetadata":{"domain":${jsonStr(domain)},""" +
+      s""""configuration":${jsonStr(configuration)},"removed":$removed}}"""
 
   /** The authoritative commit timestamp of version `v` — what
     * TIMESTAMP AS OF and history ordering key on: the recorded
@@ -1635,8 +1683,8 @@ object DeltaLog {
       s"delta-log: mode must be append|overwrite, got $mode")
     val spark = df.sparkSession
     io(root).mkdirs(logDir(root))
-    val latest = latestVersion(root)
-    val existing = if (latest < 0) None else Some(snapshot(spark, root))
+    val existing =
+      if (latestVersion(root) < 0) None else Some(snapshot(spark, root))
     require(existing.isEmpty || properties.isEmpty,
       "delta-log: table properties are set at CREATION (or via " +
         "setConfiguration) — not on writes to an existing table")
@@ -1882,23 +1930,18 @@ object DeltaLog {
     // Hive-style dirs keep the table browsable)
     val adds = stageAndLand(spark, stagedDf, root, stagedPartitionBy,
       typeOverrides = collatedTypesOf(recordSchema))
-    val next = latest + 1
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
-    lines += commitInfoLine(root,
-      if (mode == "append") "WRITE" else "OVERWRITE",
-      configuration, latest)
-    if (latest < 0 || mode == "overwrite") {
-      lines += protocolLine(proto._1, proto._2, proto._3, proto._4)
-      lines += metaDataLine(recordSchema.json, partitionBy, configuration)
+    val header = scala.collection.mutable.ListBuffer.empty[String]
+    if (existing.isEmpty || mode == "overwrite") {
+      header += protocolLine(proto._1, proto._2, proto._3, proto._4)
+      header += metaDataLine(recordSchema.json, partitionBy, configuration)
       if (clusterBy.nonEmpty) {
         // the domain stores PHYSICAL names (delta-spark's contract —
         // clustering survives RENAME COLUMN under mapping because the
         // physical name is the stable one)
         val cols = clusterBy.map(c => mapping.getOrElse(c, c))
           .map(c => s"""[${jsonStr(c)}]""").mkString(",")
-        lines += s"""{"domainMetadata":{"domain":"delta.clustering",""" +
-          s""""configuration":${jsonStr(
-            s"""{"clusteringColumns":[$cols]}""")},"removed":false}}"""
+        header += domainLine("delta.clustering",
+          s"""{"clusteringColumns":[$cols]}""")
       }
     } else if (identitySchema.isDefined || evolution.isDefined) {
       // restated in the SAME commit: an identity allocation's moved
@@ -1907,34 +1950,20 @@ object DeltaLog {
       if (evolution.exists(_._2) && existing.exists(e =>
           !(e.minReaderVersion >= 3 &&
             e.readerFeatures.contains("typeWidening"))))
-        lines += protocolLine(proto._1, proto._2, proto._3, proto._4)
-      lines += metaDataLine(recordSchema.json, partitionBy, configuration,
+        header += protocolLine(proto._1, proto._2, proto._3, proto._4)
+      header += metaDataLine(recordSchema.json, partitionBy, configuration,
         existing.map(_.tableId))
     }
-    if (mode == "overwrite") existing.foreach(_.adds.foreach { a =>
-      lines += s"""{"remove":{"path":${jsonStr(encodePath(a.path))},""" +
-        s""""deletionTimestamp":${System.currentTimeMillis},"dataChange":true}}"""
-    })
     txn.foreach { case (app, ver) =>
-      lines += s"""{"txn":{"appId":${jsonStr(app)},"version":$ver,""" +
+      header += s"""{"txn":{"appId":${jsonStr(app)},"version":$ver,""" +
         s""""lastUpdated":${System.currentTimeMillis}}}"""
     }
-    val (addsRt, rtLines) = assignRowIds(
-      rowTrackingActive(proto._2, proto._4),
-      existing.map(_.domains).getOrElse(Map.empty),
-      // overwrite retires the old adds with their blocks; the mark
-      // is monotonic over the whole history and never reuses them
-      existing.map(_.adds).getOrElse(Nil), next, adds)
-    rtLines.foreach(lines += _)
-    addsRt.foreach(a => lines += addLine(a))
-    try io(root).putIfAbsent(commitPath(root, next),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(next)
-    }
-    if (uniformEnabled(configuration)) syncUniformConverging(spark, root)
-    next
+    // overwrite retires the old adds with their row-id blocks; the
+    // mark is monotonic over the whole history and never reuses them
+    publish(spark, root, existing, opName, configuration, header.toSeq,
+      removes = if (mode == "overwrite")
+        existing.toSeq.flatMap(_.adds.map(_.path)) else Nil,
+      adds = adds, rowIds = rowTrackingActive(proto._2, proto._4))
   }
 
   /** The adds of `snap` behind `uris`, the scan URIs a row's
@@ -2094,10 +2123,8 @@ object DeltaLog {
         assigned
       }
     }
-    (out, if (!moved) Nil else Seq(
-      s"""{"domainMetadata":{"domain":"delta.rowTracking",""" +
-        s""""configuration":${jsonStr(s"""{"rowIdHighWaterMark":$hwm}""")},""" +
-        """"removed":false}}"""))
+    (out, if (!moved) Nil else Seq(domainLine("delta.rowTracking",
+      s"""{"rowIdHighWaterMark":$hwm}""")))
   }
 
   private def numRecordsOf(a: DeltaAdd): Option[Long] =
@@ -2160,41 +2187,24 @@ object DeltaLog {
         typeOverrides = collatedTypesOf(snap.schema)))
     if (rows.isEmpty && extraAdds.isEmpty)
       return Some(snap.version) // nothing fired: no empty commit
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
-    lines += commitInfoLine(root, operation, snap.configuration,
-      snap.version)
-    touchedAdds.foreach { a =>
-      val fresh = byFile.getOrElse(idx.scanUriOf(a), Array.empty[Long])
-      // key-envelope-touched files with no actually-dead rows (a
-      // merge whose clauses fired elsewhere) carry over untouched
-      if (fresh.nonEmpty) {
+    // key-envelope-touched files with no actually-dead rows (a merge
+    // whose clauses fired elsewhere) carry over untouched; a file
+    // whose merged DV covers every row is removed without a re-add
+    val dead = touchedAdds.flatMap { a =>
+      byFile.get(idx.scanUriOf(a)).map { fresh =>
         val mergedPos = a.deletionVector match {
           case Some(d) =>
             (DeletionVectors.read(root, d) ++ fresh).distinct.sorted
           case None => fresh
         }
-        lines += s"""{"remove":{"path":${jsonStr(encodePath(a.path))},""" +
-          s""""deletionTimestamp":${System.currentTimeMillis},""" +
-          """"dataChange":true}}"""
-        if (mergedPos.length < numRecordsOf(a).get) // fully dead: no re-add
-          lines += addLine(a.copy(deletionVector =
+        a -> Option.when(mergedPos.length < numRecordsOf(a).get)(
+          a.copy(deletionVector =
             Some(DeletionVectors.writeFile(root, mergedPos))))
       }
     }
-    val next = snap.version + 1
-    val (extraRt, rtLines) = assignRowIds(
-      rowTrackingActive(snap.minWriterVersion, snap.writerFeatures),
-      snap.domains, snap.adds, next, extraAdds)
-    rtLines.foreach(lines += _)
-    extraRt.foreach(a => lines += addLine(a))
-    cdcAdds.foreach(a => lines += cdcLine(a))
-    try io(root).putIfAbsent(commitPath(root, next),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(next)
-    }
-    Some(next)
+    Some(publish(spark, root, Some(snap), operation, snap.configuration,
+      removes = dead.map(_._1.path), adds = dead.flatMap(_._2) ++ extraAdds,
+      cdc = cdcAdds))
   }
 
   /** A predicate with its TOP-LEVEL attribute names remapped
@@ -2235,7 +2245,8 @@ object DeltaLog {
 
   /** COW support: land `df` as new data files (Hive-style dirs +
     * re-recorded `partitionValues` when `partitionBy` is set) and
-    * commit one version of `remove(removedPaths)` + `add(new files)`. */
+    * commit one version of `remove(removedPaths)` + `add(new files)`
+    * on top of `base`, the snapshot the rewrite was planned on. */
   private def replaceFiles(spark: SparkSession, root: String,
       base: DeltaSnapshot,
       removedPaths: Seq[String], df: DataFrame,
@@ -2248,33 +2259,11 @@ object DeltaLog {
       carriesDv = base.adds.exists(a =>
         a.deletionVector.isDefined && !removedPaths.contains(a.path)),
       operation)
-    val latest = latestVersion(root)
     val adds = stageAndLand(spark, df, root, partitionBy,
       typeOverrides = collatedTypesOf(base.schema))
-    val next = latest + 1
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
-    lines += commitInfoLine(root, operation, base.configuration, latest)
     // schema evolution lands its restated metaData in the SAME commit
-    metaRestate.foreach(lines += _)
-    removedPaths.foreach { p =>
-      lines += s"""{"remove":{"path":${jsonStr(encodePath(p))},""" +
-        s""""deletionTimestamp":${System.currentTimeMillis},""" +
-        """"dataChange":true}}"""
-    }
-    val (addsRt, rtLines) = assignRowIds(
-      rowTrackingActive(base.minWriterVersion, base.writerFeatures),
-      base.domains, base.adds, next, adds)
-    rtLines.foreach(lines += _)
-    addsRt.foreach(a => lines += addLine(a))
-    cdcAdds.foreach(a => lines += cdcLine(a))
-    try io(root).putIfAbsent(commitPath(root, next),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(next)
-    }
-    if (uniformEnabled(base.configuration)) syncUniformConverging(spark, root)
-    next
+    publish(spark, root, Some(base), operation, base.configuration,
+      metaRestate.toSeq, removedPaths, adds, cdcAdds)
   }
 
   /** OPTIMIZE-style compaction of the Delta table at `root`: rewrite
@@ -2417,37 +2406,18 @@ object DeltaLog {
     }
     val adds = stageAndLand(spark, packed, root, snap.partitionColumns,
       typeOverrides = collatedTypesOf(snap.schema))
-    val next = snap.version + 1
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
-    lines += commitInfoLine(root, "OPTIMIZE", snap0.configuration,
-      snap.version)
-    if (mintNames)
-      lines += metaDataLine(snap0.schema.json, snap0.partitionColumns,
+    val header =
+      if (!mintNames) Nil
+      else Seq(metaDataLine(snap0.schema.json, snap0.partitionColumns,
         snap0.configuration +
           ("delta.rowTracking.materializedRowIdColumnName" -> matRid) +
           ("delta.rowTracking.materializedRowCommitVersionColumnName" ->
             matVer),
-        Option(snap0.tableId).filter(_.nonEmpty))
-    snap.adds.foreach { a =>
-      lines += s"""{"remove":{"path":${jsonStr(encodePath(a.path))},""" +
-        s""""deletionTimestamp":${System.currentTimeMillis},""" +
-        """"dataChange":false}}"""
-    }
+        Option(snap0.tableId).filter(_.nonEmpty)))
     // fresh blocks for the rewritten files (unpreserved row
     // tracking — the compaction shuffles rows across files)
-    val (addsRt, rtLines) = assignRowIds(
-      rowTrackingActive(snap.minWriterVersion, snap.writerFeatures),
-      snap.domains, snap.adds, next, adds)
-    rtLines.foreach(lines += _)
-    addsRt.foreach(a => lines += addLine(a, dataChange = false))
-    try io(root).putIfAbsent(commitPath(root, next),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(next)
-    }
-    if (uniformEnabled(snap.configuration)) syncUniformConverging(spark, root)
-    next
+    publish(spark, root, Some(snap), "OPTIMIZE", snap0.configuration,
+      header, snap.adds.map(_.path), adds, dataChange = false)
   }
 
   /** RESTORE the Delta table to `toVersion` — delta-spark's
@@ -2498,8 +2468,6 @@ object DeltaLog {
         s"${gone.take(3).map(_.path).mkString(", ")} were vacuumed")
     val nowPaths = now.adds.map(_.path).toSet
     val targetPaths = target.adds.map(_.path).toSet
-    val next = now.version + 1
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
     // ICT PROVENANCE through the restore: the target's configuration
     // travels, but its enablement marks describe the TARGET's moment
     // in history — restating them verbatim can declare versions in a
@@ -2523,20 +2491,13 @@ object DeltaLog {
         target.configuration -- ictMarks ++
           now.configuration.view.filterKeys(ictMarks.contains).toMap
       else target.configuration +
-        ("delta.inCommitTimestampEnablementVersion" -> next.toString) +
+        ("delta.inCommitTimestampEnablementVersion" ->
+          (now.version + 1).toString) +
         ("delta.inCommitTimestampEnablementTimestamp" ->
           freshIct.get.toString)
-    lines += (freshIct match {
-      case Some(t) =>
-        s"""{"commitInfo":{"inCommitTimestamp":$t,"timestamp":$t,""" +
-          s""""operation":"RESTORE"}}"""
-      case None =>
-        s"""{"commitInfo":{"timestamp":${System.currentTimeMillis},""" +
-          s""""operation":"RESTORE"}}"""
-    })
     // the target's metaData travels with the restore (schema and
     // configuration may have drifted since; the table id is forever)
-    lines += metaDataLine(target.schema.json, target.partitionColumns,
+    val meta = metaDataLine(target.schema.json, target.partitionColumns,
       restoredConf,
       Option(target.tableId).filter(_.nonEmpty)
         .orElse(Option(now.tableId).filter(_.nonEmpty)))
@@ -2545,48 +2506,26 @@ object DeltaLog {
     // EXCEPT delta.rowTracking: the row-id high-water mark is
     // monotonic over the whole history (restoring an older, lower
     // mark would let future commits reassign already-issued blocks)
-    target.domains.filterNot(_._2._2).toSeq.sortBy(_._1).foreach {
-      case ("delta.rowTracking", _) => ()
-      case (d, (conf, _)) if !now.domains.get(d).contains((conf, false)) =>
-        lines += s"""{"domainMetadata":{"domain":${jsonStr(d)},""" +
-          s""""configuration":${jsonStr(conf)},"removed":false}}"""
-      case _ => ()
-    }
-    now.domains.filterNot(_._2._2).keys.toSeq.sorted
+    val drifted = target.domains.filterNot(_._2._2).toSeq.sortBy(_._1)
+      .collect { case (d, (conf, _)) if d != "delta.rowTracking" &&
+          !now.domains.get(d).contains((conf, false)) =>
+        domainLine(d, conf)
+      }
+    val born = now.domains.filterNot(_._2._2).keys.toSeq.sorted
       .filterNot(d => target.domains.get(d).exists(!_._2))
       .filterNot(_ == "delta.rowTracking")
-      .foreach { d =>
-        lines += s"""{"domainMetadata":{"domain":${jsonStr(d)},""" +
-          s""""configuration":"","removed":true}}"""
-      }
-    now.adds.filterNot(a => targetPaths(a.path)).foreach { a =>
-      lines += s"""{"remove":{"path":${jsonStr(encodePath(a.path))},""" +
-        s""""deletionTimestamp":${System.currentTimeMillis},""" +
-        """"dataChange":true}}"""
-    }
+      .map(domainLine(_, "", removed = true))
     // re-adds keep their original blocks; a pre-feature file with no
-    // block gets a fresh one (the same file-recommit rule as DVs)
-    val (reAddsRt, rtLines) = assignRowIds(
-      rowTrackingActive(now.minWriterVersion, now.writerFeatures),
-      now.domains, now.adds, next,
-      target.adds.filterNot(a => nowPaths(a.path)))
-    rtLines.foreach(lines += _)
-    reAddsRt.foreach(a => lines += addLine(a))
-    try io(root).putIfAbsent(commitPath(root, next),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(next)
-    }
-    // the restored state mirrors to the Iceberg tree too (the
-    // TARGET's configuration governs — it travels with the restore);
-    // a restore that DISABLES UniForm still syncs once so the mirror
-    // freezes at the restored state, not the pre-restore one
-    if (uniformEnabled(target.configuration))
-      syncUniformConverging(spark, root)
-    else if (finalMirrorSync)
-      syncUniformConverging(spark, root, evenIfDisabled = true)
-    next
+    // block gets a fresh one (the same file-recommit rule as DVs).
+    // The restored state mirrors to the Iceberg tree too (the TARGET's
+    // configuration governs — it travels with the restore); a restore
+    // that DISABLES UniForm still syncs once so the mirror freezes at
+    // the restored state, not the pre-restore one
+    publish(spark, root, Some(now), "RESTORE", restoredConf,
+      (meta +: drifted) ++ born,
+      now.adds.map(_.path).filterNot(targetPaths),
+      target.adds.filterNot(a => nowPaths(a.path)),
+      ict = freshIct, mirrorEvenIfDisabled = finalMirrorSync)
   }
 
   /** SHALLOW CLONE — delta-spark's zero-copy table copy: `dst`
@@ -2609,33 +2548,25 @@ object DeltaLog {
     // ICT enablement provenance refers to the SOURCE's history — the
     // clone's history starts at 0, so the stale marks drop and the
     // property (if on) governs from the clone's own commit 0, which
-    // commitInfoLine stamps accordingly
+    // [[publish]] stamps accordingly
     val cloneConf = snap.configuration -
       "delta.inCommitTimestampEnablementVersion" -
       "delta.inCommitTimestampEnablementTimestamp"
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
-    lines += commitInfoLine(dst, "CLONE", cloneConf, -1L)
     // the clone CARRIES the source's protocol — cloning a
     // feature-bearing table (deletion vectors, column mapping, row
     // tracking) to (1,2) would let feature-unaware writers corrupt
     // the copy, and DV descriptors would be unreadable to conformant
     // readers that trust the stated protocol
-    lines += protocolLine(snap.minReaderVersion, snap.minWriterVersion,
-      snap.readerFeatures, snap.writerFeatures)
-    lines += s"""{"metaData":{"id":${jsonStr(java.util.UUID.randomUUID().toString)},""" +
-      s""""format":{"provider":"parquet","options":{}},""" +
-      s""""schemaString":${jsonStr(snap.schema.json)},""" +
-      s""""partitionColumns":[${snap.partitionColumns.map(jsonStr).mkString(",")}],""" +
-      s""""configuration":{${cloneConf.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }.mkString(",")}}}}"""
-    // live domain metadata travels with the clone (a clustered or
-    // row-tracked source's domains are part of its contract)
-    snap.domains.filterNot(_._2._2).toSeq.sortBy(_._1).foreach {
-      case (d, (conf, _)) =>
-        lines += s"""{"domainMetadata":{"domain":${jsonStr(d)},""" +
-          s""""configuration":${jsonStr(conf)},"removed":false}}"""
-    }
-    snap.adds.foreach { a =>
+    val header = Seq(
+      protocolLine(snap.minReaderVersion, snap.minWriterVersion,
+        snap.readerFeatures, snap.writerFeatures),
+      metaDataLine(snap.schema.json, snap.partitionColumns, cloneConf)) ++
+      // live domain metadata travels with the clone (a clustered or
+      // row-tracked source's domains are part of its contract)
+      snap.domains.filterNot(_._2._2).toSeq.sortBy(_._1).map {
+        case (d, (conf, _)) => domainLine(d, conf)
+      }
+    val adds = snap.adds.map { a =>
       val abs = {
         val p = Paths.get(a.path)
         (if (p.isAbsolute) p else srcRoot.resolve(a.path)).normalize.toString
@@ -2650,15 +2581,9 @@ object DeltaLog {
           case None => d
         }
       }
-      lines += addLine(a.copy(path = abs, deletionVector = dv))
+      a.copy(path = abs, deletionVector = dv)
     }
-    try io(dst).putIfAbsent(commitPath(dst, 0L),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(0L)
-    }
-    0L
+    publish(spark, dst, None, "CLONE", cloneConf, header, adds = adds)
   }
 
   /** CONVERT an Iceberg table to Delta, ZERO-COPY (the xtable shape,
@@ -2725,23 +2650,12 @@ object DeltaLog {
         s""""maxValues":{${maxs.mkString(",")}},""" +
         s""""nullCount":{${nulls.mkString(",")}}}"""
     }
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
-    lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis},""" +
-      s""""operation":"CONVERT"}}"""
-    lines += protocolLine(1, 2, Set.empty, Set.empty)
-    lines += metaDataLine(snap.schema.json, Nil, Map.empty)
-    snap.files.sortBy(_.path).foreach { f =>
-      lines += addLine(DeltaAdd(
+    publish(spark, dst, None, "CONVERT", Map.empty,
+      Seq(protocolLine(1, 2, Set.empty, Set.empty),
+        metaDataLine(snap.schema.json, Nil, Map.empty)),
+      adds = snap.files.sortBy(_.path).map(f => DeltaAdd(
         Paths.get(f.path).toAbsolutePath.normalize.toString,
-        Map.empty, Set.empty, f.sizeBytes, Some(statsJsonOf(f))))
-    }
-    try io(dst).putIfAbsent(commitPath(dst, 0L),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(0L)
-    }
-    0L
+        Map.empty, Set.empty, f.sizeBytes, Some(statsJsonOf(f)))))
   }
 
   /** The table's commit history, newest first — DESCRIBE HISTORY's
@@ -3251,31 +3165,9 @@ object DeltaLog {
       columnMappingOf(root, newSchema, snap.configuration),
       carriesDv = snap.adds.exists(_.deletionVector.isDefined),
       "RENAME COLUMN")
-    val next = snap.version + 1
-    val ict: Option[Long] =
-      if (ictEnabled(snap.configuration))
-        Some(nextIct(root, snap.version))
-      else None
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
-    lines += (ict match {
-      case Some(t) =>
-        s"""{"commitInfo":{"inCommitTimestamp":$t,"timestamp":$t,""" +
-          s""""operation":"RENAME COLUMN"}}"""
-      case None =>
-        s"""{"commitInfo":{"timestamp":${System.currentTimeMillis},""" +
-          s""""operation":"RENAME COLUMN"}}"""
-    })
-    lines += metaDataLine(newSchema.json, snap.partitionColumns,
-      snap.configuration, Option(snap.tableId).filter(_.nonEmpty))
-    try io(root).putIfAbsent(commitPath(root, next),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(next)
-    }
-    if (uniformEnabled(snap.configuration))
-      syncUniformConverging(spark, root)
-    next
+    publish(spark, root, Some(snap), "RENAME COLUMN", snap.configuration,
+      Seq(metaDataLine(newSchema.json, snap.partitionColumns,
+        snap.configuration, Option(snap.tableId).filter(_.nonEmpty))))
   }
 
   /** Restate the table's metaData with `props` merged into its
@@ -3354,17 +3246,6 @@ object DeltaLog {
           "requires backfilling id blocks for every live file — " +
           "not supported; create the table with " +
           "delta.enableRowTracking=true instead")
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
-    // commitInfo FIRST (the ICT placement rule); the stamp reuses the
-    // enablement-provenance value so the two marks agree exactly
-    lines += (ictStamp match {
-      case Some(t) =>
-        s"""{"commitInfo":{"inCommitTimestamp":$t,"timestamp":$t,""" +
-          s""""operation":"SET TBLPROPERTIES"}}"""
-      case None =>
-        s"""{"commitInfo":{"timestamp":${System.currentTimeMillis},""" +
-          s""""operation":"SET TBLPROPERTIES"}}"""
-    })
     // property-implied protocol upgrades land in the SAME commit, as
     // ONE combined protocol line; never downgrade anything:
     //  - deletion vectors → (3,7) + feature (legacy-implied features
@@ -3411,45 +3292,44 @@ object DeltaLog {
     val wantCheckFeat = newChecks.nonEmpty &&
       (targetW >= 7 || snap.minWriterVersion >= 7) &&
       !snap.writerFeatures.contains("checkConstraints")
-    if (wantDv || wantV2cp || wantCdfFeat || wantCheckFeat ||
-      wantIctFeat || wantUniFeat || targetW != snap.minWriterVersion) {
-      val w = math.max(targetW, snap.minWriterVersion)
-      val r = if (wantDv || wantV2cp) 3 else snap.minReaderVersion
-      val rf = snap.readerFeatures ++
-        (if (wantDv || wantV2cp)
-          legacyReaderFeatures(snap.minReaderVersion)
-         else Set.empty[String]) ++
-        (if (wantDv) Set("deletionVectors") else Set.empty[String]) ++
-        (if (wantV2cp) Set("v2Checkpoint") else Set.empty[String])
-      val wf = snap.writerFeatures ++
-        (if (w >= 7) legacyWriterFeatures(snap.minWriterVersion)
-         else Set.empty[String]) ++
-        (if (wantDv) Set("deletionVectors") else Set.empty[String]) ++
-        (if (wantV2cp) Set("v2Checkpoint") else Set.empty[String]) ++
-        (if (wantCdfFeat || (w >= 7 && merged
-          .get("delta.enableChangeDataFeed").contains("true")))
-          Set("changeDataFeed") else Set.empty[String]) ++
-        (if (wantCheckFeat || (w >= 7 &&
-          merged.keys.exists(_.startsWith("delta.constraints."))))
-          Set("checkConstraints") else Set.empty[String]) ++
-        (if (wantIctFeat || (w >= 7 && ictEnabled(merged)))
-          Set("inCommitTimestamp") else Set.empty[String]) ++
-        (if (wantUniFeat || (w >= 7 && uniformEnabled(merged)))
-          Set("icebergCompatV2") else Set.empty[String])
-      lines += protocolLine(r, w, rf, wf)
-    }
-    lines += metaDataLine(snap.schema.json, snap.partitionColumns,
-      merged, Option(snap.tableId).filter(_.nonEmpty))
-    try io(root).putIfAbsent(commitPath(root, next),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(next)
-    }
-    // enabling UniForm is the moment the Iceberg tree materializes
-    // (and any enabled table's property change keeps it in sync)
-    if (uniformEnabled(merged)) syncUniformConverging(spark, root)
-    next
+    val protocol =
+      if (!(wantDv || wantV2cp || wantCdfFeat || wantCheckFeat ||
+        wantIctFeat || wantUniFeat || targetW != snap.minWriterVersion))
+        None
+      else {
+        val w = math.max(targetW, snap.minWriterVersion)
+        val r = if (wantDv || wantV2cp) 3 else snap.minReaderVersion
+        val rf = snap.readerFeatures ++
+          (if (wantDv || wantV2cp)
+            legacyReaderFeatures(snap.minReaderVersion)
+           else Set.empty[String]) ++
+          (if (wantDv) Set("deletionVectors") else Set.empty[String]) ++
+          (if (wantV2cp) Set("v2Checkpoint") else Set.empty[String])
+        val wf = snap.writerFeatures ++
+          (if (w >= 7) legacyWriterFeatures(snap.minWriterVersion)
+           else Set.empty[String]) ++
+          (if (wantDv) Set("deletionVectors") else Set.empty[String]) ++
+          (if (wantV2cp) Set("v2Checkpoint") else Set.empty[String]) ++
+          (if (wantCdfFeat || (w >= 7 && merged
+            .get("delta.enableChangeDataFeed").contains("true")))
+            Set("changeDataFeed") else Set.empty[String]) ++
+          (if (wantCheckFeat || (w >= 7 &&
+            merged.keys.exists(_.startsWith("delta.constraints."))))
+            Set("checkConstraints") else Set.empty[String]) ++
+          (if (wantIctFeat || (w >= 7 && ictEnabled(merged)))
+            Set("inCommitTimestamp") else Set.empty[String]) ++
+          (if (wantUniFeat || (w >= 7 && uniformEnabled(merged)))
+            Set("icebergCompatV2") else Set.empty[String])
+        Some(protocolLine(r, w, rf, wf))
+      }
+    // the commitInfo stamp reuses the enablement-provenance value so
+    // the two marks agree exactly; enabling UniForm is the moment the
+    // Iceberg tree materializes (and any enabled table's property
+    // change keeps it in sync)
+    publish(spark, root, Some(snap), "SET TBLPROPERTIES", merged,
+      protocol.toSeq :+ metaDataLine(snap.schema.json,
+        snap.partitionColumns, merged, Option(snap.tableId).filter(_.nonEmpty)),
+      ict = ictStamp)
   }
 
   /** Commit a `domainMetadata` action — the Delta protocol's named
@@ -3469,27 +3349,17 @@ object DeltaLog {
     val snap = snapshot(spark, root)
     gateWriterObligations(snap, "SET DOMAIN METADATA",
       removesData = false)
-    val next = snap.version + 1
-    val lines = scala.collection.mutable.ListBuffer.empty[String]
-    lines += commitInfoLine(root, "SET DOMAIN METADATA",
-      snap.configuration, snap.version)
-    if (!(snap.minWriterVersion >= 7 &&
-        snap.writerFeatures.contains("domainMetadata")))
-      lines += protocolLine(snap.minReaderVersion, 7,
+    val protocol =
+      if (snap.minWriterVersion >= 7 &&
+        snap.writerFeatures.contains("domainMetadata")) None
+      else Some(protocolLine(snap.minReaderVersion, 7,
         snap.readerFeatures,
         snap.writerFeatures ++
           legacyWriterFeatures(snap.minWriterVersion) ++
-          Set("domainMetadata"))
-    lines += s"""{"domainMetadata":{"domain":${jsonStr(domain)},""" +
-      s""""configuration":${jsonStr(configuration)},""" +
-      s""""removed":$removed}}"""
-    try io(root).putIfAbsent(commitPath(root, next),
-      lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new VersionedTable.ConcurrentCommitException(next)
-    }
-    next
+          Set("domainMetadata")))
+    publish(spark, root, Some(snap), "SET DOMAIN METADATA",
+      snap.configuration,
+      protocol.toSeq :+ domainLine(domain, configuration, removed))
   }
 
   /** CHANGE DATA FEED rows of the commits in `(afterVersion,
@@ -3695,26 +3565,30 @@ object DeltaLog {
           StructField("add", addSchema),
           StructField("remove", StructType(Seq(
             StructField("path", StringType))))))
-        val scStaging =
-          Files.createTempDirectory("delta_cp_sc_").resolve("out")
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            addRows.map(r => Row(r.get(2), null)), nSidecars),
-          scSchema).write.parquet(scStaging.toString)
-        val dir = logDir(root).resolve("_sidecars")
-        Files.createDirectories(dir)
-        val stream = Files.list(scStaging)
-        val parts =
-          try stream.iterator().asScala
-            .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-              !p.getFileName.toString.startsWith("."))
-            .toSeq.sortBy(_.getFileName.toString)
-          finally stream.close() // fd hygiene, the DataStore convention
-        parts.map { p =>
-          val name = s"${java.util.UUID.randomUUID()}.parquet"
-          Files.move(p, dir.resolve(name))
-          name -> Files.size(dir.resolve(name))
-        }
+        // the staging dir goes whether the write and moves succeed or
+        // fail (the StagedFiles.land rule)
+        val scTmp = Files.createTempDirectory("delta_cp_sc_")
+        try {
+          val scStaging = scTmp.resolve("out")
+          spark.createDataFrame(
+            spark.sparkContext.parallelize(
+              addRows.map(r => Row(r.get(2), null)), nSidecars),
+            scSchema).write.parquet(scStaging.toString)
+          val dir = logDir(root).resolve("_sidecars")
+          Files.createDirectories(dir)
+          val stream = Files.list(scStaging)
+          val parts =
+            try stream.iterator().asScala
+              .filter(p => p.getFileName.toString.endsWith(".parquet") &&
+                !p.getFileName.toString.startsWith("."))
+              .toSeq.sortBy(_.getFileName.toString)
+            finally stream.close() // fd hygiene, the DataStore convention
+          parts.map { p =>
+            val name = s"${java.util.UUID.randomUUID()}.parquet"
+            Files.move(p, dir.resolve(name))
+            name -> Files.size(dir.resolve(name))
+          }
+        } finally PosixDataStore.deleteTree(scTmp)
       }
     val baseRows = protoRow +: metaRow +:
       ((if (useSidecars) Nil else addRows) ++ txnRows ++ domainRows)
@@ -3741,22 +3615,25 @@ object DeltaLog {
       }
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), cpSchemaFinal)
-    val staging = Files.createTempDirectory("delta_cp_").resolve("out")
-    df.coalesce(1).write.parquet(staging.toString)
-    val cpStream = Files.list(staging)
-    val part =
-      try cpStream.iterator().asScala
-        .find(p => p.getFileName.toString.endsWith(".parquet") &&
-          !p.getFileName.toString.startsWith("."))
-        .getOrElse(throw new IllegalStateException(
-          "checkpoint write produced no file"))
-      finally cpStream.close()
-    val dst = logDir(root).resolve(
-      if (v2Mode)
-        f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
-      else f"$v%020d.checkpoint.parquet")
-    Files.move(part, dst,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val cpTmp = Files.createTempDirectory("delta_cp_")
+    try {
+      val staging = cpTmp.resolve("out")
+      df.coalesce(1).write.parquet(staging.toString)
+      val cpStream = Files.list(staging)
+      val part =
+        try cpStream.iterator().asScala
+          .find(p => p.getFileName.toString.endsWith(".parquet") &&
+            !p.getFileName.toString.startsWith("."))
+          .getOrElse(throw new IllegalStateException(
+            "checkpoint write produced no file"))
+        finally cpStream.close()
+      val dst = logDir(root).resolve(
+        if (v2Mode)
+          f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
+        else f"$v%020d.checkpoint.parquet")
+      Files.move(part, dst,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally PosixDataStore.deleteTree(cpTmp)
     // size is the checkpoint's ACTION count — in v2 mode that includes
     // the checkpointMetadata row (and with sidecars, the add actions
     // living IN the sidecar files); derive from what was actually

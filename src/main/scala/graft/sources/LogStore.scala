@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
   * Delta's `LogStore` / commit coordinator).
   *
   * Scope: ONLY the log-protocol artifacts under `_graft_log/` —
-  * manifests, checkpoints, and refs (tags/branches). Data files are
+  * manifests, checkpoints, and refs (tags/branches) — and the Delta
+  * log reads, commits and cleanup deletes under `_delta_log/`
+  * ([[DeltaLog]] resolves the same registry). Data files are
   * out of scope on purpose: the parquet payload is written and read
   * through Spark's own Hadoop FileSystem layer (which already speaks
   * S3/GCS/ABFS), and the engine's own maintenance I/O on data files

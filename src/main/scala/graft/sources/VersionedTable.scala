@@ -248,7 +248,7 @@ object VersionedTable {
   def unregisterLogStore(rootPrefix: String): Unit =
     logStores.remove(rootPrefix)
 
-  private def logIO(root: String): LogStore =
+  private[sources] def logIO(root: String): LogStore =
     if (logStores.isEmpty) PosixLogStore
     else {
       var best: String = null

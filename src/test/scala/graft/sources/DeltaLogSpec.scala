@@ -1448,6 +1448,16 @@ class DeltaLogSpec extends SparkSpecBase {
       IcebergMeta.expireSnapshots(root, System.currentTimeMillis + 1000)
     }
     assert(eExpire.getMessage.contains("VACUUM"))
+    // a domainMetadata commit changes no file: no Iceberg commit
+    val vDomain = IcebergMeta.latestMetadataVersion(root)
+    DeltaLog.setDomainMetadata(spark, root, "app.owner", "etl")
+    assert(IcebergMeta.latestMetadataVersion(root) === vDomain)
+    // a shallow clone carries UniForm, so its commit 0 builds the
+    // clone's own mirror over the source's files
+    val clone = tmp() + "/clone"
+    DeltaLog.cloneShallow(spark, root, clone)
+    assert(spark.read.format("iceberg-meta").load(clone).select("k")
+      .as[Long].collect().toSeq.sorted === (0L until 15L).filterNot(_ == 1L))
   }
 
   test("UniForm: concurrent Delta writers converge the mirror") {
@@ -1854,6 +1864,140 @@ class DeltaLogSpec extends SparkSpecBase {
       .map(_.group(1)) === Some("2"))
   }
 
+  /** The action key of each line of commit `v` at `root`, with a run
+    * of one key collapsed to one entry (`add, add` reads `add`). */
+  private def actionKeys(root: String, v: Long): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Files.readAllLines(commitFile(root, v)).asScala.toSeq
+      .filter(_.nonEmpty).map(l => mapper.readTree(l).fieldNames().next())
+      .foldLeft(Vector.empty[String]) { (acc, k) =>
+        if (acc.lastOption.contains(k)) acc else acc :+ k
+      }
+  }
+
+  test("every commit kind leads with commitInfo, keeps its action " +
+    "order and a monotonic ICT") {
+    val ict = Map("delta.enableInCommitTimestamps" -> "true")
+    val a = tmp()
+    val ow = tmp()
+    val mapped = tmp()
+    val clone = tmp() + "/clone"
+    val ice = tmp() + "/ice"
+    val conv = tmp() + "/conv"
+    IcebergMeta.writeFixture(spark.range(0, 4).toDF("k").coalesce(1), ice)
+    def rows(lo: Long, hi: Long) =
+      spark.range(lo, hi).toDF("k").withColumn("v", col("k") * 10)
+        .coalesce(1)
+    // (commit kind, the call, the table it commits to, the expected
+    // action keys); on `a`, row tracking, deletion vectors and the
+    // change feed put a domainMetadata, DV and cdc line in the
+    // commits that carry them
+    val kinds: Seq[(String, () => Long, String, Seq[String])] = Seq(
+      ("commit: create", () => DeltaLog.commit(rows(0, 10), a,
+        properties = ict ++ Map("delta.enableRowTracking" -> "true",
+          "delta.enableDeletionVectors" -> "true",
+          "delta.enableChangeDataFeed" -> "true")), a,
+        Seq("commitInfo", "protocol", "metaData", "domainMetadata", "add")),
+      ("commit: append with txn", () => DeltaLog.commit(rows(10, 20), a,
+        txn = Some(("app", 1L))), a,
+        Seq("commitInfo", "txn", "domainMetadata", "add")),
+      ("dvRemoveRows: DV delete", () =>
+        DeltaLog.deleteWhere(spark, a, col("k") === 3), a,
+        Seq("commitInfo", "remove", "add", "cdc")),
+      ("setConfiguration", () => DeltaLog.setConfiguration(spark, a,
+        Map("delta.enableDeletionVectors" -> "false")), a,
+        Seq("commitInfo", "metaData")),
+      ("replaceFiles: copy-on-write delete", () =>
+        DeltaLog.deleteWhere(spark, a, col("k") === 12), a,
+        Seq("commitInfo", "remove", "domainMetadata", "add", "cdc")),
+      ("compact", () => DeltaLog.compact(spark, a), a,
+        Seq("commitInfo", "metaData", "remove", "domainMetadata", "add")),
+      ("setDomainMetadata", () => DeltaLog.setDomainMetadata(spark, a,
+        "app.owner", "etl"), a,
+        Seq("commitInfo", "protocol", "domainMetadata")),
+      ("restore", () => DeltaLog.restore(spark, a, 1L), a,
+        Seq("commitInfo", "metaData", "domainMetadata", "remove", "add")),
+      ("cloneShallow", () => DeltaLog.cloneShallow(spark, a, clone), clone,
+        Seq("commitInfo", "protocol", "metaData", "domainMetadata", "add")),
+      ("commit: create plain", () => DeltaLog.commit(rows(0, 4), ow,
+        properties = ict), ow,
+        Seq("commitInfo", "protocol", "metaData", "add")),
+      // the caller's txn is a header line: it precedes the removes
+      ("commit: overwrite with txn", () => DeltaLog.commit(rows(4, 8), ow,
+        mode = "overwrite", txn = Some(("app", 1L))), ow,
+        Seq("commitInfo", "protocol", "metaData", "txn", "remove", "add")),
+      ("commit: create mapped", () => DeltaLog.commit(rows(0, 4), mapped,
+        properties = ict + ("delta.columnMapping.mode" -> "name")), mapped,
+        Seq("commitInfo", "protocol", "metaData", "add")),
+      ("renameColumn", () => DeltaLog.renameColumn(spark, mapped, "v",
+        "score"), mapped, Seq("commitInfo", "metaData")),
+      ("importIceberg", () => DeltaLog.importIceberg(spark, ice, conv), conv,
+        Seq("commitInfo", "protocol", "metaData", "add")))
+    kinds.foreach { case (kind, op, root, expected) =>
+      val before = DeltaLog.latestVersion(root)
+      val v = op()
+      assert(v === before + 1, s"$kind committed v$v after v$before")
+      assert(actionKeys(root, v) === expected, kind)
+    }
+    assert(spark.read.format("delta-log").load(a).count() === 20)
+    assert(spark.read.format("delta-log").load(ow).count() === 4)
+    assert(spark.read.format("delta-log").load(mapped).columns.toSeq ===
+      Seq("k", "score"))
+    // every version of an ICT table carries a strictly increasing stamp
+    Seq(a, ow, mapped, clone).foreach { root =>
+      val icts = (0L to DeltaLog.latestVersion(root))
+        .map(v => DeltaLog.ictOf(root, v))
+      assert(icts.forall(_.isDefined), s"$root: $icts")
+      assert(icts.flatten.sliding(2).forall {
+        case Seq(x, y) => x < y
+        case _ => true
+      }, s"$root: $icts")
+    }
+  }
+
+  test("DELETE, UPDATE and MERGE planned on a stale snapshot lose the " +
+    "commit race") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    spark.udf.register("held_dml_gate", (_: Long) => HeldDml.pass())
+    val parse = spark.sessionState.sqlParser.parseExpression _
+    def gate(on: Boolean, c: String) = if (on) s"held_dml_gate($c) AND " else ""
+    // (statement, run it on key k — held at its gate when asked, the
+    // table after it ran alone on key 2): rows are (k, k * 10), k < 10
+    val base = (0L until 10L).map(k => (k, k * 10))
+    val statements: Seq[(String, (String, Long, Boolean) => Long,
+        Seq[(Long, Long)])] = Seq(
+      ("DELETE", (root, k, held) => DeltaLog.deleteWhere(spark, root,
+        expr(s"${gate(held, "k")}k = $k")), base.filterNot(_._1 == 2L)),
+      ("UPDATE", (root, k, held) => DeltaLog.updateWhere(spark, root,
+        Seq("v" -> parse("-1")), Some(parse(s"${gate(held, "k")}k = $k"))),
+        base.map { case (k, v) => (k, if (k == 2L) -1L else v) }),
+      ("MERGE", (root, k, held) => DeltaLog.mergeConditional(spark, root,
+        spark.range(k, k + 1).toDF("sk")
+          .filter(expr(s"${gate(held, "sk")}true")),
+        "k", "sk", matched = Seq(VersionedTable.MergeUpdate(None,
+          Map("v" -> lit(-1L))))),
+        base.map { case (k, v) => (k, if (k == 2L) -1L else v) }))
+    statements.foreach { case (name, run, model) =>
+      val root = tmp()
+      DeltaLog.commit(base.toDF("k", "v").coalesce(1), root)
+      HeldDml.arm()
+      val held = Future(run(root, 1L, true))(ExecutionContext.global)
+      try {
+        assert(HeldDml.awaitEntered(),
+          s"$name: the held statement never reached its gate")
+        assert(run(root, 2L, false) === 1L, name)
+      } finally HeldDml.open()
+      val outcome = scala.util.Try(Await.result(held, 120.seconds))
+      assert(spark.read.format("delta-log").load(root).as[(Long, Long)]
+        .collect().toSeq.sorted === model, name)
+      assert(outcome.failed.toOption.exists(
+        _.isInstanceOf[VersionedTable.ConcurrentCommitException]),
+        s"$name: the held statement returned $outcome")
+    }
+  }
+
   test("a Delta commit and an Iceberg append leave no staging " +
     "directory behind") {
     import scala.jdk.CollectionConverters._
@@ -1865,14 +2009,56 @@ class DeltaLogSpec extends SparkSpecBase {
     }
     val delta = tmp()
     val ice = tmp() + "/t"
+    val sidecar = tmp()
     IcebergMeta.writeFixture(Seq((0L, "a")).toDF("k", "s"), ice)
-    val before = tmpDirs()
+    DeltaLog.commit(Seq(0L).toDF("k"), sidecar,
+      properties = Map("delta.checkpointPolicy" -> "v2"))
     // more tasks than rows: the writers also stage zero-row parts
-    DeltaLog.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "s")
-      .repartition(4), delta)
-    IcebergMeta.append(Seq((1L, "b")).toDF("k", "s").repartition(4), ice)
-    assert(tmpDirs() -- before === Set.empty[String])
+    val inputs: Seq[(String, () => Unit)] = Seq(
+      "Delta commit" -> (() => DeltaLog.commit(
+        Seq((1L, "a"), (2L, "b")).toDF("k", "s").repartition(4), delta)),
+      "Iceberg append" -> (() => IcebergMeta.append(
+        Seq((1L, "b")).toDF("k", "s").repartition(4), ice)),
+      "Delta v1 checkpoint" -> (() => DeltaLog.checkpoint(spark, delta)),
+      "Delta sidecar checkpoint" -> (() =>
+        DeltaLog.checkpoint(spark, sidecar, sidecarFiles = 2)))
+    inputs.foreach { case (name, op) =>
+      val before = tmpDirs()
+      op()
+      assert(tmpDirs() -- before === Set.empty[String], name)
+    }
     assert(spark.read.format("delta-log").load(delta).count() === 2)
     assert(spark.read.format("iceberg-meta").load(ice).count() === 2)
+    assert(spark.read.format("delta-log").load(sidecar).count() === 1)
   }
+}
+
+/** The gate the stale-snapshot DML spec holds a statement at: after
+  * [[arm]], the first call of [[pass]] (a row of the statement's first
+  * Spark job) signals [[awaitEntered]] and waits for [[open]]; every
+  * other call passes at once. Both waits are bounded, so a regression
+  * fails the spec instead of hanging it. */
+object HeldDml {
+  import java.util.concurrent.{CountDownLatch, TimeUnit}
+  private val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  @volatile private var entered = new CountDownLatch(0)
+  @volatile private var release = new CountDownLatch(0)
+
+  def arm(): Unit = {
+    entered = new CountDownLatch(1)
+    release = new CountDownLatch(1)
+    armed.set(true)
+  }
+
+  def pass(): Boolean = {
+    if (armed.compareAndSet(true, false)) {
+      entered.countDown()
+      release.await(60, TimeUnit.SECONDS)
+    }
+    true
+  }
+
+  def awaitEntered(): Boolean = entered.await(60, TimeUnit.SECONDS)
+
+  def open(): Unit = release.countDown()
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * run against a deliberately LINK- and RENAME-FREE store (conditional
   * put only — the S3/GCS publish shape), and every log artifact must be
   * created THROUGH the interface (a recording wrapper proves no code
-  * path writes `_graft_log/` behind the seam's back). */
+  * path writes `_graft_log/`, or a `_delta_log/` commit, behind the
+  * seam's back). */
 class LogStoreSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -81,6 +82,33 @@ class LogStoreSpec extends SparkSpecBase {
       assert(onDisk.subsetOf(putSet),
         s"log files written OUTSIDE the LogStore seam: " +
           s"${(onDisk -- putSet).mkString(", ")}")
+    }
+  }
+
+  test("every Delta commit publishes its log version through the store") {
+    withStore { (root, store) =>
+      DeltaLog.commit(spark.range(0, 8).toDF("k").coalesce(1), root)
+      DeltaLog.commit(spark.range(8, 16).toDF("k").coalesce(1), root)
+      DeltaLog.deleteWhere(spark, root, col("k") === 3)
+      DeltaLog.compact(spark, root)
+      DeltaLog.setConfiguration(spark, root, Map("owner" -> "etl"))
+      DeltaLog.setDomainMetadata(spark, root, "app.owner", "etl")
+      assert(DeltaLog.restore(spark, root, 1L) === 6L)
+      assert(spark.read.format("delta-log").load(root).count() === 16)
+      import scala.jdk.CollectionConverters._
+      val log = java.nio.file.Paths.get(root, "_delta_log")
+      val commits = {
+        val s = java.nio.file.Files.list(log)
+        try s.iterator().asScala.map(_.toString)
+          .filter(_.matches(".*/\\d{20}\\.json")).toSet
+        finally s.close()
+      }
+      assert(commits === (0 to 6).map(v =>
+        log.resolve(f"$v%020d.json").toString).toSet)
+      val putSet = store.puts.asScala.toSet
+      assert(commits.subsetOf(putSet),
+        s"commits written OUTSIDE the LogStore seam: " +
+          s"${(commits -- putSet).toSeq.sorted.mkString(", ")}")
     }
   }
 
