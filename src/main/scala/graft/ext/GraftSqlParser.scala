@@ -217,10 +217,10 @@ object GraftSqlParser {
         cols.split(",").map(_.trim).toSeq))
       case Trunc(p, below) => Some(GraftTruncateLogCommand(p,
         Option(below).map(_.toLong)))
-      case OptFiles(p, n) => Some(GraftOptimizeFilesCommand(p, n.toInt))
+      case OptFiles(p, n) => Some(GraftOptimizeCommand(p, n.toInt, None))
       case OptPart(p, spec) => Some(GraftOptimizePartitionCommand(p, spec))
-      case OptZ(p, x, y, files) => Some(GraftOptimizeZOrderCommand(p, x, y,
-        Option(files).map(_.toInt).getOrElse(8)))
+      case OptZ(p, x, y, files) => Some(GraftOptimizeCommand(p,
+        Option(files).map(_.toInt).getOrElse(8), Some((x, y))))
       case TagCreate(p, name, v) => Some(GraftCreateTagCommand(p, name,
         Option(v).map(_.toLong)))
       case TagDrop(p, name) => Some(GraftDropTagCommand(p, name))
@@ -801,11 +801,11 @@ object GraftSqlParser {
       Seq(Row(VersionedTable.truncateLog(root, below)))
   }
 
-  case class GraftOptimizeFilesCommand(root: String, numFiles: Int)
-      extends LeafRunnableCommand {
+  case class GraftOptimizeCommand(root: String, numFiles: Int,
+      zorderBy: Option[(String, String)]) extends LeafRunnableCommand {
     override val output: Seq[Attribute] = Seq(attr("version", LongType))
     override def run(s: SparkSession): Seq[Row] =
-      Seq(Row(VersionedTable.compact(s, root, numFiles)))
+      Seq(Row(VersionedTable.compact(s, root, numFiles, zorderBy)))
   }
 
   case class GraftOptimizePartitionCommand(root: String, spec: String)
@@ -814,13 +814,5 @@ object GraftSqlParser {
     override def run(s: SparkSession): Seq[Row] =
       Seq(Row(VersionedTable.compactPartitioned(s, root,
         graft.sources.PartitionTransform.parse(spec))))
-  }
-
-  case class GraftOptimizeZOrderCommand(root: String, xCol: String,
-      yCol: String, numFiles: Int) extends LeafRunnableCommand {
-    override val output: Seq[Attribute] = Seq(attr("version", LongType))
-    override def run(s: SparkSession): Seq[Row] =
-      Seq(Row(VersionedTable.compactClustered(s, root, xCol, yCol,
-        numFiles = numFiles)))
   }
 }

@@ -74,8 +74,8 @@ object Lakehouse {
         VersionedTable.commit(
           lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
             col("l_suppkey"), col("l_quantity")), root)
-        VersionedTable.compactClustered(s, root, "l_partkey", "l_suppkey",
-          bitsPer = 21, numFiles = 8)
+        VersionedTable.compact(s, root, numFiles = 8,
+          zorderBy = Some(("l_partkey", "l_suppkey")), zorderBits = 21)
         VersionedTable.readPruned(s, root,
             col("l_partkey").between(1L, 200L) &&
               col("l_suppkey").between(1L, 40L))

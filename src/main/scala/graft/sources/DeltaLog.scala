@@ -1840,10 +1840,13 @@ object DeltaLog {
         val dvFeat =
           if (wantsDv) Set("deletionVectors") else Set.empty[String]
         // rowTracking is WRITER-only: feature-listing needs writer 7,
-        // the reader version stays wherever the reader features put it
+        // the reader version stays wherever the reader features put it.
+        // Every commit that lands adds moves the delta.rowTracking
+        // domain's high-water mark, and domain actions need the
+        // domainMetadata feature — both listed, like cluFeat below
         val rtFeat =
           if (properties.get("delta.enableRowTracking").contains("true"))
-            Set("rowTracking") else Set.empty[String]
+            Set("rowTracking", "domainMetadata") else Set.empty[String]
         // in-commit timestamps: WRITER-only feature, same (…,7)
         // listing shape as rowTracking
         val ictFeat =
@@ -2267,8 +2270,8 @@ object DeltaLog {
   }
 
   /** OPTIMIZE-style compaction of the Delta table at `root`: rewrite
-    * the live data into `filesPerPartition` files (total, for an
-    * unpartitioned table; one per partition dir for a partitioned
+    * the live data into at most `filesPerPartition` files (total, for
+    * an unpartitioned table; one per partition dir for a partitioned
     * one), committed as remove+add with
     * `dataChange: false` — readers see identical rows, streams see
     * NOTHING (per-commit tails skip non-data-changing actions), and
@@ -2280,8 +2283,9 @@ object DeltaLog {
     *
     * `zorderBy` = OPTIMIZE ... ZORDER BY (delta-spark parity): the
     * rewrite clusters rows by the Morton interleave of the two named
-    * dimension columns ([[graft.ops.ZOrder]] — values must be
-    * nonnegative and fit `zorderBits` bits), range-split into
+    * dimension columns ([[graft.ops.ZOrder.layout]], the layout every
+    * format's OPTIMIZE shares — values must be nonnegative and fit
+    * `zorderBits` bits), range-split into
     * `filesPerPartition` files covering disjoint z-ranges, so the
     * files' min/max become tight bounding boxes in BOTH dimensions
     * and stats skipping prunes on either column or their conjunction
@@ -2294,6 +2298,7 @@ object DeltaLog {
       filesPerPartition: Int = 1,
       zorderBy: Option[(String, String)] = None,
       zorderBits: Int = 21): Long = {
+    import graft.ops.ZOrder
     import org.apache.spark.sql.functions.col
     require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
     // mapped tables compact in PHYSICAL space — the rewrite never
@@ -2309,13 +2314,6 @@ object DeltaLog {
     gateUniform(root, snap0.configuration, snap0.schema,
       snap0.partitionColumns, snap0.columnMapping,
       carriesDv = false, "OPTIMIZE")
-    zorderBy.foreach { case (x, y) =>
-      require(snap.partitionColumns.isEmpty,
-        "delta-log: ZORDER BY on a partitioned table is not " +
-          "supported — the partitioning is the coarse cluster")
-      Seq(x, y).foreach(c => require(snap0.schema.fieldNames.contains(c),
-        s"delta-log: ZORDER BY names non-column '$c'"))
-    }
     // LIQUID CLUSTERING maintenance: with no explicit ZORDER request,
     // a table carrying the `delta.clustering` domain re-clusters by
     // its declared columns — OPTIMIZE on a clustered table IS the
@@ -2338,9 +2336,6 @@ object DeltaLog {
               arr.get(0).asText()
             }.toSeq)
         }
-    require(clusterCols.isEmpty || snap.partitionColumns.isEmpty,
-      "delta-log: a clustered table must not be Hive-partitioned " +
-        "(clusteredTable contract)")
     val partitions = snap.adds.map(a =>
       (a.partitionValues, a.nullPartitionCols)).distinct.size.max(1)
     // a ZORDER request always rewrites — same file COUNT, new LAYOUT;
@@ -2376,34 +2371,23 @@ object DeltaLog {
           .withColumnRenamed("_last_updated_version", matVer)
       else DeltaLogRead.withPositions(spark, snap)
         .drop(DeltaLogRead.FpCol, DeltaLogRead.PosCol)
-    val packed = zorderBy match {
-      case Some((x, y)) =>
-        // ZORDER: a column-mapped table's frame is PHYSICAL here —
-        // resolve the logical dimension names through the mapping
-        val (px, py) = (snap0.columnMapping.getOrElse(x, x),
-          snap0.columnMapping.getOrElse(y, y))
-        require(!vis.columns.contains("__zorder"),
-          "delta-log: table already has a __zorder column")
-        vis.withColumn("__zorder", graft.ops.ZOrder.interleave2(
-            col(s"`$px`"), col(s"`$py`"), zorderBits))
-          .repartitionByRange(filesPerPartition, col("__zorder"))
-          .sortWithinPartitions(col("__zorder"))
-          .drop("__zorder")
+    // the frame is PHYSICAL here: ZORDER resolves its logical names
+    // through the mapping, and the delta.clustering domain's names are
+    // physical already
+    val clustering = zorderBy match {
+      case Some((x, y)) => ZOrder.ZOrderBy(
+        snap0.columnMapping.getOrElse(x, x),
+        snap0.columnMapping.getOrElse(y, y), zorderBits)
       case None if clusterCols.nonEmpty =>
-        // the frame is physical space and so are the domain's names;
-        // a foreign domain naming unknown columns refuses rather than
-        // silently skipping the layout obligation
-        clusterCols.foreach(c => require(vis.columns.contains(c),
-          s"delta-log: clustering column '$c' of the delta.clustering " +
-            "domain is not a column of the table"))
-        vis.repartitionByRange(filesPerPartition,
-            clusterCols.map(c => col(s"`$c`")): _*)
-          .sortWithinPartitions(clusterCols.map(c => col(s"`$c`")): _*)
-      case None =>
-        if (snap.partitionColumns.isEmpty) vis.coalesce(filesPerPartition)
-        else vis.repartition(
-          snap.partitionColumns.map(col): _*) // one task (→ file) per partition
+        ZOrder.SortBy(clusterCols.map(_ -> true))
+      case None => ZOrder.Unclustered
     }
+    val laid = ZOrder.layout(vis, filesPerPartition, clustering,
+      partitioned = snap.partitionColumns.nonEmpty)
+    val packed =
+      if (snap.partitionColumns.isEmpty) laid
+      else laid.repartition(
+        snap.partitionColumns.map(col): _*) // one task (→ file) per partition
     val adds = stageAndLand(spark, packed, root, snap.partitionColumns,
       typeOverrides = collatedTypesOf(snap.schema))
     val header =

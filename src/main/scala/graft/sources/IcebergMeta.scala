@@ -3227,8 +3227,11 @@ object IcebergMeta {
   /** REWRITE the table (Iceberg's `rewrite_data_files` maintenance
     * action): materialize the currently-VISIBLE rows — positional and
     * equality deletes applied through the same [[IcebergMetaRead
-    * .morRead]] path the scan rewrite uses — into `numFiles` fresh
-    * data files, committed as a snapshot whose manifest list carries
+    * .morRead]] path the scan rewrite uses — into at most `numFiles`
+    * fresh data files (one per tuple on a partitioned spec; z-order
+    * and the table's sort order cluster through
+    * [[graft.ops.ZOrder.layout]], the layout every format's OPTIMIZE
+    * shares), committed as a snapshot whose manifest list carries
     * ONLY the new data manifest: no carried manifests, no delete
     * files. Old snapshots stay time-travelable (their metadata and
     * files remain on disk, unreferenced by the new state).
@@ -3261,13 +3264,6 @@ object IcebergMeta {
     // applies to the unpartitioned layout), like the Delta side's
     // one-task-per-partition repartition
     val specFields = specFieldsOf(meta, nameById)
-    zorderBy.foreach { case (x, y) =>
-      require(specFields.isEmpty,
-        "iceberg-meta: z-order compaction on a partitioned spec is " +
-          "not supported — the spec is the coarse cluster")
-      Seq(x, y).foreach(c => require(schema.fieldNames.contains(c),
-        s"iceberg-meta: z-order names non-column '$c'"))
-    }
     val typeOf = schema.fields.map(f => f.name -> f.dataType).toMap
     val eSchema = manifestSchemaFor(specFields.map(f =>
       (f.name, f.fieldId, f.transform.resultType(typeOf(f.srcCol)))))
@@ -3283,38 +3279,22 @@ object IcebergMeta {
     val visible0 =
       if (fv == 3) IcebergMetaRead.readWithRowIds(spark, root)
       else IcebergMetaRead.morRead(spark, snap)
-    val visible = zorderBy match {
-      case Some((x, y)) =>
-        require(!visible0.columns.contains("__zorder"),
-          "iceberg-meta: table already has a __zorder column")
-        visible0.withColumn("__zorder", graft.ops.ZOrder.interleave2(
-            org.apache.spark.sql.functions.col(s"`$x`"),
-            org.apache.spark.sql.functions.col(s"`$y`"), zorderBits))
-          .repartitionByRange(numFiles,
-            org.apache.spark.sql.functions.col("__zorder"))
-          .sortWithinPartitions(
-            org.apache.spark.sql.functions.col("__zorder"))
-          .drop("__zorder")
+    // the table's declared SORT ORDER drives an unrequested rewrite
+    // (the rewrite_data_files(strategy='sort') default — same shape as
+    // the Delta side's liquid-clustering OPTIMIZE). Partitioned specs
+    // keep their tuple layout (the spec sorts WITHIN partitions; this
+    // writer's one-file-per-tuple output is already the finest grain,
+    // so the in-file sort is moot).
+    import graft.ops.ZOrder
+    val clustering = zorderBy match {
+      case Some((x, y)) => ZOrder.ZOrderBy(x, y, zorderBits)
       case None =>
-        // the table's declared SORT ORDER drives the rewrite (the
-        // rewrite_data_files(strategy='sort') default — same shape as
-        // the Delta side's liquid-clustering OPTIMIZE): range-split
-        // on the order's columns, fully sorted within each file, so
-        // per-file bounds turn disjoint on the leading column.
-        // Partitioned specs keep their tuple layout (the spec sorts
-        // WITHIN partitions; this writer's one-file-per-tuple output
-        // is already the finest grain, so the in-file sort is moot).
         val order = sortOrderOf(meta, nameById)
-        if (specFields.isEmpty && order.nonEmpty) {
-          import org.apache.spark.sql.functions.col
-          val exprs = order.map { case (c, asc) =>
-            if (asc) col(s"`$c`").asc else col(s"`$c`").desc }
-          visible0.repartitionByRange(numFiles, exprs: _*)
-            .sortWithinPartitions(exprs: _*)
-        }
-        else if (specFields.isEmpty) visible0.coalesce(numFiles)
-        else visible0
+        if (specFields.isEmpty && order.nonEmpty) ZOrder.SortBy(order)
+        else ZOrder.Unclustered
     }
+    val visible = ZOrder.layout(visible0, numFiles, clustering,
+      partitioned = specFields.nonEmpty)
     val keepCols = schema.fieldNames.toSeq ++ (if (fv == 3)
       Seq("_row_id", "_last_updated_sequence_number") else Nil)
     val ordered = visible.select(keepCols.head, keepCols.tail: _*)

@@ -1901,31 +1901,6 @@ object VersionedTable {
     case Some(c) => if (wantNull) c.nulls > 0 else c.nulls < c.rows
   }
 
-  /** OPTIMIZE ZORDER BY: rewrite the current snapshot clustered on the
-    * Morton interleave of two quantized dimension columns, as one
-    * overwrite commit of `numFiles` files covering disjoint z-ranges.
-    * After this, the manifest's per-file min/max become tight bounding
-    * boxes in BOTH dimensions, so [[readPruned]] prunes on
-    * either column or their conjunction — the layout maintenance job a
-    * lakehouse runs to keep 100 TB data skipping effective. Inputs
-    * must be nonnegative and fit `bitsPer` bits (quantize first);
-    * older versions stay readable (compaction is just a commit). */
-  def compactClustered(spark: SparkSession, root: String,
-      xCol: String, yCol: String, bitsPer: Int = 21,
-      numFiles: Int = 8): Long = {
-    import org.apache.spark.sql.functions.col
-    val cur = read(spark, root)
-    require(!cur.columns.contains("__zorder"),
-      "table already has a __zorder column — rename it first")
-    val clustered = cur
-      .withColumn("__zorder",
-        graft.ops.ZOrder.interleave2(col(xCol), col(yCol), bitsPer))
-      .repartitionByRange(numFiles, col("__zorder"))
-      .sortWithinPartitions(col("__zorder"))
-      .drop("__zorder")
-    commit(clustered, root, "overwrite")
-  }
-
   // ---------------------------------------------------------------------
   // Bloom-filter file index — point-lookup data skipping for columns
   // min/max CANNOT prune (high-cardinality values scattered across
@@ -2404,7 +2379,7 @@ object VersionedTable {
     * parquet of the deleted keys — and rewriting NO data file at all.
     * Reads anti-join the sidecar against exactly the files whose
     * min/max stats could hold a deleted key (everything else never
-    * sees the tombstone); [[compact]] / [[compactClustered]] /
+    * sees the tombstone); [[compact]] /
     * [[deleteRanges]] / [[updateRanges]] / [[mergeKeyed]] fold
     * tombstones into their rewrites, and an `overwrite` clears them.
     *
@@ -3564,11 +3539,26 @@ object VersionedTable {
       "n_rows_written", "batch_tag", "has_schema", "commit_ts")
   }
 
-  /** Rewrite the current snapshot as ONE overwrite commit with
-    * `numFiles` output files — small-file compaction as a normal
-    * commit (older versions stay readable). */
-  def compact(spark: SparkSession, root: String, numFiles: Int = 1): Long =
-    commit(read(spark, root).repartition(numFiles), root, "overwrite")
+  /** OPTIMIZE: rewrite the current snapshot as ONE overwrite commit —
+    * compaction as a normal commit (older versions stay readable).
+    * Unclustered, the rewrite packs into at most `numFiles` files.
+    *
+    * `zorderBy` = OPTIMIZE ... ZORDER BY: cluster the rows on the
+    * Morton interleave of the two named columns ([[graft.ops.ZOrder]];
+    * values must be nonnegative and fit `zorderBits` bits), split into
+    * `numFiles` files covering disjoint z-ranges. The manifest's
+    * per-file min/max then become tight bounding boxes in BOTH
+    * dimensions, so [[readPruned]] prunes on either column or their
+    * conjunction. */
+  def compact(spark: SparkSession, root: String, numFiles: Int = 1,
+      zorderBy: Option[(String, String)] = None,
+      zorderBits: Int = 21): Long = {
+    import graft.ops.ZOrder
+    val clustering = zorderBy.fold[ZOrder.Clustering](ZOrder.Unclustered) {
+      case (x, y) => ZOrder.ZOrderBy(x, y, zorderBits) }
+    commit(ZOrder.layout(read(spark, root), numFiles, clustering),
+      root, "overwrite")
+  }
 
   /** OPTIMIZE into a hidden-partition layout: rewrite the CURRENT
     * snapshot as one overwrite commit laid out by `transform` — the
@@ -3583,8 +3573,21 @@ object VersionedTable {
       partitionBy = Some(transform))
 
   /** Delete data dirs not referenced by any version >= `retain`
-    * (also reclaims orphaned dirs from lost commit races). Time
-    * travel below `retain` stops working — that's the contract.
+    * (also reclaims orphaned dirs from lost commit races): exactly the
+    * dirs [[vacuumDryRun]] lists. Time travel below `retain` stops
+    * working — that's the contract. */
+  def vacuum(root: String, retain: Long,
+      minAgeMs: Long = 60L * 60 * 1000): Unit = {
+    val dataRoot = Paths.get(root, "data")
+    vacuumDryRun(root, retain, minAgeMs)
+      .foreach(d => dataIO(root).deleteTree(dataRoot.resolve(d)))
+  }
+
+  /** What [[vacuum]] deletes, without deleting: the data dirs
+    * unreferenced by every retained/pinned version and old enough.
+    * The answer an operator wants before pointing retention at a
+    * production table (`GRAFT VACUUM ... DRY RUN`); vacuum deletes
+    * this list, so the two cannot drift.
     *
     * Two safety rails a destructive operation needs:
     *  - `retain` must name an existing version — past the log head the
@@ -3595,8 +3598,8 @@ object VersionedTable {
     *    and deleting that window's dirs would corrupt the commit that
     *    then lands (Delta's vacuum has the same age threshold for the
     *    same reason). Pass 0 only where no writer can be live. */
-  def vacuum(root: String, retain: Long,
-      minAgeMs: Long = 60L * 60 * 1000): Unit = {
+  def vacuumDryRun(root: String, retain: Long,
+      minAgeMs: Long = 60L * 60 * 1000): Seq[String] = {
     require(retain >= 0 && retain <= latestVersion(root),
       s"retain $retain out of range [0, ${latestVersion(root)}] — " +
         "an empty keep-set would delete the live snapshot")
@@ -3620,33 +3623,6 @@ object VersionedTable {
       }
       // ext: references live in the clone SOURCE's tree — they are
       // never vacuum candidates here and must not alias a local dir
-      .filterNot(_.startsWith("ext:"))
-      .map(f => topDataDir(root, f))
-      .toSet
-    val now = System.currentTimeMillis()
-    val dataRoot = Paths.get(root, "data")
-    listDir(dataRoot)
-      .filter(d => !keep.contains(d.getFileName.toString))
-      .filter(d => now - dataIO(root).mtimeMs(d) >= minAgeMs)
-      .foreach(d => dataIO(root).deleteTree(d))
-  }
-
-  /** What [[vacuum]] WOULD delete, without deleting: the data dirs
-    * unreferenced by every retained/pinned version and old enough.
-    * The answer an operator wants before pointing retention at a
-    * production table (`GRAFT VACUUM ... DRY RUN`). Same keep-set
-    * computation as vacuum by construction — the two cannot drift. */
-  def vacuumDryRun(root: String, retain: Long,
-      minAgeMs: Long = 60L * 60 * 1000): Seq[String] = {
-    require(retain >= 0 && retain <= latestVersion(root),
-      s"retain $retain out of range [0, ${latestVersion(root)}]")
-    val pinned = tags(root).values.toSet ++
-      branches(root).values.map(_._1)
-    val keep = versions(root).filter(v => v >= retain || pinned(v))
-      .flatMap { v =>
-        val st = state(root, v)
-        st.files ++ st.tombs.values.flatten ++ st.blooms.values
-      }
       .filterNot(_.startsWith("ext:"))
       .map(f => topDataDir(root, f))
       .toSet

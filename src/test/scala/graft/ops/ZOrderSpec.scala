@@ -40,7 +40,8 @@ class ZOrderSpec extends SparkSpecBase {
     val df = Seq.fill(2000)((rnd.nextInt(256).toLong, rnd.nextInt(256).toLong))
       .toDF("x", "y")
     val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    ZOrder.writeZOrdered(df, col("x"), col("y"), 8, 8, dir)
+    ZOrder.layout(df, 8, ZOrder.ZOrderBy("x", "y", 8))
+      .write.mode("overwrite").parquet(dir)
     val ranges = spark.read.parquet(dir)
       .withColumn("z", ZOrder.interleave2(col("x"), col("y"), 8))
       .withColumn("file", input_file_name())

@@ -962,6 +962,34 @@ class DeltaLogSpec extends SparkSpecBase {
       (0L until 3L).map(k => k -> k).toMap)
   }
 
+  test("row-tracked tables list domainMetadata wherever they write the delta.rowTracking domain") {
+    val root = tmp()
+    DeltaLog.commit(spark.range(0, 10).toDF("k").coalesce(1), root,
+      properties = Map("delta.enableRowTracking" -> "true"))
+    val s0 = DeltaLog.snapshot(spark, root, Some(0L))
+    assert(s0.minWriterVersion === 7)
+    assert(Set("rowTracking", "domainMetadata").subsetOf(s0.writerFeatures),
+      s"v0 writer features: ${s0.writerFeatures}")
+    DeltaLog.commit(spark.range(10, 13).toDF("k").coalesce(1), root)
+    DeltaLog.deleteWhere(spark, root, col("k") < 2)
+    DeltaLog.compact(spark, root)
+    val latest = DeltaLog.latestVersion(root)
+    val domainWrites = (0L to latest).filter { v =>
+      new String(Files.readAllBytes(
+        Paths.get(root, "_delta_log", f"$v%020d.json")), UTF_8)
+        .split("\n").exists(l => l.startsWith("{\"domainMetadata\"") &&
+          l.contains("\"delta.rowTracking\""))
+    }
+    assert(domainWrites.contains(0L) && domainWrites.size > 1,
+      s"domain writes at $domainWrites")
+    domainWrites.foreach { v =>
+      val s = DeltaLog.snapshot(spark, root, Some(v))
+      assert(s.minWriterVersion === 7 &&
+        s.writerFeatures.contains("domainMetadata"),
+        s"v$v writes delta.rowTracking on features ${s.writerFeatures}")
+    }
+  }
+
   test("OPTIMIZE preserves row ids by materializing the hidden columns") {
     val root = tmp()
     DeltaLog.commit(
@@ -1913,9 +1941,11 @@ class DeltaLogSpec extends SparkSpecBase {
         Seq("commitInfo", "remove", "domainMetadata", "add", "cdc")),
       ("compact", () => DeltaLog.compact(spark, a), a,
         Seq("commitInfo", "metaData", "remove", "domainMetadata", "add")),
+      // the row-tracked table lists domainMetadata from creation, so
+      // a domain write needs no protocol upgrade line
       ("setDomainMetadata", () => DeltaLog.setDomainMetadata(spark, a,
         "app.owner", "etl"), a,
-        Seq("commitInfo", "protocol", "domainMetadata")),
+        Seq("commitInfo", "domainMetadata")),
       ("restore", () => DeltaLog.restore(spark, a, 1L), a,
         Seq("commitInfo", "metaData", "domainMetadata", "remove", "add")),
       ("cloneShallow", () => DeltaLog.cloneShallow(spark, a, clone), clone,

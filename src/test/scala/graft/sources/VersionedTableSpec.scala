@@ -312,8 +312,8 @@ class VersionedTableSpec extends SparkSpecBase {
     val grid = spark.range(0, 64L * 64)
       .select(expr("id % 64").as("x"), expr("id div 64").as("y"))
     VersionedTable.commit(grid.repartition(4), root) // v0: unclustered
-    VersionedTable.compactClustered(spark, root, "x", "y",
-      bitsPer = 6, numFiles = 16)
+    VersionedTable.compact(spark, root, numFiles = 16,
+      zorderBy = Some(("x", "y")), zorderBits = 6)
     val total = VersionedTable.snapshotFiles(
       root, VersionedTable.latestVersion(root)).size
     assert(total == 16)
