@@ -316,50 +316,15 @@ class DeltaLogFileIndex(spark: SparkSession, val root: String,
 
   // ---- data skipping from the spec's per-file stats JSON ----
 
-  private val mapper = new ObjectMapper()
-
   /** add.path -> per-column ColStats, parsed once. */
   private val statsCache = scala.collection.concurrent.TrieMap
     .empty[String, Map[String, VersionedTable.ColStats]]
 
-  private def statTyp(dt: DataType): Option[String] = dt match {
-    case ByteType | ShortType | IntegerType | LongType => Some("long")
-    case FloatType | DoubleType => Some("double")
-    // COLLATED strings (non-zero collationId) never prune: their
-    // recorded min/max are binary-ordered, which does not order like
-    // the collation — skipping on them would drop matching files
-    case s: StringType if s.collationId == 0 => Some("string")
-    case _ => None // collated/dates/decimals/etc: conservative keep
-  }
-
   private[sources] def statsOf(snap: DeltaLog.DeltaSnapshot,
       a: DeltaLog.DeltaAdd)
       : Map[String, VersionedTable.ColStats] =
-    statsCache.getOrElseUpdate(a.path, {
-      a.statsJson.map[Map[String, VersionedTable.ColStats]] { js =>
-        try {
-          val n = mapper.readTree(js)
-          val rows =
-            if (n.hasNonNull("numRecords")) n.get("numRecords").asLong() else 0L
-          def field(k: String, col: String) = Option(n.get(k))
-            .flatMap(o => Option(o.get(col))).filterNot(_.isNull)
-          snap.dataSchema.fields.flatMap { f =>
-            statTyp(f.dataType).flatMap { t =>
-              val mn = field("minValues", f.name).map(_.asText())
-              val mx = field("maxValues", f.name).map(_.asText())
-              val nulls = field("nullCount", f.name).map(_.asLong())
-              if (mn.isEmpty && mx.isEmpty && nulls.isEmpty) None
-              else Some(f.name ->
-                VersionedTable.ColStats(t, mn, mx,
-                  nulls.getOrElse(-1L), rows)) // absent = UNKNOWN
-            }
-          }.toMap[String, VersionedTable.ColStats]
-        } catch {
-          case scala.util.control.NonFatal(_) =>
-            Map.empty[String, VersionedTable.ColStats]
-        }
-      }.getOrElse(Map.empty[String, VersionedTable.ColStats])
-    })
+    statsCache.getOrElseUpdate(a.path,
+      DeltaLogFileIndex.parseStats(snap.dataSchema, a.statsJson))
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
@@ -403,6 +368,54 @@ class DeltaLogFileIndex(spark: SparkSession, val root: String,
     lastListing = Some((kept, snap.adds.size))
     dirs
   }
+}
+
+object DeltaLogFileIndex {
+  private val mapper = new ObjectMapper()
+
+  private def statTyp(dt: DataType): Option[String] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some("long")
+    case FloatType | DoubleType => Some("double")
+    // COLLATED strings (non-zero collationId) never prune: their
+    // recorded min/max are binary-ordered, which does not order like
+    // the collation — skipping on them would drop matching files
+    case s: StringType if s.collationId == 0 => Some("string")
+    case _ => None // collated/dates/decimals/etc: conservative keep
+  }
+
+  /** The one reader of a Delta add's stats JSON: per-column ColStats
+    * for the columns of `schema` whose type prunes. Without
+    * `numRecords` the row count is unknown, and so is every null count
+    * (`-1`): `nulls` beside an absent row count cannot say whether a
+    * file is all-null, so nullness pruning and metadata aggregates must
+    * read or refuse; min/max range pruning still applies. Unparseable
+    * JSON yields no stats. */
+  private[sources] def parseStats(schema: StructType,
+      statsJson: Option[String]): Map[String, VersionedTable.ColStats] =
+    statsJson.fold(Map.empty[String, VersionedTable.ColStats]) { js =>
+      try {
+        val n = mapper.readTree(js)
+        val rows =
+          if (n.hasNonNull("numRecords")) Some(n.get("numRecords").asLong())
+          else None
+        def field(k: String, col: String) = Option(n.get(k))
+          .flatMap(o => Option(o.get(col))).filterNot(_.isNull)
+        schema.fields.flatMap { f =>
+          statTyp(f.dataType).flatMap { t =>
+            val mn = field("minValues", f.name).map(_.asText())
+            val mx = field("maxValues", f.name).map(_.asText())
+            val nulls = field("nullCount", f.name).map(_.asLong())
+            if (mn.isEmpty && mx.isEmpty && nulls.isEmpty) None
+            else Some(f.name -> VersionedTable.ColStats(t, mn, mx,
+              if (rows.isEmpty) -1L else nulls.getOrElse(-1L), // -1 = UNKNOWN
+              rows.getOrElse(0L)))
+          }
+        }.toMap
+      } catch {
+        case scala.util.control.NonFatal(_) =>
+          Map.empty[String, VersionedTable.ColStats]
+      }
+    }
 }
 
 /** Plan-building support for the deletion-vector read path

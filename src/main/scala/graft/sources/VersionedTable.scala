@@ -363,73 +363,145 @@ object VersionedTable {
   def latestVersion(root: String): Long =
     versions(root).lastOption.getOrElse(-1L)
 
-  private case class Manifest(version: Long, action: String,
-      files: Seq[String], batchTag: Option[Long], stats: Seq[String],
-      schemaJson: Option[String], removes: Seq[String],
-      tombFiles: Seq[(String, String)], tombApplies: Seq[String],
-      checkAdds: Seq[(String, String)], checkDrops: Seq[String],
-      tombMaps: Seq[(String, String)],
-      bloomFiles: Seq[(String, String, String)], // (dataFile, col, sidecar)
-      renames: Seq[(String, String)],  // logical old -> logical new
-      colMaps: Seq[(String, String)],  // full map restatement (restore)
-      dropCols: Seq[String],           // PHYSICAL names retired by a drop
-      parts: Seq[(String, String, String)], // (file, transform spec, value)
-      fsizes: Seq[(String, Long)])     // (file, bytes) — Delta AddFile.size
+  /** One `_graft_log` file as a record: a commit's manifest, or a
+    * checkpoint (an `overwrite` restating the whole folded state).
+    * Every graft commit describes itself as one of these; [[render]]
+    * is the only writer of the line grammar and [[parseLog]] its only
+    * reader (FORMAT.md "Manifest grammar"). `restoreOf`, `cloneSrc`
+    * and `importSrc` are provenance: only [[branchBase]] reads one. */
+  private[sources] case class Manifest(version: Long, action: String,
+      files: Seq[String] = Nil,
+      batchTag: Option[Long] = None,
+      stats: Map[String, Map[String, ColStats]] = Map.empty, // file -> col -> stats
+      schemaJson: Option[String] = None,
+      removes: Seq[String] = Nil,
+      tombFiles: Seq[(String, String)] = Nil, // (sidecar, key column)
+      tombApplies: Seq[String] = Nil,
+      checkAdds: Seq[(String, String)] = Nil,
+      checkDrops: Seq[String] = Nil,
+      tombMaps: Seq[(String, String)] = Nil, // (file, sidecar): restatements
+      bloomFiles: Seq[(String, String, String)] = Nil, // (dataFile, col, sidecar)
+      renames: Seq[(String, String)] = Nil,  // logical old -> logical new
+      colMaps: Seq[(String, String)] = Nil,  // full map restatement
+      dropCols: Seq[String] = Nil,           // PHYSICAL names retired by a drop
+      parts: Seq[(String, String, String)] = Nil, // (file, transform spec, value)
+      fsizes: Seq[(String, Long)] = Nil,     // (file, bytes) — Delta AddFile.size
+      restoreOf: Option[Long] = None,        // RESTORE target version
+      cloneSrc: Option[(String, Long)] = None, // (source root, version)
+      importSrc: Option[(String, Long)] = None) // ("delta:"/"iceberg:" root, version)
 
-  private def readManifest(root: String, v: Long): Manifest = {
-    val lines = logIO(root).readLines(manifestPath(root, v))
-    def field(k: String): Seq[String] =
-      lines.filter(_.startsWith(s"$k=")).map(_.drop(k.length + 1))
-    Manifest(field("version").head.toLong, field("action").head,
-      field("file"), field("batch").headOption.map(_.toLong),
-      field("stats"), field("schema").headOption.map(dec),
-      field("remove"),
-      field("tombfile").map(_.split("\\|", -1) match {
-        case Array(f, k) => (dec(f), dec(k))
-        case other => throw new IllegalStateException(
-          s"malformed tombfile line in manifest v$v")
-      }),
-      field("tombapply").map(dec),
-      field("check").map(_.split("\\|", -1) match {
-        case Array(n, e) => (dec(n), dec(e))
-        case _ => throw new IllegalStateException(
-          s"malformed check line in manifest v$v")
-      }),
-      field("dropcheck").map(dec),
-      // file -> sidecar pairs: only [[restore]] manifests carry these
-      // (an overwrite that must re-establish a restored snapshot's
-      // merge-on-read tombstones); plain overwrites have none.
-      field("tombmap").map(_.split("\\|", -1) match {
-        case Array(f, sc) => (dec(f), dec(sc))
-        case _ => throw new IllegalStateException(
-          s"malformed tombmap line in manifest v$v")
-      }),
-      field("bloomfile").map(_.split("\\|", -1) match {
-        case Array(f, c, sc) => (dec(f), dec(c), dec(sc))
-        case _ => throw new IllegalStateException(
-          s"malformed bloomfile line in manifest v$v")
-      }),
-      field("rename").map(_.split("\\|", -1) match {
-        case Array(o, n) => (dec(o), dec(n))
-        case _ => throw new IllegalStateException(
-          s"malformed rename line in manifest v$v")
-      }),
-      field("colmap").map(_.split("\\|", -1) match {
-        case Array(l, p) => (dec(l), dec(p))
-        case _ => throw new IllegalStateException(
-          s"malformed colmap line in manifest v$v")
-      }),
-      field("dropcol").map(dec),
-      field("part").map(_.split("\\|", -1) match {
-        case Array(f, t, v) => (dec(f), dec(t), dec(v))
-        case _ => throw new IllegalStateException(
-          s"malformed part line in manifest v$v")
-      }),
-      field("fsize").map(_.split("\\|", -1) match {
-        case Array(f, sz) => (dec(f), sz.toLong)
-        case _ => throw new IllegalStateException(
-          s"malformed fsize line in manifest v$v")
-      }))
+  /** The one writer of the line grammar: `m` as the text [[parseLog]]
+    * reads back. A checkpoint has no `action=` line and spells the
+    * bloom and batch-tag keys `bloom=` / `batchtag=`. `file=` and
+    * `remove=` carry the path raw; every other free-text value is
+    * [[enc]]oded, cells joined by `|`. */
+  private def render(m: Manifest, checkpoint: Boolean = false): String = {
+    def cells(vs: String*) = vs.map(enc).mkString("|")
+    (Seq(s"version=${m.version}") ++
+      (if (checkpoint) None else Some(s"action=${m.action}")) ++
+      m.restoreOf.map(v => s"restore=$v") ++
+      m.cloneSrc.map { case (src, v) => s"clonesrc=${enc(src)}|$v" } ++
+      m.importSrc.map { case (src, v) => s"importsrc=${enc(src)}|$v" } ++
+      m.batchTag.map(t => (if (checkpoint) "batchtag=" else "batch=") + t) ++
+      m.schemaJson.map(j => s"schema=${enc(j)}") ++
+      m.removes.map(f => s"remove=$f") ++
+      m.files.map(f => s"file=$f") ++
+      m.fsizes.map { case (f, sz) => s"fsize=${enc(f)}|$sz" } ++
+      m.stats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
+        cols.toSeq.sortBy(_._1).map { case (c, cs) =>
+          s"stats=${cells(f, c)}|${cs.typ}|${cs.min.fold("")(enc)}|" +
+            s"${cs.max.fold("")(enc)}|${cs.nulls}|${cs.rows}"
+        }
+      } ++
+      m.tombFiles.map { case (sc, k) => s"tombfile=${cells(sc, k)}" } ++
+      m.tombApplies.map(f => s"tombapply=${enc(f)}") ++
+      m.tombMaps.map { case (f, sc) => s"tombmap=${cells(f, sc)}" } ++
+      m.bloomFiles.map { case (f, c, sc) =>
+        (if (checkpoint) "bloom=" else "bloomfile=") + cells(f, c, sc) } ++
+      m.renames.map { case (o, n) => s"rename=${cells(o, n)}" } ++
+      m.colMaps.map { case (l, p) => s"colmap=${cells(l, p)}" } ++
+      m.dropCols.map(p => s"dropcol=${enc(p)}") ++
+      m.parts.map { case (f, t, v) => s"part=${cells(f, t, v)}" } ++
+      m.checkAdds.map { case (n, e) => s"check=${cells(n, e)}" } ++
+      m.checkDrops.map(n => s"dropcheck=${enc(n)}"))
+      .mkString("", "\n", "\n")
+  }
+
+  /** The one reader of the line grammar ([[render]]'s inverse); `where`
+    * names the file in errors. A checkpoint reads as an `overwrite`.
+    * Unknown keys are ignored (forward compatibility), and so is a
+    * `stats=` line of an unknown dialect: absent stats never mis-prune. */
+  private def parseLog(lines: Seq[String], where: String,
+      checkpoint: Boolean = false): Manifest = {
+    val byKey = lines.groupMap(_.takeWhile(_ != '='))(l =>
+      l.drop(l.indexOf('=') + 1))
+    def field(k: String): Seq[String] = byKey.getOrElse(k, Nil)
+    def cells(k: String, n: Int): Seq[Array[String]] = field(k).map { v =>
+      val cs = v.split("\\|", -1)
+      if (cs.length != n) throw new IllegalStateException(
+        s"malformed $k line in $where")
+      cs
+    }
+    def pairs(k: String) = cells(k, 2).map(c => (dec(c(0)), dec(c(1))))
+    def triples(k: String) =
+      cells(k, 3).map(c => (dec(c(0)), dec(c(1)), dec(c(2))))
+    def counted(k: String) = cells(k, 2).map(c => (dec(c(0)), c(1).toLong))
+    Manifest(field("version").head.toLong,
+      if (checkpoint) "overwrite" else field("action").head,
+      files = field("file"),
+      batchTag = field(if (checkpoint) "batchtag" else "batch").headOption
+        .map(_.toLong),
+      stats = field("stats").flatMap(parseStatsLine).groupBy(_._1)
+        .map { case (f, rows) =>
+          f -> rows.map { case (_, c, cs) => c -> cs }.toMap },
+      schemaJson = field("schema").headOption.map(dec),
+      removes = field("remove"),
+      tombFiles = pairs("tombfile"),
+      tombApplies = field("tombapply").map(dec),
+      checkAdds = pairs("check"),
+      checkDrops = field("dropcheck").map(dec),
+      tombMaps = pairs("tombmap"),
+      bloomFiles = triples(if (checkpoint) "bloom" else "bloomfile"),
+      renames = pairs("rename"),
+      colMaps = pairs("colmap"),
+      dropCols = field("dropcol").map(dec),
+      parts = triples("part"),
+      fsizes = counted("fsize"),
+      restoreOf = field("restore").headOption.map(_.toLong),
+      cloneSrc = counted("clonesrc").headOption,
+      importSrc = counted("importsrc").headOption)
+  }
+
+  private def readManifest(root: String, v: Long): Manifest =
+    parseLog(logIO(root).readLines(manifestPath(root, v)), s"manifest v$v")
+
+  /** A snapshot state restated as one `overwrite` record at `version` —
+    * the body of a [[checkpoint]], a [[restore]] and a [[cloneShallow]].
+    * `ext` maps every data and sidecar reference (a clone points them
+    * into its source's tree). Sidecar keys no live file references and
+    * the bloom and partition entries of dead files are left out:
+    * restating them would grow every restatement forever and can name
+    * sidecar dirs vacuum already reclaimed. */
+  private def restate(st: TableState, version: Long,
+      ext: String => String = identity): Manifest = {
+    val live = st.files.toSet
+    val liveSidecars = st.tombs.values.flatten.toSet
+    Manifest(version, "overwrite",
+      files = st.files.map(ext),
+      stats = st.files.flatMap(f => st.stats.get(f).map(ext(f) -> _)).toMap,
+      schemaJson = st.schemaJson,
+      fsizes = st.files.flatMap(f => st.sizes.get(f).map(ext(f) -> _)),
+      tombFiles = st.tombKey.toSeq.filter(e => liveSidecars(e._1)).sorted
+        .map { case (sc, k) => (ext(sc), k) },
+      tombMaps = st.tombs.toSeq.sortBy(_._1).flatMap { case (f, scs) =>
+        scs.map(sc => (ext(f), ext(sc))) },
+      bloomFiles = st.blooms.toSeq.filter(e => live(e._1._1)).sortBy(_._1)
+        .map { case ((f, c), sc) => (ext(f), c, ext(sc)) },
+      colMaps = st.colMap.toSeq.sorted,
+      dropCols = st.dropped.toSeq.sorted,
+      parts = st.parts.toSeq.filter(e => live(e._1)).sortBy(_._1)
+        .map { case (f, (t, pv)) => (ext(f), t, pv) },
+      checkAdds = st.checks.toSeq.sorted)
   }
 
   // ---------------------------------------------------------------------
@@ -462,14 +534,6 @@ object VersionedTable {
       TableState(Vector.empty, Map.empty, None, Map.empty, Map.empty)
   }
 
-  /** Per-file stats carried by one manifest, parsed. */
-  private def manifestStats(m: Manifest)
-      : Map[String, Map[String, ColStats]] =
-    m.stats.flatMap(parseStatsLine)
-      .groupBy(_._1)
-      .map { case (f, rows) =>
-        f -> rows.map { case (_, c, cs) => c -> cs }.toMap }
-
   /** One step of the log fold. `overwrite` resets everything (including
     * tombstones — the new file set supersedes all prior row-level
     * edits); `append` extends; `replace` swaps named files (their
@@ -487,7 +551,7 @@ object VersionedTable {
         // overwrite re-baselines physical names too (the new file set
         // is written under the then-current logical names); a restore
         // re-establishes the target's mapping via its colmap lines
-        TableState(m.files.toVector, manifestStats(m), m.schemaJson,
+        TableState(m.files.toVector, m.stats, m.schemaJson,
           m.tombMaps.groupBy(_._1).map { case (f, ps) =>
             f -> ps.map(_._2).toVector },
           m.tombFiles.toMap, st.checks,
@@ -500,7 +564,7 @@ object VersionedTable {
         // data-free append); data files appended WITHOUT an index are
         // simply absent from the map and always read.
         st.copy(files = st.files ++ m.files,
-          stats = st.stats ++ manifestStats(m), schemaJson = m.schemaJson,
+          stats = st.stats ++ m.stats, schemaJson = m.schemaJson,
           blooms = st.blooms ++
             m.bloomFiles.map { case (f, c, sc) => (f, c) -> sc },
           parts = st.parts ++
@@ -512,7 +576,7 @@ object VersionedTable {
         // file and is simply absent until rebuilt)
         val gone = m.removes.toSet
         TableState(st.files.filterNot(gone) ++ m.files,
-          (st.stats -- gone) ++ manifestStats(m), m.schemaJson,
+          (st.stats -- gone) ++ m.stats, m.schemaJson,
           st.tombs -- gone, st.tombKey, st.checks,
           st.blooms.filterNot { case ((f, _), _) => gone(f) },
           st.colMap, st.dropped, // mapping metadata: replace carries it
@@ -539,7 +603,7 @@ object VersionedTable {
         val sidecars = m.tombFiles.map(_._1).toVector
         st.copy(
           files = st.files ++ m.files,
-          stats = st.stats ++ manifestStats(m),
+          stats = st.stats ++ m.stats,
           schemaJson = m.schemaJson,
           tombs = m.tombApplies.filter(live).foldLeft(st.tombs) { (t, f) =>
             t.updated(f, t.getOrElse(f, Vector.empty) ++ sidecars) },
@@ -753,9 +817,6 @@ object VersionedTable {
   def checkpoint(root: String, version: Option[Long] = None): Long = {
     val v = version.getOrElse(latestVersion(root))
     require(v >= 0, s"$root is not a versioned table (empty log)")
-    val st = state(root, v)
-    val statLines = st.files.flatMap(f =>
-      statsLines(f, st.stats.getOrElse(f, Map.empty)))
     // Highest streaming batch tag committed at or below v, persisted
     // so the exactly-once replay check survives truncateLog (the
     // manifests carrying batch= lines get deleted; Delta checkpoints
@@ -767,38 +828,10 @@ object VersionedTable {
       .map(ver => readManifest(root, ver).batchTag)
       .collectFirst { case Some(t) => t }.toSeq ++
       checkpointVersions(root).filter(_ < v).reverseIterator
-        .flatMap(cv => checkpointBatchTag(root, cv).iterator)
+        .flatMap(cv => readCheckpoint(root, cv).batchTag.iterator)
         .take(1)).maxOption
-    // Sidecar-key entries for tombstones no live file references any
-    // more (their files were rewritten/overwritten) are dead state:
-    // re-serializing them would grow every future checkpoint forever
-    // and can point at sidecar dirs vacuum already reclaimed.
-    val liveSidecars = st.tombs.values.flatten.toSet
-    val body =
-      (Seq(s"version=$v") ++
-        maxTag.map(t => s"batchtag=$t").toSeq ++
-        st.schemaJson.map(j => s"schema=${enc(j)}").toSeq ++
-        st.files.map(f => s"file=$f") ++
-        st.files.flatMap(f =>
-          st.sizes.get(f).map(sz => s"fsize=${enc(f)}|$sz")) ++
-        statLines ++
-        st.tombKey.toSeq.filter(e => liveSidecars(e._1))
-          .sortBy(_._1).map { case (sc, k) =>
-            s"tombfile=${enc(sc)}|${enc(k)}" } ++
-        st.tombs.toSeq.sortBy(_._1).flatMap { case (f, scs) =>
-          scs.map(sc => s"tombmap=${enc(f)}|${enc(sc)}") } ++
-        st.checks.toSeq.sortBy(_._1).map { case (n, e) =>
-          s"check=${enc(n)}|${enc(e)}" } ++
-        st.blooms.toSeq.filter(e => st.files.contains(e._1._1))
-          .sortBy(_._1).map { case ((f, c), sc) =>
-            s"bloom=${enc(f)}|${enc(c)}|${enc(sc)}" } ++
-        st.colMap.toSeq.sorted.map { case (l, p) =>
-          s"colmap=${enc(l)}|${enc(p)}" } ++
-        st.dropped.toSeq.sorted.map(p => s"dropcol=${enc(p)}") ++
-        st.parts.toSeq.filter(e => st.files.contains(e._1))
-          .sortBy(_._1).map { case (f, (t, pv)) =>
-            s"part=${enc(f)}|${enc(t)}|${enc(pv)}" })
-        .mkString("", "\n", "\n")
+    val body = render(restate(state(root, v), v).copy(batchTag = maxTag),
+      checkpoint = true)
     try logIO(root).putIfAbsent(checkpointPath(root, v),
       body.getBytes("UTF-8"))
     catch { // another writer already checkpointed v — same content, fine
@@ -807,64 +840,19 @@ object VersionedTable {
     v
   }
 
-  /** The `batchtag=` line of checkpoint `cv`, if present: the highest
-    * streaming batch id committed at or below `cv`. See [[checkpoint]]
-    * and [[streamingSink]]. */
-  private def checkpointBatchTag(root: String, cv: Long): Option[Long] =
-    logIO(root).readLines(checkpointPath(root, cv))
-      .collectFirst { case l if l.startsWith("batchtag=") =>
-        l.stripPrefix("batchtag=").toLong }
+  /** Checkpoint `cv` as a record: the full folded state at `cv`, plus
+    * the highest streaming batch id committed at or below it (see
+    * [[checkpoint]] and [[streamingSink]]). */
+  private def readCheckpoint(root: String, cv: Long): Manifest =
+    parseLog(logIO(root).readLines(checkpointPath(root, cv)),
+      s"checkpoint v$cv", checkpoint = true)
 
+  /** The newest checkpoint at or below `v` and its state: the
+    * checkpoint's `overwrite` record folded onto the empty state. */
   private def latestCheckpointAtOrBefore(root: String, v: Long)
       : Option[(Long, TableState)] =
-    checkpointVersions(root).filter(_ <= v).lastOption.map { cv =>
-      val lines = logIO(root).readLines(checkpointPath(root, cv))
-      def field(k: String): Seq[String] =
-        lines.filter(_.startsWith(s"$k=")).map(_.drop(k.length + 1))
-      val files = field("file").toVector
-      val stats = field("stats").flatMap(parseStatsLine)
-        .groupBy(_._1)
-        .map { case (f, rows) =>
-          f -> rows.map { case (_, c, cs) => c -> cs }.toMap }
-      val tombKey = field("tombfile").map(_.split("\\|", -1) match {
-        case Array(sc, k) => (dec(sc), dec(k))
-        case _ => throw new IllegalStateException(
-          s"malformed tombfile line in checkpoint v$cv")
-      }).toMap
-      val tombs = field("tombmap").map(_.split("\\|", -1) match {
-        case Array(f, sc) => (dec(f), dec(sc))
-        case _ => throw new IllegalStateException(
-          s"malformed tombmap line in checkpoint v$cv")
-      }).groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2).toVector }
-      val checks = field("check").map(_.split("\\|", -1) match {
-        case Array(n, e) => (dec(n), dec(e))
-        case _ => throw new IllegalStateException(
-          s"malformed check line in checkpoint v$cv")
-      }).toMap
-      val blooms = field("bloom").map(_.split("\\|", -1) match {
-        case Array(f, c, sc) => (dec(f), dec(c)) -> dec(sc)
-        case _ => throw new IllegalStateException(
-          s"malformed bloom line in checkpoint v$cv")
-      }).toMap
-      val colMap = field("colmap").map(_.split("\\|", -1) match {
-        case Array(l, p) => dec(l) -> dec(p)
-        case _ => throw new IllegalStateException(
-          s"malformed colmap line in checkpoint v$cv")
-      }).toMap
-      val parts = field("part").map(_.split("\\|", -1) match {
-        case Array(f, t, pv) => dec(f) -> (dec(t), dec(pv))
-        case _ => throw new IllegalStateException(
-          s"malformed part line in checkpoint v$cv")
-      }).toMap
-      val sizes = field("fsize").map(_.split("\\|", -1) match {
-        case Array(f, sz) => dec(f) -> sz.toLong
-        case _ => throw new IllegalStateException(
-          s"malformed fsize line in checkpoint v$cv")
-      }).toMap
-      (cv, TableState(files, stats, field("schema").headOption.map(dec),
-        tombs, tombKey, checks, blooms, colMap,
-        field("dropcol").map(dec).toSet, parts, sizes))
-    }
+    checkpointVersions(root).filter(_ <= v).lastOption.map(cv =>
+      (cv, applyManifest(TableState.empty, readCheckpoint(root, cv))))
 
   /** Delete manifests STRICTLY BELOW the newest checkpoint <= `below`.
     * After truncation, snapshots at or above that checkpoint resolve
@@ -1028,36 +1016,9 @@ object VersionedTable {
       s"cannot restore to v$toVersion: ${missing.size} file(s) of that " +
         s"snapshot were vacuumed (e.g. ${missing.headOption.getOrElse("")})")
     val current = state(root, latest)
-    val liveSidecars = target.tombs.values.flatten.toSet
-    val body =
-      (Seq(s"version=${latest + 1}", "action=overwrite",
-        s"restore=$toVersion") ++
-        target.schemaJson.map(j => s"schema=${enc(j)}").toSeq ++
-        target.files.map(f => s"file=$f") ++
-        target.files.flatMap(f =>
-          target.sizes.get(f).map(sz => s"fsize=${enc(f)}|$sz")) ++
-        target.files.flatMap(f =>
-          statsLines(f, target.stats.getOrElse(f, Map.empty))) ++
-        target.tombKey.toSeq.filter(e => liveSidecars(e._1))
-          .sortBy(_._1).map { case (sc, k) =>
-            s"tombfile=${enc(sc)}|${enc(k)}" } ++
-        target.tombs.toSeq.sortBy(_._1).flatMap { case (f, scs) =>
-          scs.map(sc => s"tombmap=${enc(f)}|${enc(sc)}") } ++
-        target.blooms.toSeq.filter(e => target.files.contains(e._1._1))
-          .sortBy(_._1).map { case ((f, c), sc) =>
-            s"bloomfile=${enc(f)}|${enc(c)}|${enc(sc)}" } ++
-        target.colMap.toSeq.sorted.map { case (l, p) =>
-          s"colmap=${enc(l)}|${enc(p)}" } ++
-        target.dropped.toSeq.sorted.map(p => s"dropcol=${enc(p)}") ++
-        target.parts.toSeq.filter(e => target.files.contains(e._1))
-          .sortBy(_._1).map { case (f, (t, pv)) =>
-            s"part=${enc(f)}|${enc(t)}|${enc(pv)}" } ++
-        target.checks.toSeq.sortBy(_._1).map { case (n, e) =>
-          s"check=${enc(n)}|${enc(e)}" } ++
-        current.checks.keySet.diff(target.checks.keySet).toSeq.sorted
-          .map(n => s"dropcheck=${enc(n)}"))
-        .mkString("", "\n", "\n")
-    publish(root, latest + 1, body)
+    publish(root, restate(target, latest + 1).copy(
+      restoreOf = Some(toVersion),
+      checkDrops = current.checks.keySet.diff(target.checks.keySet).toSeq.sorted))
     latest + 1
   }
 
@@ -1096,35 +1057,9 @@ object VersionedTable {
     // intermediate clone's lifetime)
     def ext(f: String): String =
       if (f.startsWith("ext:")) f else s"ext:${srcAbs.resolve(f)}"
-    val liveSidecars = st.tombs.values.flatten.toSet
-    val body =
-      (Seq("version=0", "action=overwrite",
-        s"clonesrc=${enc(srcRoot)}|$v") ++
-        st.schemaJson.map(j => s"schema=${enc(j)}").toSeq ++
-        st.files.map(f => s"file=${ext(f)}") ++
-        st.files.flatMap(f =>
-          st.sizes.get(f).map(sz => s"fsize=${enc(ext(f))}|$sz")) ++
-        st.files.flatMap(f =>
-          statsLines(ext(f), st.stats.getOrElse(f, Map.empty))) ++
-        st.tombKey.toSeq.filter(e => liveSidecars(e._1))
-          .sortBy(_._1).map { case (sc, k) =>
-            s"tombfile=${enc(ext(sc))}|${enc(k)}" } ++
-        st.tombs.toSeq.sortBy(_._1).flatMap { case (f, scs) =>
-          scs.map(sc => s"tombmap=${enc(ext(f))}|${enc(ext(sc))}") } ++
-        st.blooms.toSeq.filter(e => st.files.contains(e._1._1))
-          .sortBy(_._1).map { case ((f, c), sc) =>
-            s"bloomfile=${enc(ext(f))}|${enc(c)}|${enc(ext(sc))}" } ++
-        st.colMap.toSeq.sorted.map { case (l, p) =>
-          s"colmap=${enc(l)}|${enc(p)}" } ++
-        st.dropped.toSeq.sorted.map(p => s"dropcol=${enc(p)}") ++
-        st.parts.toSeq.filter(e => st.files.contains(e._1))
-          .sortBy(_._1).map { case (f, (t, pv)) =>
-            s"part=${enc(ext(f))}|${enc(t)}|${enc(pv)}" } ++
-        st.checks.toSeq.sortBy(_._1).map { case (n, e) =>
-          s"check=${enc(n)}|${enc(e)}" })
-        .mkString("", "\n", "\n")
     logIO(dstRoot).mkdirs(logDir(dstRoot))
-    publish(dstRoot, 0, body)
+    publish(dstRoot,
+      restate(st, 0L, ext).copy(cloneSrc = Some((srcRoot, v))))
     0L
   }
 
@@ -1170,52 +1105,20 @@ object VersionedTable {
         "names differ from the logical schema) — read it via " +
         "format(\"delta-log\") instead of converting")
     val srcAbs = Paths.get(deltaRoot).toAbsolutePath
-    val statTyp: org.apache.spark.sql.types.DataType => Option[String] = {
-      import org.apache.spark.sql.types._
-      {
-        case ByteType | ShortType | IntegerType | LongType => Some("long")
-        case FloatType | DoubleType => Some("double")
-        case StringType => Some("string")
-        case _ => None
-      }
-    }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val fileLines = snap.adds.map { a =>
+    val refs = snap.adds.map { a =>
       val abs =
         if (a.path.startsWith("/")) a.path
         else srcAbs.resolve(a.path).toString
       (a, s"ext:$abs")
     }
-    val statLines = fileLines.flatMap { case (a, ref) =>
-      a.statsJson.toSeq.flatMap { js =>
-        try {
-          val n = mapper.readTree(js)
-          val rows = if (n.hasNonNull("numRecords"))
-            n.get("numRecords").asLong() else 0L
-          def field(k: String, c: String) = Option(n.get(k))
-            .flatMap(o => Option(o.get(c))).filterNot(_.isNull)
-          snap.schema.fields.toSeq.flatMap { f =>
-            statTyp(f.dataType).flatMap { t =>
-              val mn = field("minValues", f.name).map(_.asText())
-              val mx = field("maxValues", f.name).map(_.asText())
-              val nulls = field("nullCount", f.name).map(_.asLong())
-              if (mn.isEmpty && mx.isEmpty && nulls.isEmpty) None
-              else Some(ColStats(t, mn, mx, nulls.getOrElse(-1L), rows))
-            }.map(cs => statsLines(ref, Map(f.name -> cs))).getOrElse(Nil)
-          }
-        } catch { case scala.util.control.NonFatal(_) => Nil }
-      }
-    }
-    val body =
-      (Seq("version=0", "action=overwrite",
-        s"importsrc=${enc(s"delta:$deltaRoot")}|${snap.version}",
-        s"schema=${enc(snap.schema.json)}") ++
-        fileLines.map { case (_, ref) => s"file=$ref" } ++
-        fileLines.map { case (a, ref) => s"fsize=${enc(ref)}|${a.size}" } ++
-        statLines)
-        .mkString("", "\n", "\n")
     logIO(graftRoot).mkdirs(logDir(graftRoot))
-    publish(graftRoot, 0, body)
+    publish(graftRoot, Manifest(0L, "overwrite",
+      importSrc = Some((s"delta:$deltaRoot", snap.version)),
+      schemaJson = Some(snap.schema.json),
+      files = refs.map(_._2),
+      fsizes = refs.map { case (a, ref) => ref -> a.size },
+      stats = refs.map { case (a, ref) =>
+        ref -> DeltaLogFileIndex.parseStats(snap.schema, a.statsJson) }.toMap))
     0L
   }
 
@@ -1235,22 +1138,14 @@ object VersionedTable {
       "importIceberg: the snapshot carries v2 row-level DELETE files " +
         "— deleted rows would resurrect through a zero-copy import. " +
         "Rewrite the table first, or read it via format(\"iceberg-meta\")")
-    val fileLines = snap.files.map(f => (f, s"ext:${f.path}"))
-    val statLines = fileLines.flatMap { case (f, ref) =>
-      f.stats.toSeq.sortBy(_._1).flatMap { case (c, cs) =>
-        statsLines(ref, Map(c -> cs))
-      }
-    }
-    val body =
-      (Seq("version=0", "action=overwrite",
-        s"importsrc=${enc(s"iceberg:$iceRoot")}|${snap.snapshotId}",
-        s"schema=${enc(snap.schema.json)}") ++
-        fileLines.map { case (_, ref) => s"file=$ref" } ++
-        fileLines.map { case (f, ref) => s"fsize=${enc(ref)}|${f.sizeBytes}" } ++
-        statLines)
-        .mkString("", "\n", "\n")
+    val refs = snap.files.map(f => (f, s"ext:${f.path}"))
     logIO(graftRoot).mkdirs(logDir(graftRoot))
-    publish(graftRoot, 0, body)
+    publish(graftRoot, Manifest(0L, "overwrite",
+      importSrc = Some((s"iceberg:$iceRoot", snap.snapshotId)),
+      schemaJson = Some(snap.schema.json),
+      files = refs.map(_._2),
+      fsizes = refs.map { case (f, ref) => ref -> f.sizeBytes },
+      stats = refs.map { case (f, ref) => ref -> f.stats }.toMap))
     0L
   }
 
@@ -1285,24 +1180,31 @@ object VersionedTable {
   def addCheck(spark: SparkSession, root: String, name: String,
       expression: String): Long = {
     require(name.nonEmpty && expression.nonEmpty, "empty constraint")
+    commitMetadata(root) { (base, st) =>
+      require(!st.checks.contains(name),
+        s"constraint '$name' already exists (drop it first to replace)")
+      import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
+      val bad = read(spark, root)
+        .filter(coalesce(not(expr(expression)), lit(false)))
+        .limit(1).count()
+      require(bad == 0L,
+        s"cannot add constraint '$name': existing rows violate $expression")
+      base.copy(checkAdds = Seq(name -> expression))
+    }
+  }
+
+  /** The one path of the metadata-only commits (constraint and column
+    * DDL, bloom-index registration): resolve the state at the latest
+    * version, let `edit` validate it and turn `base` — an `append` at
+    * latest + 1 restating the state's schema — into the commit, and
+    * publish that. Returns the new version. */
+  private def commitMetadata(root: String)(
+      edit: (Manifest, TableState) => Manifest): Long = {
     val latest = latestVersion(root)
-    require(latest >= 0,
-      s"$root is not a versioned table yet — commit data first")
+    require(latest >= 0, s"$root is not a versioned table (empty log)")
     val st = state(root, latest)
-    require(!st.checks.contains(name),
-      s"constraint '$name' already exists (drop it first to replace)")
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    val bad = read(spark, root)
-      .filter(coalesce(not(expr(expression)), lit(false)))
-      .limit(1).count()
-    require(bad == 0L,
-      s"cannot add constraint '$name': existing rows violate $expression")
-    val body =
-      (Seq(s"version=${latest + 1}", "action=append") ++
-        st.schemaJson.map(j => s"schema=${enc(j)}").toSeq ++
-        Seq(s"check=${enc(name)}|${enc(expression)}"))
-        .mkString("", "\n", "\n")
-    publish(root, latest + 1, body)
+    publish(root,
+      edit(Manifest(latest + 1, "append", schemaJson = st.schemaJson), st))
     latest + 1
   }
 
@@ -1319,45 +1221,30 @@ object VersionedTable {
   def addColumns(root: String,
       cols: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(cols.nonEmpty, "addColumns: no columns given")
-    val latest = latestVersion(root)
-    require(latest >= 0, s"$root is not a versioned table (empty log)")
-    val st = state(root, latest)
-    val tableSc = schemaOf(st).getOrElse(throw new IllegalStateException(
-      "addColumns needs schema tracking — commit once with a schema first"))
-    cols.foreach { f =>
-      require(!tableSc.fieldNames.contains(f.name),
-        s"column ${f.name} already exists")
-      require(!st.dropped.contains(f.name),
-        s"column ${f.name} collides with a dropped physical column " +
-          "still present in live files — old bytes would resurrect")
-      require(!st.colMap.values.exists(_ == f.name),
-        s"column ${f.name} collides with a physical name held by a " +
-          "renamed column")
+    commitMetadata(root) { (base, st) =>
+      val tableSc = schemaOf(st).getOrElse(throw new IllegalStateException(
+        "addColumns needs schema tracking — commit once with a schema first"))
+      cols.foreach { f =>
+        require(!tableSc.fieldNames.contains(f.name),
+          s"column ${f.name} already exists")
+        require(!st.dropped.contains(f.name),
+          s"column ${f.name} collides with a dropped physical column " +
+            "still present in live files — old bytes would resurrect")
+        require(!st.colMap.values.exists(_ == f.name),
+          s"column ${f.name} collides with a physical name held by a " +
+            "renamed column")
+      }
+      base.copy(schemaJson = Some(org.apache.spark.sql.types.StructType(
+        tableSc.fields ++ cols.map(_.copy(nullable = true))).json))
     }
-    val widened = org.apache.spark.sql.types.StructType(
-      tableSc.fields ++ cols.map(_.copy(nullable = true)))
-    val body =
-      (Seq(s"version=${latest + 1}", "action=append",
-        s"schema=${enc(widened.json)}"))
-        .mkString("", "\n", "\n")
-    publish(root, latest + 1, body)
-    latest + 1
   }
 
   /** Drop constraint `name` (metadata-only manifest). */
-  def dropCheck(root: String, name: String): Long = {
-    val latest = latestVersion(root)
-    require(latest >= 0 && state(root, latest).checks.contains(name),
-      s"no such constraint '$name'")
-    val st = state(root, latest)
-    val body =
-      (Seq(s"version=${latest + 1}", "action=append") ++
-        st.schemaJson.map(j => s"schema=${enc(j)}").toSeq ++
-        Seq(s"dropcheck=${enc(name)}"))
-        .mkString("", "\n", "\n")
-    publish(root, latest + 1, body)
-    latest + 1
-  }
+  def dropCheck(root: String, name: String): Long =
+    commitMetadata(root) { (base, st) =>
+      require(st.checks.contains(name), s"no such constraint '$name'")
+      base.copy(checkDrops = Seq(name))
+    }
 
   // ---------------------------------------------------------------------
   // Column mapping — RENAME COLUMN without rewriting data (the Delta
@@ -1386,33 +1273,27 @@ object VersionedTable {
     * commit. CHECK constraints referencing the old name are rejected
     * (rewrite them first — silently keeping a constraint that can no
     * longer resolve would fail every later commit). */
-  def renameColumn(root: String, oldName: String, newName: String): Long = {
-    val latest = latestVersion(root)
-    require(latest >= 0, s"$root is not a versioned table (empty log)")
-    val st = state(root, latest)
-    val schema = schemaOf(st).getOrElse(throw new IllegalStateException(
-      s"$root records no schema — commit once so schema tracking is on " +
-        "before renaming columns"))
-    require(schema.fieldNames.contains(oldName),
-      s"no such column '$oldName' (have: ${schema.fieldNames.mkString(", ")})")
-    require(!schema.fieldNames.contains(newName),
-      s"column '$newName' already exists")
-    require(oldName != newName, "rename to the same name is a no-op")
-    val referencing = st.checks.filter { case (_, e) =>
-      e.matches(s"(?s).*\\b${java.util.regex.Pattern.quote(oldName)}\\b.*") }
-    require(referencing.isEmpty,
-      s"CHECK constraint(s) ${referencing.keys.mkString(", ")} reference " +
-        s"'$oldName' — drop or rewrite them before renaming")
-    val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
-      f => if (f.name == oldName) f.copy(name = newName) else f))
-    val body =
-      (Seq(s"version=${latest + 1}", "action=append",
-        s"schema=${enc(newSchema.json)}",
-        s"rename=${enc(oldName)}|${enc(newName)}"))
-        .mkString("", "\n", "\n")
-    publish(root, latest + 1, body)
-    latest + 1
-  }
+  def renameColumn(root: String, oldName: String, newName: String): Long =
+    commitMetadata(root) { (base, st) =>
+      val schema = schemaOf(st).getOrElse(throw new IllegalStateException(
+        s"$root records no schema — commit once so schema tracking is on " +
+          "before renaming columns"))
+      require(schema.fieldNames.contains(oldName),
+        s"no such column '$oldName' (have: ${schema.fieldNames.mkString(", ")})")
+      require(!schema.fieldNames.contains(newName),
+        s"column '$newName' already exists")
+      require(oldName != newName, "rename to the same name is a no-op")
+      val referencing = st.checks.filter { case (_, e) =>
+        e.matches(s"(?s).*\\b${java.util.regex.Pattern.quote(oldName)}\\b.*") }
+      require(referencing.isEmpty,
+        s"CHECK constraint(s) ${referencing.keys.mkString(", ")} reference " +
+          s"'$oldName' — drop or rewrite them before renaming")
+      base.copy(
+        schemaJson = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.map(f =>
+            if (f.name == oldName) f.copy(name = newName) else f)).json),
+        renames = Seq(oldName -> newName))
+    }
 
   /** Drop logical column `name` as a metadata-only commit — the other
     * half of column mapping: the bytes stay in the live files, the
@@ -1423,32 +1304,25 @@ object VersionedTable {
     * reads the column in pre-drop snapshots; the next full rewrite
     * (compaction/overwrite) physically sheds it. CHECK constraints
     * referencing the column block the drop, same as rename. */
-  def dropColumn(root: String, name: String): Long = {
-    val latest = latestVersion(root)
-    require(latest >= 0, s"$root is not a versioned table (empty log)")
-    val st = state(root, latest)
-    val schema = schemaOf(st).getOrElse(throw new IllegalStateException(
-      s"$root records no schema — commit once so schema tracking is on " +
-        "before dropping columns"))
-    require(schema.fieldNames.contains(name),
-      s"no such column '$name' (have: ${schema.fieldNames.mkString(", ")})")
-    require(schema.fields.length > 1,
-      "cannot drop the only column")
-    val referencing = st.checks.filter { case (_, e) =>
-      e.matches(s"(?s).*\\b${java.util.regex.Pattern.quote(name)}\\b.*") }
-    require(referencing.isEmpty,
-      s"CHECK constraint(s) ${referencing.keys.mkString(", ")} reference " +
-        s"'$name' — drop or rewrite them before dropping the column")
-    val newSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(_.name == name))
-    val body =
-      (Seq(s"version=${latest + 1}", "action=append",
-        s"schema=${enc(newSchema.json)}",
-        s"dropcol=${enc(physicalName(st, name))}"))
-        .mkString("", "\n", "\n")
-    publish(root, latest + 1, body)
-    latest + 1
-  }
+  def dropColumn(root: String, name: String): Long =
+    commitMetadata(root) { (base, st) =>
+      val schema = schemaOf(st).getOrElse(throw new IllegalStateException(
+        s"$root records no schema — commit once so schema tracking is on " +
+          "before dropping columns"))
+      require(schema.fieldNames.contains(name),
+        s"no such column '$name' (have: ${schema.fieldNames.mkString(", ")})")
+      require(schema.fields.length > 1,
+        "cannot drop the only column")
+      val referencing = st.checks.filter { case (_, e) =>
+        e.matches(s"(?s).*\\b${java.util.regex.Pattern.quote(name)}\\b.*") }
+      require(referencing.isEmpty,
+        s"CHECK constraint(s) ${referencing.keys.mkString(", ")} reference " +
+          s"'$name' — drop or rewrite them before dropping the column")
+      base.copy(
+        schemaJson = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.filterNot(_.name == name)).json),
+        dropCols = Seq(physicalName(st, name)))
+    }
 
   // ---------------------------------------------------------------------
   // Timestamp time travel — `TIMESTAMP AS OF` beside `VERSION AS OF`.
@@ -1641,14 +1515,6 @@ object VersionedTable {
       b.length - ob.length
     }
   }
-
-  private def statsLines(fileRel: String,
-      stats: Map[String, ColStats]): Seq[String] =
-    stats.toSeq.sortBy(_._1).map { case (col, cs) =>
-      s"stats=${enc(fileRel)}|${enc(col)}|${cs.typ}|" +
-        s"${cs.min.fold("")(enc)}|${cs.max.fold("")(enc)}|" +
-        s"${cs.nulls}|${cs.rows}"
-    }
 
   private def parseStatsLine(line: String)
       : Option[(String, String, ColStats)] =
@@ -1931,72 +1797,65 @@ object VersionedTable {
     import org.apache.spark.sql.functions.{col, input_file_name}
     import org.apache.spark.util.sketch.BloomFilter
     import org.apache.spark.sql.Encoders
-    val basis = latestVersion(root)
-    require(basis >= 0, s"$root is not a versioned table (empty log)")
-    val st = state(root, basis)
-    require(st.files.nonEmpty, "empty snapshot: nothing to index")
-    // Uniform capacity = the largest per-file row count (uniform so
-    // per-partition partial filters are bit-compatible for merging);
-    // files without row stats fall back to a roomy default — an
-    // oversized bloom only wastes bits, an undersized one inflates fpp.
-    val expected = math.max(1024L,
-      st.stats.values.flatMap(_.values.map(_.rows)).maxOption
-        .getOrElse(1L << 20))
-    // input_file_name() is a file URI whose exact form (file:/ vs
-    // file:///) varies; key the reverse map by decoded filesystem path
-    val relByAbs = st.files
-      .map(f => dataPath(root, f).toAbsolutePath.toString -> f).toMap
-    // build + register in PHYSICAL space (the bloom outlives renames)
-    val physCol = physicalName(st, colName)
-    val pairs = readFilesWithSchema(spark, root, physicalSchemaOf(st),
-        st.files)
-      .select(input_file_name().as("_f"),
-        col(physCol).cast("string").as("_v"))
-      .where(col("_v").isNotNull)
-      .as[(String, String)](Encoders.tuple(Encoders.STRING, Encoders.STRING))
-    val perFile = pairs.mapPartitions { it =>
-        val acc = scala.collection.mutable.Map[String, BloomFilter]()
-        it.foreach { case (f, v) =>
-          acc.getOrElseUpdate(f, BloomFilter.create(expected, fpp))
-            .putString(v) }
-        acc.iterator.map { case (f, bf) =>
+    commitMetadata(root) { (base, st) =>
+      require(st.files.nonEmpty, "empty snapshot: nothing to index")
+      // Uniform capacity = the largest per-file row count (uniform so
+      // per-partition partial filters are bit-compatible for merging);
+      // files without row stats fall back to a roomy default — an
+      // oversized bloom only wastes bits, an undersized one inflates fpp.
+      val expected = math.max(1024L,
+        st.stats.values.flatMap(_.values.map(_.rows)).maxOption
+          .getOrElse(1L << 20))
+      // input_file_name() is a file URI whose exact form (file:/ vs
+      // file:///) varies; key the reverse map by decoded filesystem path
+      val relByAbs = st.files
+        .map(f => dataPath(root, f).toAbsolutePath.toString -> f).toMap
+      // build + register in PHYSICAL space (the bloom outlives renames)
+      val physCol = physicalName(st, colName)
+      val pairs = readFilesWithSchema(spark, root, physicalSchemaOf(st),
+          st.files)
+        .select(input_file_name().as("_f"),
+          col(physCol).cast("string").as("_v"))
+        .where(col("_v").isNotNull)
+        .as[(String, String)](Encoders.tuple(Encoders.STRING, Encoders.STRING))
+      val perFile = pairs.mapPartitions { it =>
+          val acc = scala.collection.mutable.Map[String, BloomFilter]()
+          it.foreach { case (f, v) =>
+            acc.getOrElseUpdate(f, BloomFilter.create(expected, fpp))
+              .putString(v) }
+          acc.iterator.map { case (f, bf) =>
+            val bos = new java.io.ByteArrayOutputStream()
+            bf.writeTo(bos)
+            (f, bos.toByteArray) }
+        }(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
+        .groupByKey(_._1)(Encoders.STRING)
+        .reduceGroups { (a, b) =>
+          val x = BloomFilter.readFrom(new java.io.ByteArrayInputStream(a._2))
+          x.mergeInPlace(
+            BloomFilter.readFrom(new java.io.ByteArrayInputStream(b._2)))
           val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          (f, bos.toByteArray) }
-      }(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-      .groupByKey(_._1)(Encoders.STRING)
-      .reduceGroups { (a, b) =>
-        val x = BloomFilter.readFrom(new java.io.ByteArrayInputStream(a._2))
-        x.mergeInPlace(
-          BloomFilter.readFrom(new java.io.ByteArrayInputStream(b._2)))
-        val bos = new java.io.ByteArrayOutputStream()
-        x.writeTo(bos)
-        (a._1, bos.toByteArray)
+          x.writeTo(bos)
+          (a._1, bos.toByteArray)
+        }
+        .map(_._2)(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
+        .collect() // one (file, serialized bloom) row per live file
+      // Sidecars land under data/ (immutable dirs, same vacuum protocol
+      // as tombstone sidecars) BEFORE the manifest makes them visible.
+      val nonce = java.util.UUID.randomUUID().toString.take(8)
+      val dirRel = s"data/bloomidx-v${base.version}-$nonce"
+      val entries = perFile.toSeq.sortBy(_._1).zipWithIndex.map {
+        case ((abs, bytes), i) =>
+          val rel = f"$dirRel/$i%05d.bf"
+          dataIO(root).write(Paths.get(root, rel), bytes)
+          val absPath = new java.net.URI(abs).getPath
+          val dataFile = relByAbs.getOrElse(absPath,
+            throw new IllegalStateException(
+              s"bloom build saw unknown input file $abs"))
+          (dataFile, rel)
       }
-      .map(_._2)(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-      .collect() // one (file, serialized bloom) row per live file
-    // Sidecars land under data/ (immutable dirs, same vacuum protocol
-    // as tombstone sidecars) BEFORE the manifest makes them visible.
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dirRel = s"data/bloomidx-v${basis + 1}-$nonce"
-    val entries = perFile.toSeq.sortBy(_._1).zipWithIndex.map {
-      case ((abs, bytes), i) =>
-        val rel = f"$dirRel/$i%05d.bf"
-        dataIO(root).write(Paths.get(root, rel), bytes)
-        val absPath = new java.net.URI(abs).getPath
-        val dataFile = relByAbs.getOrElse(absPath,
-          throw new IllegalStateException(
-            s"bloom build saw unknown input file $abs"))
-        (dataFile, rel)
+      base.copy(bloomFiles = entries.map { case (dataFile, sc) =>
+        (dataFile, physCol, sc) })
     }
-    val body =
-      (Seq(s"version=${basis + 1}", "action=append") ++
-        st.schemaJson.map(j => s"schema=${enc(j)}").toSeq ++
-        entries.map { case (dataFile, sc) =>
-          s"bloomfile=${enc(dataFile)}|${enc(physCol)}|${enc(sc)}" })
-        .mkString("", "\n", "\n")
-    publish(root, basis + 1, body)
-    basis + 1
   }
 
   /** The file set of snapshot `v` (log replay: overwrite resets,
@@ -2013,17 +1872,6 @@ object VersionedTable {
   def snapshotTombstones(root: String, v: Long): Map[String, Seq[String]] =
     state(root, v).tombs
 
-  /** Commit `df` as the next version. Returns the committed version.
-    * `mode` is "append" or "overwrite". Data files are fully written
-    * (and spark-committed) before the manifest move makes them
-    * visible; on a commit race the loser's data dir is orphaned (and
-    * reclaimed by [[vacuum]]) — never half-visible.
-    *
-    * `expected` pins the version this writer intends to create (its
-    * read basis + 1 — the optimistic-concurrency API): if another
-    * writer got there first, [[ConcurrentCommitException]] fires even
-    * when the race finished before we started writing. Omitted, the
-    * target is latest+1 and only a same-version photo-finish races. */
   /** Enforce active CHECK constraints on a batch of rows about to be
     * published: a row violates when a constraint evaluates to strict
     * FALSE (SQL CHECK: NULL passes). One job, all constraints in one
@@ -2053,71 +1901,22 @@ object VersionedTable {
     }
   }
 
+  /** Commit `df` as the next version. Returns the committed version.
+    * `mode` is "append" or "overwrite". Data files are fully written
+    * (and spark-committed) before the manifest move makes them
+    * visible; on a commit race the loser's data dir is orphaned (and
+    * reclaimed by [[vacuum]]) — never half-visible.
+    *
+    * `expected` pins the version this writer intends to create (its
+    * read basis + 1 — the optimistic-concurrency API): if another
+    * writer got there first, [[ConcurrentCommitException]] fires even
+    * when the race finished before we started writing. Omitted, the
+    * target is latest+1 and only a same-version photo-finish races. */
   def commit(df: DataFrame, root: String, mode: String = "append",
       expected: Option[Long] = None, batchTag: Option[Long] = None,
       partitionBy: Option[PartitionTransform] = None): Long = {
-    require(mode == "append" || mode == "overwrite",
-      s"mode must be append|overwrite, got $mode")
-    logIO(root).mkdirs(logDir(root))
-    val next = expected.getOrElse(latestVersion(root) + 1)
-    // an expected version past latest+1 would punch a GAP in the log —
-    // snapshots replay a contiguous prefix, so a gap makes every later
-    // read silently wrong; reject at the source
-    require(next <= latestVersion(root) + 1,
-      s"expected version $next would leave a log gap " +
-        s"(latest is ${latestVersion(root)})")
-    if (logIO(root).exists(manifestPath(root, next)))
-      throw new ConcurrentCommitException(next)
-    // Schema tracking + evolution policy (the Delta-shaped contract):
-    // an APPEND may ADD columns but must keep every existing column at
-    // its existing type — dropping or retyping under appends would
-    // leave live files the declared schema can't describe. OVERWRITE
-    // replaces the file set, so it may change schema freely. The
-    // check compares against METADATA (the previous manifest's schema
-    // line), never parquet footers.
-    val prevState =
-      if (latestVersion(root) < 0) None
-      else Some(state(root, latestVersion(root)))
-    val prevSchema = prevState.flatMap(schemaOf)
-    // CHECK-constraint enforcement (the Delta ADD CONSTRAINT contract):
-    // every active constraint must hold on the incoming batch — a row
-    // violates when its expression evaluates to strict FALSE (SQL CHECK
-    // semantics: NULL passes; express NOT NULL as `c IS NOT NULL`).
-    // One job over the batch, all constraints in a single pass; the
-    // error names every violated constraint. Enforced on the ingest
-    // path (append/overwrite) — row-edit operators rewrite rows that
-    // already passed.
-    enforceChecks(df, prevState.map(_.checks).getOrElse(Map.empty), root)
-    if (mode == "append") prevSchema.foreach { prev =>
-      val byName = df.schema.map(f => f.name -> f.dataType).toMap
-      // TYPE WIDENING (the Delta/Iceberg-v3 evolution): an append may
-      // carry a SAFELY WIDER type for an existing column — the batch's
-      // wider schema becomes the table schema (metadata-only; this
-      // commit's schema line), old files keep their narrow physical
-      // type forever, and reads up-cast them (Spark 4's vectorized
-      // parquet reader promotes int32→int64 and float→double natively;
-      // the stats comparators are numeric-ordered, so file skipping
-      // stays sound across the width change). At 100 TB this is the
-      // difference between ALTER TYPE as one manifest and a full table
-      // rewrite. Everything else — narrowing, drops, incompatible
-      // retypes — still refuses.
-      val broken = prev.filter { f =>
-        byName.get(f.name) match {
-          case Some(t) => t != f.dataType && !isSafeWidening(f.dataType, t)
-          case None => true
-        }
-      }
-      require(broken.isEmpty,
-        "append may add columns or widen int->bigint / float->double, " +
-          "but not drop, narrow, or otherwise retype existing ones; " +
-          s"missing or retyped: ${broken.map(_.name).mkString(", ")} " +
-          "(use overwrite to change the schema)")
-    }
-    // Append onto a pre-schema-tracking history records NO schema:
-    // old files may hold columns this append doesn't know about, and
-    // a partial schema line would silently hide them from reads.
-    val recordSchema = mode == "overwrite" ||
-      latestVersion(root) < 0 || prevSchema.isDefined
+    val (next, prevState) = ingestBasis(root, mode, expected)
+    val schemaJson = ingestGate(root, mode, prevState, df.schema, Some(df))
     // Column mapping: appends write under PHYSICAL names (a rename
     // never rewrites data, so the files keep their original columns
     // forever). A NEW column may not claim a physical name another
@@ -2140,85 +1939,146 @@ object VersionedTable {
             "resurrect; pick different names or overwrite the table")
         prevState.map(toPhysical(_, df)).getOrElse(df)
       }
+    // under column mapping the transform rebinds to the physical name
+    // (files and tags outlive renames, like stats and blooms)
+    val layout = partitionBy.map(t =>
+      if (mode == "append")
+        prevState.map(s => t.rebind(physicalName(s, t.srcCol))).getOrElse(t)
+      else t)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dataRel = s"data/v$next-$nonce"
-    val dataDir = Paths.get(root, dataRel)
-    // Hidden partitioning ([[PartitionTransform]]): lay the batch out
-    // by the transform of the source column and tag each file with its
-    // (transform, value) in the manifest. The helper column drives
-    // `partitionBy` ONLY — Spark excludes it from the data files, so
-    // user data is untouched (the point of HIDDEN partitioning).
-    // Under column mapping the transform rebinds to the physical name
-    // (files and tags outlive renames, like stats and blooms).
-    val partLines = scala.collection.mutable.ListBuffer.empty[String]
-    val files = partitionBy match {
-      case None =>
-        writeDf.write.mode("errorifexists").parquet(dataDir.toString)
-        listDir(dataDir)
-          .map(_.getFileName.toString)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-          .sorted
-          .map(n => s"$dataRel/$n")
-      case Some(t0) =>
-        val t =
-          if (mode == "append")
-            prevState.map(s => t0.rebind(physicalName(s, t0.srcCol)))
-              .getOrElse(t0)
-          else t0
-        val field = writeDf.schema.fields.find(_.name == t.srcCol)
-          .getOrElse(throw new IllegalArgumentException(
-            s"partition transform ${t.spec}: column ${t.srcCol} not in " +
-              s"batch schema [${writeDf.columns.mkString(", ")}]"))
-        val pvCol = "__graft_pv"
-        require(!writeDf.columns.contains(pvCol),
-          s"batch already has a $pvCol column — rename it first")
-        import org.apache.spark.sql.functions.col
-        // repartition BY the value first so each partition value is
-        // written by one task — one file per value, not one per
-        // (task, value) pair (the small-files explosion partitionBy
-        // produces on unclustered input)
-        writeDf
-          .withColumn(pvCol, t.sparkExpr(col(t.srcCol), field.dataType))
-          .repartition(col(pvCol))
-          .write.mode("errorifexists").partitionBy(pvCol)
-          .parquet(dataDir.toString)
-        val leaves = dataIO(root).listFilesRecursive(dataDir).filter(p =>
-          p.getFileName.toString.endsWith(".parquet") &&
-            !p.getFileName.toString.startsWith("."))
-        val rels = leaves
-          .map(p => s"$dataRel/${dataDir.relativize(p).toString}").sorted
-        rels.foreach { f =>
-          f.split("/").find(_.startsWith(pvCol + "=")).foreach { seg =>
-            // Spark writes dir values Hive-escaped; store the REAL value
-            val v = org.apache.spark.sql.catalyst.catalog
-              .ExternalCatalogUtils.unescapePathName(
-                seg.drop(pvCol.length + 1))
-            partLines += s"part=${enc(f)}|${enc(t.spec)}|${enc(v)}"
-          }
-        }
-        rels
-    }
-    // Data-skipping stats: harvested from the freshly written parquet
-    // FOOTERS (metadata-only — no data re-read) and committed in the
-    // same manifest, so stats and file list are atomic together.
-    val stats = files.flatMap { f =>
-      statsLines(f, footerStats(df.sparkSession, Paths.get(root, f)))
-    }
-    val body =
-      (Seq(s"version=$next", s"action=$mode") ++
-        batchTag.map(b => s"batch=$b").toSeq ++
-        (if (recordSchema) Seq(s"schema=${enc(df.schema.json)}")
-         else Seq.empty) ++
-        files.map(f => s"file=$f") ++
-        // recorded size (Delta AddFile.size): lets scan planning and
-        // DESCRIBE DETAIL run from metadata alone, no per-file stat
-        files.map(f =>
-          s"fsize=${enc(f)}|${dataSize(root, f)}") ++
-        stats ++ partLines)
-        .mkString("", "\n", "\n")
-    publish(root, next, body)
+    publish(root, land(writeDf, root, s"data/v$next-$nonce", layout).copy(
+      version = next, action = mode, batchTag = batchTag,
+      schemaJson = schemaJson))
     next
   }
+
+  /** The version an ingest commit ([[commit]], [[commitStagedFiles]])
+    * publishes — `expected`, by default latest + 1 — and the state it
+    * builds on (None for a new table). Refuses a version that would
+    * punch a GAP in the log (snapshots replay a contiguous prefix, so a
+    * gap makes every later read silently wrong) or is already taken. */
+  private def ingestBasis(root: String, mode: String,
+      expected: Option[Long]): (Long, Option[TableState]) = {
+    require(mode == "append" || mode == "overwrite",
+      s"mode must be append|overwrite, got $mode")
+    logIO(root).mkdirs(logDir(root))
+    val latest = latestVersion(root)
+    val next = expected.getOrElse(latest + 1)
+    require(next <= latest + 1,
+      s"expected version $next would leave a log gap (latest is $latest)")
+    if (logIO(root).exists(manifestPath(root, next)))
+      throw new ConcurrentCommitException(next)
+    (next, if (latest < 0) None else Some(state(root, latest)))
+  }
+
+  /** The one ingest gate of [[commit]] and [[commitStagedFiles]], over
+    * the basis state `prev`; returns the schema line to record.
+    *
+    * CHECK constraints (the Delta ADD CONSTRAINT contract): every
+    * active constraint must hold on the incoming `rows` (None = no
+    * rows); built and scanned only when the table has constraints.
+    *
+    * Schema tracking + evolution (the Delta-shaped contract): an
+    * APPEND may ADD columns or carry a SAFELY WIDER type for an
+    * existing one ([[isSafeWidening]]) — the batch's schema becomes the
+    * table schema (metadata-only; old files keep their narrow physical
+    * type and reads up-cast them, so ALTER TYPE is one manifest, not a
+    * table rewrite). Narrowing, drops and other retypes refuse; an
+    * OVERWRITE replaces the file set and may change schema freely. The
+    * check compares against METADATA, never parquet footers.
+    *
+    * An append onto a pre-schema-tracking history records NO schema:
+    * old files may hold columns it does not know about, and a partial
+    * schema line would silently hide them from reads. */
+  private def ingestGate(root: String, mode: String,
+      prev: Option[TableState], schema: org.apache.spark.sql.types.StructType,
+      rows: => Option[DataFrame]): Option[String] = {
+    val checks = prev.map(_.checks).getOrElse(Map.empty)
+    if (checks.nonEmpty) rows.foreach(enforceChecks(_, checks, root))
+    val prevSchema = prev.flatMap(schemaOf)
+    if (mode == "append") prevSchema.foreach { prior =>
+      val byName = schema.map(f => f.name -> f.dataType).toMap
+      val broken = prior.filter { f =>
+        byName.get(f.name) match {
+          case Some(t) => t != f.dataType && !isSafeWidening(f.dataType, t)
+          case None => true
+        }
+      }
+      require(broken.isEmpty,
+        "append may add columns or widen int->bigint / float->double, " +
+          "but not drop, narrow, or otherwise retype existing ones; " +
+          s"missing or retyped: ${broken.map(_.name).mkString(", ")} " +
+          "(use overwrite to change the schema)")
+    }
+    if (mode == "overwrite" || prev.isEmpty || prevSchema.isDefined)
+      Some(schema.json)
+    else None
+  }
+
+  /** The one landing step for Spark-written data: write `df` as parquet
+    * into the new directory `dirRel` under `root` (an existing one
+    * refuses), list its parquet leaves in sorted order, and return the
+    * record that adds them ([[adding]]: each file with its recorded
+    * size and footer stats), plus each file's `part=` tag when
+    * `partitionBy` lays the rows out. The caller sets version and
+    * action. A `sidecar` (tombstone keys) is listed only: the log
+    * records no size or stats for it, so no footer is read.
+    *
+    * Hidden partitioning ([[PartitionTransform]]): the rows are laid
+    * out by the transform of the source column and each file is tagged
+    * with its (transform, value). The helper column drives Spark's
+    * `partitionBy` ONLY — Spark excludes it from the data files, so
+    * user data is untouched (the point of HIDDEN partitioning). */
+  private def land(df: DataFrame, root: String, dirRel: String,
+      partitionBy: Option[PartitionTransform] = None,
+      sidecar: Boolean = false): Manifest = {
+    import org.apache.spark.sql.functions.col
+    val dir = Paths.get(root, dirRel)
+    val pvCol = "__graft_pv"
+    val laid = partitionBy.fold(df) { t =>
+      val field = df.schema.fields.find(_.name == t.srcCol)
+        .getOrElse(throw new IllegalArgumentException(
+          s"partition transform ${t.spec}: column ${t.srcCol} not in " +
+            s"batch schema [${df.columns.mkString(", ")}]"))
+      require(!df.columns.contains(pvCol),
+        s"batch already has a $pvCol column — rename it first")
+      // repartition BY the value first so each partition value is
+      // written by one task — one file per value, not one per
+      // (task, value) pair (the small-files explosion partitionBy
+      // produces on unclustered input)
+      df.withColumn(pvCol, t.sparkExpr(col(t.srcCol), field.dataType))
+        .repartition(col(pvCol))
+    }
+    val writer = laid.write.mode("errorifexists")
+    partitionBy.fold(writer)(_ => writer.partitionBy(pvCol))
+      .parquet(dir.toString)
+    val files = dataIO(root).listFilesRecursive(dir).filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith(".")
+    }.map(p => s"$dirRel/${dir.relativize(p)}").sorted
+    val tags = for {
+      t <- partitionBy.toSeq
+      f <- files
+      seg <- f.split("/").find(_.startsWith(pvCol + "="))
+    } yield (f, t.spec, // Spark writes dir values Hive-escaped; store the REAL value
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(seg.drop(pvCol.length + 1)))
+    if (sidecar) Manifest(-1L, "", files = files)
+    else adding(df.sparkSession, root, files).copy(parts = tags)
+  }
+
+  /** The record that adds `files` (already under `root`): the files,
+    * each one's recorded size (Delta AddFile.size — scan planning and
+    * DESCRIBE DETAIL run from metadata alone) and its data-skipping
+    * stats, harvested from the parquet FOOTER (metadata-only, no data
+    * re-read) so stats and file list commit atomically together. The
+    * caller sets version and action. */
+  private def adding(spark: SparkSession, root: String,
+      files: Seq[String]): Manifest =
+    Manifest(-1L, "", files = files,
+      fsizes = files.map(f => f -> dataSize(root, f)),
+      stats = files.map(f =>
+        f -> footerStats(spark, Paths.get(root, f))).toMap)
 
   /** Whether an APPEND staged under LOGICAL column names may commit to
     * the snapshot at `v`: false once the table carries renamed or
@@ -2246,79 +2106,42 @@ object VersionedTable {
     * ([[Graft2BatchWrite]]): executor tasks stream rows straight into
     * parquet under `data/` through the connector `DataWriter`
     * contract (invisible until this manifest references them — the
-    * same invisibility rule [[commit]] relies on), then this applies
-    * the SAME policy gates as [[commit]]: CHECK constraints (one pass
-    * over the staged rows), append schema evolution (add columns /
-    * widen int→bigint, float→double — nothing else), column-mapping
-    * refusal for appends (staged files carry the query's LOGICAL
-    * names; the v1 writer owns the physical rename), then harvests
-    * footer stats (metadata-only) and publishes atomically via the
-    * log store's putIfAbsent. */
+    * same invisibility rule [[commit]] relies on), then this refuses
+    * appends under column mapping (staged files carry the query's
+    * LOGICAL names; the v1 writer owns the physical rename), passes
+    * the same [[ingestGate]] as [[commit]] (CHECK constraints over the
+    * staged rows, append schema evolution), harvests footer stats
+    * (metadata-only) and publishes atomically via the log store's
+    * putIfAbsent. */
   private[sources] def commitStagedFiles(spark: SparkSession,
       root: String, relFiles: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
       mode: String): Long = {
-    require(mode == "append" || mode == "overwrite",
-      s"mode must be append|overwrite, got $mode")
-    logIO(root).mkdirs(logDir(root))
-    val next = latestVersion(root) + 1
-    if (logIO(root).exists(manifestPath(root, next)))
-      throw new ConcurrentCommitException(next)
-    val prevState =
-      if (latestVersion(root) < 0) None
-      else Some(state(root, latestVersion(root)))
-    val prevSchema = prevState.flatMap(schemaOf)
+    val (next, prevState) = ingestBasis(root, mode, None)
     require(mode == "overwrite" ||
       prevState.forall(s => s.colMap.isEmpty && s.dropped.isEmpty),
       "graft2 write: appends to a table with renamed or dropped " +
         "columns route through the v1 writer (staged files carry " +
         "logical names)")
-    val checks = prevState.map(_.checks).getOrElse(Map.empty)
-    if (checks.nonEmpty && relFiles.nonEmpty)
-      enforceChecks(
-        spark.read.schema(Graft2DataSource.asNullable(schema)
+    val schemaJson = ingestGate(root, mode, prevState, schema,
+      if (relFiles.isEmpty) None
+      else Some(spark.read.schema(Graft2DataSource.asNullable(schema)
           .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(relFiles.map(f => Paths.get(root, f).toString): _*),
-        checks, root)
-    if (mode == "append") prevSchema.foreach { prev =>
-      val byName = schema.map(f => f.name -> f.dataType).toMap
-      val broken = prev.filter { f =>
-        byName.get(f.name) match {
-          case Some(t) => t != f.dataType && !isSafeWidening(f.dataType, t)
-          case None => true
-        }
-      }
-      require(broken.isEmpty,
-        "append may add columns or widen int->bigint / float->double, " +
-          "but not drop, narrow, or otherwise retype existing ones; " +
-          s"missing or retyped: ${broken.map(_.name).mkString(", ")} " +
-          "(use overwrite to change the schema)")
-    }
-    val recordSchema = mode == "overwrite" ||
-      latestVersion(root) < 0 || prevSchema.isDefined
-    val files = relFiles.sorted
-    val stats = files.flatMap { f =>
-      statsLines(f, footerStats(spark, Paths.get(root, f)))
-    }
-    val body =
-      (Seq(s"version=$next", s"action=$mode") ++
-        (if (recordSchema) Seq(s"schema=${enc(schema.json)}")
-         else Seq.empty) ++
-        files.map(f => s"file=$f") ++
-        files.map(f => s"fsize=${enc(f)}|${dataSize(root, f)}") ++
-        stats)
-        .mkString("", "\n", "\n")
-    publish(root, next, body)
+        .parquet(relFiles.map(f => Paths.get(root, f).toString): _*)))
+    publish(root, adding(spark, root, relFiles.sorted).copy(
+      version = next, action = mode, schemaJson = schemaJson))
     next
   }
 
-  /** Publish manifest `body` as version `next` via HARD LINK, not
+  /** Publish manifest `m` as version `m.version` via HARD LINK, not
     * rename: POSIX rename() silently REPLACES an existing target
     * (Files.move's no-replace behavior is implementation-specific), so
     * a photo-finish race would vaporize the winner's committed
     * manifest. link(2) is atomic AND fails with EEXIST — the loser
-    * reliably gets the exception. */
-  private def publish(root: String, next: Long, body: String): Unit = {
+    * reliably gets the exception. Every graft commit lands here, and
+    * only [[render]] turns it into text. */
+  private def publish(root: String, m: Manifest): Unit = {
+    val next = m.version
     // Commit wall-clock stamp for timestamp time travel ([[versionAsOf]]).
     // Readers monotonize across versions, so clock skew between writers
     // cannot make as-of resolution non-deterministic.
@@ -2332,7 +2155,8 @@ object VersionedTable {
     // no successor to vouch for it — a hash chain is tamper-EVIDENT
     // for history, not an anchor for the tip.
     val parent = if (next == 0) "genesis" else manifestHash(root, next - 1)
-    val stamped = s"ts=${System.currentTimeMillis}\nparent=$parent\n" + body
+    val stamped =
+      s"ts=${System.currentTimeMillis}\nparent=$parent\n" + render(m)
     try logIO(root).putIfAbsent(manifestPath(root, next),
       stamped.getBytes("UTF-8"))
     catch {
@@ -2350,7 +2174,8 @@ object VersionedTable {
   /** DELETE FROM the table, copy-on-write: remove rows matching the
     * CONJUNCTION of inclusive `ranges` (`(col, lower, upper)`, None =
     * unbounded; rows with NULL in a ranged column never match and
-    * always survive — SQL DELETE semantics).
+    * always survive — SQL DELETE semantics): [[deleteWhere]] over the
+    * range predicate.
     *
     * The manifest stats prune first: a file whose min/max cannot hold
     * a matching row is CARRIED OVER untouched — not rewritten, not
@@ -2365,13 +2190,22 @@ object VersionedTable {
     * from disk, until [[vacuum]]). */
   def deleteRanges(spark: SparkSession, root: String,
       ranges: Seq[(String, Option[Any], Option[Any])]): Long = {
-    import org.apache.spark.sql.functions.{lit, not, coalesce}
     require(ranges.nonEmpty, "deleteRanges needs at least one range " +
       "(an empty conjunction matches every row — use overwrite)")
-    copyOnWrite(spark, root, ranges, (df, matchPred) =>
-      // NULL-safe survival: pred NULL (null column value) must KEEP
-      // the row — a bare !pred evaluates NULL and the filter drops it
-      df.filter(not(coalesce(matchPred, lit(false)))))
+    deleteWhere(spark, root, rangePredicate(ranges))
+  }
+
+  /** The conjunction of inclusive `(col, lower, upper)` ranges (None =
+    * unbounded) as an unresolved predicate: [[filesMayMatch]] resolves
+    * it against the snapshot, and a NULL in a ranged column matches
+    * nothing. */
+  private def rangePredicate(ranges: Seq[(String, Option[Any], Option[Any])])
+      : org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.functions.{col, lit}
+    org.apache.spark.sql.GraftColumnBridge.expression(
+      ranges.flatMap { case (c, lo, hi) =>
+        lo.map(l => col(c) >= lit(l)) ++ hi.map(u => col(c) <= lit(u))
+      }.reduce(_ && _))
   }
 
   /** DELETE FROM the table, MERGE-ON-READ: remove the rows whose
@@ -2398,7 +2232,7 @@ object VersionedTable {
     * metadata-only no-op: returns the basis version. */
   def deleteKeysMOR(spark: SparkSession, root: String, keyCol: String,
       keys: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
+    import org.apache.spark.sql.functions.col
     val basis = latestVersion(root)
     require(basis >= 0, s"$root is not a versioned table (empty log)")
     require(keys.columns.contains(keyCol),
@@ -2411,54 +2245,58 @@ object VersionedTable {
     // NULL keys match no row (SQL `DELETE WHERE k IN (...)`), drop them
     val distinctKeys = keys.select(col(keyCol).as(physKey))
       .where(col(physKey).isNotNull).distinct()
-    // SOUNDNESS: a tombstone must list every file that might hold a
-    // deleted key; a file WITHOUT stats is listed conservatively
-    // (mayMatch = true). PRECISION: up to `precise` keys are checked
-    // individually against each file's [min,max] (two point deletes in
-    // far-apart files tombstone 2 files, not the whole key envelope);
-    // past that cap — at which size the copy-on-write path is the
-    // better tool anyway — fall back to the envelope bound.
-    val precise = 10000
-    val sample = distinctKeys.limit(precise + 1).collect().map(_.get(0))
-    if (sample.isEmpty) return basis // no non-null keys: no-op
-    val applies =
-      if (sample.length <= precise)
-        st.files.filter { f =>
-          val cs = st.stats.getOrElse(f, Map.empty).get(physKey)
-          sample.exists(k => mayMatch(cs, Some(k), Some(k)))
-        }
-      else {
-        val bounds = distinctKeys.agg(
-          fmin(col(physKey)).as("lo"), fmax(col(physKey)).as("hi")).head()
-        st.files.filter(f =>
-          mayMatch(st.stats.getOrElse(f, Map.empty).get(physKey),
-            Some(bounds.get(0)), Some(bounds.get(1))))
-      }
+    val overlaps = keyOverlap(distinctKeys, physKey) match {
+      case Some(test) => test
+      case None => return basis // no non-null keys: no-op
+    }
+    val applies = st.files.filter(f =>
+      overlaps(st.stats.getOrElse(f, Map.empty).get(physKey)))
     if (applies.isEmpty) return basis
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tombRel = s"data/tomb-v${basis + 1}-$nonce"
-    val tombDir = Paths.get(root, tombRel)
-    // one part file: sidecars are point-delete sized by contract, and
-    // a single file keeps the read-side broadcast to one open
-    distinctKeys.coalesce(1)
-      .write.mode("errorifexists").parquet(tombDir.toString)
-    val sidecars = listDir(tombDir)
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-      .sorted
-      .map(n => s"$tombRel/$n")
+    val sidecars = tombstone(distinctKeys, root, basis, nonce)
     // Rebase over compatible interleaved commits: the tombstone only
     // constrains the files it APPLIES to — an append or a rewrite of
     // other files doesn't invalidate it; a rewrite of an applied file
     // does (the rewrite read rows this delete targets) and conflicts.
     publishRebasing(root, basis, applies.toSet, st.schemaJson,
       allowTombstoneOverlap = true,
-      mkBody = next => (Seq(s"version=$next", "action=delete-mor") ++
-        st.schemaJson.map(j => s"schema=${enc(j)}").toSeq ++
-        sidecars.map(sc => s"tombfile=${enc(sc)}|${enc(physKey)}") ++
-        applies.map(f => s"tombapply=${enc(f)}"))
-        .mkString("", "\n", "\n"))
+      mkBody = next => Manifest(next, "delete-mor",
+        schemaJson = st.schemaJson,
+        tombFiles = sidecars.map(_ -> physKey), tombApplies = applies))
   }
+
+  /** Which files a keyed merge-on-read edit of `keys` (their non-null,
+    * distinct `physKey` values) must tombstone: the test a file's
+    * `physKey` stats must pass, or None when there are no keys.
+    * SOUNDNESS: a file WITHOUT stats passes (mayMatch = true).
+    * PRECISION: up to `precise` keys are checked individually against
+    * each file's [min,max] (two point edits in far-apart files
+    * tombstone 2 files, not the whole key envelope); past that cap — at
+    * which size the copy-on-write path is the better tool anyway — the
+    * test falls back to the envelope bound. */
+  private def keyOverlap(keys: DataFrame, physKey: String)
+      : Option[Option[ColStats] => Boolean] = {
+    import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
+    val precise = 10000
+    val sample = keys.limit(precise + 1).collect().map(_.get(0))
+    if (sample.isEmpty) None
+    else if (sample.length <= precise)
+      Some(cs => sample.exists(k => mayMatch(cs, Some(k), Some(k))))
+    else {
+      val bounds = keys.agg(
+        fmin(col(physKey)).as("lo"), fmax(col(physKey)).as("hi")).head()
+      Some(cs => mayMatch(cs, Some(bounds.get(0)), Some(bounds.get(1))))
+    }
+  }
+
+  /** Land `keys` as a tombstone sidecar of the commit prepared on
+    * `basis`; returns its files. One part file: sidecars are
+    * point-edit sized by contract, and a single file keeps the
+    * read-side broadcast to one open. */
+  private def tombstone(keys: DataFrame, root: String, basis: Long,
+      nonce: String): Seq[String] =
+    land(keys.coalesce(1), root, s"data/tomb-v${basis + 1}-$nonce",
+      sidecar = true).files
 
   /** UPDATE the table, MERGE-ON-READ: replace the rows whose `keyCol`
     * matches a row of `newImages` (full replacement rows in the
@@ -2485,7 +2323,7 @@ object VersionedTable {
     * Empty batch = metadata-only no-op (returns the basis version). */
   def updateKeysMOR(spark: SparkSession, root: String, keyCol: String,
       newImages: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
+    import org.apache.spark.sql.functions.col
     val basis = latestVersion(root)
     require(basis >= 0, s"$root is not a versioned table (empty log)")
     val st = state(root, basis)
@@ -2514,78 +2352,43 @@ object VersionedTable {
       "updateKeysMOR needs exactly one image per non-null key " +
         "(NULL keys have no row identity; duplicate keys have no " +
         "well-defined final image — pre-dedup the batch)")
-    // Same stats-first file targeting as [[deleteKeysMOR]]: the
-    // tombstone must list every file that might hold an updated key
-    // (soundness: stat-less files listed conservatively); up to
-    // `precise` keys check individually against each file's [min,max]
-    // so far-apart point updates tombstone only their own files.
-    val precise = 10000
-    val sample = distinctKeys.limit(precise + 1).collect().map(_.get(0))
-    // may this file's key-range stats hold one of the updated keys? —
-    // used twice: to target the tombstone, and to conflict-check files
-    // ADDED by interleaved commits at publish time (see keyGuard below)
-    val keyOverlap: Option[ColStats] => Boolean =
-      if (sample.length <= precise) {
-        cs => sample.exists(k => mayMatch(cs, Some(k), Some(k)))
-      } else {
-        val bounds = distinctKeys.agg(
-          fmin(col(physKey)).as("lo"), fmax(col(physKey)).as("hi")).head()
-        cs => mayMatch(cs, Some(bounds.get(0)), Some(bounds.get(1)))
-      }
+    // Same stats-first file targeting as [[deleteKeysMOR]]; the test
+    // is used twice: to target the tombstone, and to conflict-check
+    // files ADDED by interleaved commits at publish time (keyGuard)
+    val overlaps = keyOverlap(distinctKeys, physKey)
+      .getOrElse((_: Option[ColStats]) => false)
     val applies = st.files.filter(f =>
-      keyOverlap(st.stats.getOrElse(f, Map.empty).get(physKey)))
+      overlaps(st.stats.getOrElse(f, Map.empty).get(physKey)))
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     // tombstone sidecar (old images' keys) — skipped entirely when no
     // file can hold an updated key (the batch is pure inserts)
-    val tombLines =
-      if (applies.isEmpty) Seq.empty[String]
-      else {
-        val tombRel = s"data/tomb-v${basis + 1}-$nonce"
-        distinctKeys.coalesce(1)
-          .write.mode("errorifexists").parquet(Paths.get(root, tombRel).toString)
-        val sidecars = listDir(Paths.get(root, tombRel))
-          .map(_.getFileName.toString)
-          .filter(nm => nm.endsWith(".parquet") && !nm.startsWith("."))
-          .sorted.map(nm => s"$tombRel/$nm")
-        sidecars.map(sc => s"tombfile=${enc(sc)}|${enc(physKey)}") ++
-          applies.map(f => s"tombapply=${enc(f)}")
-      }
+    val sidecars =
+      if (applies.isEmpty) Nil else tombstone(distinctKeys, root, basis, nonce)
     // new images append as ordinary data files (physical names, footer
     // stats, recorded sizes); one file — the batch is point-sized by
     // contract and the old images' files stay untouched
-    val dataRel = s"data/v${basis + 1}-$nonce"
-    toPhysical(st, newImages.select(tableCols.map(col): _*))
-      .coalesce(1)
-      .write.mode("errorifexists").parquet(Paths.get(root, dataRel).toString)
-    val files = listDir(Paths.get(root, dataRel))
-      .map(_.getFileName.toString)
-      .filter(nm => nm.endsWith(".parquet") && !nm.startsWith("."))
-      .sorted.map(nm => s"$dataRel/$nm")
-    val statLines = files.flatMap { f =>
-      statsLines(f, footerStats(spark, Paths.get(root, f)))
-    }
+    val images = land(
+      toPhysical(st, newImages.select(tableCols.map(col): _*)).coalesce(1),
+      root, s"data/v${basis + 1}-$nonce")
     publishRebasing(root, basis, applies.toSet, st.schemaJson,
       allowTombstoneOverlap = false,
       // the tombstone covers BASIS files only — an interleaved commit
       // that ADDS a file possibly carrying an updated key would survive
       // untombstoned and break the unique-key contract changesKeyed
       // pairing relies on; conflict instead of silently duplicating
-      keyGuard = Some((physKey, keyOverlap)),
-      mkBody = next => (Seq(s"version=$next", "action=update-mor") ++
-        st.schemaJson.map(j => s"schema=${enc(j)}").toSeq ++
-        tombLines ++
-        files.map(f => s"file=$f") ++
-        files.map(f =>
-          s"fsize=${enc(f)}|${dataSize(root, f)}") ++
-        statLines)
-        .mkString("", "\n", "\n"))
+      keyGuard = Some((physKey, overlaps)),
+      mkBody = next => images.copy(version = next, action = "update-mor",
+        schemaJson = st.schemaJson,
+        tombFiles = sidecars.map(_ -> physKey),
+        tombApplies = applies))
   }
 
   /** UPDATE the table, copy-on-write: for rows matching the
     * CONJUNCTION of inclusive `ranges` (NULL in a ranged column never
     * matches — SQL UPDATE semantics), replace each column in `set`
     * with its expression (evaluated against the pre-update row, as
-    * SQL does). Same stats-first pruning and `replace` commit shape as
+    * SQL does) — [[updateWhere]] over the range predicate. Same
+    * stats-first pruning and `replace` commit shape as
     * [[deleteRanges]]: files that cannot hold a match carry over by
     * reference; only possibly-matching files rewrite. Set columns
     * must already exist (UPDATE changes values, not schema — add
@@ -2593,28 +2396,12 @@ object VersionedTable {
   def updateRanges(spark: SparkSession, root: String,
       ranges: Seq[(String, Option[Any], Option[Any])],
       set: Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{lit, when, coalesce, col}
     require(ranges.nonEmpty, "updateRanges needs at least one range " +
       "(an unconditional update is an overwrite)")
     require(set.nonEmpty, "updateRanges needs at least one SET column")
-    copyOnWrite(spark, root, ranges, { (df, matchPred) =>
-      val missing = set.keySet -- df.columns.toSet
-      require(missing.isEmpty,
-        s"SET columns must exist: missing ${missing.mkString(", ")}")
-      // all SET expressions read the PRE-update row: build every
-      // replacement against `df`, then select in one projection (a
-      // sequential withColumn chain would let set("a"->…,"b"->f(a))
-      // see the NEW a — not SQL UPDATE)
-      val proj = df.columns.map { c =>
-        set.get(c) match {
-          case Some(e) =>
-            when(coalesce(matchPred, lit(false)), e)
-              .otherwise(col(c)).as(c)
-          case None => col(c)
-        }
-      }
-      df.select(scala.collection.immutable.ArraySeq.unsafeWrapArray(proj): _*)
-    })
+    updateWhere(spark, root, set.toSeq.map { case (c, e) =>
+        c -> org.apache.spark.sql.GraftColumnBridge.expression(e) },
+      Some(rangePredicate(ranges)))
   }
 
   /** DELETE FROM the table with an ARBITRARY Catalyst predicate — the
@@ -2639,7 +2426,7 @@ object VersionedTable {
     if (touched.isEmpty) return basis // no file can match: metadata no-op
     val rewritten = readResolved(spark, root, st, touched)
       .filter(not(coalesce(rebindColumn(cond), lit(false))))
-    commitReplace(spark, root, basis, touched, rewritten)
+    commitReplace(root, basis, touched, rewritten)
   }
 
   /** UPDATE the table with an arbitrary Catalyst predicate and SET
@@ -2729,7 +2516,7 @@ object VersionedTable {
         case None => col(c)
       }
     }
-    commitReplace(spark, root, basis, touched,
+    commitReplace(root, basis, touched,
       df.select(scala.collection.immutable.ArraySeq.unsafeWrapArray(proj): _*))
   }
 
@@ -2754,35 +2541,6 @@ object VersionedTable {
         org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
           .quoted(a.name)
     })
-
-  /** Shared copy-on-write machinery of [[deleteRanges]] /
-    * [[updateRanges]]: target the files a conjunctive-range predicate
-    * may touch ([[filesMayMatch]]), run `rewrite(touchedRows, matchPred)` over
-    * just those, land the result as one `replace` commit (remove
-    * touched, add rewrites). Untouched files are never opened. A
-    * predicate no file can match returns the basis version — a
-    * metadata-only no-op. */
-  private def copyOnWrite(spark: SparkSession, root: String,
-      ranges: Seq[(String, Option[Any], Option[Any])],
-      rewrite: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val basis = latestVersion(root)
-    require(basis >= 0, s"$root is not a versioned table (empty log)")
-    val st = state(root, basis)
-    val matchPred = ranges.flatMap { case (c, lo, hi) =>
-      lo.map(l => col(c) >= lit(l)) ++ hi.map(u => col(c) <= lit(u))
-    }.reduce(_ && _)
-    val touched = filesMayMatch(root, st,
-      Seq(org.apache.spark.sql.GraftColumnBridge.expression(matchPred)))
-    if (touched.isEmpty) return basis
-    // tombstone-RESOLVED read of the touched files: a rewrite must not
-    // resurrect rows a merge-on-read delete already removed. The
-    // `replace` commit then drops the touched files' tombstone links
-    // (applyManifest) — the rewritten files already exclude those rows.
-    val rewritten =
-      rewrite(readResolved(spark, root, st, touched), matchPred)
-    commitReplace(spark, root, basis, touched, rewritten)
-  }
 
   // ---------------------------------------------------------------------
   // Logical conflict detection + rebase (Delta's ConflictChecker shape).
@@ -2878,7 +2636,7 @@ object VersionedTable {
     * O(interleaved commits), not O(rewrites). */
   private[sources] def publishRebasing(root: String, basis: Long,
       touched: Set[String], basisSchema: Option[String],
-      mkBody: Long => String,
+      mkBody: Long => Manifest,
       allowTombstoneOverlap: Boolean = false,
       keyGuard: Option[(String, Option[ColStats] => Boolean)] = None)
       : Long = {
@@ -2899,8 +2657,8 @@ object VersionedTable {
         // outside the tombstone — duplicate keys. Stat-less added
         // files conservatively conflict (mayMatch returns true).
         keyGuard.foreach { case (physKey, overlaps) =>
-          val ms = manifestStats(m)
-          m.files.find(f => overlaps(ms.getOrElse(f, Map.empty).get(physKey)))
+          m.files.find(f =>
+            overlaps(m.stats.getOrElse(f, Map.empty).get(physKey)))
             .foreach(f => throw new ConcurrentWriteConflictException(v,
               s"v${m.version} added $f, whose $physKey stats may hold a " +
                 "key this merge-on-read update rewrites — rebasing would " +
@@ -2909,7 +2667,7 @@ object VersionedTable {
       }
       checked = target - 1
       try {
-        publish(root, target, mkBody(target))
+        publish(root, mkBody(target))
         return target
       } catch { case _: ConcurrentCommitException => () } // lost: re-range
     }
@@ -2926,8 +2684,8 @@ object VersionedTable {
     * through [[publishRebasing]]: compatible interleaved commits
     * (appends, disjoint rewrites) cost a manifest read, not a redo of
     * the rewrite. */
-  private def commitReplace(spark: SparkSession, root: String,
-      basis: Long, removed: Seq[String], rewritten: DataFrame,
+  private def commitReplace(root: String, basis: Long,
+      removed: Seq[String], rewritten: DataFrame,
       schemaOverride: Option[org.apache.spark.sql.types.StructType] = None)
       : Long = {
     val basisState = state(root, basis)
@@ -2938,31 +2696,15 @@ object VersionedTable {
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     // the dir name stamps the PREPARED version for operator legibility;
     // after a rebase the manifest may publish later — references in
-    // file= lines, not dir names, are what fsck/vacuum track
-    val dataRel = s"data/v${basis + 1}-$nonce"
-    val dataDir = Paths.get(root, dataRel)
+    // file= lines, not dir names, are what fsck/vacuum track.
     // `rewritten` is in logical space (it came through readResolved);
     // replacement files must keep PHYSICAL names like every data file
-    toPhysical(basisState, rewritten)
-      .write.mode("errorifexists").parquet(dataDir.toString)
-    val files = listDir(dataDir)
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-      .sorted
-      .map(n => s"$dataRel/$n")
-    val statLines = files.flatMap { f =>
-      statsLines(f, footerStats(spark, Paths.get(root, f)))
-    }
-    val schemaLine = schemaOverride.map(_.json).orElse(basisState.schemaJson)
-      .map(sc => s"schema=${enc(sc)}").toSeq
+    val added = land(toPhysical(basisState, rewritten), root,
+      s"data/v${basis + 1}-$nonce")
     publishRebasing(root, basis, removed.toSet, basisState.schemaJson,
-      next => (Seq(s"version=$next", "action=replace") ++ schemaLine ++
-        removed.map(f => s"remove=$f") ++
-        files.map(f => s"file=$f") ++
-        files.map(f =>
-          s"fsize=${enc(f)}|${dataSize(root, f)}") ++
-        statLines)
-        .mkString("", "\n", "\n"))
+      next => added.copy(version = next, action = "replace",
+        removes = removed,
+        schemaJson = schemaOverride.map(_.json).orElse(basisState.schemaJson)))
   }
 
   // ---------------------------------------------------------------------
@@ -3038,7 +2780,7 @@ object VersionedTable {
         val out = MergeKernel.mergeCascadeRows(
           readResolved(spark, root, st, touched), source, tableSc, tKey,
           sKey, matched, notMatched, bySource)
-        commitReplace(spark, root, basis, touched, out)
+        commitReplace(root, basis, touched, out)
     }
   }
 
@@ -3133,7 +2875,7 @@ object VersionedTable {
         val (matched, notMatched) = starClauses(evolved.fieldNames.toSeq)
         val merged = MergeKernel.mergeCascadeRows(widened, source, evolved,
           key, key, matched, notMatched, Nil)
-        commitReplace(spark, root, basis, touched, merged, Some(evolved))
+        commitReplace(root, basis, touched, merged, Some(evolved))
     }
   }
 
@@ -3312,7 +3054,7 @@ object VersionedTable {
         case None => // no surviving tagged manifest proves anything —
           // consult the truncation-surviving checkpoint tag
           checkpointVersions(root).lastOption
-            .flatMap(cv => checkpointBatchTag(root, cv))
+            .flatMap(cv => readCheckpoint(root, cv).batchTag)
             .exists(_ >= batchId)
       }
       if (!committed)
@@ -3401,6 +3143,25 @@ object VersionedTable {
     val stTo = state(root, toVersion)
     def aligned(st: TableState): TableState =
       st.copy(schemaJson = stTo.schemaJson, colMap = stTo.colMap)
+    // the deleted rows of a MOR commit `m`: rows of `files`, as visible
+    // in `prev`, whose key is in one of m's NEW sidecars
+    def tombstoned(prev: TableState, m: Manifest, files: Seq[String]) = {
+      val affected = readResolved(spark, root, prev, files)
+      val order = affected.columns.toSeq
+      m.tombFiles.map { case (sc, keyCol) =>
+        // sidecars carry the PHYSICAL key name; `affected` is
+        // logical — translate through the reverse mapping
+        val logicalKey = prev.colMap.find(_._2 == keyCol)
+          .map(_._1).getOrElse(keyCol)
+        affected.join(
+          broadcast(spark.read
+            .parquet(dataPath(root, sc).toString)
+            .select(col(keyCol).as(logicalKey)).distinct()),
+          Seq(logicalKey), "left_semi")
+          .select(order.map(col): _*)
+      }.reduce(_ unionByName _)
+        .withColumn("_change", lit("delete"))
+    }
     val parts = vs.map { v =>
       val m = readManifest(root, v)
       val body = m.action match {
@@ -3415,30 +3176,11 @@ object VersionedTable {
             .withColumn("_change", lit("insert"))
         case "delete-mor" =>
           val prev = aligned(state(root, v - 1))
-          // deleted rows = rows of the affected files, as visible at
-          // v-1, whose key is in one of the NEW sidecars
-          val affected =
-            readResolved(spark, root, prev,
-              m.tombApplies.filter(prev.files.toSet))
-          val order = affected.columns.toSeq
-          m.tombFiles.map { case (sc, keyCol) =>
-            // sidecars carry the PHYSICAL key name; `affected` is
-            // logical — translate through the reverse mapping
-            val logicalKey = prev.colMap.find(_._2 == keyCol)
-              .map(_._1).getOrElse(keyCol)
-            affected.join(
-              broadcast(spark.read
-                .parquet(dataPath(root, sc).toString)
-                .select(col(keyCol).as(logicalKey)).distinct()),
-              Seq(logicalKey), "left_semi")
-              .select(order.map(col): _*)
-          }.reduce(_ unionByName _)
-            .withColumn("_change", lit("delete"))
+          tombstoned(prev, m, m.tombApplies.filter(prev.files.toSet))
         case "update-mor" =>
-          // deletes: affected-file rows (as visible at v-1) whose key
-          // is in the new sidecars — exactly the delete-mor route;
-          // inserts: the manifest's own appended image files. A keyed
-          // consumer ([[changesKeyed]]) pairs them into
+          // deletes: exactly the delete-mor route; inserts: the
+          // manifest's own appended image files. A keyed consumer
+          // ([[changesKeyed]]) pairs them into
           // update_preimage/update_postimage.
           val prev = aligned(state(root, v - 1))
           val affectedFiles = m.tombApplies.filter(prev.files.toSet)
@@ -3447,22 +3189,7 @@ object VersionedTable {
             physicalSchemaOf(stV), m.files))
             .withColumn("_change", lit("insert"))
           if (m.tombFiles.isEmpty || affectedFiles.isEmpty) inserts
-          else {
-            val affected = readResolved(spark, root, prev, affectedFiles)
-            val order = affected.columns.toSeq
-            m.tombFiles.map { case (sc, keyCol) =>
-              val logicalKey = prev.colMap.find(_._2 == keyCol)
-                .map(_._1).getOrElse(keyCol)
-              affected.join(
-                broadcast(spark.read
-                  .parquet(dataPath(root, sc).toString)
-                  .select(col(keyCol).as(logicalKey)).distinct()),
-                Seq(logicalKey), "left_semi")
-                .select(order.map(col): _*)
-            }.reduce(_ unionByName _)
-              .withColumn("_change", lit("delete"))
-              .unionByName(inserts)
-          }
+          else tombstoned(prev, m, affectedFiles).unionByName(inserts)
         case _ => // overwrite / replace: general snapshot diff
           diffAs(spark, root, v - 1, v, stTo)
       }
@@ -3525,9 +3252,10 @@ object VersionedTable {
     import spark.implicits._
     versions(root).map { v =>
       val m = readManifest(root, v)
-      // rows per file from any stats line (all carry the file's count)
-      val rowsByFile = m.stats.flatMap(parseStatsLine)
-        .groupBy(_._1).map { case (f, ls) => f -> ls.head._3.rows }
+      // rows per file from its first stats column (all carry the
+      // file's count)
+      val rowsByFile = m.stats.collect { case (f, cols) if cols.nonEmpty =>
+        f -> cols.minBy(_._1)._2.rows }
       val nRows =
         if (m.files.isEmpty) Some(0L)
         else if (m.files.forall(rowsByFile.contains))
@@ -3651,7 +3379,7 @@ object VersionedTable {
       st.tombs.getOrElse(f, Vector.empty).nonEmpty)
     if (dirty.isEmpty) return basis // nothing to purge: metadata no-op
     val resolved = readResolved(spark, root, st, dirty)
-    commitReplace(spark, root, basis, dirty, resolved)
+    commitReplace(root, basis, dirty, resolved)
   }
 
   // ---------------------------------------------------------------------
@@ -3812,15 +3540,8 @@ object VersionedTable {
   private def branchBase(root: String, name: String): (String, Long) = {
     val bp = branchRoot(root, name)
     require(latestVersion(bp) >= 0, s"no branch '$name' in $root")
-    logIO(bp).readLines(manifestPath(bp, 0L))
-      .collectFirst { case l if l.startsWith("clonesrc=") =>
-        l.stripPrefix("clonesrc=").split("\\|", -1) match {
-          case Array(src, v) => (dec(src), v.toLong)
-          case _ => throw new IllegalStateException(
-            s"malformed clonesrc in branch '$name'")
-        }
-      }.getOrElse(throw new IllegalStateException(
-        s"branch '$name' has no clonesrc anchor"))
+    readManifest(bp, 0L).cloneSrc.getOrElse(throw new IllegalStateException(
+      s"branch '$name' has no clonesrc anchor"))
   }
 
   /** Fork `name` from `version` (default latest). The branch starts as
@@ -3932,23 +3653,15 @@ object VersionedTable {
     // durable publish → surface it as its own error, dirs stay put.
     var published = -1L
     try {
-      val body = (next: Long) =>
-        (Seq(s"version=$next", "action=append") ++
-          st.schemaJson.map(j => s"schema=${enc(j)}").toSeq ++
-          local.map(f => s"file=${remap(f)}") ++
-          local.map { f =>
-            val sz = st.sizes.getOrElse(f,
-              dataIO(root).size(Paths.get(root, remap(f))))
-            s"fsize=${enc(remap(f))}|$sz"
-          } ++
-          local.flatMap(f =>
-            statsLines(remap(f), st.stats.getOrElse(f, Map.empty))) ++
-          st.parts.toSeq.filter(e => local.contains(e._1))
-            .sortBy(_._1).map { case (f, (t, pv)) =>
-              s"part=${enc(remap(f))}|${enc(t)}|${enc(pv)}" })
-          .mkString("", "\n", "\n")
+      val squash = Manifest(-1L, "append", schemaJson = st.schemaJson,
+        files = local.map(remap),
+        fsizes = local.map(f => remap(f) -> st.sizes.getOrElse(f,
+          dataIO(root).size(Paths.get(root, remap(f))))),
+        stats = local.flatMap(f => st.stats.get(f).map(remap(f) -> _)).toMap,
+        parts = st.parts.toSeq.filter(e => local.contains(e._1))
+          .sortBy(_._1).map { case (f, (t, pv)) => (remap(f), t, pv) })
       published = publishRebasing(root, baseV, Set.empty,
-        stateSchemaAt(root, baseV), body)
+        stateSchemaAt(root, baseV), next => squash.copy(version = next))
     } catch {
       case t: Throwable =>
         // restore the branch's data dirs so it survives for inspection

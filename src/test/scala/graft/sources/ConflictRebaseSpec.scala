@@ -32,12 +32,9 @@ class ConflictRebaseSpec extends SparkSpecBase {
   }
 
   private def replaceBody(schemaJson: Option[String], removes: Seq[String])
-      (next: Long): String =
-    (Seq(s"version=$next", "action=replace") ++
-      schemaJson.map(j =>
-        "schema=" + java.net.URLEncoder.encode(j, "UTF-8")).toSeq ++
-      removes.map(f => s"remove=$f"))
-      .mkString("", "\n", "\n")
+      (next: Long): VersionedTable.Manifest =
+    VersionedTable.Manifest(next, "replace", schemaJson = schemaJson,
+      removes = removes)
 
   test("prepared replace rebases over an interleaved append") {
     val (root, fileA, _) = twoFileTable()

@@ -55,6 +55,35 @@ class ConvertSpec extends SparkSpecBase {
       "vacuum deleted source files through an ext: ref")
   }
 
+  test("Delta stats without numRecords: null counts are unknown, " +
+      "IS NOT NULL keeps the file (delta-log read and importDelta)") {
+    val deltaRoot = tmp()
+    DeltaLog.commit(spark.range(0, 10).toDF("x").coalesce(1), deltaRoot)
+    // an add whose stats carry nullCount but no numRecords (the field
+    // is optional in the Delta spec)
+    val log = java.nio.file.Paths.get(deltaRoot, "_delta_log",
+      "00000000000000000000.json")
+    val raw = java.nio.file.Files.readString(log)
+    val stripped = raw.replaceAll("""\\"numRecords\\":\d+,""", "")
+    assert(stripped != raw && stripped.contains("nullCount"))
+    java.nio.file.Files.writeString(log, stripped)
+    // Spark infers isnotnull(x) from x > 5: with the row count unknown
+    // it must not read `nulls < rows` as 0 < 0 and skip the file
+    assert(spark.read.format("delta-log").load(deltaRoot)
+      .where(col("x") > 5).as[Long].collect().sorted.toSeq === (6L to 9L))
+    val graftRoot = tmp()
+    VersionedTable.importDelta(spark, deltaRoot, graftRoot)
+    assert(spark.read.format("graft").load(graftRoot)
+      .where(col("x") > 5).as[Long].collect().sorted.toSeq === (6L to 9L))
+    assert(VersionedTable.readPruned(spark, graftRoot, col("x").isNotNull)
+      .count() === 10L)
+    // min/max still prune; a metadata-only count refuses instead of 0
+    assert(VersionedTable.pruneFiles(graftRoot, 0L, col("x") > 100)._1.isEmpty)
+    intercept[IllegalArgumentException] {
+      VersionedTable.statsAggregate(spark, graftRoot, Seq("x")).collect()
+    }
+  }
+
   test("importDelta refuses partitioned Delta tables (files lack the column)") {
     val deltaRoot = tmp()
     DeltaLog.commit(

@@ -155,10 +155,8 @@ class MorUpdateSpec extends SparkSpecBase {
     assert(touched.nonEmpty)
     val ex = intercept[VersionedTable.ConcurrentWriteConflictException] {
       VersionedTable.publishRebasing(root, basis, touched, st.schemaJson,
-        next => (Seq(s"version=$next", "action=delete-mor") ++
-          st.schemaJson.map(j =>
-            "schema=" + java.net.URLEncoder.encode(j, "UTF-8")).toSeq)
-          .mkString("", "\n", "\n"),
+        next => VersionedTable.Manifest(next, "delete-mor",
+          schemaJson = st.schemaJson),
         allowTombstoneOverlap = true)
     }
     assert(ex.getMessage.contains("updated"))
@@ -182,10 +180,7 @@ class MorUpdateSpec extends SparkSpecBase {
     val overlap12: Option[VersionedTable.ColStats] => Boolean =
       cs => VersionedTable.mayMatch(cs, Some(12L), Some(12L))
     val body = (next: Long) =>
-      (Seq(s"version=$next", "action=append") ++
-        st.schemaJson.map(j =>
-          "schema=" + java.net.URLEncoder.encode(j, "UTF-8")).toSeq)
-        .mkString("", "\n", "\n")
+      VersionedTable.Manifest(next, "append", schemaJson = st.schemaJson)
     val ex = intercept[VersionedTable.ConcurrentWriteConflictException] {
       VersionedTable.publishRebasing(root, basis, Set.empty, st.schemaJson,
         body, keyGuard = Some(("k", overlap12)))
